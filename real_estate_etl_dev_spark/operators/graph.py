@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+
 _RANK_DEC = "decimal(20,12)"
 
 # Broadcast the per-round rank table when the node count is under this
@@ -61,8 +63,8 @@ def pagerank(
 
     Coalescing mode (r15): the whole iterative span runs — eagerly,
     via per-round eager checkpoints — under
-    ``coalescePartitions.parallelismFirst=true`` (saved/restored, the
-    streaming queries' conf discipline).  The rounds are CPU-bound per
+    ``coalescePartitions.parallelismFirst=true`` (a ``conf_scope``,
+    restored afterwards).  The rounds are CPU-bound per
     BYTE (one decimal division + rounding + cast per edge), exactly
     the workload class where size-based coalescing mis-sizes
     partitions: under the session's byte-target the edge passes froze
@@ -71,17 +73,9 @@ def pagerank(
     3.2–4.0s.  The toggle is keyed to the operator's workload shape,
     not to a core count, and at real scale it simply restores Spark's
     default coalescing for these stages."""
-    spark = edges.sparkSession
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    prev_pf = spark.conf.get(_PF, None)
-    spark.conf.set(_PF, "true")
-    try:
+    pf = {"spark.sql.adaptive.coalescePartitions.parallelismFirst": "true"}
+    with conf_scope(edges.sparkSession, **pf):
         return _pagerank_body(edges, src, dst, damping, rounds)
-    finally:
-        if prev_pf is None:
-            spark.conf.unset(_PF)
-        else:
-            spark.conf.set(_PF, prev_pf)
 
 
 def _pagerank_body(

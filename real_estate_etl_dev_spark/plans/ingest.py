@@ -264,11 +264,10 @@ def layout_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_layout_ivf.py`` pins it byte-identical to this
     driver-side loop on the same zone."""
     import glob as _glob
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as _pq
 
+    from ..benchmeta import scratch_dir
     from ..operators.layout import compact_files, write_range_sorted
 
     import os as _os
@@ -277,53 +276,52 @@ def layout_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice"
     )
     n_rows = orders.count()
-    workdir = tempfile.mkdtemp(prefix="layout_audit_")
-    src = f"{workdir}/fragmented"
-    orders.repartition(_AUDIT_FRAGMENTS).write.parquet(src)
-    frag_files = _glob.glob(f"{src}/part-*.parquet")
-    files_in = len(frag_files)
-    # Loud preconditions for the pinned oracle constants (ADVICE r04):
-    # certifying past the SF bound must say WHICH constant to raise.
-    src_bytes = sum(_os.path.getsize(f) for f in frag_files)
-    if src_bytes >= _AUDIT_BUDGET_MB * 1024 * 1024:
-        raise AssertionError(
-            f"_AUDIT_SF_BOUND: fixture is {src_bytes} bytes >= the "
-            f"{_AUDIT_BUDGET_MB} MB budget — compaction would emit >1 "
-            "file; raise the oracle's files_out constant for this SF"
-        )
-    if files_in != _AUDIT_FRAGMENTS:
-        raise AssertionError(
-            f"_AUDIT_FRAGMENT_DRIFT: repartition({_AUDIT_FRAGMENTS}) "
-            f"wrote {files_in} non-empty files — oracle files_in is stale"
-        )
+    with scratch_dir("layout_audit_") as workdir:
+        src = f"{workdir}/fragmented"
+        orders.repartition(_AUDIT_FRAGMENTS).write.parquet(src)
+        frag_files = _glob.glob(f"{src}/part-*.parquet")
+        files_in = len(frag_files)
+        # Loud preconditions for the pinned oracle constants (ADVICE r04):
+        # certifying past the SF bound must say WHICH constant to raise.
+        src_bytes = sum(_os.path.getsize(f) for f in frag_files)
+        if src_bytes >= _AUDIT_BUDGET_MB * 1024 * 1024:
+            raise AssertionError(
+                f"_AUDIT_SF_BOUND: fixture is {src_bytes} bytes >= the "
+                f"{_AUDIT_BUDGET_MB} MB budget — compaction would emit >1 "
+                "file; raise the oracle's files_out constant for this SF"
+            )
+        if files_in != _AUDIT_FRAGMENTS:
+            raise AssertionError(
+                f"_AUDIT_FRAGMENT_DRIFT: repartition({_AUDIT_FRAGMENTS}) "
+                f"wrote {files_in} non-empty files — oracle files_in is stale"
+            )
 
-    # (a) compaction
-    dst_c = f"{workdir}/compacted"
-    files_compact = compact_files(spark, src, dst_c, target_file_mb=_AUDIT_BUDGET_MB)
-    rows_compact = spark.read.parquet(dst_c).count()
+        # (a) compaction
+        dst_c = f"{workdir}/compacted"
+        files_compact = compact_files(spark, src, dst_c, target_file_mb=_AUDIT_BUDGET_MB)
+        rows_compact = spark.read.parquet(dst_c).count()
 
-    # (b) range-sorted rewrite + disjointness audit from real footers
-    dst_r = f"{workdir}/range_sorted"
-    write_range_sorted(orders, dst_r, ["o_totalprice"], n_files=4)
-    rs_files = _glob.glob(f"{dst_r}/part-*.parquet")
-    # Driver-side footer loop is fixture-scoped BY CONSTRUCTION — keep
-    # it that way (the distributed variant is in the docstring).
-    assert len(rs_files) <= _AUDIT_FRAGMENTS + 4, (
-        f"footer audit is driver-side and bounded; got {len(rs_files)} files"
-    )
-    ranges = []
-    for f in rs_files:
-        md = _pq.ParquetFile(f).metadata
-        idx = next(
-            i for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "o_totalprice"
+        # (b) range-sorted rewrite + disjointness audit from real footers
+        dst_r = f"{workdir}/range_sorted"
+        write_range_sorted(orders, dst_r, ["o_totalprice"], n_files=4)
+        rs_files = _glob.glob(f"{dst_r}/part-*.parquet")
+        # Driver-side footer loop is fixture-scoped BY CONSTRUCTION — keep
+        # it that way (the distributed variant is in the docstring).
+        assert len(rs_files) <= _AUDIT_FRAGMENTS + 4, (
+            f"footer audit is driver-side and bounded; got {len(rs_files)} files"
         )
-        stats = [md.row_group(g).column(idx).statistics for g in range(md.num_row_groups)]
-        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
-    ranges.sort()
-    disjoint = all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:]))
-    rows_range = spark.read.parquet(dst_r).count()
-    shutil.rmtree(workdir, ignore_errors=True)
+        ranges = []
+        for f in rs_files:
+            md = _pq.ParquetFile(f).metadata
+            idx = next(
+                i for i in range(md.num_columns)
+                if md.row_group(0).column(i).path_in_schema == "o_totalprice"
+            )
+            stats = [md.row_group(g).column(idx).statistics for g in range(md.num_row_groups)]
+            ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
+        ranges.sort()
+        disjoint = all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:]))
+        rows_range = spark.read.parquet(dst_r).count()
 
     return spark.createDataFrame(
         [
@@ -440,22 +438,18 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned fact table turns a 7-year scan into a 1-year scan
     before a single task launches); the layout write costs one
     shuffle-free pass, billed as setup."""
-    import shutil
-    import tempfile
+    from ..benchmeta import collect_local, scratch_dir, setup_span
 
-    from ..benchmeta import setup_span
+    with scratch_dir("part_prune_") as workdir:
+        with setup_span("partition_pruned_scan"):
+            orders = load_table(spark, sf_dir, "orders")
+            (
+                orders.withColumn("o_year", F.year("o_orderdate"))
+                .write.partitionBy("o_year")
+                .mode("overwrite")
+                .parquet(f"{workdir}/orders_by_year")
+            )
 
-    with setup_span("partition_pruned_scan"):
-        workdir = tempfile.mkdtemp(prefix="part_prune_")
-        orders = load_table(spark, sf_dir, "orders")
-        (
-            orders.withColumn("o_year", F.year("o_orderdate"))
-            .write.partitionBy("o_year")
-            .mode("overwrite")
-            .parquet(f"{workdir}/orders_by_year")
-        )
-
-    try:
         df = (
             spark.read.parquet(f"{workdir}/orders_by_year")
             .filter(F.col("o_year") == 1995)
@@ -476,10 +470,7 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "PartitionFilters"
         )[1].split("]")[0]:
             raise AssertionError("partition filter did not reach the scan")
-        out = df.collect()
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(out, df.schema)
+        return collect_local(df)
 
 
 @query(
@@ -514,28 +505,24 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip the footer sweep — documented trade); the data files
     themselves are never rewritten, which is the point: at 100 TB a
     column add must be O(metadata), not O(data)."""
-    import shutil
-    import tempfile
+    from ..benchmeta import collect_local, scratch_dir, setup_span
 
-    from ..benchmeta import setup_span
+    with scratch_dir("schema_evo_") as workdir:
+        with setup_span("schema_evolution_union"):
+            orders = load_table(spark, sf_dir, "orders")
+            (
+                orders.filter(F.year("o_orderdate") == 1995)
+                .select("o_orderkey", "o_totalprice")
+                .write.mode("overwrite")
+                .parquet(f"{workdir}/t/batch=1995")
+            )
+            (
+                orders.filter(F.year("o_orderdate") == 1996)
+                .select("o_orderkey", "o_totalprice", "o_orderpriority")
+                .write.mode("overwrite")
+                .parquet(f"{workdir}/t/batch=1996")
+            )
 
-    with setup_span("schema_evolution_union"):
-        workdir = tempfile.mkdtemp(prefix="schema_evo_")
-        orders = load_table(spark, sf_dir, "orders")
-        (
-            orders.filter(F.year("o_orderdate") == 1995)
-            .select("o_orderkey", "o_totalprice")
-            .write.mode("overwrite")
-            .parquet(f"{workdir}/t/batch=1995")
-        )
-        (
-            orders.filter(F.year("o_orderdate") == 1996)
-            .select("o_orderkey", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite")
-            .parquet(f"{workdir}/t/batch=1996")
-        )
-
-    try:
         df = (
             spark.read.option("mergeSchema", "true")
             .parquet(f"{workdir}/t")
@@ -552,7 +539,4 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("priority")
         )
-        out = df.collect()
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(out, df.schema)
+        return collect_local(df)

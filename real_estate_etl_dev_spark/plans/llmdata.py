@@ -2190,12 +2190,10 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     without batch-id partitioning (the dedup predicate IS the
     idempotence guard; contrast streaming_ann_enrichment, whose
     non-dedup output needs the ``batch=<id>`` overwrite pattern)."""
-    import shutil
-    import tempfile
-
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.dedup import dedup_exact_keep_first, flag_corpus_dups
     from ..sources.readers import load_table
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import run_available_now, stream_source
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -2215,73 +2213,65 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    from ..benchmeta import setup_span
-
-    with setup_span("streaming_incremental_dedup"):
-        workdir = tempfile.mkdtemp(prefix="stream_incdedup_")
-        drop_dir = f"{workdir}/incoming"
-        sink = f"{workdir}/accepted"
-        checkpoint = f"{workdir}/checkpoint"
-        incoming.repartition(4).write.parquet(drop_dir)
-        # seed the sink with an empty frame so every batch can read it
-        incoming.limit(0).write.parquet(sink)
-
     # Dedup key is (lang, text), NOT text alone: the oracle's per-lang
     # kept counts are only deterministic if a text shared across langs
     # counts once per lang — and a cross-lang "dup" is a different
     # record anyway.  chr(10) separator can't occur in lang codes.
     key = F.concat(F.col("lang"), F.lit("\n"), F.col("text")).alias("__k")
 
-    def do_batch(batch: DataFrame, batch_id: int) -> None:
-        seen = corpus.select(key).unionByName(
-            batch.sparkSession.read.parquet(sink).select(key)
-        )
-        survivors = (
-            flag_corpus_dups(
-                dedup_exact_keep_first(batch.withColumn("__k", key), text_col="__k"),
-                seen,
-                text_col="__k",
+    with scratch_dir("stream_incdedup_") as workdir:
+        drop_dir = f"{workdir}/incoming"
+        sink = f"{workdir}/accepted"
+        with setup_span("streaming_incremental_dedup"):
+            incoming.repartition(4).write.parquet(drop_dir)
+            # seed the sink with an empty frame so every batch can read it
+            incoming.limit(0).write.parquet(sink)
+
+        def do_batch(batch: DataFrame, batch_id: int) -> None:
+            seen = corpus.select(key).unionByName(
+                batch.sparkSession.read.parquet(sink).select(key)
             )
-            .filter(~F.col("in_corpus"))
-            .drop("in_corpus", "__k")
-        )
-        survivors.write.mode("append").parquet(sink)
+            survivors = (
+                flag_corpus_dups(
+                    dedup_exact_keep_first(
+                        batch.withColumn("__k", key), text_col="__k"
+                    ),
+                    seen,
+                    text_col="__k",
+                )
+                .filter(~F.col("in_corpus"))
+                .drop("in_corpus", "__k")
+            )
+            survivors.write.mode("append").parquet(sink)
 
-    stream = stream_source(
-        spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-    q = (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    kept = (
-        spark.read.parquet(sink)
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
-    )
-    totals = incoming.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_incoming")
-    )
-    out = (
-        totals.join(kept, "lang", "left")
-        .select(
-            "lang",
-            "n_incoming",
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-            (F.col("n_incoming") - F.coalesce("n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_dropped"),
+        stream = stream_source(
+            spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
         )
-        .orderBy("lang")
-    )
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        run_available_now(
+            stream.writeStream.foreachBatch(do_batch), f"{workdir}/checkpoint"
+        )
+
+        kept = (
+            spark.read.parquet(sink)
+            .groupBy("lang")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
+        )
+        totals = incoming.groupBy("lang").agg(
+            F.count(F.lit(1)).cast("long").alias("n_incoming")
+        )
+        out = (
+            totals.join(kept, "lang", "left")
+            .select(
+                "lang",
+                "n_incoming",
+                F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+                (F.col("n_incoming") - F.coalesce("n_kept", F.lit(0)))
+                .cast("long")
+                .alias("n_dropped"),
+            )
+            .orderBy("lang")
+        )
+        return collect_local(out)
 
 
 @query(
@@ -5103,11 +5093,8 @@ def streaming_ann_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``embedding_ann_ivf``) slots into the same foreachBatch unchanged
     and prunes the scan to matching cells, at the recall measured by
     ``embedding_ann_recall_cost``."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
-    from ..streaming.ingest import stream_source
+    from ..benchmeta import collect_local, scratch_dir, setup_span
+    from ..streaming.ingest import run_available_now, stream_source
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -5116,38 +5103,29 @@ def streaming_ann_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
     queries = emb.filter(F.col("vec_id") % 5 == 0)
 
-    with setup_span("streaming_ann_enrichment"):
-        workdir = tempfile.mkdtemp(prefix="stream_ann_")
+    with scratch_dir("stream_ann_") as workdir:
         drop_dir = f"{workdir}/queries"
         out_dir = f"{workdir}/topk"
-        checkpoint = f"{workdir}/checkpoint"
-        # 4 files at 2 files/trigger => multiple real micro-batches
-        queries.repartition(4).write.parquet(drop_dir)
+        with setup_span("streaming_ann_enrichment"):
+            # 4 files at 2 files/trigger => multiple real micro-batches
+            queries.repartition(4).write.parquet(drop_dir)
 
-    stream = stream_source(
-        spark, drop_dir, queries.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        cosine_topk(corpus, batch_df, k=3).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
+        stream = stream_source(
+            spark, drop_dir, queries.schema, fmt="parquet", maxFilesPerTrigger=2
         )
 
-    q = (
-        stream.writeStream.foreachBatch(publish)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def publish(batch_df: DataFrame, batch_id: int) -> None:
+            cosine_topk(corpus, batch_df, k=3).write.mode("overwrite").parquet(
+                f"{out_dir}/batch={batch_id}"
+            )
 
-    out = spark.read.parquet(out_dir).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
-    ).orderBy("query_id", "rank")
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        run_available_now(
+            stream.writeStream.foreachBatch(publish), f"{workdir}/checkpoint"
+        )
+        out = spark.read.parquet(out_dir).select(
+            "query_id", "neighbor_id", "cos_sim", "rank"
+        ).orderBy("query_id", "rank")
+        return collect_local(out)
 
 
 @query(
@@ -5182,59 +5160,46 @@ def streaming_ann_enrichment_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-count drop at 10× corpus.  At 100 TB the assignment
     persists WITH the corpus (a parquet column, not a checkpoint) and
     triggers pay only the probed cells' scan."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.similarity import ivf_index, ivf_search
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import run_available_now, stream_source
 
     corpus, queries = _planted_embeddings(spark, sf_dir)
 
-    with setup_span("streaming_ann_enrichment_ivf"):
-        workdir = tempfile.mkdtemp(prefix="stream_ann_ivf_")
+    with scratch_dir("stream_ann_ivf_") as workdir:
         drop_dir = f"{workdir}/queries"
         out_dir = f"{workdir}/topk"
-        checkpoint = f"{workdir}/checkpoint"
-        # 4 files at 2 files/trigger => multiple real micro-batches
-        queries.repartition(4).write.parquet(drop_dir)
-        # Index build is a SETUP cost by design — that is the point of
-        # an IVF index.  localCheckpoint: one materialization, every
-        # trigger reuses it (multi-consumer rule).
-        assigned, centers = ivf_index(
-            corpus, n_centroids=8, seed=42, max_iter=4
+        with setup_span("streaming_ann_enrichment_ivf"):
+            # 4 files at 2 files/trigger => multiple real micro-batches
+            queries.repartition(4).write.parquet(drop_dir)
+            # Index build is a SETUP cost by design — that is the point of
+            # an IVF index.  localCheckpoint: one materialization, every
+            # trigger reuses it (multi-consumer rule).
+            assigned, centers = ivf_index(
+                corpus, n_centroids=8, seed=42, max_iter=4
+            )
+            # fan_out (r14): the checkpoint freezes AQE's byte-coalesced
+            # layout (one partition at fixture sizes), serializing every
+            # trigger's candidate scoring; conditional spread, no-op at
+            # real scale where the assignment persists with the corpus.
+            assigned = fan_out(assigned.localCheckpoint())
+
+        stream = stream_source(
+            spark, drop_dir, queries.schema, fmt="parquet", maxFilesPerTrigger=2
         )
-        # fan_out (r14): the checkpoint freezes AQE's byte-coalesced
-        # layout (one partition at fixture sizes), serializing every
-        # trigger's candidate scoring; conditional spread, no-op at
-        # real scale where the assignment persists with the corpus.
-        assigned = fan_out(assigned.localCheckpoint())
 
-    stream = stream_source(
-        spark, drop_dir, queries.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
+        def publish(batch_df: DataFrame, batch_id: int) -> None:
+            ivf_search(assigned, centers, batch_df, k=5, n_probe=2).write.mode(
+                "overwrite"
+            ).parquet(f"{out_dir}/batch={batch_id}")
 
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_search(assigned, centers, batch_df, k=5, n_probe=2).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch={batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(publish)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    topk = spark.read.parquet(out_dir).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
-    )
-    out = _rank1_gate(topk)
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        run_available_now(
+            stream.writeStream.foreachBatch(publish), f"{workdir}/checkpoint"
+        )
+        topk = spark.read.parquet(out_dir).select(
+            "query_id", "neighbor_id", "cos_sim", "rank"
+        )
+        return collect_local(_rank1_gate(topk))
 
 
 # ---------------------------------------------------------------------------
@@ -5412,55 +5377,43 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact join of the few bloom-positive rows; state is ZERO
     (stateless foreachBatch — the 'state' is the immutable bit set),
     so arrival volume never grows anything but the batch itself."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.bloom import bloom_bits, md5_key
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import run_available_now, stream_source
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     seen = docs.select(md5_key("text").alias("key")).distinct()
 
-    with setup_span("streaming_bloom_dedup"):
-        # build-once: pin filter AND seen keys before the stream
-        bits = bloom_bits(
-            seen, "key", _BLOOM_DEDUP_M, _BLOOM_DEDUP_K
-        ).localCheckpoint()
-        seen = seen.localCheckpoint()
-        workdir = tempfile.mkdtemp(prefix="stream_bloom_")
+    with scratch_dir("stream_bloom_") as workdir:
         drop_dir = f"{workdir}/incoming"
         out_dir = f"{workdir}/verdicts"
-        checkpoint = f"{workdir}/checkpoint"
-        incoming = _bloom_incoming(docs)
-        # 4 files at 2/trigger => multiple real micro-batches
-        incoming.repartition(4).write.parquet(drop_dir)
+        with setup_span("streaming_bloom_dedup"):
+            # build-once: pin filter AND seen keys before the stream
+            bits = bloom_bits(
+                seen, "key", _BLOOM_DEDUP_M, _BLOOM_DEDUP_K
+            ).localCheckpoint()
+            seen = seen.localCheckpoint()
+            incoming = _bloom_incoming(docs)
+            # 4 files at 2/trigger => multiple real micro-batches
+            incoming.repartition(4).write.parquet(drop_dir)
 
-    stream = stream_source(
-        spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        inkeys = batch_df.select("doc_id", md5_key("text").alias("key"))
-        _bloom_gate(inkeys, bits, seen).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
+        stream = stream_source(
+            spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
         )
 
-    q = (
-        stream.writeStream.foreachBatch(publish)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def publish(batch_df: DataFrame, batch_id: int) -> None:
+            inkeys = batch_df.select("doc_id", md5_key("text").alias("key"))
+            _bloom_gate(inkeys, bits, seen).write.mode("overwrite").parquet(
+                f"{out_dir}/batch={batch_id}"
+            )
 
-    out = spark.read.parquet(out_dir).select(
-        "doc_id", "bloom_positive", "is_dup", "kept"
-    ).orderBy("doc_id")
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        run_available_now(
+            stream.writeStream.foreachBatch(publish), f"{workdir}/checkpoint"
+        )
+        out = spark.read.parquet(out_dir).select(
+            "doc_id", "bloom_positive", "is_dup", "kept"
+        ).orderBy("doc_id")
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -7555,11 +7508,8 @@ def streaming_curation_funnel(
     ``streaming_bloom_dedup`` in front), and the gram explode probed
     against the BROADCAST eval grams — the corpus is never shuffled
     on the gram key, per-trigger state never exceeds the batch."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
-    from ..streaming.ingest import stream_source
+    from ..benchmeta import collect_local, scratch_dir, setup_span
+    from ..streaming.ingest import run_available_now, stream_source
 
     docs = load_table(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 41 == 0)
@@ -7585,98 +7535,90 @@ def streaming_curation_funnel(
         .localCheckpoint(eager=False)
     )
 
-    with setup_span("streaming_curation_funnel"):
-        workdir = tempfile.mkdtemp(prefix="stream_funnel_")
+    with scratch_dir("stream_funnel_") as workdir:
         drop_dir = f"{workdir}/incoming"
         sink = f"{workdir}/classes"
-        checkpoint = f"{workdir}/checkpoint"
-        corpus.repartition(_parts).write.parquet(drop_dir)
-        # seed the class sink so every batch can anti-join it
-        spark.createDataFrame(
-            [], "lang string, fp string, n_tokens long, contaminated boolean"
-        ).write.parquet(sink)
+        with setup_span("streaming_curation_funnel"):
+            corpus.repartition(_parts).write.parquet(drop_dir)
+            # seed the class sink so every batch can anti-join it
+            spark.createDataFrame(
+                [], "lang string, fp string, n_tokens long, contaminated boolean"
+            ).write.parquet(sink)
 
-    def do_batch(batch: DataFrame, batch_id: int) -> None:
-        cls = (
-            batch.filter(q)
-            .select(
-                "lang",
-                F.md5(norm.cast("binary")).alias("fp"),
-                norm.alias("norm"),
+        def do_batch(batch: DataFrame, batch_id: int) -> None:
+            cls = (
+                batch.filter(q)
+                .select(
+                    "lang",
+                    F.md5(norm.cast("binary")).alias("fp"),
+                    norm.alias("norm"),
+                )
+                .dropDuplicates(["lang", "fp"])
             )
-            .dropDuplicates(["lang", "fp"])
-        )
-        seen = batch.sparkSession.read.parquet(sink).select("lang", "fp")
-        new = cls.join(seen, ["lang", "fp"], "left_anti")
-        hits = (
-            _decon_gram_explode(
-                new.select("lang", "fp", F.col("norm").alias("text")),
+            seen = batch.sparkSession.read.parquet(sink).select("lang", "fp")
+            new = cls.join(seen, ["lang", "fp"], "left_anti")
+            hits = (
+                _decon_gram_explode(
+                    new.select("lang", "fp", F.col("norm").alias("text")),
+                    "lang",
+                    "fp",
+                )
+                .join(F.broadcast(eval_grams), "g", "left_semi")
+                .select("lang", "fp")
+                .distinct()
+                .withColumn("__hit", F.lit(1))
+            )
+            out = new.join(hits, ["lang", "fp"], "left").select(
                 "lang",
                 "fp",
+                F.size(F.split("norm", " ")).cast("long").alias("n_tokens"),
+                F.col("__hit").isNotNull().alias("contaminated"),
             )
-            .join(F.broadcast(eval_grams), "g", "left_semi")
-            .select("lang", "fp")
-            .distinct()
-            .withColumn("__hit", F.lit(1))
-        )
-        out = new.join(hits, ["lang", "fp"], "left").select(
-            "lang",
-            "fp",
-            F.size(F.split("norm", " ")).cast("long").alias("n_tokens"),
-            F.col("__hit").isNotNull().alias("contaminated"),
-        )
-        out.write.mode("append").parquet(sink)
+            out.write.mode("append").parquet(sink)
 
-    stream = stream_source(
-        spark,
-        drop_dir,
-        corpus.schema,
-        fmt="parquet",
-        maxFilesPerTrigger=_files_per_trigger,
-    )
-    sq = (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
-    classes = spark.read.parquet(sink)
-    ded = classes.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_dedup"),
-        F.sum(F.when(~F.col("contaminated"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_clean"),
-        F.coalesce(
-            F.sum(F.when(~F.col("contaminated"), F.col("n_tokens"))),
-            F.lit(0),
+        stream = stream_source(
+            spark,
+            drop_dir,
+            corpus.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=_files_per_trigger,
         )
-        .cast("long")
-        .alias("tokens_clean"),
-    )
-    rawq = corpus.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_raw"),
-        F.sum(F.when(q, 1).otherwise(0)).cast("long").alias("n_quality"),
-    )
-    out = (
-        rawq.join(ded, "lang", "left")
-        .select(
-            "lang",
-            "n_raw",
-            "n_quality",
-            F.coalesce("n_dedup", F.lit(0)).cast("long").alias("n_dedup"),
-            F.coalesce("n_clean", F.lit(0)).cast("long").alias("n_clean"),
-            F.coalesce("tokens_clean", F.lit(0))
+        run_available_now(
+            stream.writeStream.foreachBatch(do_batch), f"{workdir}/checkpoint"
+        )
+
+        classes = spark.read.parquet(sink)
+        ded = classes.groupBy("lang").agg(
+            F.count(F.lit(1)).cast("long").alias("n_dedup"),
+            F.sum(F.when(~F.col("contaminated"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_clean"),
+            F.coalesce(
+                F.sum(F.when(~F.col("contaminated"), F.col("n_tokens"))),
+                F.lit(0),
+            )
             .cast("long")
             .alias("tokens_clean"),
         )
-        .orderBy("lang")
-    )
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        rawq = corpus.groupBy("lang").agg(
+            F.count(F.lit(1)).cast("long").alias("n_raw"),
+            F.sum(F.when(q, 1).otherwise(0)).cast("long").alias("n_quality"),
+        )
+        out = (
+            rawq.join(ded, "lang", "left")
+            .select(
+                "lang",
+                "n_raw",
+                "n_quality",
+                F.coalesce("n_dedup", F.lit(0)).cast("long").alias("n_dedup"),
+                F.coalesce("n_clean", F.lit(0)).cast("long").alias("n_clean"),
+                F.coalesce("tokens_clean", F.lit(0))
+                .cast("long")
+                .alias("tokens_clean"),
+            )
+            .orderBy("lang")
+        )
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------

@@ -297,40 +297,34 @@ def streaming_merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the stream shuffles exactly like the batch merge (one
     full-outer join per micro-batch); checkpointing gives exactly-once
-    publication."""
+    publication.
+
+    The published merge output is read back LAZILY from ``out_dir``,
+    a temp dir that deliberately outlives the call (one merged table
+    per invocation, under the process temp dir): returning it through
+    ``collect_local`` instead pushed ~14.5k rows through the driver and
+    cost ~1 s per warm call on local[4] at scale 0.01.  Only the drop
+    files and checkpoint are scratch."""
     import tempfile
 
+    from ..benchmeta import scratch_dir, setup_span
     from ..streaming.ingest import run_merge_sink, stream_source
 
     cur = current_fixture(spark, sf_dir)
     stg = staging_fixture(spark, sf_dir)
-
-    from ..benchmeta import setup_span
-
-    with setup_span("streaming_merge_scd1"):
-        workdir = tempfile.mkdtemp(prefix="stream_merge_")
-        drop_dir = f"{workdir}/staging"
-        out_dir = f"{workdir}/merged"
-        checkpoint = f"{workdir}/checkpoint"
-        # One file => one micro-batch => the publish IS the full merge.
-        stg.coalesce(1).write.parquet(drop_dir)
-
-    stream = stream_source(spark, drop_dir, stg.schema, fmt="parquet")
+    out_dir = tempfile.mkdtemp(prefix="stream_merge_out_")
 
     def publish(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(out_dir)
 
-    q = run_merge_sink(
-        stream, lambda: cur, publish, run_date=RUN_DATE, checkpoint=checkpoint
-    ).start()
-    q.awaitTermination()
-    # The published merge output must persist (read back lazily below);
-    # the staging drop files and checkpoint are done — don't leak them.
-    import shutil
-
-    shutil.rmtree(drop_dir, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
-
+    with scratch_dir("stream_merge_") as workdir:
+        with setup_span("streaming_merge_scd1"):
+            # One file => one micro-batch => the publish IS the full merge.
+            stg.coalesce(1).write.parquet(f"{workdir}/staging")
+        stream = stream_source(spark, f"{workdir}/staging", stg.schema, fmt="parquet")
+        run_merge_sink(
+            stream, lambda: cur, publish, RUN_DATE, checkpoint=f"{workdir}/checkpoint"
+        )
     return _merge_projection(spark.read.parquet(out_dir))
 
 
@@ -557,10 +551,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     write + one small JSON PUT.  Production amortizes storage with
     delta manifests + compaction (the layout tier's compact_files),
     same commit protocol."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.snapshots import publish_version, read_snapshot
 
     # (fan_out on this scan was measured and REJECTED in r15: spreading
@@ -575,9 +566,8 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
 
-    workdir = tempfile.mkdtemp(prefix="snap_tt_")
-    table_dir = f"{workdir}/orders_versions"
-    try:
+    with scratch_dir("snap_tt_") as workdir:
+        table_dir = f"{workdir}/orders_versions"
         with setup_span("snapshot_time_travel"):
             publish_version(base, table_dir, 1)
             v1 = read_snapshot(spark, table_dir, 1)
@@ -610,14 +600,8 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             for v in (1, 2, 3)
         ]
         out = stats[0].unionByName(stats[1]).unionByName(stats[2]).orderBy("version")
-        # Bounded read-back (≤ |versions|·|groups| rows) so the temp
-        # version store can be removed before returning — same posture
-        # as the streaming memory-sink read-backs.
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        # ≤ |versions|·|groups| rows
+        return collect_local(out)
 
 
 @query(
@@ -661,10 +645,7 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the diff is ONE full-outer hash join on the key plus
     null-safe column compares — JVM expressions only; bucketed
     versions (layout tier) would diff with zero exchanges."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.snapshots import publish_version, read_snapshot, snapshot_diff
 
     # (fan_out on this scan was measured and REJECTED in r15: spreading
@@ -679,9 +660,8 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
 
-    workdir = tempfile.mkdtemp(prefix="snap_cf_")
-    table_dir = f"{workdir}/orders_versions"
-    try:
+    with scratch_dir("snap_cf_") as workdir:
+        table_dir = f"{workdir}/orders_versions"
         with setup_span("snapshot_change_feed"):
             publish_version(base, table_dir, 1)
             v1 = read_snapshot(spark, table_dir, 1)
@@ -717,14 +697,8 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("change_type")
         )
-        # Bounded read-back (≤ |versions|·|groups| rows) so the temp
-        # version store can be removed before returning — same posture
-        # as the streaming memory-sink read-backs.
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        # ≤ |versions|·|groups| rows
+        return collect_local(out)
 
 
 @query(
@@ -770,10 +744,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     same algebra).  Sum/count are self-inverting under deltas; min/max
     are not — those need the full recompute or a monotone argument,
     which is why the gate column exists."""
-    import shutil
-    import tempfile
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.snapshots import publish_version, read_snapshot, snapshot_diff
 
     # (fan_out on this scan was measured and REJECTED in r15: spreading
@@ -788,9 +759,8 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
 
-    workdir = tempfile.mkdtemp(prefix="snap_ivm_")
-    table_dir = f"{workdir}/orders_versions"
-    try:
+    with scratch_dir("snap_ivm_") as workdir:
+        table_dir = f"{workdir}/orders_versions"
         with setup_span("incremental_agg_maintenance"):
             publish_version(base, table_dir, 1)
             v1 = read_snapshot(spark, table_dir, 1)
@@ -861,14 +831,8 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderstatus")
         )
-        # Bounded read-back (≤ |versions|·|groups| rows) so the temp
-        # version store can be removed before returning — same posture
-        # as the streaming memory-sink read-backs.
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        # ≤ |versions|·|groups| rows
+        return collect_local(out)
 
 
 @query(
@@ -1184,13 +1148,11 @@ def streaming_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     and write paths disjoint — the self-overwrite trap a naive
     read-merge-overwrite sink springs at ANY scale."""
     import os
-    import shutil
-    import tempfile
     import time
 
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.merge import merge_scd2
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import run_available_now, stream_source
 
     c = load_table(spark, sf_dir, "customer")
     hist0 = c.select(
@@ -1222,49 +1184,47 @@ def streaming_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("2026-06-01").cast("timestamp").alias("eff"),
     )
 
-    with setup_span("streaming_merge_scd2"):
-        workdir = tempfile.mkdtemp(prefix="stream_scd2_")
+    with scratch_dir("stream_scd2_") as workdir:
         drop_dir = f"{workdir}/updates"
         out_root = f"{workdir}/history"
-        checkpoint = f"{workdir}/checkpoint"
-        # micro-batch order = file modification time (file source
-        # processes oldest first) — but back-to-back writes can TIE on
-        # filesystems with coarse mtime granularity, and tied files
-        # have no guaranteed order (ADVICE r06).  Pin the order
-        # explicitly: stamp every b1 file strictly older than every
-        # b2 file.
-        b1.coalesce(1).write.parquet(f"{drop_dir}/b1")
-        b2.coalesce(1).write.parquet(f"{drop_dir}/b2")
-        now = time.time()
-        for sub, ts in (("b1", now - 120), ("b2", now - 60)):
-            for root_, _dirs, files in os.walk(f"{drop_dir}/{sub}"):
-                for fn in files:
-                    os.utime(os.path.join(root_, fn), (ts, ts))
+        with setup_span("streaming_merge_scd2"):
+            # micro-batch order = file modification time (file source
+            # processes oldest first) — but back-to-back writes can TIE on
+            # filesystems with coarse mtime granularity, and tied files
+            # have no guaranteed order (ADVICE r06).  Pin the order
+            # explicitly: stamp every b1 file strictly older than every
+            # b2 file.
+            b1.coalesce(1).write.parquet(f"{drop_dir}/b1")
+            b2.coalesce(1).write.parquet(f"{drop_dir}/b2")
+            now = time.time()
+            for sub, ts in (("b1", now - 120), ("b2", now - 60)):
+                for root_, _dirs, files in os.walk(f"{drop_dir}/{sub}"):
+                    for fn in files:
+                        os.utime(os.path.join(root_, fn), (ts, ts))
 
-    stream = stream_source(
-        spark, f"{drop_dir}/*", b1.schema, fmt="parquet", maxFilesPerTrigger=1
-    )
-    published: list[str] = []
+        stream = stream_source(
+            spark, f"{drop_dir}/*", b1.schema, fmt="parquet", maxFilesPerTrigger=1
+        )
+        published: list[str] = []
 
-    def do_merge(batch_df: DataFrame, batch_id: int) -> None:
-        current = (
-            spark.read.parquet(published[-1]) if published else hist0
-        )
-        merged = merge_scd2(
-            current, batch_df, key="ck", attrs=["segment", "acctbal"], effective="eff"
-        )
-        path = f"{out_root}/v{batch_id}"
-        merged.write.mode("overwrite").parquet(path)
-        published.append(path)
+        def do_merge(batch_df: DataFrame, batch_id: int) -> None:
+            current = (
+                spark.read.parquet(published[-1]) if published else hist0
+            )
+            merged = merge_scd2(
+                current,
+                batch_df,
+                key="ck",
+                attrs=["segment", "acctbal"],
+                effective="eff",
+            )
+            path = f"{out_root}/v{batch_id}"
+            merged.write.mode("overwrite").parquet(path)
+            published.append(path)
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(do_merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            stream.writeStream.foreachBatch(do_merge), f"{workdir}/checkpoint"
         )
-        q.awaitTermination()
         final = spark.read.parquet(published[-1])
         out = final.select(
             "ck",
@@ -1274,8 +1234,4 @@ def streaming_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("valid_to", "yyyy-MM-dd").alias("valid_to"),
             "is_current",
         ).orderBy("ck", "valid_from", "is_current")
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        return collect_local(out)

@@ -485,72 +485,44 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is keyed by (window, event_type) — bounded keys; the
     watermark evicts closed windows, so state size tracks the window
     span, not the stream history."""
-    import tempfile
-    import uuid
-
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import stream_source, windowed_counts
+    from ..streaming.ingest import (
+        memory_view,
+        run_available_now,
+        stream_source,
+        windowed_counts,
+    )
 
     events = load_table(spark, sf_dir, "events").select("ts", "event_type")
 
-    from ..benchmeta import setup_span
-
-    with setup_span("streaming_windowed_counts"):
-        workdir = tempfile.mkdtemp(prefix="stream_wc_")
-        drop_dir = f"{workdir}/events"
-        checkpoint = f"{workdir}/checkpoint"
-        events.repartition(4).write.parquet(drop_dir)
-
-    stream = stream_source(
-        spark, drop_dir, events.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-    counts = windowed_counts(stream, ts_col="ts", window="1 day", delay="2 hours")
-    name = f"swc_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (r15): state
-    # is keyed by (window, event_type) — a handful of live keys — and
-    # the state-store cost is per partition per micro-batch; the same
-    # key-cardinality sizing the other stateful streams pinned in r06
-    # (see streaming_queue_status).  Save/restore the session conf.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    with scratch_dir("stream_wc_") as workdir, memory_view(spark, "swc") as name:
+        with setup_span("streaming_windowed_counts"):
+            events.repartition(4).write.parquet(f"{workdir}/events")
+        stream = stream_source(
+            spark,
+            f"{workdir}/events",
+            events.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # The memory sink holds the result — the dropped files and
-    # checkpoint are no longer needed, so don't leak them per run.
-    import shutil
-
-    shutil.rmtree(workdir, ignore_errors=True)
-
-    out = (
-        spark.table(name)
-        .select(
-            F.date_format("window_start", "yyyy-MM-dd").alias("window_day"),
-            "event_type",
-            F.col("n").cast("long").alias("n"),
+        counts = windowed_counts(stream, ts_col="ts", window="1 day", delay="2 hours")
+        run_available_now(
+            counts.writeStream.format("memory").queryName(name).outputMode("complete"),
+            f"{workdir}/checkpoint",
+            state_partitions=8,
         )
-        .orderBy("window_day", "event_type")
-    )
-    # Materialize, then DROP the memory-sink view (ADVICE r04): without
-    # this every invocation (bench warm-up + timed run, verify passes)
-    # leaves a full result copy registered in driver memory for the
-    # session lifetime.  The collect here is the memory-sink read-back,
-    # not a distributed-data collapse — the sink already holds these
-    # rows on the driver, and the result is bounded by
-    # |windows| × |event_types| (150 at sf0.01), not by stream size.
-    rows = out.collect()
-    schema = out.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+        out = (
+            spark.table(name)
+            .select(
+                F.date_format("window_start", "yyyy-MM-dd").alias("window_day"),
+                "event_type",
+                F.col("n").cast("long").alias("n"),
+            )
+            .orderBy("window_day", "event_type")
+        )
+        # |windows| × |event_types| rows (150 at sf0.01)
+        return collect_local(out)
 
 
 @query(
@@ -591,12 +563,9 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded-state posture is exactly why it scales to unbounded
     streams where the foreachBatch corpus-anti-join needs a persisted
     corpus table instead."""
-    import shutil
-    import tempfile
-    import uuid
-
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import memory_view, run_available_now, stream_source
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
@@ -605,62 +574,43 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("event_id") % 3 == 0)
     )
 
-    from ..benchmeta import setup_span
-
-    with setup_span("streaming_watermark_dedup"):
-        workdir = tempfile.mkdtemp(prefix="stream_wmdedup_")
-        drop_dir = f"{workdir}/incoming"
-        checkpoint = f"{workdir}/checkpoint"
-        incoming.repartition(4).write.parquet(drop_dir)
-
-    stream = stream_source(
-        spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-    deduped = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    name = f"swd_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (state store
-    # per partition per micro-batch — see streaming_queue_status).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    with scratch_dir("stream_wmdedup_") as workdir, memory_view(spark, "swd") as name:
+        with setup_span("streaming_watermark_dedup"):
+            incoming.repartition(4).write.parquet(f"{workdir}/incoming")
+        stream = stream_source(
+            spark,
+            f"{workdir}/incoming",
+            incoming.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(workdir, ignore_errors=True)
-
-    totals = incoming.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_in")
-    )
-    kept = (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
-    )
-    out = (
-        totals.join(kept, "event_type", "left")
-        .select(
-            "event_type",
-            "n_in",
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+        deduped = stream.withWatermark(
+            "ts", "3650 days"
+        ).dropDuplicatesWithinWatermark(["event_id"])
+        run_available_now(
+            deduped.writeStream.format("memory").queryName(name).outputMode("append"),
+            f"{workdir}/checkpoint",
+            state_partitions=8,
         )
-        .orderBy("event_type")
-    )
-    # bounded memory-sink read-back (|event_types| rows), then drop the
-    # view so repeated invocations don't accumulate driver copies.
-    rows = out.collect()
-    schema = out.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+        totals = incoming.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("long").alias("n_in")
+        )
+        kept = (
+            spark.table(name)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
+        )
+        out = (
+            totals.join(kept, "event_type", "left")
+            .select(
+                "event_type",
+                "n_in",
+                F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+            )
+            .orderBy("event_type")
+        )
+        # |event_types| rows
+        return collect_local(out)
 
 
 _QSTATUS_CASE_SQL = """
@@ -717,12 +667,14 @@ def streaming_queue_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; update-mode emission ships only touched keys per batch, and a
     state-store TTL (GroupStateTimeout) would bound the key set on an
     unbounded url space."""
-    import shutil
-    import tempfile
-    import uuid
-
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import queue_status_stream, stream_source
+    from ..streaming.ingest import (
+        memory_view,
+        queue_status_stream,
+        run_available_now,
+        stream_source,
+    )
 
     events = load_table(spark, sf_dir, "events")
     updates = events.select(
@@ -732,66 +684,43 @@ def streaming_queue_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_QSTATUS_CASE_SQL).alias("status"),
     )
 
-    from ..benchmeta import setup_span
-
-    with setup_span("streaming_queue_status"):
-        workdir = tempfile.mkdtemp(prefix="stream_qs_")
-        drop_dir = f"{workdir}/updates"
-        checkpoint = f"{workdir}/checkpoint"
-        updates.repartition(4).write.parquet(drop_dir)
-
-    stream = stream_source(
-        spark, drop_dir, updates.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-    states = queue_status_stream(stream)
-    name = f"sqs_{uuid.uuid4().hex[:8]}"
-    # The stateful operator's partition count is fixed per checkpoint
-    # at first run; each partition costs a Python-worker round-trip
-    # PER MICRO-BATCH.  The fixture has ~150 keys, so 8 state
-    # partitions (vs the session's 32) cut worker round-trips 4× with
-    # zero skew risk; a real deployment sizes this to its key
-    # cardinality before the first checkpoint write.  Save/restore the
-    # session conf — only this stream should see it.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            states.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(workdir, ignore_errors=True)
-
     rank = F.expr(
         "CASE status WHEN 'Available' THEN 0 WHEN 'Error' THEN 1"
         " WHEN 'Delisted' THEN 2 ELSE 3 END"
     )
-    out = (
-        spark.table(name)
-        .select("url", rank.alias("r"), "n_events")
-        .groupBy("url")
-        .agg(
-            F.expr(
-                "CASE max(r) WHEN 0 THEN 'Available' WHEN 1 THEN 'Error'"
-                " WHEN 2 THEN 'Delisted' ELSE 'Sold' END"
-            ).alias("status"),
-            F.max("n_events").cast("long").alias("n_events"),
+    with scratch_dir("stream_qs_") as workdir, memory_view(spark, "sqs") as name:
+        with setup_span("streaming_queue_status"):
+            updates.repartition(4).write.parquet(f"{workdir}/updates")
+        stream = stream_source(
+            spark,
+            f"{workdir}/updates",
+            updates.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
         )
-        .orderBy("url")
-    )
-    # Materialize then DROP the memory-sink view (same posture as
-    # streaming_windowed_counts): the sink rows are already
-    # driver-resident and bounded by |urls| × |micro-batches|.
-    rows = out.collect()
-    schema = out.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+        run_available_now(
+            queue_status_stream(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update"),
+            f"{workdir}/checkpoint",
+            state_partitions=8,
+        )
+        out = (
+            spark.table(name)
+            .select("url", rank.alias("r"), "n_events")
+            .groupBy("url")
+            .agg(
+                F.expr(
+                    "CASE max(r) WHEN 0 THEN 'Available' WHEN 1 THEN 'Error'"
+                    " WHEN 2 THEN 'Delisted' ELSE 'Sold' END"
+                ).alias("status"),
+                F.max("n_events").cast("long").alias("n_events"),
+            )
+            .orderBy("url")
+        )
+        # |urls| rows (~150 keys in the fixture)
+        return collect_local(out)
 
 
 @query(
@@ -844,62 +773,41 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     certification read-back (complete-mode memory sink) is bounded by
     |users| × |sessions|; the returned frame re-aggregates it to one
     row per user."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import memory_view, run_available_now, stream_source
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    with setup_span("streaming_session_windows"):
-        workdir = tempfile.mkdtemp(prefix="stream_sess_")
-        drop_dir = f"{workdir}/events"
-        checkpoint = f"{workdir}/checkpoint"
-        events.repartition(4).write.parquet(drop_dir)
-
-    stream = stream_source(
-        spark, drop_dir, events.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-    sess = stream.groupBy(
-        "user_id", F.session_window("ts", "4 hours").alias("w")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = f"ssw_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (state store
-    # per partition per micro-batch — see streaming_queue_status).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    with scratch_dir("stream_sess_") as workdir, memory_view(spark, "ssw") as name:
+        with setup_span("streaming_session_windows"):
+            events.repartition(4).write.parquet(f"{workdir}/events")
+        stream = stream_source(
+            spark,
+            f"{workdir}/events",
+            events.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(workdir, ignore_errors=True)
-
-    out = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.max("n_events").cast("long").alias("max_session_events"),
+        sess = stream.groupBy(
+            "user_id", F.session_window("ts", "4 hours").alias("w")
+        ).agg(F.count(F.lit(1)).alias("n_events"))
+        run_available_now(
+            sess.writeStream.format("memory").queryName(name).outputMode("complete"),
+            f"{workdir}/checkpoint",
+            state_partitions=8,
         )
-        .orderBy("user_id")
-    )
-    # Memory-sink read-back + view drop (same posture as the other
-    # streaming certifications): rows are bounded by |users| here.
-    rows = out.collect()
-    schema = out.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+        out = (
+            spark.table(name)
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_sessions"),
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.max("n_events").cast("long").alias("max_session_events"),
+            )
+            .orderBy("user_id")
+        )
+        # |users| rows
+        return collect_local(out)
 
 
 @query(
@@ -932,13 +840,9 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, bounded by |nations|.  A dim too big to broadcast
     bucketizes instead; re-broadcast per batch also picks up
     slowly-changing dim updates in production."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import memory_view, run_available_now, stream_source
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -948,47 +852,33 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "n_name")
     )
 
-    with setup_span("streaming_static_enrichment"):
-        workdir = tempfile.mkdtemp(prefix="stream_enrich_")
-        drop_dir = f"{workdir}/events"
-        checkpoint = f"{workdir}/checkpoint"
-        events.repartition(4).write.parquet(drop_dir)
-
-    stream = stream_source(
-        spark, drop_dir, events.schema, fmt="parquet", maxFilesPerTrigger=2
-    )
-    enriched = (
-        stream.join(dim, stream.user_id == dim.c_custkey, "inner")
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+    with scratch_dir("stream_enrich_") as workdir, memory_view(spark, "sse") as name:
+        with setup_span("streaming_static_enrichment"):
+            events.repartition(4).write.parquet(f"{workdir}/events")
+        stream = stream_source(
+            spark,
+            f"{workdir}/events",
+            events.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
         )
-    )
-    name = f"sse_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (state store
-    # per partition per micro-batch — see streaming_queue_status).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
+        enriched = (
+            stream.join(dim, stream.user_id == dim.c_custkey, "inner")
+            .groupBy("n_name")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
+        )
+        run_available_now(
             enriched.writeStream.format("memory")
             .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("complete"),
+            f"{workdir}/checkpoint",
+            state_partitions=8,
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(workdir, ignore_errors=True)
-
-    out = spark.table(name).orderBy("n_name")
-    rows = out.collect()
-    schema = out.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+        # |nations| rows
+        return collect_local(spark.table(name).orderBy("n_name"))
 
 
 # Count-min sketch geometry: depth 5 (five independent xxhash64
@@ -1131,13 +1021,9 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The append-mode sink emits each matched pair exactly once; the
     returned frame re-aggregates pairs per user."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from ..benchmeta import setup_span
+    from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import stream_source
+    from ..streaming.ingest import memory_view, run_available_now, stream_source
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
@@ -1153,60 +1039,47 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("click_ts"),
     )
 
-    with setup_span("streaming_stream_stream_join"):
-        workdir = tempfile.mkdtemp(prefix="stream_ssj_")
-        checkpoint = f"{workdir}/checkpoint"
-        errors.repartition(4).write.parquet(f"{workdir}/errors")
-        clicks.repartition(4).write.parquet(f"{workdir}/clicks")
-
-    se = stream_source(
-        spark, f"{workdir}/errors", errors.schema, fmt="parquet", maxFilesPerTrigger=2
-    ).withWatermark("err_ts", "3650 days")
-    sc = stream_source(
-        spark, f"{workdir}/clicks", clicks.schema, fmt="parquet", maxFilesPerTrigger=2
-    ).withWatermark("click_ts", "3650 days")
-    joined = se.join(
-        sc,
-        (F.col("err_user") == F.col("click_user"))
-        & (F.col("click_ts") >= F.col("err_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("err_ts")),
-        "inner",
-    )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    # Stream-stream joins keep a state store per shuffle partition on
-    # BOTH sides and checkpoint each per micro-batch — at 32 local
-    # partitions that constant cost dwarfs the data.  Run the stream
-    # at 8 partitions (same posture as streaming_queue_status); on a
-    # real cluster this knob is sized to state volume, not cores.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    with scratch_dir("stream_ssj_") as workdir, memory_view(spark, "ssj") as name:
+        with setup_span("streaming_stream_stream_join"):
+            errors.repartition(4).write.parquet(f"{workdir}/errors")
+            clicks.repartition(4).write.parquet(f"{workdir}/clicks")
+        se = stream_source(
+            spark,
+            f"{workdir}/errors",
+            errors.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
+        ).withWatermark("err_ts", "3650 days")
+        sc = stream_source(
+            spark,
+            f"{workdir}/clicks",
+            clicks.schema,
+            fmt="parquet",
+            maxFilesPerTrigger=2,
+        ).withWatermark("click_ts", "3650 days")
+        joined = se.join(
+            sc,
+            (F.col("err_user") == F.col("click_user"))
+            & (F.col("click_ts") >= F.col("err_ts") - F.expr("INTERVAL 1 HOUR"))
+            & (F.col("click_ts") <= F.col("err_ts")),
+            "inner",
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(workdir, ignore_errors=True)
-
-    out = (
-        spark.table(name)
-        .groupBy(F.col("err_user").alias("err_user"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.countDistinct("err_id").alias("n_errors_with_click"),
+        run_available_now(
+            joined.writeStream.format("memory").queryName(name).outputMode("append"),
+            f"{workdir}/checkpoint",
+            state_partitions=8,
         )
-        .orderBy("err_user")
-    )
-    rows = out.collect()
-    schema = out.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+        out = (
+            spark.table(name)
+            .groupBy(F.col("err_user").alias("err_user"))
+            .agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                F.countDistinct("err_id").alias("n_errors_with_click"),
+            )
+            .orderBy("err_user")
+        )
+        # |users with an attributed error| rows
+        return collect_local(out)
 
 
 @query(

@@ -9,8 +9,23 @@ correctness or plan shape matters.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+def _positive_int_env(name: str, default: str) -> int:
+    """Read ``name`` as a positive integer; raise ``ValueError`` naming
+    the variable instead of letting Spark fail on the built conf."""
+    raw = os.environ.get(name, default)
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value <= 0:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
 
 
 def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
@@ -20,8 +35,13 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
     here encode the engine's posture: AQE on (runtime re-plan,
     partition coalescing, skew-join splitting), Arrow on (pandas-UDF
     tier), sane shuffle parallelism for local[N].
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_ADVISORY_MB`` must be
+    positive integers; anything else raises ``ValueError`` before a
+    session is built.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _positive_int_env("SPARK_GRAFT_CPUS", "32")
+    advisory_mb = _positive_int_env("SPARK_GRAFT_ADVISORY_MB", "16")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -45,10 +65,10 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
         # amortisation dominates).  Override via SPARK_GRAFT_ADVISORY_MB.
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_MB", "16") + "m",
+            f"{advisory_mb}m",
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Runtime bloom-filter join pruning: a selective dim-side
@@ -64,3 +84,33 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, **confs) -> Iterator[None]:
+    """Set session confs for the enclosed block, then restore them.
+
+    Each key's previous value is saved with ``spark.conf.get(k, None)``
+    and put back on exit, exceptions included; a key that was unset
+    before is unset again (not pinned to its default).  Dotted keys go
+    in via ``**{"spark.sql.shuffle.partitions": "8"}``.
+
+    The session conf is shared state, so the scope is NOT reentrant
+    across threads and NOT safe under concurrent queries on the same
+    session: any query that plans while the scope is open sees the
+    overrides, and two scopes that interleave (rather than nest)
+    restore each other's values.  Strictly nested scopes on one thread
+    restore correctly.  Every engine-side conf override goes through
+    here, so a driver-owned session is never left mutated.
+    """
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+
 TABLES = (
     "region",
     "nation",
@@ -45,7 +47,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (and the DuckDB oracles) sees one stable type.
 
     EXECUTION-AFTER-RESTORE ASSUMPTION (ADVICE r04): the conf overrides
-    below are restored in ``finally`` BEFORE the returned DataFrame ever
+    below are restored by ``conf_scope`` BEFORE the returned DataFrame ever
     executes.  Correctness therefore relies on Spark baking the
     footer-inferred schema into the relation at ``read()`` time — true
     today, and pinned by ``tests/test_readers.py`` (a required gate: it
@@ -59,8 +61,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # Save/restore confs so a scan never permanently mutates a
-        # (possibly driver-owned) shared session.
+        # Scoped confs so a scan never permanently mutates a (possibly
+        # driver-owned) shared session.
         confs = {
             # TIMESTAMP(NANOS) variant: read as epoch-nanos int64.
             "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -70,10 +72,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # filter pushdown on the scan.
             "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         }
-        prevs = {k: spark.conf.get(k, None) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
+        with conf_scope(spark, **confs):
             df = spark.read.parquet(path)
             ts_type = df.schema["ts"].dataType.typeName()
             if ts_type == "long":
@@ -88,12 +87,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # filters, date_format, and the oracle hash-compare agree.
                 return df.withColumn("ts", F.col("ts").cast("timestamp"))
             return df  # already TimestampType
-        finally:
-            for k, prev in prevs.items():
-                if prev is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, prev)
     return spark.read.parquet(path)
 
 

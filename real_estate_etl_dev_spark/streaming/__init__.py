@@ -2,7 +2,9 @@
 
 from .ingest import (
     dedup_urls,
+    memory_view,
     queue_status_stream,
+    run_available_now,
     run_merge_sink,
     stream_source,
     windowed_counts,
@@ -10,7 +12,9 @@ from .ingest import (
 
 __all__ = [
     "dedup_urls",
+    "memory_view",
     "queue_status_stream",
+    "run_available_now",
     "run_merge_sink",
     "stream_source",
     "windowed_counts",

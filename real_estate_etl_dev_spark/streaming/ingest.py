@@ -17,13 +17,18 @@ engine — one code path for both modes.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..session import conf_scope
 
 try:  # pragma: no cover
     import sys
@@ -76,17 +81,65 @@ def windowed_counts(
     )
 
 
+def run_available_now(
+    writer: DataStreamWriter, checkpoint: str, state_partitions: int | None = None
+) -> StreamingQuery:
+    """Run a shaped stream writer to completion: every file available at
+    start, in as many micro-batches as ``maxFilesPerTrigger`` slices
+    them, then stop.  The caller shapes ``writer`` (a memory sink with
+    ``queryName``/``outputMode``, or ``foreachBatch(fn)``); this adds
+    the checkpoint and ``Trigger.AvailableNow``, blocks until the query
+    terminates and returns it (``recentProgress`` stays readable).  A
+    failing micro-batch re-raises here.
+
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` (via
+    :func:`conf_scope`, restored afterwards) for the whole run.  A
+    stateful operator's partition count is fixed in the checkpoint at
+    the first batch, and every state-store partition costs a commit
+    (and, for ``applyInPandasWithState``, a Python-worker round-trip)
+    PER MICRO-BATCH — at 32 local partitions that constant cost dwarfs
+    the fixtures' data.  The stateful certification streams key a few
+    hundred keys at most (windows × event types, urls, users), so 8
+    partitions cut that overhead 4× with no skew risk; a real
+    deployment sizes this to its key cardinality before the first
+    checkpoint write.  Stateless ``foreachBatch`` streams leave it
+    unset: pinning would also re-plan the batch shuffles inside their
+    micro-batches."""
+    writer = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
+    confs = {}
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    # the writer exposes its session only as ``_spark``
+    with conf_scope(writer._spark, **confs):
+        query = writer.start()
+        query.awaitTermination()
+    return query
+
+
+@contextmanager
+def memory_view(spark: SparkSession, prefix: str) -> Iterator[str]:
+    """A unique memory-sink query name, whose temp view is dropped on
+    exit — also when the stream or its read-back raises — so repeated
+    invocations don't keep a driver-resident result copy per run."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    try:
+        yield name
+    finally:
+        spark.catalog.dropTempView(name)
+
+
 def run_merge_sink(
     staging_stream: DataFrame,
     current_supplier,
     publish,
     run_date: str,
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Upsert sink: every micro-batch full-outer merges into the
     current table via the BATCH merge engine (one code path), then
     publishes atomically.  ``current_supplier()`` -> DataFrame,
-    ``publish(df, batch_id)`` persists.
+    ``publish(df, batch_id)`` persists.  Runs the stream to completion
+    and returns the finished query.
 
     (ref ListingPipeline upsert, reid/pipelines/property.py:96-126 —
     per-item; here per micro-batch.)"""
@@ -96,10 +149,8 @@ def run_merge_sink(
         merged = merge_listings(current_supplier(), batch_df, run_date=run_date)
         publish(merged.drop("changes"), batch_id)
 
-    return (
-        staging_stream.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return run_available_now(
+        staging_stream.writeStream.foreachBatch(do_merge), checkpoint
     )
 
 

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from real_estate_etl_dev_spark.benchmeta import scratch_dir  # noqa: E402
 from real_estate_etl_dev_spark.session import get_spark  # noqa: E402
 from real_estate_etl_dev_spark.operators.dedup import (  # noqa: E402
     connected_components,
@@ -188,9 +189,6 @@ def tpch_growth_probe(spark) -> None:
     in lineitem bytes: their per-row work is map-side joins + one
     partial agg; the derived-partsupp distinct is the only
     fact-derived shuffle and also grows linearly."""
-    import shutil
-    import tempfile
-
     from real_estate_etl_dev_spark.plans.catalog import CATALOG
     from real_estate_etl_dev_spark.sources.readers import load_table
 
@@ -198,42 +196,41 @@ def tpch_growth_probe(spark) -> None:
     print("| lineitem rows | q9 s (rows) | q10 s | q20 s |")
     print("|---|---|---|---|")
     for k in (1, 4, 16):
-        workdir = tempfile.mkdtemp(prefix=f"tpch_scale_{k}_")
-        reps = spark.range(k).select(F.col("id").alias("rep"))
-        li = load_table(spark, SF_DIR, "lineitem")
-        o = load_table(spark, SF_DIR, "orders")
-        (
-            li.crossJoin(reps)  # k-row side: replica fan-out
-            .withColumn(
-                "l_orderkey",
-                F.col("l_orderkey") + F.col("rep") * F.lit(10**12).cast("long"),
+        with scratch_dir(f"tpch_scale_{k}_") as workdir:
+            reps = spark.range(k).select(F.col("id").alias("rep"))
+            li = load_table(spark, SF_DIR, "lineitem")
+            o = load_table(spark, SF_DIR, "orders")
+            (
+                li.crossJoin(reps)  # k-row side: replica fan-out
+                .withColumn(
+                    "l_orderkey",
+                    F.col("l_orderkey") + F.col("rep") * F.lit(10**12).cast("long"),
+                )
+                .drop("rep")
+                .write.parquet(f"{workdir}/lineitem.parquet")
             )
-            .drop("rep")
-            .write.parquet(f"{workdir}/lineitem.parquet")
-        )
-        (
-            o.crossJoin(reps)
-            .withColumn(
-                "o_orderkey",
-                F.col("o_orderkey") + F.col("rep") * F.lit(10**12).cast("long"),
+            (
+                o.crossJoin(reps)
+                .withColumn(
+                    "o_orderkey",
+                    F.col("o_orderkey") + F.col("rep") * F.lit(10**12).cast("long"),
+                )
+                .drop("rep")
+                .write.parquet(f"{workdir}/orders.parquet")
             )
-            .drop("rep")
-            .write.parquet(f"{workdir}/orders.parquet")
-        )
-        for t in ("part", "supplier", "nation", "region", "customer"):
-            load_table(spark, SF_DIR, t).write.parquet(f"{workdir}/{t}.parquet")
-        n_li = spark.read.parquet(f"{workdir}/lineitem.parquet").count()
+            for t in ("part", "supplier", "nation", "region", "customer"):
+                load_table(spark, SF_DIR, t).write.parquet(f"{workdir}/{t}.parquet")
+            n_li = spark.read.parquet(f"{workdir}/lineitem.parquet").count()
 
-        t0 = time.perf_counter()
-        n9 = CATALOG["product_profit_q9"].fn(spark, workdir).count()
-        t9 = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        CATALOG["returned_item_reporting_q10"].fn(spark, workdir).count()
-        t10 = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        CATALOG["potential_promotion_q20"].fn(spark, workdir).count()
-        t20 = time.perf_counter() - t0
-        shutil.rmtree(workdir, ignore_errors=True)
+            t0 = time.perf_counter()
+            n9 = CATALOG["product_profit_q9"].fn(spark, workdir).count()
+            t9 = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            CATALOG["returned_item_reporting_q10"].fn(spark, workdir).count()
+            t10 = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            CATALOG["potential_promotion_q20"].fn(spark, workdir).count()
+            t20 = time.perf_counter() - t0
         print(
             f"| {n_li:,} | {t9:.1f} ({n9:,}) | {t10:.1f} | {t20:.1f} |",
             flush=True,
@@ -470,9 +467,6 @@ def streaming_probe(spark) -> None:
     overhead) — a superlinear bend would mean state or the current
     table re-scan grows with batch COUNT, which the merge design
     forbids."""
-    import shutil
-    import tempfile
-
     from real_estate_etl_dev_spark.plans.merging import (
         RUN_DATE,
         current_fixture,
@@ -496,32 +490,30 @@ def streaming_probe(spark) -> None:
             .drop("rep")
         )
         n_rows = staged.count()
-        workdir = tempfile.mkdtemp(prefix=f"stream_probe_{k}_")
-        staged.repartition(k).write.parquet(f"{workdir}/staging")
+        with scratch_dir(f"stream_probe_{k}_") as workdir:
+            staged.repartition(k).write.parquet(f"{workdir}/staging")
 
-        t0 = time.perf_counter()
-        stream = stream_source(
-            spark,
-            f"{workdir}/staging",
-            staged.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=1,
-        )
+            t0 = time.perf_counter()
+            stream = stream_source(
+                spark,
+                f"{workdir}/staging",
+                staged.schema,
+                fmt="parquet",
+                maxFilesPerTrigger=1,
+            )
 
-        def publish(df, batch_id, out=f"{workdir}/merged"):
-            df.write.mode("overwrite").parquet(out)
+            def publish(df, batch_id, out=f"{workdir}/merged"):
+                df.write.mode("overwrite").parquet(out)
 
-        q = run_merge_sink(
-            stream,
-            lambda: cur,
-            publish,
-            run_date=RUN_DATE,
-            checkpoint=f"{workdir}/checkpoint",
-        ).start()
-        q.awaitTermination()
-        wall = time.perf_counter() - t0
+            q = run_merge_sink(
+                stream,
+                lambda: cur,
+                publish,
+                run_date=RUN_DATE,
+                checkpoint=f"{workdir}/checkpoint",
+            )
+            wall = time.perf_counter() - t0
         n_batches = len(q.recentProgress)
-        shutil.rmtree(workdir, ignore_errors=True)
         print(
             f"| {n_batches} | {n_rows:,} | {wall:.1f} "
             f"| {wall / max(n_batches, 1):.2f} |",
@@ -546,12 +538,13 @@ def streaming_state_probe(spark) -> None:
     residue (~107k here) while TOTAL input grows 16× (state cap would
     read ~1.6M keys at k=16 if nothing expired)."""
     import json
-    import shutil
-    import tempfile
-    import uuid
 
     from real_estate_etl_dev_spark.sources.readers import load_table
-    from real_estate_etl_dev_spark.streaming.ingest import stream_source
+    from real_estate_etl_dev_spark.streaming.ingest import (
+        memory_view,
+        run_available_now,
+        stream_source,
+    )
 
     base = load_table(spark, SF_DIR, "events").select(
         "event_id", "ts", "event_type"
@@ -562,40 +555,37 @@ def streaming_state_probe(spark) -> None:
         "| max state rows | wall s |"
     )
     print("|---|---|---|---|---|---|")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     for k in (1, 4, 16):
-        workdir = tempfile.mkdtemp(prefix=f"stream_state_{k}_")
-        drop_dir = f"{workdir}/incoming"
-        for seg in range(k):
-            segdf = base.select(
-                (F.col("event_id") + seg * 10**9).alias("event_id"),
-                (F.col("ts") + F.expr(f"INTERVAL {seg * 31} DAYS")).alias("ts"),
-                "event_type",
-            )
-            segdf = segdf.unionByName(segdf)  # every event delivered twice
-            # sequential appends => mtime order == event-time order
-            segdf.repartition(2).write.mode("append").parquet(drop_dir)
-        n_in = spark.read.parquet(drop_dir).count()
+        with (
+            scratch_dir(f"stream_state_{k}_") as workdir,
+            memory_view(spark, "ssp") as name,
+        ):
+            drop_dir = f"{workdir}/incoming"
+            for seg in range(k):
+                segdf = base.select(
+                    (F.col("event_id") + seg * 10**9).alias("event_id"),
+                    (F.col("ts") + F.expr(f"INTERVAL {seg * 31} DAYS")).alias("ts"),
+                    "event_type",
+                )
+                segdf = segdf.unionByName(segdf)  # every event delivered twice
+                # sequential appends => mtime order == event-time order
+                segdf.repartition(2).write.mode("append").parquet(drop_dir)
+            n_in = spark.read.parquet(drop_dir).count()
 
-        stream = stream_source(
-            spark, drop_dir, base.schema, fmt="parquet", maxFilesPerTrigger=2
-        )
-        deduped = stream.withWatermark(
-            "ts", "2 days"
-        ).dropDuplicatesWithinWatermark(["event_id"])
-        name = f"ssp_{uuid.uuid4().hex[:8]}"
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+            stream = stream_source(
+                spark, drop_dir, base.schema, fmt="parquet", maxFilesPerTrigger=2
+            )
+            deduped = stream.withWatermark(
+                "ts", "2 days"
+            ).dropDuplicatesWithinWatermark(["event_id"])
             t0 = time.perf_counter()
-            q = (
+            q = run_available_now(
                 deduped.writeStream.format("memory")
                 .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", f"{workdir}/checkpoint")
-                .trigger(availableNow=True)
-                .start()
+                .outputMode("append"),
+                f"{workdir}/checkpoint",
+                state_partitions=8,
             )
-            q.awaitTermination()
             wall = time.perf_counter() - t0
             progress = [
                 json.loads(p.json) if hasattr(p, "json") else p
@@ -607,10 +597,6 @@ def streaming_state_probe(spark) -> None:
                 for op in p.get("stateOperators", [])
             ]
             n_out = spark.table(name).count()
-            spark.catalog.dropTempView(name)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            shutil.rmtree(workdir, ignore_errors=True)
         print(
             f"| {k} | {n_in:,} | {n_out:,} | {len(progress)} "
             f"| {max(state_rows) if state_rows else 0:,} | {wall:.1f} |",
@@ -900,8 +886,6 @@ def bpe_learn_growth_probe(spark) -> None:
     per-round shuffle is vocabulary-bounded; only the two corpus map
     passes grow).  A super-linear bend or a diverging merge sequence
     flags a corpus-sized shuffle or a tie-break instability."""
-    import tempfile
-
     from real_estate_etl_dev_spark.plans.llmdata import bpe_learn_merges
     from real_estate_etl_dev_spark.sources.readers import load_table
 
@@ -917,19 +901,12 @@ def bpe_learn_growth_probe(spark) -> None:
                 (F.col("doc_id") + F.col("rep") * 10_000_000).alias("doc_id"),
                 "text",
             )
-        tmp = tempfile.mkdtemp(prefix=f"bpe_learn_{k}x_")
-        try:
+        with scratch_dir(f"bpe_learn_{k}x_") as tmp:
             docs.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
             n = docs.count()
             t0 = time.perf_counter()
             rows = bpe_learn_merges(spark, tmp).collect()
             wall = time.perf_counter() - t0
-        finally:
-            # ADVICE r11 item 2: the replicated corpora (up to 80k
-            # docs) used to outlive the probe run, leaking disk
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
         merges = [(r["step"], r["a"], r["b"]) for r in rows]
         counts = [r["pair_count"] for r in rows]
         if k == 1:
@@ -1060,9 +1037,6 @@ def curation_funnel_growth_probe(spark) -> None:
     broadcast grows with the eval split, k×140 docs here, never the
     corpus).  A super-linear bend would flag a gram-keyed corpus
     shuffle or a fingerprint hot spot the plan pin missed."""
-    import shutil
-    import tempfile
-
     from real_estate_etl_dev_spark.plans.llmdata import corpus_curation_funnel
     from real_estate_etl_dev_spark.sources.readers import load_table
 
@@ -1092,15 +1066,12 @@ def curation_funnel_growth_probe(spark) -> None:
                 "n_chars",
             )
         )
-        tmp = tempfile.mkdtemp(prefix=f"curation_{k}x_")
-        try:
+        with scratch_dir(f"curation_{k}x_") as tmp:
             tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
             n = tagged.count()
             t0 = time.perf_counter()
             rows = corpus_curation_funnel(spark, tmp).collect()
             wall = time.perf_counter() - t0
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
         cells = {
             r["lang"]: (
                 r["n_raw"],
@@ -1144,8 +1115,6 @@ def dsir_growth_probe(spark) -> None:
     A prediction mismatch flags nondeterminism or an overflow; a
     super-linear bend flags a corpus-sized shuffle."""
     import hashlib
-    import shutil
-    import tempfile
     from collections import Counter, defaultdict
 
     import pyarrow.parquet as pq
@@ -1207,8 +1176,7 @@ def dsir_growth_probe(spark) -> None:
                 "n_chars",
             )
         )
-        tmp = tempfile.mkdtemp(prefix=f"dsir_{k}x_")
-        try:
+        with scratch_dir(f"dsir_{k}x_") as tmp:
             target.unionByName(raw).write.mode("overwrite").parquet(
                 f"{tmp}/documents.parquet"
             )
@@ -1216,9 +1184,6 @@ def dsir_growth_probe(spark) -> None:
             t0 = time.perf_counter()
             rows = dsir_importance_select(spark, tmp).collect()
             wall = time.perf_counter() - t0
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
         # analytic prediction: c_r scales k x, Laplace terms do not
         tt = ct_tot + _DSIR_BUCKETS
         rr = k * sum(c_r1.values()) + _DSIR_BUCKETS
@@ -1261,9 +1226,6 @@ def kmv_overlap_growth_probe(spark) -> None:
     is the map pass + the tau-cut distinct exchange, so wall should
     grow sub-linearly in data; a bend flags a reduce-side
     concentration the TakeOrdered pin missed."""
-    import shutil
-    import tempfile
-
     from real_estate_etl_dev_spark.operators.bloom import (
         KMV_SPACE,
         kmv_sketch,
@@ -1297,8 +1259,7 @@ def kmv_overlap_growth_probe(spark) -> None:
             "source",
             "n_chars",
         )
-        tmp = tempfile.mkdtemp(prefix=f"kmv_{k}x_")
-        try:
+        with scratch_dir(f"kmv_{k}x_") as tmp:
             tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
             n = tagged.count()
             t0 = time.perf_counter()
@@ -1346,8 +1307,6 @@ def kmv_overlap_growth_probe(spark) -> None:
                 for r in kmv_sketch(a, "text", _KMV_K, tau=tau).collect()
             ]
             _check(cut == full, "tau-filtered sketch identical", k, tau)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
         print(
             f"| {n:,} | {wall:.1f} | {row['exact_distinct_a']:,} "
             f"({row['est_distinct_a']:,.1f}) | {row['exact_jaccard']:.4f} "
@@ -1369,9 +1328,6 @@ def streaming_funnel_growth_probe(spark) -> None:
     should grow ~linearly in corpus size at a fixed trigger slice; a
     super-linear bend would flag per-batch work proportional to the
     TOTAL corpus rather than to the batch."""
-    import shutil
-    import tempfile
-
     from real_estate_etl_dev_spark.plans.llmdata import (
         streaming_curation_funnel,
     )
@@ -1397,15 +1353,12 @@ def streaming_funnel_growth_probe(spark) -> None:
             "source",
             "n_chars",
         )
-        tmp = tempfile.mkdtemp(prefix=f"sfunnel_{k}x_")
-        try:
+        with scratch_dir(f"sfunnel_{k}x_") as tmp:
             tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
             n = tagged.count()
             t0 = time.perf_counter()
             rows = streaming_curation_funnel(spark, tmp).collect()
             wall = time.perf_counter() - t0
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
         cells = {
             r["lang"]: (
                 r["n_raw"],
@@ -1448,9 +1401,6 @@ def substring_spans_growth_probe(spark) -> None:
     are the only corpus-sized stages, so growth should be ~linear;
     a super-linear bend would flag the dup-set join-back degrading
     off its broadcast/partial-agg path."""
-    import shutil
-    import tempfile
-
     from real_estate_etl_dev_spark.plans.llmdata import dedup_substring_spans
     from real_estate_etl_dev_spark.sources.readers import load_table
 
@@ -1474,15 +1424,12 @@ def substring_spans_growth_probe(spark) -> None:
             "source",
             "n_chars",
         )
-        tmp = tempfile.mkdtemp(prefix=f"spans_{k}x_")
-        try:
+        with scratch_dir(f"spans_{k}x_") as tmp:
             tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
             n = tagged.count()
             t0 = time.perf_counter()
             rows = dedup_substring_spans(spark, tmp).collect()
             wall = time.perf_counter() - t0
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
         cells = {
             r["lang"]: (
                 r["n_docs"],

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
+from real_estate_etl_dev_spark.streaming import ingest
 from real_estate_etl_dev_spark.streaming.ingest import (
     dedup_urls,
     queue_status_stream,
@@ -29,15 +31,14 @@ def write_batch(tmp_path, name, rows):
 
 
 def run_available_now(stream, checkpoint):
-    q = (
+    """Memory-sink run through the engine's availableNow harness;
+    returns the sink's table name."""
+    q = ingest.run_available_now(
         stream.writeStream.format("memory")
         .queryName(f"t_{abs(hash(checkpoint)) % 10**8}")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint,
     )
-    q.awaitTermination(120)
     return q.name
 
 
@@ -66,15 +67,10 @@ def test_windowed_counts(spark, tmp_path):
     path = write_batch(tmp_path, "b1.json", rows)
     src = stream_source(spark, path, SCHEMA).withColumn("event_type", F.lit("e"))
     agg = windowed_counts(src, ts_col="scraped_at", window="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "cp2"))
-        .trigger(availableNow=True)
-        .start()
+    ingest.run_available_now(
+        agg.writeStream.format("memory").queryName("win_counts").outputMode("complete"),
+        str(tmp_path / "cp2"),
     )
-    q.awaitTermination(120)
     got = {str(r["window_start"]): r["n"] for r in spark.sql("SELECT * FROM win_counts").collect()}
     assert list(sorted(got.values())) == [1, 2]  # 2 in hour-0, 1 in hour-1
 
@@ -99,14 +95,13 @@ def test_foreachbatch_merge(spark, tmp_path):
     def publish(df, batch_id):
         results[batch_id] = {r["url"]: r.asDict() for r in df.collect()}
 
-    q = run_merge_sink(
+    run_merge_sink(
         stream,
         current_supplier=lambda: current,
         publish=publish,
         run_date="2026-01-31",
         checkpoint=str(tmp_path / "cp3"),
-    ).start()
-    q.awaitTermination(120)
+    )
     merged = results[0]
     assert merged["u1"]["price"] == 150000 and merged["u1"]["n_changes"] == 1
     assert merged["u2"]["n_changes"] == 0          # untouched carry
@@ -127,15 +122,10 @@ def test_queue_status_state(spark, tmp_path):
             f.write(json.dumps(r) + "\n")
     stream = spark.readStream.schema("url string, status string").json(str(path))
     out = queue_status_stream(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("queue_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "cp4"))
-        .trigger(availableNow=True)
-        .start()
+    ingest.run_available_now(
+        out.writeStream.format("memory").queryName("queue_state").outputMode("update"),
+        str(tmp_path / "cp4"),
     )
-    q.awaitTermination(120)
     got = {r["url"]: (r["status"], r["n_events"]) for r in spark.sql("SELECT * FROM queue_state").collect()}
     assert got == {"u1": ("Error", 2), "u2": ("Sold", 2)}  # max-severity wins
 
@@ -157,14 +147,12 @@ def _write_events(tmp_path, sub, name, rows):
 def _run_once(stream, checkpoint, sink, mode="append"):
     # foreachBatch sink: the memory sink cannot recover stateful
     # queries (joins, session windows) from a checkpoint.
-    q = (
-        stream.writeStream.foreachBatch(lambda df, _bid: sink.extend(df.collect()))
-        .outputMode(mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ingest.run_available_now(
+        stream.writeStream.foreachBatch(
+            lambda df, _bid: sink.extend(df.collect())
+        ).outputMode(mode),
+        checkpoint,
     )
-    q.awaitTermination(120)
 
 
 def test_interval_join_match_then_outer(spark, tmp_path):
@@ -393,3 +381,59 @@ def test_incremental_dedup_keeps_same_text_across_langs(spark):
         .filter(~F.col("in_corpus"))
     )
     assert {r.doc_id for r in survivors.collect()} == {10, 11, 14}
+
+
+# --- shared harness: conf scope, availableNow runner, scratch dir ----------
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def test_failing_batch_cleans_up_and_restores_conf(spark):
+    """A foreachBatch that raises inside run_available_now + scratch_dir:
+    the error propagates, the workdir is removed and the pinned state
+    partitions are restored."""
+    import os
+
+    from real_estate_etl_dev_spark.benchmeta import scratch_dir
+
+    before = spark.conf.get(_SHUFFLE, None)
+    seen = {}
+
+    def boom(df, batch_id):
+        seen["parts"] = spark.conf.get(_SHUFFLE)
+        raise RuntimeError("boom in batch")
+
+    with pytest.raises(Exception, match="boom in batch"):
+        with scratch_dir("test_harness_") as workdir:
+            p = os.path.join(workdir, "in")
+            os.mkdir(p)
+            with open(os.path.join(p, "b.json"), "w") as f:
+                f.write(json.dumps({"url": "u1"}) + "\n")
+            stream = spark.readStream.schema("url string").json(p)
+            ingest.run_available_now(
+                stream.writeStream.foreachBatch(boom),
+                os.path.join(workdir, "cp"),
+                state_partitions=3,
+            )
+    assert seen["parts"] == "3"  # the pin was live while the batch ran
+    assert not os.path.exists(workdir)
+    assert spark.conf.get(_SHUFFLE, None) == before
+
+
+def test_memory_view_dropped_when_read_back_raises(spark, tmp_path):
+    path = write_batch(tmp_path, "mv.json", [
+        {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
+    ])
+    with pytest.raises(RuntimeError):
+        with ingest.memory_view(spark, "tmv") as name:
+            ingest.run_available_now(
+                stream_source(spark, path, SCHEMA)
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append"),
+                str(tmp_path / "cp_mv"),
+            )
+            assert spark.table(name).count() == 1
+            raise RuntimeError("read-back failed")
+    assert not spark.catalog.tableExists(name)
+
