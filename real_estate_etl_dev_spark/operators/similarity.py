@@ -53,14 +53,19 @@ def cosine(a: Column, b: Column) -> Column:
 MAX_QUERY_BATCH_ROWS = 100_000
 
 
-def _assert_query_batch_bounded(n: int, where: str) -> None:
-    if n > MAX_QUERY_BATCH_ROWS:
+def _collect_query_batch(queries: DataFrame, id_col: str, vec_col: str, where: str):
+    """The (id, vector) query batch as pandas, bounded BEFORE it reaches
+    the driver: the collect itself stops one row past the bound (no
+    separate count job), and that row trips it."""
+    q_pdf = queries.select(id_col, vec_col).limit(MAX_QUERY_BATCH_ROWS + 1).toPandas()
+    if len(q_pdf) > MAX_QUERY_BATCH_ROWS:
         raise AssertionError(
-            f"{where}: query/probe batch of {n} rows exceeds the "
+            f"{where}: query/probe batch of {len(q_pdf)} rows exceeds the "
             f"documented driver-batch bound ({MAX_QUERY_BATCH_ROWS}); "
             "at this size the batch no longer fits the broadcast "
             "contract — shard the queries or use the index path"
         )
+    return q_pdf
 
 
 def cosine_topk(
@@ -105,8 +110,7 @@ def cosine_topk(
     import pandas as pd
     from pyspark.sql import types as Tp
 
-    q_pdf = queries.select(F.col(id_col), F.col(vec_col)).toPandas()
-    _assert_query_batch_bounded(len(q_pdf), "cosine_topk")
+    q_pdf = _collect_query_batch(queries, id_col, vec_col, "cosine_topk")
     id_type_q = queries.schema[id_col].dataType
     id_type_c = corpus.schema[id_col].dataType
     out_schema = Tp.StructType(
@@ -223,8 +227,7 @@ def cosine_prefix_scores(
             *[Tp.StructField(f"cos_d{d}", Tp.DoubleType()) for d in dims],
         ]
     )
-    q_pdf = queries.select(F.col(id_col), F.col(vec_col)).toPandas()
-    _assert_query_batch_bounded(len(q_pdf), "cosine_prefix_scores")
+    q_pdf = _collect_query_batch(queries, id_col, vec_col, "cosine_prefix_scores")
     spark = corpus.sparkSession
     if len(q_pdf) == 0:
         return spark.createDataFrame([], out_schema)

@@ -50,7 +50,12 @@ def publish_version(df: DataFrame, table_dir: str, version: int) -> dict:
     (file list + row count + columns) is written LAST as the commit
     point, then ``_latest`` is updated.  Refuses to overwrite an
     already-committed version — immutability is the contract every
-    reader relies on."""
+    reader relies on.
+
+    LOCAL FILESYSTEM ONLY: the commit uses ``os.path.exists`` /
+    ``os.listdir`` / ``os.rename`` and the row count reads footers with
+    pyarrow, all on local paths; an object store needs them routed
+    through the Hadoop FileSystem API."""
     mpath = _manifest_path(table_dir, version)
     if os.path.exists(mpath):
         raise ValueError(f"version {version} already committed at {mpath}")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from .. import functions as fx
 from ..operators.projection import Field, project_fields, rename_and_derive
+from ..planview import partition_filter_columns
 from ..sources.readers import load_table
 from ..sources.scans import fetch_details, html_in_json, incremental_seed, page_fanout
 from .catalog import query
@@ -462,13 +463,8 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("month")
         )
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
         # raise, not assert: the gate must survive python -O
-        if "PartitionFilters" not in plan or "o_year" not in plan.split(
-            "PartitionFilters"
-        )[1].split("]")[0]:
+        if "o_year" not in partition_filter_columns(df):
             raise AssertionError("partition filter did not reach the scan")
         return collect_local(df)
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators.merge import apply_tombstones, change_log, merge_listings
 from ..operators.rules import backfill_sold_at
+from ..planview import EXCHANGES, node_classes
 from ..sources.readers import load_table
 from .catalog import query
 from .fixtures import RUN_DATE
@@ -422,11 +423,11 @@ def merge_bucketed_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
     cur, stg = bucketed_merge_ready(spark, cur_t, stg_t)
     merged = merge_listings(cur, stg, run_date=RUN_DATE)
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
+    exchanges = [c for c in node_classes(merged) if c in EXCHANGES]
+    if exchanges:
         raise AssertionError(
-            "bucketed merge planned an Exchange — the shuffle-free "
-            "layout promise (operators/layout.py) is broken:\n" + plan
+            "bucketed merge planned an exchange — the shuffle-free "
+            f"layout promise (operators/layout.py) is broken: {exchanges}"
         )
     return _merge_projection(merged)
 

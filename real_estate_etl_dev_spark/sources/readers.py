@@ -5,8 +5,9 @@ S11 (JSON source), S12 (CSV source) from SURVEY §2.1; reference
 sites ``api/routers/analytics_routes.py:28``, ``ml_region_prediction.py:46``.
 
 Scans stay fully declarative so Catalyst pushes predicates and prunes
-columns into the parquet reader (check ``PushedFilters`` / ``ReadSchema``
-in ``df.explain("formatted")``).
+columns into the parquet reader (``planview.scan_metadata``).  ``fan_out``
+spreads only frames whose optimized-plan node classes are all in an
+allowlist (scans, checkpoints, projections, filters).
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..planview import node_class, plan_nodes
 from ..session import conf_scope
 
 TABLES = (
@@ -34,6 +36,9 @@ TABLES = (
 # Small dimensions we always broadcast in joins (fits executor memory
 # at any SF — region/nation are bounded; others scale with SF).
 BROADCAST_TABLES = frozenset({"region", "nation"})
+
+# fan_out's CALLER CONTRACT as optimized-plan node classes
+_FAN_OUT_SAFE = frozenset({"LogicalRelation", "LogicalRDD", "Project", "Filter"})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -124,18 +129,13 @@ def fan_out(df: DataFrame) -> DataFrame:
     would also freeze the plan).  Apply AFTER pushed filters: an
     exchange between scan and filter would defeat pushdown.
 
-    The contract is now ENFORCED, not docstring-only (ADVICE r14): if
-    the optimized logical plan carries a shuffle-inducing node (join,
-    aggregate, sort, window, repartition — i.e. the physical plan
-    would hold an unexecuted AQE exchange that the ``df.rdd`` probe
-    would force and freeze), fan_out declines and returns ``df``
-    untouched."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # case-sensitive NODE names — lowercase HOF expressions like
-    # aggregate(...)/sort_array(...)/window(...) must not trip this
-    unsafe = ("Join", "Aggregate [", "Sort [", "Window [",
-              "RepartitionByExpression", "Repartition ", "Deduplicate")
-    if any(tok in plan for tok in unsafe):
+    The contract is ENFORCED (ADVICE r14): fan_out spreads only when
+    every optimized-plan node class is in ``_FAN_OUT_SAFE``
+    (``LogicalRelation``, ``LogicalRDD``, ``Project``, ``Filter``).  Any
+    other node (join, aggregate, sort, window, limit, union, subquery…)
+    may plan an exchange or limit the ``df.rdd`` probe would force and
+    freeze, so fan_out returns ``df`` untouched."""
+    if not {node_class(n) for n in plan_nodes(df, "optimized")} <= _FAN_OUT_SAFE:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -32,8 +32,9 @@ def main() -> int:
     out_dir = args.out or os.path.join(root, "plans", "r14")
     os.makedirs(out_dir, exist_ok=True)
 
-    from real_estate_etl_dev_spark.session import get_spark
+    from real_estate_etl_dev_spark.planview import explain_formatted
     from real_estate_etl_dev_spark.plans.catalog import CATALOG
+    from real_estate_etl_dev_spark.session import get_spark
 
     spark = get_spark("explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
@@ -46,10 +47,7 @@ def main() -> int:
             print(f"SKIP unknown {name}", file=sys.stderr)
             continue
         try:
-            df = CATALOG[name].fn(spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = explain_formatted(CATALOG[name].fn(spark, args.sf_dir))
         except Exception as exc:  # noqa: BLE001 — isolate per-query faults
             print(f"FAIL {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
             failed.append(name)

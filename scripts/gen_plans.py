@@ -14,6 +14,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from real_estate_etl_dev_spark.planview import explain_formatted  # noqa: E402
 from real_estate_etl_dev_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PLANS_SF_DIR", "/root/testdata/sf0.001")
@@ -340,9 +341,7 @@ _TRIM = re.compile(r", \[plan_id=\d+\]| \[id=#\d+\]")
 
 
 def trimmed_plan(df, max_lines: int = 40) -> str:
-    txt = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    txt = explain_formatted(df)
     # keep the operator tree + the interesting scan details, drop the
     # per-operator field dumps beyond the cap
     lines = txt.splitlines()

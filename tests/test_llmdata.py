@@ -220,18 +220,20 @@ def test_keyed_scored_matches_pair_join(spark):
     assert got_b == got
 
 
-def test_query_batch_bound_guard():
-    """The collected query batch must fail loudly past the documented
-    driver bound (VERDICT r14 item 7), not OOM the driver."""
+def test_query_batch_bound_guard(spark, monkeypatch):
+    """Past the driver bound (VERDICT r14 item 7) the query batch fails
+    BEFORE landing on the driver; a batch at the bound still scores."""
     import pytest
 
     from real_estate_etl_dev_spark.operators import similarity as S
 
-    S._assert_query_batch_bounded(S.MAX_QUERY_BATCH_ROWS, "ok-path")
-    with pytest.raises(AssertionError, match="driver-batch bound"):
-        S._assert_query_batch_bounded(
-            S.MAX_QUERY_BATCH_ROWS + 1, "cosine_topk"
-        )
+    emb = vec_df(spark)  # 5 rows
+    monkeypatch.setattr(S, "MAX_QUERY_BATCH_ROWS", 2)
+    # bound + 1 rows collected, not all 5
+    with pytest.raises(AssertionError, match="batch of 3 rows exceeds"):
+        S.cosine_topk(emb, emb, k=1)
+    at_bound = emb.filter(F.col("vec_id") < 2)
+    assert len(S.cosine_topk(emb, at_bound, k=1).collect()) == 2
 
 
 def test_cosine_prefix_scores_matches_jvm(spark):
@@ -497,7 +499,7 @@ def test_combined_bucket_audit_matches_per_algo_and_fuses_shuffle(spark):
     # The fusion claim, self-calibrated: the unfused shape (audit per
     # algo, union after) must pay strictly more hash exchanges than
     # the fused shape (union before the occupancy agg) under the same
-    # plan-printing method.
+    # plan walk.
     import pyspark.sql.functions as F
 
     unfused = (
@@ -511,14 +513,11 @@ def test_combined_bucket_audit_matches_per_algo_and_fuses_shuffle(spark):
         .orderBy("algo", "band_idx")
     )
 
-    def n_hash_exchanges(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # An already-executed AQE plan prints final AND initial plans;
-        # keep one section so executed/unexecuted frames compare fairly.
-        plan = plan.split("== Initial Plan ==")[0]
-        return plan.count("Exchange hashpartitioning")
+    # the walk reads the CURRENT adaptive plan (final once executed),
+    # so executed/unexecuted frames compare fairly
+    from tests.test_plan_shapes import Plan
 
-    assert n_hash_exchanges(fused) < n_hash_exchanges(unfused), (
+    assert len(Plan(fused).hash_keys()) < len(Plan(unfused).hash_keys()), (
         "fusion no longer saves a wide exchange"
     )
 

@@ -1,0 +1,73 @@
+"""Source scan of the package: each recurring mechanic lives in exactly
+one helper.
+
+* plan introspection (``queryExecution`` / ``explainString``) only in
+  ``planview``;
+* session-conf overrides (``spark.conf.set`` / ``unset``) only in
+  ``session.conf_scope``;
+* blocking on a stream (``awaitTermination``) only in
+  ``streaming.ingest.run_available_now``.
+
+The scan reads attribute accesses in the AST, so docstrings and
+comments that name these calls don't count.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "real_estate_etl_dev_spark"
+
+
+def _sites() -> dict[str, set[str]]:
+    """``{call: {"<module path>:<innermost function>", ...}}`` for every
+    watched attribute access in the package."""
+    sites: dict[str, set[str]] = {}
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, rel: str):
+            self.rel, self.stack = rel, []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Attribute(self, node):
+            key = node.attr
+            if key in ("set", "unset"):
+                on_conf = isinstance(node.value, ast.Attribute) and node.value.attr == "conf"
+                key = f"conf.{key}" if on_conf else None
+            if key in ("queryExecution", "explainString", "conf.set",
+                       "conf.unset", "awaitTermination"):
+                where = self.stack[-1] if self.stack else "<module>"
+                sites.setdefault(key, set()).add(f"{self.rel}:{where}")
+            self.generic_visit(node)
+
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        Finder(rel).visit(ast.parse(path.read_text(), filename=str(path)))
+    return sites
+
+
+def test_plan_introspection_only_in_planview():
+    sites = _sites()
+    for call in ("queryExecution", "explainString"):
+        assert sites.get(call) and {
+            s.split(":")[0] for s in sites[call]
+        } == {"planview.py"}, (call, sites.get(call))
+
+
+def test_conf_overrides_only_in_conf_scope():
+    sites = _sites()
+    assert sites.get("conf.set") == {"session.py:conf_scope"}, sites.get("conf.set")
+    assert sites.get("conf.unset") == {"session.py:conf_scope"}, sites.get("conf.unset")
+
+
+def test_stream_await_only_in_run_available_now():
+    assert _sites().get("awaitTermination") == {
+        "streaming/ingest.py:run_available_now"
+    }

@@ -1,6 +1,6 @@
 """Physical-plan regression tests — the 100 TB properties the catalog
-docstrings promise, asserted against ``explain`` output so they can't
-silently rot:
+docstrings promise, asserted against the plan tree (node classes read
+through ``planview``) so they can't silently rot:
 
 * predicate pushdown reaches the parquet scan (PushedFilters)
 * column pruning reaches the scan (ReadSchema)
@@ -11,59 +11,93 @@ silently rot:
 
 from __future__ import annotations
 
+from real_estate_etl_dev_spark import planview as pv
 from real_estate_etl_dev_spark.plans.catalog import CATALOG
 
 
-def plan_of(spark, sf_dir, name: str) -> str:
-    df = CATALOG[name].fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+class Plan:
+    """One DataFrame's plan as planview's pre-order node walk."""
+
+    def __init__(self, df, phase: str = "executed"):
+        self.df, self.nodes = df, pv.plan_nodes(df, phase)
+        self.classes = [pv.node_class(n) for n in self.nodes]
+        self.shuffles = [n.outputPartitioning() for n in self.of("ShuffleExchangeExec")]
+
+    def __contains__(self, cls: str) -> bool:
+        return cls in self.classes
+
+    def count(self, *classes: str) -> int:
+        return sum(c in classes for c in self.classes)
+
+    def of(self, *classes: str) -> list:
+        return [n for n, c in zip(self.nodes, self.classes) if c in classes]
+
+    def has(self, fragment: str) -> bool:  # e.g. any "Join" / "Window" class
+        return any(fragment in c for c in self.classes)
+
+    def python(self) -> list[str]:
+        """Classes that explain as ``*Python*`` (UDF / UDTF / window
+        evaluators, ``MapInArrowExec``); ``mapInPandas`` is not one."""
+        return [c for c in self.classes if "Python" in c or c == "MapInArrowExec"]
+
+    def join_types(self) -> list[str]:
+        joins = [n for n, c in zip(self.nodes, self.classes) if "Join" in c]
+        return [j.joinType().toString() for j in joins]
+
+    def partitionings(self) -> list[str]:  # RangePartitioning, SinglePartition$…
+        return [pv.node_class(p) for p in self.shuffles]
+
+    def hash_keys(self) -> list[list[str]]:
+        hashed = [p for p in self.shuffles if pv.node_class(p) == "HashPartitioning"]
+        return [pv.key_names(p.expressions()) for p in hashed]
+
+    def pushed(self, fragment: str) -> bool:
+        """``fragment`` reached some file scan's PushedFilters."""
+        return any(fragment in m["PushedFilters"] for m in pv.scan_metadata(self.df))
+
+    def read_schemas(self) -> list[str]:
+        return [m["ReadSchema"] for m in pv.scan_metadata(self.df)]
+
+    def global_windows(self) -> list:
+        """Window operators with an EMPTY partition spec (single-partition)."""
+        windows = self.of("WindowExec", "ArrowWindowPythonExec")
+        return [w for w in windows if w.partitionSpec().isEmpty()]
 
 
-def formatted(spark, sf_dir, name: str) -> str:
-    df = CATALOG[name].fn(spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def plan_of(spark, sf_dir, name: str) -> Plan:
+    return Plan(CATALOG[name].fn(spark, sf_dir))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
-    plan = formatted(spark, sf_dir, "filtered_error_count")
-    assert "PushedFilters: [IsNotNull(event_type), EqualTo(event_type,error)" in plan
+    plan = plan_of(spark, sf_dir, "filtered_error_count")
+    assert plan.pushed("[IsNotNull(event_type), EqualTo(event_type,error)")
 
 
 def test_column_pruning(spark, sf_dir):
-    plan = formatted(spark, sf_dir, "monthly_order_counts")
+    plan = plan_of(spark, sf_dir, "monthly_order_counts")
     # only the date column is read from a 6-column table
-    assert "o_orderdate" in plan.split("ReadSchema")[1][:120]
-    assert "o_totalprice" not in plan.split("ReadSchema")[1][:120]
+    assert plan.read_schemas() == ["struct<o_orderdate:timestamp_ntz>"]
 
 
 def test_dim_broadcast_fact_not_forced(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "revenue_by_nation")
-    assert "BroadcastHashJoin" in plan  # nation broadcast
+    assert "BroadcastHashJoinExec" in plan  # nation broadcast
     # the customer join is left to AQE/auto thresholds — no forced
     # broadcast hint of an SF-scaling table in the logical plan
-    logical = (
-        CATALOG["revenue_by_nation"]
-        .fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .logical()
-        .toString()
-    )
-    assert logical.count("ResolvedHint") <= 1
+    assert Plan(plan.df, "logical").count("ResolvedHint") <= 1
 
 
 def test_extraction_is_single_stage(spark, sf_dir):
     # scan → project → sort; the only Exchange allowed is the
     # output sort's range partitioning
     plan = plan_of(spark, sf_dir, "price_extraction_cases")
-    assert plan.count("Exchange") == 1
-    assert "rangepartitioning" in plan
+    assert plan.count(*pv.EXCHANGES) == 1
+    assert plan.partitionings() == ["RangePartitioning"]
 
 
 def test_keyset_page_pushes_seek_predicate(spark, sf_dir):
-    plan = formatted(spark, sf_dir, "orders_keyset_page")
-    assert "PushedFilters" in plan and "o_totalprice" in plan.split("PushedFilters")[1][:200]
+    plan = plan_of(spark, sf_dir, "orders_keyset_page")
+    assert plan.pushed("o_totalprice")
 
 
 def test_offset_page_window_consumes_takeordered_slice(spark, sf_dir):
@@ -73,21 +107,21 @@ def test_offset_page_window_consumes_takeordered_slice(spark, sf_dir):
     the plan needs NO SinglePartition exchange.  This is the documented
     reason the query sits on the global-window allowlist."""
     plan = plan_of(spark, sf_dir, "orders_page3_by_price")
-    assert "TakeOrderedAndProject(limit=150" in plan
-    assert "SinglePartition" not in plan
+    assert [n.limit() for n in plan.of("TakeOrderedAndProjectExec")] == [150]
+    assert "SinglePartition$" not in plan.partitionings()
     # and the window really does sit ABOVE the bounded slice
-    assert plan.index("Window") < plan.index("TakeOrderedAndProject")
+    assert plan.classes.index("WindowExec") < plan.classes.index("TakeOrderedAndProjectExec")
 
 
 def test_top1_avoids_global_sort(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "top1_order_by_price")
-    assert "TakeOrderedAndProject" in plan
+    assert "TakeOrderedAndProjectExec" in plan
 
 
 def test_merge_is_one_join(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "merge_scd1")
     # exactly one join materializes the merge (full outer)
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") == 1
+    assert plan.count("SortMergeJoinExec", "ShuffledHashJoinExec") == 1
 
 
 def test_no_python_udf_in_expression_tier(spark, sf_dir):
@@ -102,7 +136,7 @@ def test_no_python_udf_in_expression_tier(spark, sf_dir):
         "dq_identify_issues",
     ]:
         plan = plan_of(spark, sf_dir, name)
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+        assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0, name
 
 
 def test_asof_join_single_keyed_shuffle(spark, sf_dir):
@@ -110,9 +144,9 @@ def test_asof_join_single_keyed_shuffle(spark, sf_dir):
     # window (plus the output sort's range partitioning); no join
     # operator at all — the whole as-of is window-based.
     plan = plan_of(spark, sf_dir, "asof_error_click")
-    assert plan.count("hashpartitioning") >= 1
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    assert "Window" in plan
+    assert ["user_id"] in plan.hash_keys()
+    assert not plan.has("Join")
+    assert "WindowExec" in plan
 
 
 def test_rolling_window_aggregates_before_global_sort(spark, sf_dir):
@@ -120,94 +154,41 @@ def test_rolling_window_aggregates_before_global_sort(spark, sf_dir):
     # rows), never the raw fact table: HashAggregate appears below
     # the Window in the plan tree.
     plan = plan_of(spark, sf_dir, "rolling_7d_revenue")
-    assert "Window" in plan and "HashAggregate" in plan
-    assert plan.index("Window") < plan.index("HashAggregate")  # Window atop agg
+    assert "WindowExec" in plan and "HashAggregateExec" in plan
+    assert plan.classes.index("WindowExec") < plan.classes.index("HashAggregateExec")
 
 
 def test_session_window_is_partitioned_not_global(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "event_sessions")
     # the session window partitions by user_id — no global
     # single-partition window (SinglePartition exchange) anywhere
-    assert "user_id" in plan.split("Window")[0] or "user_id" in plan
-    assert "SinglePartition" not in plan.split("Window")[0]
+    windows = plan.of("WindowExec")
+    assert windows and all(pv.key_names(w.partitionSpec()) == ["user_id"] for w in windows)
+    assert "SinglePartition$" not in plan.partitionings()
 
 
 def test_misc_battery_prunes_and_stays_arrow(spark, sf_dir):
     # the misc scalar battery reads ONLY the key column of orders and
     # keeps Python confined to Arrow-batched eval (the html UDF)
-    plan = formatted(spark, sf_dir, "misc_extraction_cases")
-    assert "struct<o_orderkey:bigint>" in plan.split("ReadSchema")[1][:60]
-    raw = plan_of(spark, sf_dir, "misc_extraction_cases")
-    assert "BatchEvalPython" not in raw
-    assert raw.count("Exchange") == 1 and "rangepartitioning" in raw
+    plan = plan_of(spark, sf_dir, "misc_extraction_cases")
+    assert plan.read_schemas() == ["struct<o_orderkey:bigint>"]
+    assert "BatchEvalPythonExec" not in plan
+    assert plan.count(*pv.EXCHANGES) == 1
+    assert plan.partitionings() == ["RangePartitioning"]
 
 
 def test_recall_gate_broadcasts_injected_side(spark, sf_dir):
     # the planted-pair frame is tiny by construction (|docs|/7 rows) —
     # it must broadcast, never shuffle the candidate-pair side on it
     plan = plan_of(spark, sf_dir, "dedup_minhash_pairs")
-    assert "BroadcastHashJoin" in plan
+    assert "BroadcastHashJoinExec" in plan
 
 
 def test_ann_gate_broadcasts_query_side(spark, sf_dir):
     # 8 query vectors join the corpus via broadcast on both ANN paths
     for name in ["embedding_ann_lsh", "embedding_ann_ivf"]:
         plan = plan_of(spark, sf_dir, name)
-        assert "BroadcastHashJoin" in plan, name
-
-
-def _top_level_bracket_groups(s: str) -> list[str]:
-    """Top-level ``[...]`` group contents of an operator line's argument
-    tail (nested brackets inside expressions don't split)."""
-    depth = 0
-    groups: list[str] = []
-    buf: list[str] = []
-    for ch in s:
-        if ch == "[":
-            if depth == 0:
-                buf = []
-            else:
-                buf.append(ch)
-            depth += 1
-        elif ch == "]":
-            depth = max(0, depth - 1)
-            if depth == 0:
-                groups.append("".join(buf))
-            else:
-                buf.append(ch)
-        elif depth > 0:
-            buf.append(ch)
-    return groups
-
-
-def global_window_lines(plan: str) -> list[str]:
-    """Return the ``Window``/``WindowInPandas`` operator lines whose
-    partition spec is EMPTY — the true single-partition windows.
-
-    Spark prints the operator as ``Window [exprs], [partSpec],
-    [orderSpec]`` with empty specs OMITTED: partitioned+ordered → 3
-    top-level groups, partition-only → 2 (second group is bare column
-    refs), global-ordered → 2 (second group carries ``ASC``/``DESC``
-    sort directions), global-unordered → 1.  Matching the operator
-    line directly — instead of ANDing whole-plan substrings — means an
-    unrelated ``Exchange SinglePartition`` elsewhere in the tree (e.g.
-    a 1-row scalar aggregate) can't masquerade as a global window, the
-    r07 false positive.
-    """
-    hits = []
-    for raw in plan.splitlines():
-        ln = raw.lstrip(" +-:*()0123456789")
-        for op in ("Window ", "WindowInPandas "):
-            if ln.startswith(op):
-                groups = _top_level_bracket_groups(ln[len(op):])
-                if len(groups) >= 3:
-                    continue  # [exprs], [partSpec], [orderSpec]
-                if len(groups) == 2 and not (
-                    " ASC" in groups[1] or " DESC" in groups[1]
-                ):
-                    continue  # [exprs], [partSpec] — unordered frame
-                hits.append(raw.strip())
-    return hits
+        assert "BroadcastHashJoinExec" in plan, name
 
 
 def test_global_window_detector_distinguishes_specs(spark, sf_dir):
@@ -224,23 +205,21 @@ def test_global_window_detector_distinguishes_specs(spark, sf_dir):
         df.withColumn("r", F.row_number().over(W.partitionBy("k").orderBy("id")))
         .crossJoin(F.broadcast(scalar))
     )
-    plan_part = part._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" in plan_part  # the scalar agg's exchange IS there
-    assert global_window_lines(plan_part) == []
+    plan_part = Plan(part)
+    assert "SinglePartition$" in plan_part.partitionings()  # the scalar agg's
+    assert plan_part.global_windows() == []
 
-    part_noord = df.withColumn("s", F.sum("id").over(W.partitionBy("k")))
-    assert global_window_lines(
-        part_noord._jdf.queryExecution().executedPlan().toString()
-    ) == []
+    part_noord = Plan(df.withColumn("s", F.sum("id").over(W.partitionBy("k"))))
+    assert part_noord.global_windows() == []
+    assert all(w.orderSpec().isEmpty() for w in part_noord.of("WindowExec"))
 
-    glob = df.withColumn("r", F.row_number().over(W.orderBy("id")))
-    plan_glob = glob._jdf.queryExecution().executedPlan().toString()
-    assert len(global_window_lines(plan_glob)) == 1
+    glob = Plan(df.withColumn("r", F.row_number().over(W.orderBy("id"))))
+    (w,) = glob.global_windows()
+    assert not w.orderSpec().isEmpty()
 
-    glob_noord = df.withColumn("s", F.sum("id").over(W.partitionBy()))
-    assert len(global_window_lines(
-        glob_noord._jdf.queryExecution().executedPlan().toString()
-    )) == 1
+    glob_noord = Plan(df.withColumn("s", F.sum("id").over(W.partitionBy())))
+    (w,) = glob_noord.global_windows()
+    assert w.orderSpec().isEmpty()
 
 
 def test_catalog_wide_plan_invariants(spark, sf_dir):
@@ -251,9 +230,9 @@ def test_catalog_wide_plan_invariants(spark, sf_dir):
     * no BatchEvalPython — row-at-a-time Python UDFs are banned from
       all plans (Arrow paths show as ArrowEvalPython/MapInPandas);
     * no global (empty-partition-spec) Window operator except the
-      documented bounded-input exceptions.  Detection parses the
-      ``Window`` operator lines themselves (see global_window_lines) —
-      a SinglePartition exchange belonging to some unrelated 1-row
+      documented bounded-input exceptions.  Detection reads each window
+      operator's partitionSpec (see Plan.global_windows) — a
+      SinglePartition exchange belonging to some unrelated 1-row
       scalar aggregate in the same plan does not trip it.
     """
     allowed_single_partition_window = {
@@ -270,13 +249,13 @@ def test_catalog_wide_plan_invariants(spark, sf_dir):
     }
     offenders = {"cartesian": [], "py_udf": [], "global_window": []}
     for name, q in CATALOG.items():
-        plan = q.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
+        plan = Plan(q.fn(spark, sf_dir))
+        if "CartesianProductExec" in plan:
             offenders["cartesian"].append(name)
-        if "BatchEvalPython" in plan:
+        if "BatchEvalPythonExec" in plan:
             offenders["py_udf"].append(name)
         if (
-            global_window_lines(plan)
+            plan.global_windows()
             and name not in allowed_single_partition_window
         ):
             offenders["global_window"].append(name)
@@ -289,15 +268,8 @@ def test_pack_rollup_reuses_window_partitioning(spark, sf_dir):
     already co-locates every rollup key (subset partitioning satisfies
     the clustered distribution).  One data exchange + the final
     order-by's range exchange, nothing else."""
-    plan = formatted(spark, sf_dir, "doc_pack_assignments")
-    detail = plan.split("== Physical Plan ==")[-1]
-    hash_ex = [
-        ln for ln in detail.splitlines()
-        if "Arguments: hashpartitioning" in ln
-    ]
-    assert len(hash_ex) == 1, hash_ex
-    assert "lang" in hash_ex[0] and "shard" in hash_ex[0]
-    assert "pack_id" not in hash_ex[0]
+    plan = plan_of(spark, sf_dir, "doc_pack_assignments")
+    assert plan.hash_keys() == [["lang", "shard"]]
 
 
 def test_incremental_dedup_collapses_corpus_before_join(spark, sf_dir):
@@ -305,8 +277,8 @@ def test_incremental_dedup_collapses_corpus_before_join(spark, sf_dir):
     join as DISTINCT hashes (aggregate below the join), so join state
     is |unique texts|; at this SF AQE turns it into a broadcast join."""
     plan = plan_of(spark, sf_dir, "dedup_incremental_against_corpus")
-    assert "HashAggregate" in plan  # the distinct, present below the join
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
+    assert "HashAggregateExec" in plan  # the distinct, present below the join
+    assert plan.count("BroadcastHashJoinExec", "SortMergeJoinExec") >= 1
 
 
 def test_bucketed_merge_eliminates_exchanges(spark, sf_dir):
@@ -345,14 +317,12 @@ def test_bucketed_merge_eliminates_exchanges(spark, sf_dir):
         spark, "t_planshape_cur_bkt", "t_planshape_stg_bkt"
     )
     bucketed = merge_listings(cur, stg)
-    plan_b = bucketed._jdf.queryExecution().executedPlan().toString()
-    assert plan_b.count("Exchange") == 0, plan_b
+    assert Plan(bucketed).count(*pv.EXCHANGES) == 0
 
     control = merge_listings(
         current_fixture(spark, sf_dir), staging_fixture(spark, sf_dir)
     )
-    plan_c = control._jdf.queryExecution().executedPlan().toString()
-    assert plan_c.count("Exchange") >= 2  # both sides shuffle unbucketed
+    assert Plan(control).count(*pv.EXCHANGES) >= 2  # both sides shuffle unbucketed
 
 
 def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):
@@ -361,10 +331,10 @@ def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):
     exploded grams must never be sort-merge-shuffled on the gram key
     (that exchange is the 100 TB killer: |corpus| × ~|words| rows)."""
     plan = plan_of(spark, sf_dir, "doc_decontaminate")
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    for ln in plan.splitlines():
-        if "SortMergeJoin" in ln:
-            assert "[g" not in ln, f"gram probe shuffled: {ln}"
+    bhj = plan.of("BroadcastHashJoinExec")
+    assert "LeftSemi" in [j.joinType().toString() for j in bhj]
+    for smj in plan.of("SortMergeJoinExec"):
+        assert pv.key_names(smj.leftKeys())[:1] != ["g"], "gram probe shuffled"
 
 
 def test_mixture_sample_broadcasts_rate_frame(spark, sf_dir):
@@ -372,7 +342,7 @@ def test_mixture_sample_broadcasts_rate_frame(spark, sf_dir):
     rows) broadcasts back onto the corpus; the corpus itself is never
     repartitioned for the sampling filter."""
     plan = plan_of(spark, sf_dir, "domain_mixture_sample")
-    assert "BroadcastHashJoin" in plan
+    assert "BroadcastHashJoinExec" in plan
 
 
 def test_tpch_shapes_take_ordered_and_push_filters(spark, sf_dir):
@@ -382,33 +352,25 @@ def test_tpch_shapes_take_ordered_and_push_filters(spark, sf_dir):
     force-broadcast (only the 25-row nation carries a hint)."""
     for name in ("shipping_priority_topn", "returned_item_losses"):
         plan = plan_of(spark, sf_dir, name)
-        assert "TakeOrderedAndProject" in plan, name
-        assert "Python" not in plan, name
-        fmt = formatted(spark, sf_dir, name)
+        assert "TakeOrderedAndProjectExec" in plan, name
+        assert not plan.python(), name
         # each scan that carries a filter shows it pushed
-        assert "PushedFilters: [IsNotNull(o_orderdate)" in fmt, name
-    fmt3 = formatted(spark, sf_dir, "shipping_priority_topn")
-    assert "EqualTo(c_mktsegment,BUILDING)" in fmt3
-    assert "IsNotNull(l_shipdate)" in fmt3
-    fmt10 = formatted(spark, sf_dir, "returned_item_losses")
-    assert "EqualTo(l_returnflag,R)" in fmt10
-    logical = (
-        CATALOG["returned_item_losses"]
-        .fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .logical()
-        .toString()
-    )
-    assert logical.count("ResolvedHint") <= 1  # nation only
+        assert plan.pushed("[IsNotNull(o_orderdate)"), name
+    q3 = plan_of(spark, sf_dir, "shipping_priority_topn")
+    assert q3.pushed("EqualTo(c_mktsegment,BUILDING)")
+    assert q3.pushed("IsNotNull(l_shipdate)")
+    q10 = plan_of(spark, sf_dir, "returned_item_losses")
+    assert q10.pushed("EqualTo(l_returnflag,R)")
+    assert Plan(q10.df, "logical").count("ResolvedHint") <= 1  # nation only
 
 
 def test_zorder_audit_is_codegen_only(spark, sf_dir):
     """The Morton key must stay whole-stage codegen: no Python worker,
     no join, and only the bounded bucket agg + output sort exchanges."""
     plan = plan_of(spark, sf_dir, "zorder_bucket_stats")
-    assert "Python" not in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange") == 2  # bucket hash-agg + orderBy range
+    assert not plan.python()
+    assert not plan.has("Join")
+    assert plan.count(*pv.EXCHANGES) == 2  # bucket hash-agg + orderBy range
 
 
 def test_cms_build_is_mapside_and_probe_broadcasts(spark, sf_dir):
@@ -416,18 +378,18 @@ def test_cms_build_is_mapside_and_probe_broadcasts(spark, sf_dir):
     worker), probe the ≤ d·w cell table via BroadcastHashJoin, and
     never sort-merge anything."""
     plan = plan_of(spark, sf_dir, "cms_heavy_hitters_users")
-    assert "Python" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert not plan.python()
+    assert "BroadcastHashJoinExec" in plan
+    assert "SortMergeJoinExec" not in plan
 
 
 def test_grouping_sets_is_one_scan_expand(spark, sf_dir):
     """GROUPING SETS must plan as ONE fact scan + Expand + hash agg —
     not one scan per grain, and never a join/union of grains."""
     plan = plan_of(spark, sf_dir, "revenue_grouping_sets")
-    assert "Expand" in plan
-    assert plan.count("Scan parquet") == 1
-    assert "Join" not in plan and "Union" not in plan
+    assert "ExpandExec" in plan
+    assert plan.count("FileSourceScanExec") == 1
+    assert not plan.has("Join") and not plan.has("Union")
 
 
 def test_runtime_bloom_filter_fires_when_thresholds_met(spark, sf_dir):
@@ -438,14 +400,13 @@ def test_runtime_bloom_filter_fires_when_thresholds_met(spark, sf_dir):
     the 100 TB shuffle-volume win the session conf exists for."""
     from pyspark.sql import functions as F
 
+    from real_estate_etl_dev_spark.session import conf_scope
+
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # keep a shuffle join
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, **confs):
         lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -455,17 +416,12 @@ def test_runtime_bloom_filter_fires_when_thresholds_met(spark, sf_dir):
             .groupBy("o_orderpriority")
             .count()
         )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan
-        # and the filter sits on the fact (lineitem) side
-        fact_side = plan[plan.index("might_contain"):]
-        assert "l_orderkey" in fact_side[:400]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        # a might_contain(bloom, xxhash64(l_orderkey)) filter condition
+        # sits on the fact (lineitem) side
+        assert any(
+            "might_contain(" in ln and "xxhash64(l_orderkey#" in ln
+            for ln in pv.explain_formatted(j).splitlines()
+        )
 
 
 def test_new_tpch_shapes_plan_as_documented(spark, sf_dir):
@@ -474,30 +430,26 @@ def test_new_tpch_shapes_plan_as_documented(spark, sf_dir):
     Q18 aggregates lineitem BEFORE any join, and the intersect
     collapses both sides before the set op."""
     q4 = plan_of(spark, sf_dir, "order_priority_exists_counts")
-    assert "LeftSemi" in q4
-    fmt4 = formatted(spark, sf_dir, "order_priority_exists_counts")
-    assert "EqualTo(l_returnflag,R)" in fmt4  # probe filter pushed to scan
-    assert "IsNotNull(o_orderdate)" in fmt4
+    assert "LeftSemi" in q4.join_types()
+    assert q4.pushed("EqualTo(l_returnflag,R)")  # probe filter pushed to scan
+    assert q4.pushed("IsNotNull(o_orderdate)")
 
     q12 = plan_of(spark, sf_dir, "returnflag_priority_classes")
-    assert q12.count("Join") >= 1 and "Python" not in q12
-    fmt12 = formatted(spark, sf_dir, "returnflag_priority_classes")
-    assert "IsNotNull(l_shipdate)" in fmt12  # year filter pushed
+    assert q12.join_types() and not q12.python()
+    assert q12.pushed("IsNotNull(l_shipdate)")  # year filter pushed
 
     q14 = plan_of(spark, sf_dir, "promo_revenue_ratio")
-    assert "BroadcastHashJoin" in q14  # part side broadcasts
+    assert "BroadcastHashJoinExec" in q14  # part side broadcasts
 
     # Q18: the first (and only fact-sized) aggregate must sit BELOW the
     # first join — lineitem collapses to per-order sums pre-join.
     q18 = plan_of(spark, sf_dir, "large_volume_customers")
-    first_join = q18.find("Join")
-    assert first_join >= 0
-    assert "HashAggregate" in q18[first_join:], q18
+    first_join = min(i for i, c in enumerate(q18.classes) if "Join" in c)
+    assert "HashAggregateExec" in q18.classes[first_join:], q18.classes
 
     qi = plan_of(spark, sf_dir, "trade_ready_nations_intersect")
-    assert "LeftSemi" in qi  # intersect = distinct + semi join
-    fmti = formatted(spark, sf_dir, "trade_ready_nations_intersect")
-    assert "EqualTo(c_mktsegment,BUILDING)" in fmti
+    assert "LeftSemi" in qi.join_types()  # intersect = distinct + semi join
+    assert qi.pushed("EqualTo(c_mktsegment,BUILDING)")
 
 
 def test_ngram_coverage_is_udf_free_single_gram_shuffle(spark, sf_dir):
@@ -505,10 +457,10 @@ def test_ngram_coverage_is_udf_free_single_gram_shuffle(spark, sf_dir):
     (transform+posexplode, no Python anywhere), duplicated grams come
     back as a semi join, and top-100 is a TakeOrderedAndProject."""
     plan = plan_of(spark, sf_dir, "dedup_ngram_coverage")
-    assert "Python" not in plan
-    assert "LeftSemi" in plan
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
+    assert not plan.python()
+    assert "LeftSemi" in plan.join_types()
+    assert "TakeOrderedAndProjectExec" in plan
+    assert "CartesianProductExec" not in plan
 
 
 def test_mad_outliers_one_scan_one_shuffle(spark, sf_dir):
@@ -517,13 +469,10 @@ def test_mad_outliers_one_scan_one_shuffle(spark, sf_dir):
     WHOLE query is one parquet scan and ONE hash exchange on
     o_orderpriority (plus the final 5-row ordering exchange), with no
     join of any kind."""
-    import re
-
     plan = plan_of(spark, sf_dir, "price_mad_outliers")
-    assert "Join" not in plan, plan
-    hash_exchanges = re.findall(r"Exchange hashpartitioning\(o_orderpriority", plan)
-    assert len(hash_exchanges) == 1, plan
-    assert plan.count("FileScan parquet") == 1, plan
+    assert not plan.has("Join"), plan.classes
+    assert [k[0] for k in plan.hash_keys()] == ["o_orderpriority"]
+    assert plan.count("FileSourceScanExec") == 1, plan.classes
 
 
 def test_funnel_stages_broadcast_and_shrink(spark, sf_dir):
@@ -531,21 +480,19 @@ def test_funnel_stages_broadcast_and_shrink(spark, sf_dir):
     the previous (smaller) stage frame; no window, no sort of the
     event table, no cartesian."""
     plan = plan_of(spark, sf_dir, "event_funnel_counts")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "Window" not in plan
+    assert "BroadcastHashJoinExec" in plan
+    assert "SortMergeJoinExec" not in plan
+    assert not plan.has("Window")
 
 
 def test_retention_cohorts_single_user_shuffle(spark, sf_dir):
     """user_retention_cohorts: cohort assignment and distinct active
     weeks both hash-partition on user_id, so the join needs no extra
     fact-side exchange beyond those aggs."""
-    import re
-
     plan = plan_of(spark, sf_dir, "user_retention_cohorts")
-    user_exchanges = re.findall(r"Exchange hashpartitioning\(user_id", plan)
-    assert len(user_exchanges) <= 2, plan
-    assert "CartesianProduct" not in plan
+    user_exchanges = [k for k in plan.hash_keys() if k[0] == "user_id"]
+    assert len(user_exchanges) <= 2, plan.hash_keys()
+    assert "CartesianProductExec" not in plan
 
 
 def test_exact_corr_is_one_mapside_agg(spark, sf_dir):
@@ -553,50 +500,35 @@ def test_exact_corr_is_one_mapside_agg(spark, sf_dir):
     partial→final hash aggregate over one scan — no join, no window,
     no second pass."""
     plan = plan_of(spark, sf_dir, "price_qty_exact_corr")
-    assert "Join" not in plan
-    assert "Window" not in plan
-    assert plan.count("FileScan parquet") == 1, plan
+    assert not plan.has("Join")
+    assert not plan.has("Window")
+    assert plan.count("FileSourceScanExec") == 1, plan.classes
 
 
-def test_partition_pruning_reads_one_year_of_files(spark, sf_dir):
+def test_partition_pruning_reads_one_year_of_files(spark, sf_dir, tmp_path):
     """Physical proof of partition pruning: the one-year filter reads
     strictly fewer files than the full partitioned table (one
     directory of seven), and the partition filter appears in the
     scan, not a post-scan Filter."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
     from real_estate_etl_dev_spark.sources.readers import load_table
 
-    workdir = tempfile.mkdtemp(prefix="prune_test_")
-    try:
-        (
-            load_table(spark, sf_dir, "orders")
-            .withColumn("o_year", F.year("o_orderdate"))
-            .write.partitionBy("o_year")
-            .mode("overwrite")
-            .parquet(f"{workdir}/t")
-        )
-        full = spark.read.parquet(f"{workdir}/t")
-        one = full.filter(F.col("o_year") == 1995)
-        # input_file_name() names the files EXECUTION actually read —
-        # (inputFiles() reports the pre-pruning listing, useless here)
-        read_one = {
-            r[0] for r in one.select(F.input_file_name()).distinct().collect()
-        }
-        read_full = {
-            r[0] for r in full.select(F.input_file_name()).distinct().collect()
-        }
-        assert len(read_one) < len(read_full)
-        assert {f.split("o_year=")[1].split("/")[0] for f in read_one} == {"1995"}
-        fmt = one._sc._jvm.PythonSQLUtils.explainString(
-            one._jdf.queryExecution(), "formatted"
-        )
-        assert "PartitionFilters" in fmt
-        assert "o_year" in fmt.split("PartitionFilters")[1].split("]")[0]
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    (
+        load_table(spark, sf_dir, "orders")
+        .withColumn("o_year", F.year("o_orderdate"))
+        .write.partitionBy("o_year")
+        .mode("overwrite")
+        .parquet(f"{tmp_path}/t")
+    )
+    full = spark.read.parquet(f"{tmp_path}/t")
+    one = full.filter(F.col("o_year") == 1995)
+    # input_file_name() names the files EXECUTION actually read —
+    # (inputFiles() reports the pre-pruning listing, useless here)
+    read_one = {r[0] for r in one.select(F.input_file_name()).distinct().collect()}
+    read_full = {r[0] for r in full.select(F.input_file_name()).distinct().collect()}
+    assert len(read_one) < len(read_full)
+    assert {f.split("o_year=")[1].split("/")[0] for f in read_one} == {"1995"}
+    assert "o_year" in pv.partition_filter_columns(one)
 
 
 def test_q5_broadcasts_dims_and_joins_conation_in_operator(spark, sf_dir):
@@ -605,13 +537,14 @@ def test_q5_broadcasts_dims_and_joins_conation_in_operator(spark, sf_dir):
     post-join Filter on nationkey equality), and the year filter is
     pushed to the orders scan."""
     plan = plan_of(spark, sf_dir, "local_supplier_volume")
-    assert plan.count("BroadcastHashJoin") >= 3
-    fmt = formatted(spark, sf_dir, "local_supplier_volume")
-    assert "IsNotNull(o_orderdate)" in fmt
-    assert "EqualTo(r_name,ASIA)" in fmt
+    assert plan.count("BroadcastHashJoinExec") >= 3
+    assert plan.pushed("IsNotNull(o_orderdate)")
+    assert plan.pushed("EqualTo(r_name,ASIA)")
     # co-nation predicate is a join key, not a residual filter row scan
-    joins = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
-    assert any("s_nationkey" in ln for ln in joins), joins
+    assert any(
+        "s_nationkey" in pv.key_names(j.leftKeys()) + pv.key_names(j.rightKeys())
+        for j in plan.of("BroadcastHashJoinExec")
+    )
 
 
 def test_lm_scoring_broadcasts_model_and_stays_jvm(spark, sf_dir):
@@ -620,9 +553,9 @@ def test_lm_scoring_broadcasts_model_and_stays_jvm(spark, sf_dir):
     corpus), the whole pipeline is codegen (no Python), and top-100 is
     a TakeOrderedAndProject."""
     plan = plan_of(spark, sf_dir, "doc_lm_cross_entropy")
-    assert "BroadcastHashJoin" in plan
-    assert "Python" not in plan
-    assert "TakeOrderedAndProject" in plan
+    assert "BroadcastHashJoinExec" in plan
+    assert not plan.python()
+    assert "TakeOrderedAndProjectExec" in plan
 
 
 def test_salted_join_shuffles_on_salted_key(spark, sf_dir):
@@ -631,14 +564,9 @@ def test_salted_join_shuffles_on_salted_key(spark, sf_dir):
     exchanges must hash-partition on (user_id, __salt), proving the
     hot key actually spreads."""
     plan = plan_of(spark, sf_dir, "salted_skew_user_join")
-    assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
-    assert "__salt" in plan
-    salted_exchanges = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "__salt" in ln
-    ]
-    assert len(salted_exchanges) >= 2, plan
+    assert plan.count("ShuffledHashJoinExec", "SortMergeJoinExec") >= 1
+    salted_exchanges = [k for k in plan.hash_keys() if "__salt" in k]
+    assert len(salted_exchanges) >= 2, plan.hash_keys()
 
 
 def test_scd2_merge_is_one_join_plus_explode(spark, sf_dir):
@@ -647,14 +575,10 @@ def test_scd2_merge_is_one_join_plus_explode(spark, sf_dir):
     inline explode (Generate), and there is no second join or window
     anywhere."""
     plan = plan_of(spark, sf_dir, "merge_scd2_intervals")
-    n_joins = (
-        plan.count("SortMergeJoin")
-        + plan.count("ShuffledHashJoin")
-        + plan.count("BroadcastHashJoin")
-    )
-    assert n_joins == 1, plan
-    assert "Generate explode" in plan
-    assert "Window" not in plan
+    n_joins = plan.count("SortMergeJoinExec", "ShuffledHashJoinExec", "BroadcastHashJoinExec")
+    assert n_joins == 1, plan.classes
+    assert "Explode" in [pv.node_class(g.generator()) for g in plan.of("GenerateExec")]
+    assert not plan.has("Window")
 
 
 def test_setsim_prefix_no_allpairs_join(spark, sf_dir):
@@ -663,10 +587,10 @@ def test_setsim_prefix_no_allpairs_join(spark, sf_dir):
     frequency table broadcasts; verification is JVM array math (no
     Python)."""
     plan = plan_of(spark, sf_dir, "dedup_setsim_prefix")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Python" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert "CartesianProductExec" not in plan
+    assert "BroadcastNestedLoopJoinExec" not in plan
+    assert not plan.python()
+    assert "BroadcastHashJoinExec" in plan
 
 
 def test_setsim_candidate_shuffle_is_hashed_and_positional(spark, sf_dir):
@@ -676,7 +600,7 @@ def test_setsim_candidate_shuffle_is_hashed_and_positional(spark, sf_dir):
     (the exact-rational ceil-div rendered as FLOOR over the 197 = 97
     + 100 denominator) plus both rational length bounds — not the
     double-ceil form ADVICE r06 flagged."""
-    plan = plan_of(spark, sf_dir, "dedup_setsim_prefix")
+    plan = pv.explain_formatted(CATALOG["dedup_setsim_prefix"].fn(spark, sf_dir))
     assert "xxhash64(ptok" in plan
     assert "/ 197" in plan      # positional filter's ceil_div(97*(ma+mb), 197)
     assert "/ 100" in plan      # rational length bound ceil_div(97*m, 100)
@@ -688,9 +612,9 @@ def test_setsim_audit_shares_prefix_expansion_and_broadcasts_totals(spark, sf_di
     prefix bound in-plan, and its corpus-constant totals ride a 1-row
     BroadcastNestedLoopJoin, not a window over the expansion."""
     plan = plan_of(spark, sf_dir, "setsim_bucket_audit")
-    assert "/ 100" in plan
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "Window" not in plan
+    assert "/ 100" in pv.explain_formatted(plan.df)
+    assert "BroadcastNestedLoopJoinExec" in plan
+    assert not plan.has("Window")
 
 
 def test_setsim_hybrid_routes_and_stays_jvm(spark, sf_dir):
@@ -700,10 +624,10 @@ def test_setsim_hybrid_routes_and_stays_jvm(spark, sf_dir):
     the pure exact join (same helper, pinned here so the routing split
     can't silently fork the key encoding)."""
     plan = plan_of(spark, sf_dir, "dedup_setsim_hybrid")
-    assert "CartesianProduct" not in plan
-    assert "Python" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "xxhash64(ptok" in plan  # cold tier, 8-byte candidate keys
+    assert "CartesianProductExec" not in plan
+    assert not plan.python()
+    assert "BroadcastHashJoinExec" in plan
+    assert "xxhash64(ptok" in pv.explain_formatted(plan.df)  # 8-byte cold-tier keys
 
 
 def test_ann_recall_cost_no_python_no_cartesian(spark, sf_dir):
@@ -711,9 +635,9 @@ def test_ann_recall_cost_no_python_no_cartesian(spark, sf_dir):
     column math (decimal folds), query sides broadcast, and the only
     nested-loop join is the 1-row n_queries scalar combine."""
     plan = plan_of(spark, sf_dir, "embedding_ann_recall_cost")
-    assert "Python" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert not plan.python()
+    assert "CartesianProductExec" not in plan
+    assert "BroadcastHashJoinExec" in plan
 
 
 def test_q7_broadcasts_dims_and_pushes_shipdate(spark, sf_dir):
@@ -721,25 +645,19 @@ def test_q7_broadcasts_dims_and_pushes_shipdate(spark, sf_dir):
     nation-pair filter and BROADCAST into the fact chain; the ship-date
     range reaches the lineitem scan."""
     plan = plan_of(spark, sf_dir, "nation_trade_volume_q7")
-    assert plan.count("BroadcastHashJoin") >= 2
-    fmt = formatted(spark, sf_dir, "nation_trade_volume_q7")
-    assert "IsNotNull(l_shipdate)" in fmt
-    assert "Python" not in plan
+    assert plan.count("BroadcastHashJoinExec") >= 2
+    assert plan.pushed("IsNotNull(l_shipdate)")
+    assert not plan.python()
 
 
 def test_q13_single_custkey_shuffle_and_pushed_exclusion(spark, sf_dir):
     """customer_order_distribution_q13: the exclusion predicate is
     pushed to the orders scan; the per-customer count REUSES the outer
     join's custkey partitioning (no third custkey exchange)."""
-    import re
-
     plan = plan_of(spark, sf_dir, "customer_order_distribution_q13")
-    fmt = formatted(spark, sf_dir, "customer_order_distribution_q13")
-    assert "o_orderpriority" in fmt.split("PushedFilters")[1][:400]
-    cust_exchanges = re.findall(
-        r"Exchange hashpartitioning\((?:o_custkey|c_custkey)", plan
-    )
-    assert len(cust_exchanges) <= 2, plan
+    assert plan.pushed("o_orderpriority")
+    cust = [k for k in plan.hash_keys() if k[0] in ("o_custkey", "c_custkey")]
+    assert len(cust) <= 2, plan.hash_keys()
 
 
 def test_text_audits_are_mapside_jvm(spark, sf_dir):
@@ -749,11 +667,11 @@ def test_text_audits_are_mapside_jvm(spark, sf_dir):
     no cartesian."""
     for name in ("doc_pii_scrub_audit", "corpus_ngram_diversity"):
         plan = plan_of(spark, sf_dir, name)
-        assert "Python" not in plan, name
-        assert "Join" not in plan, name
+        assert not plan.python(), name
+        assert not plan.has("Join"), name
     zipf = plan_of(spark, sf_dir, "corpus_zipf_fit")
-    assert "Python" not in zipf
-    assert "CartesianProduct" not in zipf
+    assert not zipf.python()
+    assert "CartesianProductExec" not in zipf
 
 
 def test_bloom_tier_broadcasts_bits_no_sortmerge(spark, sf_dir):
@@ -763,9 +681,9 @@ def test_bloom_tier_broadcasts_bits_no_sortmerge(spark, sf_dir):
     shuffled, defeating the design."""
     for name in ("bloom_filter_fp_audit", "dedup_bloom_prefilter"):
         plan = plan_of(spark, sf_dir, name)
-        assert "BroadcastHashJoin" in plan, name
-        assert "SortMergeJoin" not in plan, name
-        assert "Python" not in plan, name
+        assert "BroadcastHashJoinExec" in plan, name
+        assert "SortMergeJoinExec" not in plan, name
+        assert not plan.python(), name
 
 
 def test_containment_blocks_on_gram_hash(spark, sf_dir):
@@ -774,10 +692,11 @@ def test_containment_blocks_on_gram_hash(spark, sf_dir):
     fall back to an all-pairs join; the exact contains() verify runs
     on candidates only."""
     plan = plan_of(spark, sf_dir, "doc_containment_pairs")
-    assert "xxhash64" in plan
-    assert "CartesianProduct" not in plan
-    assert "Contains(" in plan or "contains(" in plan
-    assert "Python" not in plan
+    fmt = pv.explain_formatted(plan.df)
+    assert "xxhash64" in fmt
+    assert "CartesianProductExec" not in plan
+    assert "Contains(" in fmt or "contains(" in fmt
+    assert not plan.python()
 
 
 def test_chunk_windows_is_mapside_single_generate(spark, sf_dir):
@@ -785,23 +704,22 @@ def test_chunk_windows_is_mapside_single_generate(spark, sf_dir):
     partitioning — a hashpartitioning exchange would mean the
     map-only promise rotted."""
     plan = plan_of(spark, sf_dir, "doc_chunk_windows")
-    assert "Generate" in plan
-    assert "hashpartitioning" not in plan
-    assert plan.count("Exchange") <= 2  # range partition + AQE reuse text
-    assert "Python" not in plan
+    assert "GenerateExec" in plan
+    assert plan.hash_keys() == []
+    assert plan.partitionings() == ["RangePartitioning"]  # output sort only
+    assert not plan.python()
 
 
 def test_q8_broadcasts_dims_and_pushes_all_filters(spark, sf_dir):
     """Q8's three scan-level predicates must reach their scans, and
     the dim sides must broadcast (the fixture plans every join
     broadcast; at scale AQE swaps the two fact-side ones)."""
-    fmt = formatted(spark, sf_dir, "market_share_q8")
-    assert "EqualTo(p_type,PROMO)" in fmt
-    assert "EqualTo(r_name,ASIA)" in fmt
-    assert "GreaterThanOrEqual(o_orderdate,1995-01-01" in fmt
     plan = plan_of(spark, sf_dir, "market_share_q8")
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "CartesianProduct" not in plan
+    assert plan.pushed("EqualTo(p_type,PROMO)")
+    assert plan.pushed("EqualTo(r_name,ASIA)")
+    assert plan.pushed("GreaterThanOrEqual(o_orderdate,1995-01-01")
+    assert plan.count("BroadcastHashJoinExec") >= 4
+    assert "CartesianProductExec" not in plan
 
 
 def test_partsupp_tpch_shapes_plan_as_documented(spark, sf_dir):
@@ -817,50 +735,45 @@ def test_partsupp_tpch_shapes_plan_as_documented(spark, sf_dir):
     # all broadcast — the only exchange family left is partsupp's
     # defining distinct.
     q2 = plan_of(spark, sf_dir, "min_cost_supplier_q2")
-    assert q2.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in q2
-    fmt2 = formatted(spark, sf_dir, "min_cost_supplier_q2")
-    assert "EqualTo(r_name,EUROPE)" in fmt2
-    assert "EqualTo(p_type,LARGE)" in fmt2
+    assert q2.count("BroadcastHashJoinExec") >= 3
+    assert "SortMergeJoinExec" not in q2
+    assert q2.pushed("EqualTo(r_name,EUROPE)")
+    assert q2.pushed("EqualTo(p_type,LARGE)")
 
     # Q9: part and supplier⋈nation broadcast onto the fact stream;
     # the '%rod%' predicate reaches part's scan.
     q9 = plan_of(spark, sf_dir, "product_profit_q9")
-    assert q9.count("BroadcastHashJoin") >= 2
-    fmt9 = formatted(spark, sf_dir, "product_profit_q9")
-    assert "StringContains(p_name,rod)" in fmt9
+    assert q9.count("BroadcastHashJoinExec") >= 2
+    assert q9.pushed("StringContains(p_name,rod)")
 
     # Q10: quarter + returnflag pushed to their scans, top-20 is a
     # TakeOrderedAndProject (no global sort materializes).
     q10 = plan_of(spark, sf_dir, "returned_item_reporting_q10")
-    assert "TakeOrderedAndProject" in q10
-    fmt10 = formatted(spark, sf_dir, "returned_item_reporting_q10")
-    assert "EqualTo(l_returnflag,R)" in fmt10
-    assert "GreaterThanOrEqual(o_orderdate,1995-10-01" in fmt10
+    assert "TakeOrderedAndProjectExec" in q10
+    assert q10.pushed("EqualTo(l_returnflag,R)")
+    assert q10.pushed("GreaterThanOrEqual(o_orderdate,1995-10-01")
 
     # Q11: the HAVING-vs-global-scalar is a 1-row broadcast nested
     # loop (the _id_offset pattern), not a cartesian, and partsupp is
     # aggregated before it.
     q11 = plan_of(spark, sf_dir, "important_stock_q11")
-    assert "BroadcastNestedLoopJoin" in q11
-    assert "CartesianProduct" not in q11
-    first_bnlj = q11.find("BroadcastNestedLoopJoin")
-    assert "HashAggregate" in q11[first_bnlj:]  # agg below the loop join
+    assert "BroadcastNestedLoopJoinExec" in q11
+    assert "CartesianProductExec" not in q11
+    first_bnlj = q11.classes.index("BroadcastNestedLoopJoinExec")
+    assert "HashAggregateExec" in q11.classes[first_bnlj:]  # agg below the loop join
 
     # Q16: NOT-IN blacklist = broadcast LEFT ANTI; part predicates
     # pushed to its scan.
     q16 = plan_of(spark, sf_dir, "parts_supplier_relation_q16")
-    assert "LeftAnti" in q16 and "BroadcastHashJoin" in q16
-    fmt16 = formatted(spark, sf_dir, "parts_supplier_relation_q16")
-    assert "Not(EqualTo(p_type,PROMO))" in fmt16
-    assert "In(p_size," in fmt16
+    assert "LeftAnti" in [j.joinType().toString() for j in q16.of("BroadcastHashJoinExec")]
+    assert q16.pushed("Not(EqualTo(p_type,PROMO))")
+    assert q16.pushed("In(p_size,")
 
     # Q20: the nested IN chain compiles to (at least) two semi joins;
     # the ship-year window reaches lineitem's scan.
     q20 = plan_of(spark, sf_dir, "potential_promotion_q20")
-    assert q20.count("LeftSemi") >= 2
-    fmt20 = formatted(spark, sf_dir, "potential_promotion_q20")
-    assert "GreaterThanOrEqual(l_shipdate,1995-01-01" in fmt20
+    assert q20.join_types().count("LeftSemi") >= 2
+    assert q20.pushed("GreaterThanOrEqual(l_shipdate,1995-01-01")
 
 
 def test_r09_llm_additions_plan_as_documented(spark, sf_dir):
@@ -873,15 +786,15 @@ def test_r09_llm_additions_plan_as_documented(spark, sf_dir):
     # token_budget_bpe: tokenizer is codegen string ops; the window
     # shuffle on lang and the output sort are the only exchanges.
     bpe = plan_of(spark, sf_dir, "token_budget_bpe")
-    assert "Python" not in bpe
-    assert bpe.count("Exchange hashpartitioning") == 1  # lang window
-    assert "replace(" in bpe  # the merge chain compiled JVM-side
+    assert not bpe.python()
+    assert bpe.hash_keys() == [["lang"]]  # lang window
+    assert "replace(" in pv.explain_formatted(bpe.df)  # merge chain JVM-side
 
     fert = plan_of(spark, sf_dir, "bpe_fertility_by_lang")
-    assert "Python" not in fert
+    assert not fert.python()
     # partial agg before the single lang exchange (map-side combine)
-    first_ex = fert.find("Exchange")
-    assert first_ex >= 0 and "HashAggregate" in fert[first_ex:]
+    first_ex = fert.classes.index("ShuffleExchangeExec")
+    assert "HashAggregateExec" in fert.classes[first_ex:]
 
     # bloom_sizing_design (r14 tall form): every config's bit set
     # rides ONE broadcast probe join keyed (cfg, bitpos) — the bits
@@ -891,18 +804,18 @@ def test_r09_llm_additions_plan_as_documented(spark, sf_dir):
     # probe per independent config subtree; the tall rewrite is
     # exactly the removal of those per-config copies.)
     bs = plan_of(spark, sf_dir, "bloom_sizing_design")
-    assert "Python" not in bs
-    assert "BroadcastHashJoin" in bs
-    assert "SortMergeJoin" not in bs
-    assert "CartesianProduct" not in bs
+    assert not bs.python()
+    assert "BroadcastHashJoinExec" in bs
+    assert "SortMergeJoinExec" not in bs
+    assert "CartesianProductExec" not in bs
 
     # embedding_pq_adc_recall: codebook/query sides broadcast; the
     # corpus-bearing joins are all broadcast joins (corpus itself is
     # never the build side of a shuffle join).
     pq = plan_of(spark, sf_dir, "embedding_pq_adc_recall")
-    assert "Python" not in pq
-    assert "SortMergeJoin" not in pq
-    assert "CartesianProduct" not in pq
+    assert not pq.python()
+    assert "SortMergeJoinExec" not in pq
+    assert "CartesianProductExec" not in pq
 
 
 def test_r10_flagship_plans_as_documented(spark, sf_dir):
@@ -914,19 +827,18 @@ def test_r10_flagship_plans_as_documented(spark, sf_dir):
     ObjectHashAggregate(collect_list), zero Python, no extra shuffle
     between the fold and the window rollup."""
     zipf = plan_of(spark, sf_dir, "dedup_setsim_prefix_zipf")
-    assert "xxhash64" in zipf          # candidate shuffle on hashed tokens
-    assert "CartesianProduct" not in zipf
+    assert "xxhash64" in pv.explain_formatted(zipf.df)  # hashed-token candidates
+    assert "CartesianProductExec" not in zipf
     # corpus synthesis is codegen string work over the scan — no
     # Python evaluation anywhere in the plan
-    assert "BatchEvalPython" not in zipf and "ArrowEvalPython" not in zipf
+    assert zipf.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
 
     pack = plan_of(spark, sf_dir, "seq_pack_bpe_windows")
-    assert "ObjectHashAggregate" in pack          # the collect_list fold
-    assert "BatchEvalPython" not in pack and "ArrowEvalPython" not in pack
+    assert "ObjectHashAggregateExec" in pack  # the collect_list fold
+    assert pack.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
     # exactly one hashpartitioning exchange (the group-key shuffle);
     # the only other exchange is the output-order rangepartitioning
-    assert pack.count("hashpartitioning") == 1, pack
-    assert pack.count("rangepartitioning") == 1, pack
+    assert sorted(pack.partitionings()) == ["HashPartitioning", "RangePartitioning"]
 
 
 def test_semdedup_kmeans_plan_shape(spark, sf_dir):
@@ -939,15 +851,14 @@ def test_semdedup_kmeans_plan_shape(spark, sf_dir):
     the cluster key, the Lloyd centroid tables ride broadcasts."""
     from real_estate_etl_dev_spark.plans.llmdata import dedup_semantic_kmeans
 
-    df = dedup_semantic_kmeans(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    plan = Plan(dedup_semantic_kmeans(spark, sf_dir))
+    assert not plan.python()
+    assert "CartesianProductExec" not in plan
+    assert "BroadcastNestedLoopJoinExec" not in plan
     # the k x dim centroid / seed sides of the Lloyd rounds broadcast
     # (5 at fixture scale: seeds + 3 rounds of centroids + the 1-row
     # id-offset combine); only the vid-keyed joins may sort-merge
-    assert plan.count("BroadcastHashJoin") >= 4, plan
+    assert plan.count("BroadcastHashJoinExec") >= 4, plan.classes
 
 
 def test_bpe_learn_plan_shape(spark, sf_dir):
@@ -964,10 +875,9 @@ def test_bpe_learn_plan_shape(spark, sf_dir):
         bpe_learn_merges,
     )
 
-    df = bpe_learn_merges(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    plan = Plan(bpe_learn_merges(spark, sf_dir))
+    assert not plan.python()
+    assert "CartesianProductExec" not in plan
 
 
 def test_curation_funnel_plan_shape(spark, sf_dir):
@@ -982,18 +892,18 @@ def test_curation_funnel_plan_shape(spark, sf_dir):
     (the documented srcdup-namespace posture)."""
     from real_estate_etl_dev_spark.plans.llmdata import corpus_curation_funnel
 
-    df = corpus_curation_funnel(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    plan = Plan(corpus_curation_funnel(spark, sf_dir))
+    assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
+    assert "CartesianProductExec" not in plan
     # decontamination: eval grams broadcast into the semi probe
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    assert "BroadcastHashJoinExec" in plan and "LeftSemi" in plan.join_types()
     # exact dedup: the window exchange is keyed on the fingerprint
-    assert "hashpartitioning(fp" in plan, plan
+    first_keys = [k[0] for k in plan.hash_keys()]
+    assert "fp" in first_keys, plan.hash_keys()
     # exactly ONE gram-keyed exchange: the tiny eval side's DISTINCT.
     # The exploded corpus grams ride the broadcast semi probe and are
     # never shuffled on the gram key.
-    assert plan.count("hashpartitioning(g") == 1, plan
+    assert first_keys.count("g") == 1, plan.hash_keys()
 
 
 def test_dsir_plan_shape(spark, sf_dir):
@@ -1007,13 +917,12 @@ def test_dsir_plan_shape(spark, sf_dir):
     rank-limited window (WindowGroupLimit), not a global sort."""
     from real_estate_etl_dev_spark.plans.llmdata import dsir_importance_select
 
-    df = dsir_importance_select(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "WindowGroupLimit" in plan, plan
-    assert plan.count("hashpartitioning(b#") == 0, plan
+    plan = Plan(dsir_importance_select(spark, sf_dir))
+    assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
+    assert "CartesianProductExec" not in plan
+    assert "BroadcastHashJoinExec" in plan
+    assert "WindowGroupLimitExec" in plan, plan.classes
+    assert all(k[0] != "b" for k in plan.hash_keys()), plan.hash_keys()
 
 
 def test_kmv_overlap_plan_shape(spark, sf_dir):
@@ -1041,21 +950,20 @@ def test_kmv_overlap_plan_shape(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 3 != 0
     )
-    sk = kmv_sketch(docs, "text", _KMV_K)
-    sk_plan = sk._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in sk_plan, sk_plan
-    assert sk_plan.count("hashpartitioning") == 1, sk_plan
+    sk = Plan(kmv_sketch(docs, "text", _KMV_K))
+    assert "TakeOrderedAndProjectExec" in sk, sk.classes
+    assert sk.hash_keys() == [["h"]], sk.hash_keys()
     # map-side partial dedup before the exchange: a function-less
-    # distinct prints as TWO HashAggregate(keys=[h]) nodes bracketing
+    # distinct plans as TWO HashAggregate(keys=[h]) nodes bracketing
     # the exchange — the lower one dedupes per-partition pre-shuffle
-    assert sk_plan.count("HashAggregate(keys=[h#") == 2, sk_plan
+    agg_keys = [pv.key_names(a.groupingExpressions()) for a in sk.of("HashAggregateExec")]
+    assert agg_keys.count(["h"]) == 2, agg_keys
 
-    df = dataset_overlap_kmv(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert plan.count("hashpartitioning") == 1, plan
+    plan = Plan(dataset_overlap_kmv(spark, sf_dir))
+    assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
+    assert "CartesianProductExec" not in plan
+    assert "BroadcastHashJoinExec" in plan and "LeftSemi" in plan.join_types()
+    assert len(plan.hash_keys()) == 1, plan.hash_keys()
 
 
 def test_substring_spans_plan_shape(spark, sf_dir):
@@ -1070,11 +978,15 @@ def test_substring_spans_plan_shape(spark, sf_dir):
     the interval-union runs as one doc-keyed lag window."""
     from real_estate_etl_dev_spark.plans.llmdata import dedup_substring_spans
 
-    df = dedup_substring_spans(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert plan.count("hashpartitioning(h#") == 1, plan
-    assert "partial_count" in plan, plan
-    assert "Window" in plan and "lag(i#" in plan, plan
+    plan = Plan(dedup_substring_spans(spark, sf_dir))
+    assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
+    assert "CartesianProductExec" not in plan
+    assert "BroadcastHashJoinExec" in plan and "LeftSemi" in plan.join_types()
+    assert [k[0] for k in plan.hash_keys()].count("h") == 1, plan.hash_keys()
+    assert any(
+        e.mode().toString() == "Partial" and e.aggregateFunction().prettyName() == "count"
+        for a in plan.of("HashAggregateExec")
+        for e in pv.seq(a.aggregateExpressions())
+    )
+    assert "WindowExec" in plan
+    assert "lag(i#" in pv.explain_formatted(plan.df)

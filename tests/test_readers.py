@@ -16,6 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from real_estate_etl_dev_spark.planview import scan_metadata
 from real_estate_etl_dev_spark.sources.readers import load_table
 
 INSTANTS = [
@@ -104,10 +105,5 @@ def test_events_ts_filter_pushdown(spark, tmp_path):
     df = load_table(spark, sf_dir, "events").filter(
         F.col("ts") >= "2024-02-01"
     )
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    pushed = [m["PushedFilters"] for m in scan_metadata(df)]
     assert pushed and "GreaterThanOrEqual(ts" in pushed[0]

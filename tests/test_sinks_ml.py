@@ -19,6 +19,7 @@ from real_estate_etl_dev_spark.operators.sinks import (
     write_csv,
     write_json,
 )
+from real_estate_etl_dev_spark.planview import partition_filter_columns
 from real_estate_etl_dev_spark.sources.readers import read_csv_source, read_json_source
 
 
@@ -45,8 +46,7 @@ def test_partitioned_append_prunes(spark, tmp_path):
     scanned = spark.read.parquet(path).filter(F.col("grp") == "b")
     assert scanned.count() == 2
     # partition pruning visible in the plan (PartitionFilters)
-    plan = scanned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+    assert partition_filter_columns(scanned) == {"grp"}
 
 
 def test_csv_json_roundtrip(spark, tmp_path):
