@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..planview import node_class, plan_nodes
 from ..session import conf_scope
@@ -40,6 +41,42 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 # fan_out's CALLER CONTRACT as optimized-plan node classes
 _FAN_OUT_SAFE = frozenset({"LogicalRelation", "LogicalRDD", "Project", "Filter"})
 
+# Session confs that change the schema Spark infers from a parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+# path -> (signature, footer-inferred schema); one entry per input path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the footer schema once
+    per signature (the cache key is described in ``load_table``).
+
+    Inference runs a one-task Spark job; a read with the schema given
+    only lists the file on the driver.  A signature mismatch infers
+    again and replaces the path's entry; a path ``os.stat`` cannot see
+    (not local) reads uncached.  Only the schema is cached: every call
+    builds a fresh relation (fresh attribute IDs, so self-joins
+    resolve) and a fresh file listing."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    sig = (st.st_ino, st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(k) for k in _SCHEMA_CONFS
+    )
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[0] == sig:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (sig, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Column pruning/pushdown left to Catalyst.
@@ -60,7 +97,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     future change that re-resolves the file schema at ACTION time
     (schema merge, ``REFRESH TABLE``, a lazy file-index rebuild) would
     regress silently — if you touch this function or see a ts-typed
-    oracle mismatch, run test_readers.py first.
+    oracle mismatch, run test_readers.py first.  The same holds for a
+    cached-schema read (``_read_parquet``): the schema inferred on the
+    first read under these confs is handed to ``spark.read.schema``, so
+    the relation carries the identical ``ts`` type and the same
+    ``withColumn`` branch runs on a hit as on a miss.
+
+    The schema cache is keyed by path and checked against the file's
+    ``(st_ino, st_size, st_mtime_ns)`` and the schema-affecting parquet
+    confs (``_SCHEMA_CONFS``); it relies on the input zone being a local
+    filesystem (TESTDATA.md).  Rewriting a table in place changes its
+    stat signature and re-infers on the next call.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -78,7 +125,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         }
         with conf_scope(spark, **confs):
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
             ts_type = df.schema["ts"].dataType.typeName()
             if ts_type == "long":
                 # TIMESTAMP(NANOS) surfaced as epoch-nanos int64.
@@ -92,7 +139,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # filters, date_format, and the oracle hash-compare agree.
                 return df.withColumn("ts", F.col("ts").cast("timestamp"))
             return df  # already TimestampType
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

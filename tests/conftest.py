@@ -11,6 +11,17 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def newest_job_id(spark) -> int:
+    """Id of the newest Spark job in the status store (-1 before any),
+    read after every posted listener event is delivered.  Job ids are
+    sequential, so the difference of two readings counts the jobs
+    submitted between them."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.length() else -1
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("real-estate-etl-dev-spark-tests")

@@ -1,0 +1,21 @@
+"""Lazy-build contract of the dashboard panels: once a panel has been
+built and run, building it again (``Query.fn``) submits no Spark job.
+Table scans reuse the footer schema ``load_table`` inferred on the
+first call, so everything that runs a job waits for the action."""
+
+from __future__ import annotations
+
+import pytest
+
+from perfbench.workloads import DASHBOARD
+from real_estate_etl_dev_spark.plans.catalog import CATALOG
+from tests.conftest import newest_job_id
+
+
+@pytest.mark.parametrize("name", DASHBOARD)
+def test_warm_panel_build_runs_no_job(spark, sf_dir, name):
+    fn = CATALOG[name].fn
+    fn(spark, sf_dir).collect()  # warm: first call infers the schemas
+    before = newest_job_id(spark)
+    fn(spark, sf_dir)
+    assert newest_job_id(spark) - before == 0

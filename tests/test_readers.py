@@ -18,6 +18,7 @@ import pytest
 
 from real_estate_etl_dev_spark.planview import scan_metadata
 from real_estate_etl_dev_spark.sources.readers import load_table
+from tests.conftest import newest_job_id
 
 INSTANTS = [
     dt.datetime(2024, 1, 1, 0, 9, 58, 778549),
@@ -55,19 +56,29 @@ VARIANTS = {
 }
 
 
-@pytest.mark.parametrize("variant", sorted(VARIANTS))
-def test_events_ts_variant_loads_as_timestamp(spark, tmp_path, variant):
-    sf_dir = _write_events(tmp_path / variant, VARIANTS[variant])
-    df = load_table(spark, sf_dir, "events")
-    assert df.schema["ts"].dataType.typeName() == "timestamp"
-    got = [
+def _ts_strings(df):
+    return [
         r["s"]
         for r in df.selectExpr(
             "date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS s"
         ).orderBy("event_id").collect()
     ]
+
+
+@pytest.mark.parametrize("variant", sorted(VARIANTS))
+def test_events_ts_variant_loads_as_timestamp(spark, tmp_path, variant):
+    """Same instants on the first load (footer schema inferred) and on a
+    second one (cached schema, no Spark job): the hit takes the same ts
+    branch as the miss."""
+    sf_dir = _write_events(tmp_path / variant, VARIANTS[variant])
+    miss = load_table(spark, sf_dir, "events")
+    before = newest_job_id(spark)
+    hit = load_table(spark, sf_dir, "events")
+    assert newest_job_id(spark) == before
+    assert hit.schema == miss.schema
+    assert miss.schema["ts"].dataType.typeName() == "timestamp"
     want = [t.strftime("%Y-%m-%d %H:%M:%S.%f") for t in INSTANTS]
-    assert got == want
+    assert _ts_strings(miss) == _ts_strings(hit) == want
 
 
 def test_all_variants_agree(spark, tmp_path):
@@ -84,7 +95,8 @@ def test_all_variants_agree(spark, tmp_path):
 
 
 def test_events_load_restores_session_confs(spark, tmp_path):
-    """A scan must never permanently mutate a (driver-owned) session."""
+    """A scan must never permanently mutate a (driver-owned) session,
+    on a schema-cache miss or a hit."""
     keys = (
         "spark.sql.legacy.parquet.nanosAsLong",
         "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -92,6 +104,7 @@ def test_events_load_restores_session_confs(spark, tmp_path):
     before = {k: spark.conf.get(k, None) for k in keys}
     sf_dir = _write_events(tmp_path / "confcheck", pa.timestamp("us"))
     load_table(spark, sf_dir, "events").count()
+    load_table(spark, sf_dir, "events").count()  # cached schema
     after = {k: spark.conf.get(k, None) for k in keys}
     assert before == after
 
@@ -107,3 +120,46 @@ def test_events_ts_filter_pushdown(spark, tmp_path):
     )
     pushed = [m["PushedFilters"] for m in scan_metadata(df)]
     assert pushed and "GreaterThanOrEqual(ts" in pushed[0]
+
+
+def test_second_load_runs_no_spark_job(spark, sf_dir):
+    """The first load infers the footer schema (a Spark job); a second
+    load of the unchanged file reuses it and submits no job at all."""
+    first = load_table(spark, sf_dir, "orders")
+    before = newest_job_id(spark)
+    second = load_table(spark, sf_dir, "orders")
+    assert newest_job_id(spark) == before
+    assert second.schema == first.schema
+
+
+def test_rewritten_table_is_reinferred(spark, tmp_path):
+    """Rewriting events.parquet in place changes its stat signature: the
+    next load returns the new schema and the new values."""
+    sf_dir = _write_events(tmp_path / "rewrite", pa.timestamp("us"))
+    old = load_table(spark, sf_dir, "events")
+    assert "extra" not in old.columns
+    table = pq.read_table(str(tmp_path / "rewrite" / "events.parquet"))
+    table = table.set_column(
+        table.schema.get_field_index("ts"),
+        "ts",
+        pa.array(INSTANTS, type=pa.timestamp("ns")),
+    ).append_column("extra", pa.array([7, 8, 9], type=pa.int32()))
+    pq.write_table(table, str(tmp_path / "rewrite" / "events.parquet"))
+    new = load_table(spark, sf_dir, "events")
+    assert new.schema["extra"].dataType.typeName() == "integer"
+    assert new.schema["ts"].dataType.typeName() == "timestamp"
+    assert [r.extra for r in new.orderBy("event_id").collect()] == [7, 8, 9]
+    assert _ts_strings(new) == [
+        t.strftime("%Y-%m-%d %H:%M:%S.%f") for t in INSTANTS
+    ]
+
+
+def test_cached_loads_self_join(spark, sf_dir):
+    """Two loads of one table are distinct relations (fresh attribute
+    ids): a self-join on the key resolves and matches every row once.
+    Caching DataFrames instead of schemas would break this."""
+    load_table(spark, sf_dir, "orders")  # warm the cache
+    a = load_table(spark, sf_dir, "orders")
+    b = load_table(spark, sf_dir, "orders")
+    n = a.count()
+    assert a.join(b, a["o_orderkey"] == b["o_orderkey"]).count() == n
