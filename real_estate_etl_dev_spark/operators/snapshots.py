@@ -37,7 +37,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -48,8 +47,8 @@ def publish_version(df: DataFrame, table_dir: str, version: int) -> dict:
     """Write ``df`` as immutable version ``version`` of the table.
 
     Data files go to ``{table_dir}/v{version:05d}/``; the manifest
-    (file list + row count + columns + schema JSON) is written LAST as
-    the commit point, then ``_latest`` is updated.  Refuses to overwrite an
+    (file list + row count + columns) is written LAST as the commit
+    point, then ``_latest`` is updated.  Refuses to overwrite an
     already-committed version — immutability is the contract every
     reader relies on.
 
@@ -80,7 +79,6 @@ def publish_version(df: DataFrame, table_dir: str, version: int) -> dict:
         "files": files,
         "n_rows": n_rows,
         "columns": df.columns,
-        "schema": df.schema.json(),
     }
     tmp = mpath + ".tmp"
     with open(tmp, "w") as fh:
@@ -108,16 +106,13 @@ def read_snapshot(
     """Read one committed version — ``None`` resolves ``_latest``.
 
     The file list comes from the manifest, never a directory listing,
-    so concurrent publishes of newer versions are invisible.  The
-    schema comes from the manifest too: the read runs no footer
-    inference job and is pinned to the schema that was committed."""
+    so concurrent publishes of newer versions are invisible."""
     if version is None:
         with open(os.path.join(table_dir, "_latest")) as fh:
             version = int(fh.read().strip())
     with open(_manifest_path(table_dir, version)) as fh:
         manifest = json.load(fh)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    return spark.read.schema(schema).parquet(*manifest["files"])
+    return spark.read.parquet(*manifest["files"])
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key: str) -> DataFrame:

@@ -304,9 +304,8 @@ def streaming_merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     a temp dir that deliberately outlives the call (one merged table
     per invocation, under the process temp dir): returning it through
     ``collect_local`` instead pushed ~14.5k rows through the driver and
-    cost ~1 s per warm call on local[4] at scale 0.01.  The read-back
-    takes the schema ``publish`` wrote, so it runs no footer-inference
-    job.  Only the drop files and checkpoint are scratch."""
+    cost ~1 s per warm call on local[4] at scale 0.01.  Only the drop
+    files and checkpoint are scratch."""
     import tempfile
 
     from ..benchmeta import scratch_dir, setup_span
@@ -315,11 +314,9 @@ def streaming_merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = current_fixture(spark, sf_dir)
     stg = staging_fixture(spark, sf_dir)
     out_dir = tempfile.mkdtemp(prefix="stream_merge_out_")
-    published = {}
 
     def publish(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(out_dir)
-        published["schema"] = df.schema
 
     with scratch_dir("stream_merge_") as workdir:
         with setup_span("streaming_merge_scd1"):
@@ -329,7 +326,7 @@ def streaming_merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_merge_sink(
             stream, lambda: cur, publish, RUN_DATE, checkpoint=f"{workdir}/checkpoint"
         )
-    return _merge_projection(spark.read.schema(published["schema"]).parquet(out_dir))
+    return _merge_projection(spark.read.parquet(out_dir))
 
 
 @query("merge_change_log", _change_log_oracle_sql(), survey="R4-cdc")

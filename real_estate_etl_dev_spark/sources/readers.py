@@ -106,8 +106,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The schema cache is keyed by path and checked against the file's
     ``(st_ino, st_size, st_mtime_ns)`` and the schema-affecting parquet
     confs (``_SCHEMA_CONFS``); it relies on the input zone being a local
-    filesystem (TESTDATA.md).  Rewriting a table in place changes its
-    stat signature and re-infers on the next call.
+    filesystem (TESTDATA.md).  Rewriting a single-file table in place,
+    or deleting and recreating a directory table, changes the stat
+    signature and re-infers on the next call.  Rewriting a part file
+    inside a directory table that is kept does NOT: a directory's
+    signature changes only when entries are added, removed or renamed.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")

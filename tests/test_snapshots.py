@@ -14,7 +14,6 @@ from real_estate_etl_dev_spark.operators.snapshots import (
     publish_version,
     read_snapshot,
 )
-from tests.conftest import newest_job_id
 
 
 @pytest.fixture
@@ -90,19 +89,3 @@ def test_snapshot_diff_rejects_schema_mismatch(spark):
     new = spark.createDataFrame([(1, "a", 2)], "k int, s string, extra int")
     with pytest.raises(ValueError, match="schema mismatch"):
         snapshot_diff(old, new, "k")
-
-
-def test_snapshot_read_uses_published_schema(spark, table_dir):
-    """A version read takes its schema from the manifest: the published
-    dtypes come back and the read submits no (footer-inference) job."""
-    df = spark.range(0, 4).select(
-        "id",
-        F.timestamp_seconds(F.col("id") * 86400).alias("ts"),
-        F.col("id").cast("decimal(12,2)").alias("amount"),
-    )
-    publish_version(df, table_dir, 1)
-    before = newest_job_id(spark)
-    snap = read_snapshot(spark, table_dir, 1)
-    assert newest_job_id(spark) == before
-    assert snap.dtypes == df.dtypes
-    assert sorted(snap.collect()) == sorted(df.collect())
