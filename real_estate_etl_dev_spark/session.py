@@ -39,6 +39,12 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
     ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_ADVISORY_MB`` must be
     positive integers; anything else raises ``ValueError`` before a
     session is built.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf: it takes
+    effect only when this call creates the SparkContext.  A session the
+    driver owns (``__spark_entry__``) or ``scripts/verify_all.py
+    --vanilla`` keeps Spark's 100.  The setting is for speed only; the
+    ``--vanilla`` oracle sweep shows no result depends on it.
     """
     cpus = _positive_int_env("SPARK_GRAFT_CPUS", "32")
     advisory_mb = _positive_int_env("SPARK_GRAFT_ADVISORY_MB", "16")
@@ -80,6 +86,18 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
         # tests/test_plan_shapes.py proves the machinery fires when
         # the thresholds are met.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # Compiled whole-stage/expression classes live in an LRU cache
+        # of 100 entries split over 4 segments.  The 13 dashboard
+        # panels need 111 classes and one pass of the catalog 2831
+        # (sf0.001) to 2850 (sf0.01), so at 100 a warm serve path keeps
+        # evicting and recompiling (a recompiled class is a new,
+        # interpreted JVM class; a kept one stays JIT-compiled).  4096
+        # is the next power of two above that working set.  It stays
+        # bounded: a second catalog pass still compiles 75-95 classes
+        # whose source differs per call and never repeats, so an
+        # unbounded cache would grow for as long as a server lives.
+        # Re-derive with scripts/codegen_working_set.py.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
