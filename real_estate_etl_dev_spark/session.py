@@ -41,9 +41,9 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
     session is built.
 
     ``spark.sql.codegen.cache.maxEntries`` is a static conf: it takes
-    effect only when this call creates the SparkContext.  A session the
-    driver owns (``__spark_entry__``) or ``scripts/verify_all.py
-    --vanilla`` keeps Spark's 100.  The setting is for speed only; the
+    effect only when this call creates the SparkContext.  A session
+    built elsewhere and handed to ``__spark_entry__.entry``, or the
+    bare one of ``scripts/verify_all.py --vanilla``, keeps Spark's 100.  The setting is for speed only; the
     ``--vanilla`` oracle sweep shows no result depends on it.
     """
     cpus = _positive_int_env("SPARK_GRAFT_CPUS", "32")
