@@ -76,3 +76,24 @@ def top1_by_key(df: DataFrame, sort_col: str, key_col: str) -> DataFrame:
     Spark plans this as TakeOrderedAndProject (per-partition top-1 +
     driver merge), no total sort (ref models/listing.py:72-74)."""
     return df.orderBy(F.col(sort_col).desc(), F.col(key_col).asc()).limit(1)
+
+
+def order_bounded(df: DataFrame, *cols) -> DataFrame:
+    """Total sort of a result whose row count is bounded at any scale,
+    in ONE task: ``df.coalesce(1).orderBy(*cols)``.
+
+    ``CoalesceExec(1)`` reports ``SinglePartition``, which satisfies the
+    global sort's ordered distribution, so no range exchange is planned:
+    no RangePartitioner sampling job (which would compute ``df`` a second
+    time) and no second shuffle.  A grouped panel runs as its hash
+    shuffle plus one result task.
+
+    Contract: the caller declares that ``df`` is small at any scale,
+    like ``F.broadcast`` on a dimension.  The coalesce has no shuffle
+    of its own, so the single task also runs ``df``'s last stage — for
+    an aggregate, the final merge of the partial aggregates, about
+    (#map tasks × #groups) rows.  That stays small at 100 TB only when
+    the group-key domain is bounded (months, statuses, nations); a
+    result that grows with the scale factor keeps ``orderBy``'s range
+    sort."""
+    return df.coalesce(1).orderBy(*cols)

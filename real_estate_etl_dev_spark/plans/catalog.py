@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.analytics import order_bounded
 from ..sources.readers import load_table
 
 
@@ -82,12 +83,12 @@ def monthly_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle on ~24 month keys, partial agg map-side; scan
     prunes to one column (ReadSchema shows o_orderdate only)."""
     orders = T(spark, sf_dir, "orders")
-    return (
+    counts = (
         orders.select(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
         .groupBy("month")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("month")
     )
+    return order_bounded(counts, "month")
 
 
 @query(
@@ -101,12 +102,10 @@ def monthly_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: group-by status count (reference api/routers/data_routes.py:46-62
     queue stats). Map-side partial agg; 5 keys → no skew concern."""
-    return (
-        T(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("event_type")
+    counts = T(spark, sf_dir, "events").groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n")
     )
+    return order_bounded(counts, "event_type")
 
 
 @query(
@@ -232,7 +231,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders")
     customer = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = T(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
+    per_nation = (
         orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
@@ -240,8 +239,8 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
-        .orderBy("nation")
     )
+    return order_bounded(per_nation, "nation")
 
 
 @query(

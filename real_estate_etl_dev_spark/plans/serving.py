@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.analytics import paginate_keyset, top1_by_key
+from ..operators.analytics import order_bounded, paginate_keyset, top1_by_key
 from ..operators.sinks import dead_letter_frame
 from ..sources.readers import load_table
 from .catalog import query
@@ -81,12 +81,12 @@ def union_sources_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd = docs.filter(F.col("doc_id") % 2 == 1).select(
         "source", F.lit("odd").alias("batch")
     )
-    return (
+    counts = (
         even.unionByName(odd)
         .groupBy("source", "batch")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("source", "batch")
     )
+    return order_bounded(counts, "source", "batch")
 
 
 @query(
@@ -241,19 +241,16 @@ def run_report_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     observe()-based zero-pass variant is exercised in
     tests/test_sinks_ml.py."""
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.concat(F.lit("src"), (F.col("user_id") % 5).cast("string")).alias("source")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("item_scraped_count"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("response_error_count"),
-            F.round(F.sum("value"), 2).alias("elapsed_proxy"),
-        )
-        .orderBy("source")
+    report = ev.groupBy(
+        F.concat(F.lit("src"), (F.col("user_id") % 5).cast("string")).alias("source")
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("item_scraped_count"),
+        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+        .cast("long")
+        .alias("response_error_count"),
+        F.round(F.sum("value"), 2).alias("elapsed_proxy"),
     )
+    return order_bounded(report, "source")
 
 
 @query(

@@ -36,13 +36,14 @@ SHOWCASE = [
     (
         "monthly_order_counts",
         "Scan reads ONE column (ReadSchema) and the partial_count runs "
-        "map-side before the 24-key exchange.",
+        "map-side before the 24-key exchange; the month keys are bounded, "
+        "so the sort runs in one task after Coalesce(1) — no range exchange.",
     ),
     (
         "revenue_by_nation",
         "nation broadcasts (bounded dim); the customer join is left to "
-        "AQE — no forced hint on an SF-scaling table; lineitem's filter "
-        "is pushed to the scan.",
+        "AQE — no forced hint on an SF-scaling table; the 25 nation rows "
+        "sort in one task.",
     ),
     (
         "latest_order_per_customer",

@@ -48,27 +48,37 @@ def _canon(v):
     return str(v)
 
 
+def ordered_rows(columns, rows):
+    """Row tuples with columns sorted by name and values canonicalized,
+    in the order the rows came."""
+    order = sorted(range(len(columns)), key=lambda i: columns[i])
+    return [tuple(_canon(r[i]) for i in order) for r in rows]
+
+
 def canon_rows(columns, rows):
     """Sort columns by name (like the driver), canonicalize values,
     return sorted multiset of row tuples."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = [tuple(_canon(r[i]) for i in order) for r in rows]
+    out = ordered_rows(columns, rows)
     out.sort(key=lambda t: tuple((x is None, str(type(x)), str(x)) for x in t))
     return sorted(columns), out
+
+
+def oracle_rows(sf_dir: str, sql: str):
+    """The oracle's column names and rows, in the order DuckDB returns
+    them."""
+    con = duckdb_conn(sf_dir)
+    try:
+        res = con.execute(sql)
+        return [c[0] for c in res.description], res.fetchall()
+    finally:
+        con.close()
 
 
 def compare(spark, sf_dir: str, fn, sql: str):
     sdf = fn(spark, sf_dir)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb_conn(sf_dir)
-    try:
-        res = con.execute(sql)
-        d_cols = [c[0] for c in res.description]
-        d_rows = res.fetchall()
-    finally:
-        con.close()
+    d_cols, d_rows = oracle_rows(sf_dir, sql)
 
     s_colset, s_canon = canon_rows(s_cols, s_rows)
     d_colset, d_canon = canon_rows(d_cols, d_rows)

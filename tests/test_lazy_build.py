@@ -13,7 +13,7 @@ import pytest
 
 from perfbench.workloads import DASHBOARD
 from real_estate_etl_dev_spark.plans.catalog import CATALOG
-from tests.conftest import newest_job_id
+from tests.conftest import BOUNDED_SORT_PANELS, newest_job_id
 
 
 @pytest.mark.parametrize("name", DASHBOARD)
@@ -23,6 +23,21 @@ def test_warm_panel_build_runs_no_job(spark, sf_dir, name):
     before = newest_job_id(spark)
     fn(spark, sf_dir)
     assert newest_job_id(spark) - before == 0
+
+
+# A bounded panel sorts in its result task: its aggregate's shuffle
+# stage plus that task, with no range-partition sampling job or second
+# shuffle.  revenue_by_nation also broadcasts nation and customer.
+WARM_COLLECT_JOBS = {name: 2 for name in BOUNDED_SORT_PANELS} | {"revenue_by_nation": 4}
+
+
+@pytest.mark.parametrize("name", BOUNDED_SORT_PANELS)
+def test_warm_bounded_panel_collect_jobs(spark, sf_dir, name):
+    fn = CATALOG[name].fn
+    fn(spark, sf_dir).collect()
+    before = newest_job_id(spark)
+    fn(spark, sf_dir).collect()
+    assert newest_job_id(spark) - before == WARM_COLLECT_JOBS[name]
 
 
 def _codegen_compiles(spark) -> int:

@@ -4,8 +4,10 @@ a local mirror of the driver's t2 correctness gate."""
 import pytest
 
 from real_estate_etl_dev_spark.plans.catalog import CATALOG
+from real_estate_etl_dev_spark.session import conf_scope
 
-from .oracle_harness import compare
+from .conftest import BOUNDED_SORT_PANELS
+from .oracle_harness import compare, oracle_rows, ordered_rows
 
 ORACLE_QUERIES = [(n, q) for n, q in sorted(CATALOG.items()) if q.oracle]
 
@@ -14,6 +16,23 @@ ORACLE_QUERIES = [(n, q) for n, q in sorted(CATALOG.items()) if q.oracle]
 def test_oracle_parity(spark, sf_dir, name, q):
     problems = compare(spark, sf_dir, q.fn, q.oracle)
     assert not problems, f"{name}: " + "; ".join(problems)
+
+
+@pytest.mark.parametrize("name", BOUNDED_SORT_PANELS + ("order_status_unpivot",))
+def test_row_order_matches_oracle(spark, oracle_sf_dir, name):
+    """``compare`` ignores row order, so a sort that is only per
+    partition would pass it.  These queries sort on a unique key, so
+    their rows must come back in the oracle's ORDER BY order, position
+    by position.  AQE would coalesce each small shuffle to one
+    partition, where any per-partition sort is also total; with that
+    off the aggregates come out of 8 partitions."""
+    q = CATALOG[name]
+    d_cols, d_rows = oracle_rows(oracle_sf_dir, q.oracle)
+    with conf_scope(spark, **{"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        sdf = q.fn(spark, oracle_sf_dir)
+        s_rows = sdf.collect()
+    assert sorted(sdf.columns) == sorted(d_cols)
+    assert ordered_rows(sdf.columns, s_rows) == ordered_rows(d_cols, d_rows)
 
 
 def test_entry_smoke(spark):

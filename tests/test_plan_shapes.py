@@ -11,8 +11,11 @@ through ``planview``) so they can't silently rot:
 
 from __future__ import annotations
 
+import pytest
+
 from real_estate_etl_dev_spark import planview as pv
 from real_estate_etl_dev_spark.plans.catalog import CATALOG
+from tests.conftest import BOUNDED_SORT_PANELS
 
 
 class Plan:
@@ -93,6 +96,18 @@ def test_extraction_is_single_stage(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "price_extraction_cases")
     assert plan.count(*pv.EXCHANGES) == 1
     assert plan.partitionings() == ["RangePartitioning"]
+
+
+@pytest.mark.parametrize("name", BOUNDED_SORT_PANELS)
+def test_bounded_panel_sorts_without_range_exchange(spark, sf_dir, name):
+    """``order_bounded``: the sort's SinglePartition requirement is met
+    by the coalesce, so no range exchange (and no sampling job) is
+    planned.  A single-aggregate panel shuffles once, for its
+    aggregate; revenue_by_nation's joins may add their own."""
+    plan = plan_of(spark, sf_dir, name)
+    assert "RangePartitioning" not in plan.partitionings()
+    if name != "revenue_by_nation":
+        assert plan.count("ShuffleExchangeExec") == 1
 
 
 def test_keyset_page_pushes_seek_predicate(spark, sf_dir):
