@@ -206,17 +206,16 @@ def main() -> None:
     from real_estate_etl_dev_spark.plans.catalog import CATALOG
 
     # Warm the JVM + parquet footers so per-query numbers measure plan
-    # cost, not session startup: the first catalog query (the schema
-    # smoke gate — scans every table), one join+agg (whole-stage-codegen
-    # JIT), and one Arrow/pandas-UDF query (Python worker pool spin-up).
-    # Matters since the window rotation: heavy queries now run FIRST in
-    # catalog order and would otherwise absorb cold-JVM cost their r02
-    # late-order timings never paid.  Guarded: a broken warm-up query
-    # must not kill the run before a single timing exists (BENCH_r03
-    # post-mortem — one AnalysisException produced rc=1, zero numbers).
+    # cost, not session startup: the schema smoke gate (scans every
+    # table), one join+agg (whole-stage-codegen JIT), and one
+    # Arrow/pandas-UDF query (Python worker pool spin-up).  Otherwise
+    # whichever queries run first in catalog order absorb the cold-JVM
+    # cost.  Guarded: a broken warm-up query must not kill the run
+    # before a single timing exists (BENCH_r03 post-mortem — one
+    # AnalysisException produced rc=1, zero numbers).
     # ml_region_prediction is warmed too: its ML-stage codegen JIT is a
-    # one-time session cost (~4s) that the rotated order would otherwise
-    # charge to the timed run; steady-state plan cost is ~2s (BENCHNOTES).
+    # one-time session cost (~4s) that would otherwise be charged to
+    # the timed run; steady-state plan cost is ~2s (BENCHNOTES).
     def _cpu_stat() -> tuple[int, int]:
         """(steal_jiffies, total_jiffies) from /proc/stat line 1;
         (0, 0) when unreadable so the stamp degrades, never crashes.
@@ -231,7 +230,7 @@ def main() -> None:
 
     load_start = round(os.getloadavg()[0], 2)
     warmups = [
-        next(iter(CATALOG)),
+        "schema_inventory",
         "revenue_by_nation",
         "multimodal_fake_features",
         "ml_region_prediction",

@@ -789,11 +789,11 @@ def schema_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-drift smoke gate (VERDICT r03 rec 4): loads EVERY table and
     emits (tbl, n_cols, n_rows) plus a formatted min-ts probe for events.
 
-    Runs first in the driver's certification window so a regenerated
-    testdata zone (column added/dropped, ts dtype drift like the r03
-    nanos→micros flip) fails loudly at position 1 instead of silently
-    breaking a dozen downstream rows.  Each branch is a count-only agg —
-    column-pruned scans, no shuffle beyond the 1-row partial agg."""
+    A regenerated testdata zone (column added/dropped, ts dtype drift
+    like the r03 nanos→micros flip) fails loudly in this one row
+    instead of silently breaking a dozen downstream rows.  Each branch
+    is a count-only agg — column-pruned scans, no shuffle beyond the
+    1-row partial agg."""
     from ..sources.readers import TABLES
 
     parts = []
@@ -822,118 +822,3 @@ def schema_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = out.unionByName(p)
     return out.orderBy("tbl")
 
-
-# ---------------------------------------------------------------------------
-# Driver-window rotation — DATA-DRIVEN since r05.  The driver certifies
-# the FIRST 50 registered queries each round (verified r03: its key
-# list == CATALOG order [:50]).  Hand-rolled window lists (r04, early
-# r05) needed judge-audited bookkeeping each round; this computes the
-# window from the committed CORRECTNESS_r*.json artifacts instead:
-#
-#   position 1        : the schema-drift smoke gate
-#   then              : every query with NO green driver row ever
-#                       (new this round, or casualties of a prior red)
-#   then              : _FORCE_WINDOW — canaries whose implementation
-#                       changed this round (manual, reviewed per round)
-#   remaining slots   : certified queries, OLDEST latest-green first
-#                       (ties broken by registration order)
-#
-# Invariant this enforces without per-round edits: no query's latest
-# green row ages past ceil(|catalog|/50) rounds, and nothing stays
-# never-certified once registered.  History: r03 certified 47, r04
-# 50/50 (95/96 union), r05 rotation plan executed by this code.
-# Rehearse any catalog change with `python scripts/verify_all.py
-# --first 50` before committing.
-# ---------------------------------------------------------------------------
-
-_WINDOW_SIZE = 50
-_SMOKE_GATE = "schema_inventory"
-# Canaries: certified queries whose implementation was touched this
-# round — force them into the window ahead of pure aging.  r14:
-# `dedup_bucket_audit`'s oracle swapped to the staged two-discriminator
-# `_BUCKET_AUDIT_ORACLE_R14` text (row count + char mass keying the
-# sf0.1 skip branch; ADVICE r10 item 1, twin-pinned output-identical
-# at every committed fixture), so the row must re-certify under the
-# new oracle this round.  Window arithmetic (COVERAGE.md "r14
-# arithmetic", stated r13 and pre-rehearsed green in a throwaway
-# copy): 1 smoke + 2 never-certified registrations
-# (corpus_curation_funnel, dsir_importance_select — in the seats the
-# two retired twin-covered extensions vacated) + this forced canary
-# (an r10-aged row, so no extra slot) + 43 more r10-aged + 3 r11-aged
-# = 50 exactly.
-_FORCE_WINDOW: list[str] = ["dedup_bucket_audit"]
-
-
-def _cert_history() -> dict[str, int]:
-    """latest round with a fully-green driver row per query, parsed
-    from the committed CORRECTNESS_r*.json artifacts at the repo root.
-    A row is green when rows/schema match, no error, and the value
-    hash matches when the driver recorded one (rows-only checks count
-    as green for THEIR weaker contract)."""
-    import json
-    import pathlib
-    import re as _re
-
-    root = pathlib.Path(__file__).resolve().parents[2]
-    hist: dict[str, int] = {}
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = _re.search(r"r(\d+)", f.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            ok = (
-                row.get("rows_match") is True
-                and row.get("schema_match") in (True, None)
-                and row.get("hash_match") in (True, None)
-            )
-            if ok:
-                hist[name] = max(hist.get(name, -1), rnd)
-    return hist
-
-
-def front_window(hist: dict[str, int] | None = None) -> list[str]:
-    """The 50 queries the driver will certify this round, per the
-    policy above.  Pure function of CATALOG order + committed
-    CORRECTNESS artifacts — deterministic for a given commit.
-    ``hist`` is injectable for tests; default reads the artifacts."""
-    if hist is None:
-        hist = _cert_history()
-    unknown = [n for n in _FORCE_WINDOW if n not in CATALOG]
-    assert not unknown, f"_FORCE_WINDOW references unknown queries: {unknown}"
-    names = [n for n in CATALOG if n != _SMOKE_GATE]
-    window = [_SMOKE_GATE]
-    window += [n for n in names if n not in hist and n not in _FORCE_WINDOW]
-    window += [n for n in _FORCE_WINDOW if n not in window]
-    reg_pos = {n: i for i, n in enumerate(names)}
-    aged = sorted(
-        (n for n in names if n in hist and n not in window),
-        key=lambda n: (hist[n], reg_pos[n]),
-    )
-    window += aged
-    return window[:_WINDOW_SIZE]
-
-
-def _rotate_window() -> None:
-    ordered = {n: CATALOG[n] for n in front_window()}
-    ordered.update({n: q for n, q in CATALOG.items() if n not in ordered})
-    CATALOG.clear()
-    CATALOG.update(ordered)
-
-
-# SPARK_GRAFT_NO_ROTATE=1 keeps raw registration order (≈ the r02 sweep
-# order) — the control arm of the bench order-sensitivity A/B
-# (scripts/bench_ab.py, VERDICT r04 item 1).  Certification and bench
-# default to the rotated order.
-import os as _os  # noqa: E402
-
-if not _os.environ.get("SPARK_GRAFT_NO_ROTATE"):
-    _rotate_window()

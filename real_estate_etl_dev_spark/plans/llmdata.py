@@ -633,11 +633,18 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Explicit whitespace class on BOTH engines: bare ``\s`` differs
+# between Java (includes vertical tab) and RE2 (excludes it), so a
+# corpus containing \x0B would fingerprint differently on each side.
+_DOC_FP_WS_CLASS = "[ \t\n\x0b\f\r]+"
+
+
 @query(
     "doc_fingerprints",
-    """
+    r"""
     SELECT doc_id,
-           substring(md5(regexp_replace(lower(text), '\\s+', ' ', 'g')), 1, 16) AS fp
+           substring(md5(regexp_replace(lower(text),
+                         '[ \t\n\x{000B}\f\r]+', ' ', 'g')), 1, 16) AS fp
     FROM documents ORDER BY doc_id
     """,
     survey="llm-text-fingerprint",
@@ -647,42 +654,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: whitespace-normalized lowercase text →
     truncated md5 — the join key for cross-corpus contamination
     checks."""
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return docs.select(
-        "doc_id", F.substring(F.md5(norm.cast("binary")), 1, 16).alias("fp")
-    ).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# STAGED r15 swap for `doc_fingerprints` (regex-audit exit plan —
-# tests/test_regex_semantics_audit.py BACKSLASH_S_ALLOWED): the
-# certified pair leans on bare ``\s+``, whose meaning DIFFERS between
-# Java (includes vertical tab) and RE2 (excludes it) — fixture-safe
-# today, a silent divergence on a corpus containing \x0B.  The staged
-# pair spells the Java class out explicitly ON BOTH ENGINES, making
-# the normalization engine-independent.  Output-identical to the
-# certified pair on every committed fixture, and proven to FIX the
-# divergence on a planted-\x0B corpus, by tests/test_doc_fp_r15.py.
-# To execute at the row's r15 forced canary: swap the plan regex and
-# the oracle below into the certified @query, delete this staging
-# block, and drop `doc_fingerprints` from BACKSLASH_S_ALLOWED.
-# ---------------------------------------------------------------------------
-
-_DOC_FP_WS_CLASS = "[ \t\n\x0b\f\r]+"
-
-_DOC_FP_ORACLE_R15 = r"""
-    SELECT doc_id,
-           substring(md5(regexp_replace(lower(text),
-                         '[ \t\n\x{000B}\f\r]+', ' ', 'g')), 1, 16) AS fp
-    FROM documents ORDER BY doc_id
-    """
-
-
-def _doc_fingerprints_r15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged plan half: identical to doc_fingerprints except the
-    normalizer is the explicit character class (no engine-dependent
-    ``\\s``)."""
     docs = load_table(spark, sf_dir, "documents")
     norm = F.regexp_replace(F.lower(F.col("text")), _DOC_FP_WS_CLASS, " ")
     return docs.select(

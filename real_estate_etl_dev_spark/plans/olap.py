@@ -37,12 +37,16 @@ def order_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as the conditional counts themselves: ``groupBy().pivot()``
     plans Spark's two-phase pivot (a second aggregate with
     ``PivotFirst`` behind one more shuffle)."""
+    return order_bounded(_status_counts(spark, sf_dir), "o_orderpriority")
+
+
+def _status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unsorted pivot: one row per priority, one count per status."""
     orders = T(spark, sf_dir, "orders")
     status = F.col("o_orderstatus")
-    wide = orders.groupBy("o_orderpriority").agg(
+    return orders.groupBy("o_orderpriority").agg(
         *[F.count(F.when(status == s, 1)).alias(f"status_{s}") for s in _STATUSES]
     )
-    return order_bounded(wide, "o_orderpriority")
 
 
 @query(
@@ -63,17 +67,12 @@ def order_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def order_status_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): the wide pivot back to (priority, status, n)
     rows via ``unpivot`` — a zero-shuffle projection (each input row
-    expands in place), so it composes freely after any aggregate."""
-    wide = order_status_pivot(spark, sf_dir)
-    return (
-        wide.unpivot(
-            "o_orderpriority",
-            [f"status_{s}" for s in _STATUSES],
-            "status",
-            "n",
-        )
-        .orderBy("o_orderpriority", "status")
+    expands in place), so it composes freely after any aggregate.  The
+    result is bounded (priorities × statuses), so it sorts in one task."""
+    melted = _status_counts(spark, sf_dir).unpivot(
+        "o_orderpriority", [f"status_{s}" for s in _STATUSES], "status", "n"
     )
+    return order_bounded(melted, "o_orderpriority", "status")
 
 
 @query(

@@ -326,15 +326,29 @@ SHOWCASE = [
     ),
     (
         "bpe_learn_merges",
-        "BPE merge learning (built r11, registers r13; unregistered "
-        "— resolved from plans.llmdata): tokenizer TRAINING as an "
-        "unrolled loop — per round one map-side tokenize + pair "
-        "explode into a vocabulary-bounded hash-agg exchange "
-        "(map-side combine: the shuffle carries pair partials, never "
-        "corpus rows), a TakeOrderedAndProject(1) argmax, and the "
+        "BPE merge learning (built r11, registered r13): tokenizer "
+        "TRAINING as an unrolled loop — per round one map-side "
+        "tokenize + pair explode into a vocabulary-bounded hash-agg "
+        "exchange (map-side combine: the shuffle carries pair "
+        "partials, never corpus rows), a TakeOrderedAndProject(1) "
+        "argmax, and the "
         "1-row broadcast scalar-combine feeding a map-side replace "
         "pass; corpus state is localCheckpoint-pinned between rounds "
         "so round k+1 starts from materialized strings.",
+    ),
+    (
+        "dedup_substring_spans",
+        "Span-level exact substring duplication accounting (built r14, "
+        "registers in an r15+/r16 replacement slot; unregistered — "
+        "resolved from plans.llmdata): one positional L-gram explode "
+        "(Generate) feeds a gram-hash count aggregate with map-side "
+        "partials — the plan's only gram-keyed exchange carries one row "
+        "per distinct gram per task, never per occurrence — whose >=2 "
+        "survivors broadcast back into the occurrence stream as a "
+        "LeftSemi; the covered-token union is a single doc-keyed lag "
+        "window (no islands pass: each kept position adds min(L, gap) "
+        "tokens), and everything downstream is lang-cardinality algebra "
+        "on broadcast joins.",
     ),
 ]
 
@@ -377,9 +391,8 @@ def main() -> None:
     from real_estate_etl_dev_spark.plans import llmdata
 
     for name, note in SHOWCASE:
-        # Deferred-registration flagships (window-budget bookkeeping,
-        # COVERAGE.md round records) are showcased from the module
-        # before their catalog row lands.
+        # Built-but-unregistered flagships (COVERAGE.md round records)
+        # are showcased from the module before their catalog row lands.
         fn = CATALOG[name].fn if name in CATALOG else getattr(llmdata, name)
         df = fn(spark, SF_DIR)
         parts.append(f"## {name}\n\n{note}\n\n```\n{trimmed_plan(df)}\n```\n")

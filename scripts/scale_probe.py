@@ -1476,9 +1476,8 @@ if __name__ == "__main__":
     )
     cli = ap.parse_args()
     if cli.only:
-        # validate BEFORE the JVM starts (the ab_quiet --suspects
-        # pattern): a typo or stray space must not cost a completed
-        # probe's run to a KeyError mid-sequence
+        # validate BEFORE the JVM starts: a typo or stray space must
+        # not cost a completed probe's run to a KeyError mid-sequence
         names = [s.strip() for s in cli.only.split(",") if s.strip()]
         bad = [s for s in names if not callable(globals().get(s))]
         if bad:

@@ -53,20 +53,27 @@ def main() -> int:
         help="use a bare SparkSession instead of the engine's tuned one",
     )
     ap.add_argument(
-        "--first", type=int, default=None, metavar="N",
-        help="verify only the first N registered queries — simulates the "
-        "driver's certification window (it certifies queries() order [:50])",
-    )
-    ap.add_argument(
         "--only", default=None, metavar="A,B,...",
         help="verify only the named queries (comma-separated)",
     )
     args = ap.parse_args()
     sf_dir = os.path.join(args.root, args.sf)
 
-    import duckdb
-
     import __spark_entry__ as e
+
+    qs, oracles = e.queries(), e.oracle_sql()
+    if args.only is not None:
+        # validated before the JVM starts: a typo must not filter the
+        # run down to zero queries and report an empty FAILS list
+        keep = [s.strip() for s in args.only.split(",") if s.strip()]
+        unknown = [n for n in keep if n not in qs]
+        if unknown:
+            ap.error(f"unknown queries in --only: {', '.join(unknown)}")
+        if not keep:
+            ap.error("--only lists no query name")
+        qs = {n: f for n, f in qs.items() if n in keep}
+
+    import duckdb
 
     if args.vanilla:
         from pyspark.sql import SparkSession
@@ -91,12 +98,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    if args.first is not None:
-        qs = dict(list(qs.items())[: args.first])
-    if args.only is not None:
-        keep = set(args.only.split(","))
-        qs = {n: f for n, f in qs.items() if n in keep}
     fails: list[str] = []
     for name, fn in qs.items():
         t0 = time.time()

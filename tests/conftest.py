@@ -10,12 +10,13 @@ from real_estate_etl_dev_spark.session import get_spark  # noqa: E402
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-# Dashboard panels whose group-key domain is bounded at any scale, so
-# their final sort runs in one task (``operators.analytics.order_bounded``).
+# Dashboard-style queries whose group-key domain is bounded at any
+# scale, so their final sort runs in one task
+# (``operators.analytics.order_bounded``).
 BOUNDED_SORT_PANELS = (
     "monthly_order_counts", "event_type_counts", "union_sources_counts",
     "run_report_rows", "revenue_grouping_sets", "order_status_pivot",
-    "revenue_by_nation",
+    "revenue_by_nation", "order_status_unpivot",
 )
 
 

@@ -59,47 +59,6 @@ def test_payload_never_exceeds_driver_tail():
     assert json.loads(line)["n_errors"] == 200
 
 
-def test_front_window_policy():
-    """Data-driven rotation: smoke gate first, never-certified next,
-    forced canaries, then oldest-latest-green first; capped at 50."""
-    from real_estate_etl_dev_spark.plans.catalog import (
-        CATALOG,
-        _FORCE_WINDOW,
-        _WINDOW_SIZE,
-        front_window,
-    )
-
-    names = list(CATALOG)
-    # history where everything but two queries is green in r04, two
-    # in r03, and one (not a canary) never certified
-    aged = [n for n in names if n != "schema_inventory" and n not in _FORCE_WINDOW]
-    never, older = aged[-1], aged[:2]
-    hist = {n: 4 for n in names if n != never}
-    for n in older:
-        hist[n] = 3
-    w = front_window(hist)
-    assert w[0] == "schema_inventory"
-    assert w[1] == never
-    assert w[2:2 + len(_FORCE_WINDOW)] == _FORCE_WINDOW
-    assert w[2 + len(_FORCE_WINDOW):4 + len(_FORCE_WINDOW)] == older
-    assert len(w) == _WINDOW_SIZE
-
-
-def test_front_window_live_covers_new_queries():
-    """Against the real committed artifacts: every query with no
-    driver row yet must be inside this round's window."""
-    from real_estate_etl_dev_spark.plans.catalog import (
-        CATALOG,
-        _cert_history,
-        front_window,
-    )
-
-    hist = _cert_history()
-    w = set(front_window())
-    missing = [n for n in CATALOG if n not in hist and n not in w]
-    assert not missing, f"never-certified queries outside window: {missing}"
-
-
 def test_payload_carries_load_stamp_within_budget():
     """The machine-load stamp (VERDICT r06 item 4) must render in the
     stdout line — with a FULL headline timing set plus a worst-case

@@ -1,15 +1,8 @@
-r"""Evidence for the STAGED r15 `doc_fingerprints` swap (see the
-staging block in plans/llmdata.py and the exit plan recorded in
-tests/test_regex_semantics_audit.py BACKSLASH_S_ALLOWED):
-
-  1. the staged pair (explicit whitespace class on BOTH engines) is
-     oracle-parity green at both local scales;
-  2. it is output-IDENTICAL to the certified pair on every committed
-     fixture (the swap is behavior-preserving where certified rows
-     have ever been graded);
-  3. on a planted-\x0B corpus the CERTIFIED pair diverges (Java \s
-     collapses vertical tab, RE2 \s does not — the audit's premise)
-     while the staged pair agrees — the fix fixes the actual bug.
+r"""`doc_fingerprints` normalizes whitespace with an explicit class on
+both engines.  Bare ``\s`` differs between Java (collapses vertical tab)
+and RE2 (does not), so on a corpus containing \x0B a bare-``\s`` plan
+and its oracle disagree.  The committed fixtures contain no \x0B, so
+the oracle checks alone cannot see that divergence; this corpus can.
 """
 
 import os
@@ -49,59 +42,17 @@ def _vtab_corpus(tmp_path):
     return d
 
 
-def test_staged_pair_parity_both_scales(spark, sf_dir, oracle_sf_dir):
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        _DOC_FP_ORACLE_R15,
-        _doc_fingerprints_r15,
-    )
+def test_vtab_doc_matches_oracle_and_collapses(spark, tmp_path):
+    import hashlib
 
-    from tests.oracle_harness import compare
-
-    for d in (sf_dir, oracle_sf_dir):
-        problems = compare(spark, d, _doc_fingerprints_r15, _DOC_FP_ORACLE_R15)
-        assert not problems, f"{d}: " + "; ".join(problems)
-
-
-def test_staged_identical_to_certified_on_fixtures(spark, sf_dir, oracle_sf_dir):
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        _doc_fingerprints_r15,
-        doc_fingerprints,
-    )
-
-    for d in (sf_dir, oracle_sf_dir):
-        old = doc_fingerprints(spark, d)
-        new = _doc_fingerprints_r15(spark, d)
-        assert old.exceptAll(new).isEmpty() and new.exceptAll(old).isEmpty(), d
-
-
-def test_certified_diverges_staged_agrees_on_vtab(spark, tmp_path):
     from real_estate_etl_dev_spark.plans.catalog import CATALOG
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        _DOC_FP_ORACLE_R15,
-        _doc_fingerprints_r15,
-    )
 
     from tests.oracle_harness import compare
 
     d = _vtab_corpus(tmp_path)
-    cert = CATALOG["doc_fingerprints"]
-    cert_problems = compare(spark, d, cert.fn, cert.oracle)
-    assert cert_problems, (
-        "expected the certified bare-\\s pair to diverge on \\x0B input "
-        "(the audit premise) — it no longer does; re-check the allowlist"
-    )
-    staged_problems = compare(
-        spark, d, _doc_fingerprints_r15, _DOC_FP_ORACLE_R15
-    )
-    assert not staged_problems, "; ".join(staged_problems)
-    # and the staged fingerprints actually collapse the vertical tab:
-    # a \x0B doc and its space twin must share a fingerprint
-    fps = {
-        r["doc_id"]: r["fp"]
-        for r in _doc_fingerprints_r15(spark, d).collect()
-    }
-    assert fps[0] != fps[1]  # different gammaN suffixes
-    import hashlib
-
-    want = hashlib.md5(b"alpha beta gamma0").hexdigest()[:16]
-    assert fps[0] == want
+    q = CATALOG["doc_fingerprints"]
+    problems = compare(spark, d, q.fn, q.oracle)
+    assert not problems, "; ".join(problems)
+    # a \x0B doc fingerprints like its single-space twin
+    fps = {r["doc_id"]: r["fp"] for r in q.fn(spark, d).collect()}
+    assert fps[0] == hashlib.md5(b"alpha beta gamma0").hexdigest()[:16]

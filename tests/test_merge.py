@@ -404,3 +404,24 @@ def test_pit_asof_formulation_matches_interval_join(spark):
         .collect()
     }
     assert asof == {(s, n) for s, n in interval}
+
+
+def test_streaming_merge_keeps_one_output_dir(spark, sf_dir):
+    """Each streaming_merge_scd1 call deletes the previous call's
+    publish dir, so N calls leave at most one; the last frame still
+    reads back the full merge."""
+    import glob
+    import tempfile
+
+    from real_estate_etl_dev_spark.plans.catalog import CATALOG
+
+    from tests.oracle_harness import compare
+
+    pattern = f"{tempfile.gettempdir()}/stream_merge_out_*"
+    before = set(glob.glob(pattern))
+    q = CATALOG["streaming_merge_scd1"]
+    for _ in range(3):
+        df = q.fn(spark, sf_dir)
+    assert len(set(glob.glob(pattern)) - before) <= 1
+    problems = compare(spark, sf_dir, lambda s, d: df, q.oracle)
+    assert not problems, "; ".join(problems)

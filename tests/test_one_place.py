@@ -6,7 +6,9 @@ one helper.
 * session-conf overrides (``spark.conf.set`` / ``unset``) only in
   ``session.conf_scope``;
 * blocking on a stream (``awaitTermination``) only in
-  ``streaming.ingest.run_available_now``.
+  ``streaming.ingest.run_available_now``;
+* environment reads (``os.environ`` / ``os.getenv``) only in
+  ``session``.
 
 The scan reads attribute accesses in the AST, so docstrings and
 comments that name these calls don't count.
@@ -42,7 +44,7 @@ def _sites() -> dict[str, set[str]]:
                 on_conf = isinstance(node.value, ast.Attribute) and node.value.attr == "conf"
                 key = f"conf.{key}" if on_conf else None
             if key in ("queryExecution", "explainString", "conf.set",
-                       "conf.unset", "awaitTermination"):
+                       "conf.unset", "awaitTermination", "environ", "getenv"):
                 where = self.stack[-1] if self.stack else "<module>"
                 sites.setdefault(key, set()).add(f"{self.rel}:{where}")
             self.generic_visit(node)
@@ -71,3 +73,11 @@ def test_stream_await_only_in_run_available_now():
     assert _sites().get("awaitTermination") == {
         "streaming/ingest.py:run_available_now"
     }
+
+
+def test_env_reads_only_in_session():
+    sites = _sites()
+    files = {
+        s.split(":")[0] for call in ("environ", "getenv") for s in sites.get(call, ())
+    }
+    assert files == {"session.py"}, files

@@ -18,7 +18,7 @@ def test_oracle_parity(spark, sf_dir, name, q):
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
-@pytest.mark.parametrize("name", BOUNDED_SORT_PANELS + ("order_status_unpivot",))
+@pytest.mark.parametrize("name", BOUNDED_SORT_PANELS)
 def test_row_order_matches_oracle(spark, oracle_sf_dir, name):
     """``compare`` ignores row order, so a sort that is only per
     partition would pass it.  These queries sort on a unique key, so

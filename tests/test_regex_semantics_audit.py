@@ -39,16 +39,7 @@ def _catalog():
 
 # Every catalog oracle whose SQL contains a regex ``\s`` — each entry
 # needs a reason it is safe TODAY and an exit plan.
-BACKSLASH_S_ALLOWED = {
-    # Certified r08, predates the explicit-class convention.  Latent:
-    # Spark's Java \s collapses \x0B, the DuckDB oracle's RE2 \s does
-    # not; committed fixtures contain no \x0B.  Exit STAGED (r13):
-    # _doc_fingerprints_r15 / _DOC_FP_ORACLE_R15 in plans/llmdata.py,
-    # evidenced by tests/test_doc_fp_r15.py (fixture-identical;
-    # fixes the planted-\x0B divergence) — execute the swap at the
-    # row's r15 forced canary and drop this entry.
-    "doc_fingerprints",
-}
+BACKSLASH_S_ALLOWED: set[str] = set()
 
 # Every catalog oracle whose SQL contains the ``(.)`` char wrap —
 # safe only under the documented input precondition.
@@ -77,7 +68,6 @@ STAGED_ORACLE_BUILDERS = (
     # r14 pruned _curation_funnel_oracle_sql / _dsir_oracle_sql /
     # _BUCKET_AUDIT_ORACLE_R14 — all three registered (the catalog
     # scans above cover them now).
-    "_DOC_FP_ORACLE_R15",  # doc_fingerprints' r15 explicit-class swap
     "_kmv_overlap_oracle_sql",  # r15 replacement candidate (KMV overlap)
     "_streaming_funnel_oracle_sql",  # r15 candidate (streaming funnel)
     "_substring_spans_oracle_sql",  # r16 candidate (substring spans)
