@@ -104,7 +104,6 @@ from .udfs import (
     search_leasehold_years_udf,
     to_number_expr,
     to_number_py,
-    to_number_udf,
 )
 from .urls import dimension_remover, get_background_image, get_domain, get_img_src
 

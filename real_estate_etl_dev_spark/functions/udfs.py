@@ -1,11 +1,15 @@
 """UDF tier — the ~25% of the reference's scalar library whose
-heuristics don't reduce to single expressions (SURVEY §2.11):
-F1 ``to_number``, the F24 lease-year mining family, F29
-nearest-number bedrooms, F37 html→markdown.
+heuristics don't reduce to single expressions (SURVEY §2.11): the
+F24 lease-year mining family, F29 nearest-number bedrooms, F37
+html→markdown.
 
 All are Arrow-batched pandas UDFs (never row-at-a-time Python UDFs) —
 the per-batch transfer amortizes the Python hop; at 100 TB these run
 once per listing-description, not in any join/agg hot path.
+
+F1 ``to_number`` is no UDF: :func:`to_number_expr` is one JVM-side
+expression.  Its plain-Python twin :func:`to_number_py` stays here
+because the lease-year UDFs call it.
 
 Reference semantics: ``/root/reference/reid/func.py`` 18-32
 (to_number), 396-447 & 499-624 (lease years), 870-881
@@ -45,7 +49,7 @@ except Exception:  # noqa: BLE001 - fall back to by-reference pickling
 
 
 # ---------------------------------------------------------------------------
-# F1 to_number — plain-python core + expression fast-path
+# F1 to_number — plain-python core + the same rule as an expression
 # ---------------------------------------------------------------------------
 
 
@@ -73,22 +77,19 @@ def to_number_py(value):
         return None
 
 
-@pandas_udf(DoubleType())
-def to_number_udf(s: pd.Series) -> pd.Series:
-    return s.map(to_number_py)
-
-
 def to_number_expr(c: Column | str) -> Column:
-    """Expression fast-path for tokens already shaped ``[0-9.,]+``
-    (regexp_extract_all output): same decision rule, fully JVM-side.
-    For free-form text use :func:`to_number_udf` (digit runs may be
-    interleaved with letters there)."""
+    """:func:`to_number_py` as one JVM-side expression, for free-form
+    text: the digit-bearing ``[0-9.]+`` runs are joined, and the dots
+    are counted on the whole comma-stripped string.  For token-shaped
+    input (``[0-9.,]+``) the join is the string itself."""
     c = col_of(c)
     s = F.regexp_replace(c, ",", "")
+    runs = F.regexp_extract_all(s, F.lit(r"([0-9.]+)"), F.lit(1))
+    joined = F.array_join(F.filter(runs, lambda r: r.rlike(r"\d")), "")
     dots = count_char(s, ".")
-    dec = F.when(dots == 1, F.length(F.substring_index(s, ".", -1))).otherwise(F.lit(0))
-    squeezed = F.when((dots > 1) | (dec > 2), F.regexp_replace(s, r"\.", "")).otherwise(s)
-    return F.when(s.rlike(r"\d"), try_double(squeezed))
+    dec = F.when(dots == 1, F.length(F.substring_index(joined, ".", -1))).otherwise(F.lit(0))
+    squeezed = F.when((dots > 1) | (dec > 2), F.regexp_replace(joined, r"\.", "")).otherwise(joined)
+    return F.when(joined != "", try_double(squeezed))
 
 
 # ---------------------------------------------------------------------------

@@ -192,85 +192,6 @@ def md5_key(text) -> F.Column:
 
 
 # ---------------------------------------------------------------------------
-# KMV (k-minimum-values) distinct sketch — the dataset-overlap
-# estimator (Bar-Yossef et al. 2002; the theta-sketch family's
-# simplest member).  Unlike HLL (distinct COUNT only), a KMV sketch
-# supports SET operations: two corpora's sketches combine into
-# union/intersection/Jaccard estimates WITHOUT comparing the corpora
-# row-by-row — the 100 TB dataset-governance primitive (train/eval
-# overlap screening across dataset versions reduces to merging two
-# k-row sketches).  Deterministic for fixed data: the sketch is the k
-# smallest DISTINCT md5_key values, so — unlike engine-internal
-# HLL/KLL — every estimate is a pure integer/double function of the
-# data that a DuckDB oracle replays exactly.
-# ---------------------------------------------------------------------------
-
-# md5_key's hash space: 15 hex digits = 2^60 (exactly representable
-# as a double, so the estimator's one division is IEEE-identical on
-# both engines)
-KMV_SPACE = float(2**60)
-
-
-def kmv_sketch(df: DataFrame, key, k: int, tau: float = 1.0) -> DataFrame:
-    """The k smallest distinct ``md5_key(key)`` values of ``df`` as a
-    1-column ``(h)`` frame (< k rows iff the input has fewer distinct
-    keys).
-
-    Scale path: ``tau`` < 1 pre-filters ``h < tau * KMV_SPACE``
-    BEFORE the distinct — a map-side cut that shrinks the distinct
-    exchange by ~1/tau.  PROVABLY lossless while at least k distinct
-    values survive it: the k smallest distinct values are each
-    < tau*KMV_SPACE whenever >= k survivors exist, so the filtered
-    sketch is bit-identical to the unfiltered one (asserted at 16x by
-    scripts/scale_probe.py kmv_overlap_growth_probe; certified
-    queries pass tau=1.0 so the fixture-scale plan is the plain exact
-    form).  Physical shape: map-side partial dedup -> one 8-byte-key
-    exchange (tau-cut at scale) -> TakeOrderedAndProject(k): the
-    reduce side sees partitions x k rows, never the corpus."""
-    h = md5_key(key)
-    out = df.select(h.alias("h"))
-    if tau < 1.0:
-        out = out.filter(F.col("h") < int(KMV_SPACE * tau))
-    return out.distinct().orderBy("h").limit(k)
-
-
-def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
-    """1-row ``(n_seen, h_k, est)`` distinct-count estimate from a
-    :func:`kmv_sketch` frame: the standard KMV estimator
-    ``(k-1) / U_(k)`` with ``U_(k) = h_k / KMV_SPACE`` — and EXACT
-    (``est = n_seen``) when the sketch is under-full, because a
-    sketch holding every distinct value IS the distinct set.  The
-    division order is pinned (one double literal / h_k, then * (k-1))
-    so both engines evaluate the identical IEEE expression."""
-    return sketch.agg(
-        F.count("h").cast("long").alias("n_seen"),
-        F.max("h").alias("h_k"),
-    ).select(
-        "n_seen",
-        "h_k",
-        F.when(F.col("n_seen") < k, F.col("n_seen").cast("double"))
-        .otherwise(
-            F.lit(k - 1) * (F.lit(KMV_SPACE) / F.col("h_k").cast("double"))
-        )
-        .alias("est"),
-    )
-
-
-def kmv_estimate_sql(sketch_cte: str, k: int) -> str:
-    """DuckDB twin of :func:`kmv_estimate` over a 1-column ``(h)``
-    CTE name — the same guarded expression, same literal, same
-    division order."""
-    space = repr(KMV_SPACE)
-    return f"""
-      SELECT CAST(count(h) AS BIGINT) AS n_seen, max(h) AS h_k,
-             CASE WHEN count(h) < {k} THEN CAST(count(h) AS DOUBLE)
-                  ELSE ({k} - 1) * ({space} / CAST(max(h) AS DOUBLE))
-             END AS est
-      FROM {sketch_cte}
-    """
-
-
-# ---------------------------------------------------------------------------
 # Sizing: the inverse of the FP audit — from (n, target_fp) to (m, k)
 # ---------------------------------------------------------------------------
 

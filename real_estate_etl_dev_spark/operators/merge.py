@@ -160,34 +160,26 @@ def merge_listings(
             "sold_at": sold_at_mid,
             "is_available": is_avail_mid,
         }.get(pol.name, cur(pol.name))
+        # the generic fill-or-overwrite rule the other kinds fall back on
+        generic_changed = (_truthy(new_v, pol.falsy) & ~_truthy(old_v, pol.falsy)) | (
+            _truthy(new_v, pol.falsy) & _truthy(old_v, pol.falsy) & (new_v != old_v)
+        )
+        generic_value = F.when(generic_changed, new_v).otherwise(old_v)
 
         if pol.kind == "availability":
             # change logged + side effects, but the value keeps old
             # unless staging says 'Available' (then generic rule).
-            generic_changed = (_truthy(new_v, pol.falsy) & ~_truthy(old_v, pol.falsy)) | (
-                _truthy(new_v, pol.falsy) & _truthy(old_v, pol.falsy) & (new_v != old_v)
-            )
             changed = avail_cond | (~avail_cond & generic_changed)
-            value = F.when(avail_cond, old_v).otherwise(
-                F.when(generic_changed, new_v).otherwise(old_v)
-            )
+            value = F.when(avail_cond, old_v).otherwise(generic_value)
         elif pol.kind == "price":
             sentinel = new_v == -1
-            generic_changed = (_truthy(new_v, pol.falsy) & ~_truthy(old_v, pol.falsy)) | (
-                _truthy(new_v, pol.falsy) & _truthy(old_v, pol.falsy) & (new_v != old_v)
-            )
             changed = ~sentinel & generic_changed
-            value = F.when(sentinel, old_v).otherwise(
-                F.when(generic_changed, new_v).otherwise(old_v)
-            )
+            value = F.when(sentinel, old_v).otherwise(generic_value)
         elif pol.kind == "overwrite_diff":
             changed = ~new_v.eqNullSafe(old_v)
             value = F.when(changed, new_v).otherwise(old_v)
         else:  # generic
-            changed = (_truthy(new_v, pol.falsy) & ~_truthy(old_v, pol.falsy)) | (
-                _truthy(new_v, pol.falsy) & _truthy(old_v, pol.falsy) & (new_v != old_v)
-            )
-            value = F.when(changed, new_v).otherwise(old_v)
+            changed, value = generic_changed, generic_value
 
         changed = has_staging & ~is_new & F.coalesce(changed, F.lit(False))
         merged[pol.name] = (

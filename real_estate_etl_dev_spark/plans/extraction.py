@@ -11,8 +11,8 @@ machinery; a hash match therefore proves the machinery reproduces
 reference behavior on every row.
 
 Scale: every query here is scan → project → sort-on-key.  No joins,
-no aggregation, no Python in the expression tier; the three UDF-tier
-columns (to_number, lease cascade, nearest-bedrooms) are Arrow-batched
+no aggregation, no Python in the expression tier; the UDF-tier
+columns (the lease-year family, nearest-bedrooms) are Arrow-batched
 pandas UDFs over one string column each.
 """
 
@@ -268,13 +268,13 @@ def availability_text_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="F1,F4,F18",
 )
 def number_parse_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F4/F18: to_number heuristic (pandas UDF), fix_price
+    """F1/F4/F18: to_number heuristic (one JVM-side expression), fix_price
     comma/dot disambiguation, safe_number rounding
     (ref func.py:18-32,99-112,302-319)."""
     d = listing_fixture(spark, sf_dir)
     return d.select(
         "key",
-        fx.to_number_udf(F.col("num_text")).alias("parsed"),
+        fx.to_number_expr("num_text").alias("parsed"),
         fx.fix_price("num_text").alias("fixed"),
         fx.safe_number("safe_num_text").alias("safe"),
     ).orderBy("key")

@@ -144,23 +144,3 @@ def sql_golden(options: list, cast: str | None = None) -> str:
     oracle column type matches the Spark side exactly."""
     picked = sql_pick("o_orderkey % " + str(len(options)), options)
     return f"CAST({picked} AS {cast})" if cast else picked
-
-
-FIXTURE_CTE = f"""
-  listing_fixture AS (
-    SELECT o_orderkey AS key,
-           {sql_pick('o_orderkey % 6', PRICE_TEXTS)} AS price_text,
-           {sql_pick('o_orderkey % 6', TITLES)} AS title,
-           {sql_pick('o_orderkey % 6', DESCS)} AS description,
-           {sql_pick('o_orderkey % 5', IMG_SRCS)} AS img_src,
-           {sql_pick('o_orderkey % 3', SCRIPTS)} AS script,
-           {sql_pick('o_orderkey % 4', TIME_AGO_TEXTS)} AS time_ago_text,
-           {sql_pick('o_orderkey % 4', LABEL_TEXTS)} AS label_text,
-           {sql_pick('o_orderkey % 5', NUM_TEXTS)} AS num_text,
-           {sql_pick('o_orderkey % 4', SAFE_NUM_TEXTS)} AS safe_num_text,
-           {sql_pick('o_orderkey % 4', ARE_TEXTS)} AS are_text,
-           {sql_pick('o_orderkey % 4', GRAB_TEXTS)} AS grab_text,
-           {sql_pick('o_orderkey % 2', DOMAINS)} || CAST(o_orderkey AS VARCHAR) AS url
-    FROM orders
-  )
-"""

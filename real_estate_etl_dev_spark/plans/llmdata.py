@@ -2277,10 +2277,8 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange), so the shuffle carries |labels|·dim partial rows per
     task, not |vectors|·dim — the same reason a word-count scales.  At
     thousands of dims swap to ``pyspark.ml.stat.Summarizer.mean`` over
-    the vector type (one pass, no explode) at the same plan position —
-    that path is :func:`embedding_centroids_summarizer`, pinned equal
-    to this one by tests/test_llmdata.py.  The explode form keeps this
-    oracle-checkable.
+    the vector type (one pass, no explode) at the same plan position.
+    The explode form keeps this oracle-checkable.
 
     Numeric determinism (r05 ADVICE): a double ``avg`` depends on
     partial-aggregate summation ORDER, so a mean near a 5e-7 rounding
@@ -2302,33 +2300,6 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("val").cast("double") / F.count(F.lit(1)), 6
             ).alias("c")
         )
-        .select("label", F.col("pos").cast("long").alias("pos"), "c")
-        .orderBy("label", "pos")
-    )
-
-
-def embedding_centroids_summarizer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The high-dim form ``embedding_centroids`` promises: per-class
-    mean via ``pyspark.ml.stat.Summarizer.mean`` over the ml vector
-    type — ONE pass, no posexplode, the shuffle carries |labels|
-    vector-valued partials instead of |labels|·dim rows.  The plan
-    position is identical (map-side partial aggregation before one
-    exchange on label); this is the shape to use when dim is in the
-    thousands and exploding would multiply the scan by dim.  Returns
-    the same (label, pos, c) long form as the certified query so the
-    two are directly comparable (tests pin elementwise equality)."""
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.ml.stat import Summarizer
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "label",
-        array_to_vector(
-            F.transform("embedding", lambda x: x.cast("double"))
-        ).alias("vec"),
-    )
-    means = e.groupBy("label").agg(Summarizer.mean(F.col("vec")).alias("m"))
-    return (
-        means.select("label", F.posexplode(vector_to_array(F.col("m"), "float64")).alias("pos", "c"))
         .select("label", F.col("pos").cast("long").alias("pos"), "c")
         .orderBy("label", "pos")
     )
@@ -6698,8 +6669,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # End-to-end corpus CURATION FUNNEL — built r12 (slot-free session
 # work), REGISTERED r14 in the pre-rehearsed replacement slot (took
-# the catalog seat `revenue_cube_status_priority` vacated — picks and
-# arithmetic in COVERAGE.md "r14 arithmetic").  Evidence predates the
+# a retired OLAP row's catalog seat — picks and arithmetic in
+# COVERAGE.md "r14 arithmetic").  Evidence predates the
 # registration: tests/test_curation_funnel.py::
 # test_curation_funnel_oracle_parity (the exact compare the catalog
 # row certifies, both local scales), re-derived zero-Spark /
@@ -6879,9 +6850,8 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DSIR-style importance SELECTION — built r12 (slot-free session
 # work), REGISTERED r14 in the pre-rehearsed replacement slot
-# alongside the curation funnel (took the catalog seat
-# `price_trend_by_priority` vacated — picks and arithmetic in
-# COVERAGE.md "r14 arithmetic").  Evidence predates the registration:
+# alongside the curation funnel (took a retired TPC-H row's catalog
+# seat — picks and arithmetic in COVERAGE.md "r14 arithmetic").  Evidence predates the registration:
 # tests/test_dsir.py::test_dsir_oracle_parity (both local scales),
 # re-derived zero-Spark / zero-SQL by test_dsir_python_model,
 # plan-pinned by tests/test_plan_shapes.py::test_dsir_plan_shape, and
@@ -7147,633 +7117,4 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= _DSIR_TOP_K)
         .select("lang", "rnk", "doc_id", "score")
         .orderBy("lang", "rnk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# KMV dataset-overlap estimation — built r14 (slot-free session work),
-# REGISTRATION DEFERRED to r15+ (catalog at its 194-row cap; r15's
-# budget is 3 slots: the doc_fingerprints forced canary plus up to two
-# replacement registrations — this is the staged replacement
-# candidate; recommended retirement pick recorded in COVERAGE.md
-# "Round-14 record").  Behavior is pinned NOW by tests/test_kmv.py::
-# test_kmv_overlap_oracle_parity (the exact compare the catalog row
-# will certify, both local scales), re-derived zero-Spark / zero-SQL
-# by test_kmv_python_model, plan-pinned by
-# tests/test_plan_shapes.py::test_kmv_overlap_plan_shape, and
-# growth-probed by scripts/scale_probe.py kmv_overlap_growth_probe
-# (which also asserts the tau-filter scale path is sketch-identical).
-# To register: wrap with
-#   @query("dataset_overlap_kmv", _kmv_overlap_oracle_sql(),
-#          survey="llm-dataset-governance", tags=("llm-dedup",))
-# ---------------------------------------------------------------------------
-
-_KMV_K = 256
-# content-overlapping corpus slices: A = 2/3 of docs, B = 1/2, with
-# A∩B = the ids coprime to both moduli (~1/3) — exact Jaccard ≈ 0.40
-# at every committed fixture, so the estimator has real signal
-_KMV_SLICE_A = "doc_id % 3 <> 0"
-_KMV_SLICE_B = "doc_id % 2 <> 0"
-
-
-def _kmv_overlap_oracle_sql() -> str:
-    from ..operators.bloom import kmv_estimate_sql
-
-    k = _KMV_K
-    key = "('0x' || substr(md5(text), 1, 15))::BIGINT"
-    return f"""
-    WITH ha AS (SELECT DISTINCT {key} AS h FROM documents
-                WHERE {_KMV_SLICE_A}),
-    hb AS (SELECT DISTINCT {key} AS h FROM documents
-           WHERE {_KMV_SLICE_B}),
-    ska AS (SELECT h FROM ha ORDER BY h LIMIT {k}),
-    skb AS (SELECT h FROM hb ORDER BY h LIMIT {k}),
-    comb AS (SELECT h FROM (SELECT h FROM ska UNION SELECT h FROM skb)
-             ORDER BY h LIMIT {k}),
-    ea AS ({kmv_estimate_sql('ska', k)}),
-    eb AS ({kmv_estimate_sql('skb', k)}),
-    ecu AS ({kmv_estimate_sql('comb', k)}),
-    m AS (SELECT CAST(count(*) AS BIGINT) AS matches
-          FROM comb
-          WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skb)),
-    x AS (SELECT
-            (SELECT CAST(count(*) AS BIGINT) FROM ha) AS xa,
-            (SELECT CAST(count(*) AS BIGINT) FROM hb) AS xb,
-            (SELECT CAST(count(*) AS BIGINT)
-             FROM (SELECT h FROM ha INTERSECT SELECT h FROM hb)) AS xi,
-            (SELECT CAST(count(*) AS BIGINT)
-             FROM (SELECT h FROM ha UNION SELECT h FROM hb)) AS xu)
-    SELECT CAST({k} AS BIGINT) AS k,
-           round(ea.est, 4) AS est_distinct_a, x.xa AS exact_distinct_a,
-           round(eb.est, 4) AS est_distinct_b, x.xb AS exact_distinct_b,
-           round(ecu.est, 4) AS est_distinct_union,
-           x.xu AS exact_distinct_union,
-           m.matches AS sketch_matches,
-           round(CAST(m.matches AS DOUBLE) / ecu.n_seen, 6) AS est_jaccard,
-           round(CAST(x.xi AS DOUBLE) / x.xu, 6) AS exact_jaccard
-    FROM ea, eb, ecu, m, x
-    """
-
-
-def dataset_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-overlap ESTIMATION from KMV sketches (Bar-Yossef et
-    al. 2002; the DataSketches theta family's simplest member) — the
-    dataset-governance question a 100 TB pipeline asks constantly
-    ("how much of corpus B is already in A?", "did the new crawl
-    snapshot drift from the last one?", "does the training set
-    overlap the eval suite's source dump?") answered WITHOUT a
-    corpus-by-corpus join: each side reduces to its k smallest
-    distinct content-hash values (``operators/bloom.py:kmv_sketch``),
-    and union / intersection / Jaccard estimates come from merging
-    two k-row sketches.
-
-    Unlike the certified HLL rows (distinct COUNT only), KMV
-    composes under set algebra, and unlike engine-internal sketches
-    it is a deterministic pure function of the data — the k smallest
-    distinct md5-derived 60-bit integers — so the DuckDB oracle
-    replays every estimate EXACTLY (same hash arithmetic, same
-    guarded estimator expression, same IEEE division order; see
-    ``kmv_estimate``/``kmv_estimate_sql``).
-
-    Fixture slices: A = docs with id % 3 != 0, B = id % 2 != 0
-    (content overlap ~0.40 Jaccard at every committed fixture).  The
-    B slice holds 250 distinct texts < k = 256 at the certification
-    scales, so the under-full branch (est == exact by construction)
-    certifies next to the estimator branch (A, 333 distinct), and
-    sf0.1 exercises the estimator on both sides plus the combined
-    sketch.  Columns: per-slice and union estimate-vs-exact pairs,
-    the matched-sketch count, and estimated vs exact Jaccard.
-
-    Scale: the sketch legs are ONE map pass per corpus (map-side
-    partial dedup) + an 8-byte-key exchange + TakeOrderedAndProject
-    (k) — the reduce side sees partitions x k rows, never the corpus;
-    at the 100 TB posture pass ``tau`` < 1 to cut the exchange
-    ~1/tau, provably sketch-identical while >= k distinct survive
-    (kmv_sketch docstring; asserted at 16x by the growth probe).  The
-    exact_* columns are the AUDIT leg that proves the estimator at
-    fixture scale — a production overlap screen drops them (they are
-    the corpus-sized distinct/join this operator exists to avoid).
-    Everything downstream of the sketches is <= 2k rows of
-    broadcast-combined scalars.  No UDFs, no driver collect."""
-    from ..operators.bloom import kmv_estimate, kmv_sketch, md5_key
-
-    k = _KMV_K
-    docs = load_table(spark, sf_dir, "documents")
-    a = docs.filter(F.expr(_KMV_SLICE_A))
-    b = docs.filter(F.expr(_KMV_SLICE_B))
-    # sketches and exact-audit distinct sets each feed 2-3 consumers:
-    # pin them so the corpus passes behind them run once
-    ska = kmv_sketch(a, "text", k).localCheckpoint(eager=False)
-    skb = kmv_sketch(b, "text", k).localCheckpoint(eager=False)
-    ha = a.select(md5_key("text").alias("h")).distinct().localCheckpoint(
-        eager=False
-    )
-    hb = b.select(md5_key("text").alias("h")).distinct().localCheckpoint(
-        eager=False
-    )
-    comb = (
-        ska.unionByName(skb)
-        .distinct()
-        .orderBy("h")
-        .limit(k)
-        .localCheckpoint(eager=False)
-    )
-    ea = kmv_estimate(ska, k).select(
-        F.round("est", 4).alias("est_distinct_a")
-    )
-    eb = kmv_estimate(skb, k).select(
-        F.round("est", 4).alias("est_distinct_b")
-    )
-    ecu = kmv_estimate(comb, k).select(
-        F.round("est", 4).alias("est_distinct_union"),
-        F.col("n_seen").alias("_comb_n"),
-    )
-    m = (
-        comb.join(ska, "h", "left_semi")
-        .join(skb, "h", "left_semi")
-        .agg(F.count(F.lit(1)).cast("long").alias("sketch_matches"))
-    )
-    xa = ha.agg(F.count("h").cast("long").alias("exact_distinct_a"))
-    xb = hb.agg(F.count("h").cast("long").alias("exact_distinct_b"))
-    xi = ha.join(hb, "h", "left_semi").agg(
-        F.count(F.lit(1)).cast("long").alias("_xi")
-    )
-    xu = (
-        ha.unionByName(hb)
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("exact_distinct_union"))
-    )
-    row = (
-        ea.crossJoin(eb)
-        .crossJoin(ecu)
-        .crossJoin(m)
-        .crossJoin(xa)
-        .crossJoin(xb)
-        .crossJoin(xi)
-        .crossJoin(xu)
-    )
-    return row.select(
-        F.lit(k).cast("long").alias("k"),
-        "est_distinct_a",
-        "exact_distinct_a",
-        "est_distinct_b",
-        "exact_distinct_b",
-        "est_distinct_union",
-        "exact_distinct_union",
-        "sketch_matches",
-        F.round(
-            F.col("sketch_matches").cast("double") / F.col("_comb_n"), 6
-        ).alias("est_jaccard"),
-        F.round(
-            F.col("_xi").cast("double") / F.col("exact_distinct_union"), 6
-        ).alias("exact_jaccard"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# STREAMING curation funnel — built r14 (slot-free session work),
-# REGISTRATION DEFERRED to r15+ alongside `dataset_overlap_kmv`
-# (catalog at cap; r15 owns up to two replacement slots after the
-# doc_fingerprints canary).  The continuous-crawl form of
-# `corpus_curation_funnel`: quality-gate, cross-batch exact dedup,
-# and decontamination run INCREMENTALLY per micro-batch over the
-# same certified stage recipes.  Behavior is pinned NOW by
-# tests/test_streaming_funnel.py (oracle parity both scales,
-# file-split invariance, the planted srcdup-of-eval decon proof) and
-# growth-probed by scripts/scale_probe.py
-# streaming_funnel_growth_probe.  To register: wrap with
-#   @query("streaming_curation_funnel", _streaming_funnel_oracle_sql(),
-#          survey="llm-pipeline-curation-streaming",
-#          tags=("llm-dedup", "streaming"))
-# ---------------------------------------------------------------------------
-
-# the fp-normalized rendering (the funnel's fingerprint recipe):
-# every exact-dup class is HOMOGENEOUS in this rendering by
-# construction, so class-level token counts and gram sets do not
-# depend on which member a batch saw first — the invariant that makes
-# the streaming counts deterministic under ANY file split
-_FUNNEL_NORM_SQL = (
-    "regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')"
-)
-
-
-def _streaming_funnel_oracle_sql() -> str:
-    return f"""
-    WITH eval AS (
-      SELECT * FROM documents WHERE doc_id % 41 = 0
-    ),
-    corpus AS (
-      SELECT doc_id, text, lang, source, n_chars
-      FROM documents WHERE doc_id % 41 <> 0
-      UNION ALL
-      SELECT doc_id + {_DOC_OFF_SQL} AS doc_id,
-             text, lang, 'srcdup' AS source, n_chars
-      FROM documents WHERE doc_id % 7 = 0
-    ),
-    flags AS (
-      SELECT lang,
-             (len(string_split(text, ' ')) BETWEEN 10 AND 5000
-              AND length(replace(text, ' ', ''))
-                  BETWEEN 2 * len(string_split(text, ' '))
-                      AND 12 * len(string_split(text, ' '))) AS q,
-             {_FUNNEL_NORM_SQL} AS norm
-      FROM corpus
-    ),
-    classes AS (
-      SELECT lang, md5(norm) AS fp, norm, bool_or(q) AS has_q
-      FROM flags GROUP BY lang, md5(norm), norm
-    ),
-    eg AS (
-      SELECT DISTINCT unnest({_DECON_GRAMS_SQL}) AS g
-      FROM (SELECT {_FUNNEL_NORM_SQL} AS text FROM eval)
-      WHERE len(string_split(text, ' ')) >= 8
-    ),
-    cont AS (
-      SELECT DISTINCT lang, fp FROM (
-        SELECT lang, fp, unnest({_DECON_GRAMS_SQL}) AS g
-        FROM (SELECT lang, fp, norm AS text FROM classes)
-        WHERE len(string_split(text, ' ')) >= 8
-      ) x JOIN eg USING (g)
-    ),
-    fin AS (
-      SELECT c.lang, c.has_q, (ct.fp IS NOT NULL) AS contaminated,
-             len(string_split(c.norm, ' ')) AS nt
-      FROM classes c
-      LEFT JOIN cont ct ON c.lang = ct.lang AND c.fp = ct.fp
-    ),
-    rawq AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS n_raw,
-             CAST(sum(CASE WHEN q THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_quality
-      FROM flags GROUP BY lang
-    ),
-    ded AS (
-      SELECT lang,
-             CAST(sum(CASE WHEN has_q THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dedup,
-             CAST(sum(CASE WHEN has_q AND NOT contaminated
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_clean,
-             CAST(coalesce(sum(CASE WHEN has_q AND NOT contaminated
-                                    THEN nt END), 0) AS BIGINT)
-               AS tokens_clean
-      FROM fin GROUP BY lang
-    )
-    SELECT r.lang, r.n_raw, r.n_quality,
-           CAST(coalesce(d.n_dedup, 0) AS BIGINT) AS n_dedup,
-           CAST(coalesce(d.n_clean, 0) AS BIGINT) AS n_clean,
-           CAST(coalesce(d.tokens_clean, 0) AS BIGINT) AS tokens_clean
-    FROM rawq r LEFT JOIN ded d ON r.lang = d.lang
-    ORDER BY r.lang
-    """
-
-
-def streaming_curation_funnel(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    _parts: int = 4,
-    _files_per_trigger: int = 2,
-) -> DataFrame:
-    """The curation funnel AS A STREAM — the continuous-crawl
-    production shape: each micro-batch of raw documents is
-    quality-gated, exact-deduped within itself AND against every
-    class ACCEPTED BY EARLIER BATCHES, decontaminated against the
-    fixed eval suite's 8-grams, and appended to a class sink; the
-    funnel report rolls up the sink plus the stateless stage counts.
-    Same stage recipes as the certified batch
-    ``corpus_curation_funnel`` (the quality gate's integer-exact
-    bounds, the fingerprint normalization, the shared
-    ``_decon_gram_explode`` window), so the batch-SQL oracle
-    certifies the stream — the posture ``streaming_merge_scd1`` and
-    ``streaming_incremental_dedup`` established.
-
-    Determinism under ANY file split, by construction: class
-    accounting (tokens, grams, contamination) runs over the
-    fp-NORMALIZED rendering, in which every exact-dup class is
-    homogeneous — so it cannot matter which member of a class a batch
-    saw first, only THAT a quality member has been seen (a class
-    enters the sink in the first batch carrying one; the final count
-    is the set of such classes, split-invariant).  Per-doc stages
-    (n_raw, n_quality) are stateless.  The oracle's per-lang counts
-    therefore certify the stream exactly — no rows-only weakening.
-
-    Divergence from the batch funnel, stated: the batch row counts
-    tokens and grams over the RAW text of the min-doc_id keeper;
-    a stream has no global min, so this row accounts over the
-    normalized rendering instead (same whitespace class both
-    engines).  n_raw / n_quality are IDENTICAL to the batch funnel's
-    by construction (asserted in tests/test_streaming_funnel.py);
-    the dedup key here is (lang, fp) — cross-lang identical texts
-    count once per lang, the ``streaming_incremental_dedup``
-    convention.
-
-    Retry semantics: the class sink is SELF-CORRECTING — a retried
-    batch anti-joins the sink, finds its previously-published classes
-    already present, and appends nothing (the dedup predicate is the
-    idempotence guard).
-
-    Scale: per trigger, the work is one stateless feature pass, a
-    within-batch (lang, fp) dropDuplicates, an anti-join against the
-    sink's (lang, fp) index (batch-sized build side at 100 TB: read
-    the sink bucketed on fp, or keep the Bloom pre-screen of
-    ``streaming_bloom_dedup`` in front), and the gram explode probed
-    against the BROADCAST eval grams — the corpus is never shuffled
-    on the gram key, per-trigger state never exceeds the batch."""
-    from ..benchmeta import collect_local, scratch_dir, setup_span
-    from ..streaming.ingest import run_available_now, stream_source
-
-    docs = load_table(spark, sf_dir, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 41 == 0)
-    corpus = docs.filter(F.col("doc_id") % 41 != 0).unionByName(
-        _srcdup_docs(docs)
-    )
-
-    norm = F.regexp_replace(F.lower(F.col("text")), "[ \t\n\x0B\f\r]+", " ")
-    n_tokens = F.size(F.split("text", " ")).cast("long")
-    alpha_len = F.length(
-        F.replace(F.col("text"), F.lit(" "), F.lit(""))
-    ).cast("long")
-    q = n_tokens.between(10, 5000) & alpha_len.between(
-        2 * n_tokens, 12 * n_tokens
-    )
-
-    # the eval-gram reference is FIXED for the run: normalize, share
-    # the certified gram window, pin so batches reuse it
-    eval_grams = (
-        _decon_gram_explode(eval_df.select(norm.alias("text")))
-        .select("g")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    with scratch_dir("stream_funnel_") as workdir:
-        drop_dir = f"{workdir}/incoming"
-        sink = f"{workdir}/classes"
-        with setup_span("streaming_curation_funnel"):
-            corpus.repartition(_parts).write.parquet(drop_dir)
-            # seed the class sink so every batch can anti-join it
-            spark.createDataFrame(
-                [], "lang string, fp string, n_tokens long, contaminated boolean"
-            ).write.parquet(sink)
-
-        def do_batch(batch: DataFrame, batch_id: int) -> None:
-            cls = (
-                batch.filter(q)
-                .select(
-                    "lang",
-                    F.md5(norm.cast("binary")).alias("fp"),
-                    norm.alias("norm"),
-                )
-                .dropDuplicates(["lang", "fp"])
-            )
-            seen = batch.sparkSession.read.parquet(sink).select("lang", "fp")
-            new = cls.join(seen, ["lang", "fp"], "left_anti")
-            hits = (
-                _decon_gram_explode(
-                    new.select("lang", "fp", F.col("norm").alias("text")),
-                    "lang",
-                    "fp",
-                )
-                .join(F.broadcast(eval_grams), "g", "left_semi")
-                .select("lang", "fp")
-                .distinct()
-                .withColumn("__hit", F.lit(1))
-            )
-            out = new.join(hits, ["lang", "fp"], "left").select(
-                "lang",
-                "fp",
-                F.size(F.split("norm", " ")).cast("long").alias("n_tokens"),
-                F.col("__hit").isNotNull().alias("contaminated"),
-            )
-            out.write.mode("append").parquet(sink)
-
-        stream = stream_source(
-            spark,
-            drop_dir,
-            corpus.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=_files_per_trigger,
-        )
-        run_available_now(
-            stream.writeStream.foreachBatch(do_batch), f"{workdir}/checkpoint"
-        )
-
-        classes = spark.read.parquet(sink)
-        ded = classes.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_dedup"),
-            F.sum(F.when(~F.col("contaminated"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_clean"),
-            F.coalesce(
-                F.sum(F.when(~F.col("contaminated"), F.col("n_tokens"))),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("tokens_clean"),
-        )
-        rawq = corpus.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_raw"),
-            F.sum(F.when(q, 1).otherwise(0)).cast("long").alias("n_quality"),
-        )
-        out = (
-            rawq.join(ded, "lang", "left")
-            .select(
-                "lang",
-                "n_raw",
-                "n_quality",
-                F.coalesce("n_dedup", F.lit(0)).cast("long").alias("n_dedup"),
-                F.coalesce("n_clean", F.lit(0)).cast("long").alias("n_clean"),
-                F.coalesce("tokens_clean", F.lit(0))
-                .cast("long")
-                .alias("tokens_clean"),
-            )
-            .orderBy("lang")
-        )
-        return collect_local(out)
-
-
-# ---------------------------------------------------------------------------
-# Exact substring-span duplication accounting — built r14 (slot-free
-# session work), REGISTRATION DEFERRED to an r15+ replacement slot
-# (the r15 window already holds two candidates; this queues behind
-# them).  Span-LEVEL exact duplication (Lee et al. 2022,
-# "Deduplicating Training Data Makes Language Models Better"): the
-# doc-level dedup family answers "which documents are near-copies";
-# this answers "how many TOKENS of each document sit inside a
-# substring that also occurs elsewhere" — the memorization-mass
-# observable a pipeline tracks when deciding span-cut thresholds.
-# Behavior is pinned NOW by tests/test_substring_spans.py (oracle
-# parity both scales, a pure-Python interval-union model, a planted
-# shared-span semantics proof), plan-pinned by
-# tests/test_plan_shapes.py::test_substring_spans_plan_shape, and
-# growth-probed by scripts/scale_probe.py
-# substring_spans_growth_probe.  To register: wrap with
-#   @query("dedup_substring_spans", _substring_spans_oracle_sql(),
-#          survey="llm-dedup-substring", tags=("llm-dedup",))
-# ---------------------------------------------------------------------------
-
-# span length in tokens: a duplicated span is a run of >= _SPAN_L
-# consecutive tokens whose every _SPAN_L-gram occurs >= _SPAN_MIN_OCC
-# times corpus-wide.  8 tokens ~ the 50-char threshold the paper's
-# EXACTSUBSTR uses on this fixture's ~6-char tokens.
-_SPAN_L = 8
-_SPAN_MIN_OCC = 2
-
-
-def _substring_spans_oracle_sql() -> str:
-    return f"""
-    WITH {_AUG_CTE},
-    tok AS (
-      SELECT doc_id, lang,
-             string_split(lower(coalesce(text, '')), ' ') AS toks
-      FROM corpus
-    ),
-    pos AS (
-      SELECT doc_id, lang, i,
-             md5(array_to_string(toks[i:i+{_SPAN_L - 1}], ' ')) AS h
-      FROM tok, unnest(range(1, greatest(len(toks) - {_SPAN_L - 2}, 1))) AS t(i)
-    ),
-    dup AS (
-      SELECT h FROM pos GROUP BY h HAVING count(*) >= {_SPAN_MIN_OCC}
-    ),
-    kept AS (
-      SELECT doc_id, lang, i,
-             lag(i) OVER (PARTITION BY doc_id ORDER BY i) AS pi
-      FROM pos WHERE h IN (SELECT h FROM dup)
-    ),
-    perdoc AS (
-      SELECT doc_id, lang,
-             sum(CASE WHEN pi IS NULL THEN {_SPAN_L}
-                      ELSE least({_SPAN_L}, i - pi) END) AS dup_toks
-      FROM kept GROUP BY doc_id, lang
-    ),
-    base AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(toks)) AS BIGINT) AS tokens_total
-      FROM tok GROUP BY lang
-    ),
-    agg AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS docs_with_dup,
-             CAST(sum(dup_toks) AS BIGINT) AS tokens_dup
-      FROM perdoc GROUP BY lang
-    )
-    SELECT b.lang, b.n_docs,
-           CAST(coalesce(a.docs_with_dup, 0) AS BIGINT) AS docs_with_dup,
-           b.tokens_total,
-           CAST(coalesce(a.tokens_dup, 0) AS BIGINT) AS tokens_dup,
-           round(CAST(coalesce(a.tokens_dup, 0) AS DOUBLE)
-                 / b.tokens_total, 6) AS dup_token_ratio
-    FROM base b LEFT JOIN agg a USING (lang)
-    ORDER BY b.lang
-    """
-
-
-def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span-level EXACT substring duplication accounting (Lee et al.
-    2022, EXACTSUBSTR): per language, how many tokens of the corpus
-    sit inside a duplicated run of >= ``_SPAN_L`` consecutive tokens
-    — where a position is duplicated iff its ``_SPAN_L``-gram occurs
-    >= ``_SPAN_MIN_OCC`` times corpus-wide (within-doc repeats count,
-    as in the paper).  The doc-level dedup family (MinHash, SimHash,
-    n-gram Jaccard, containment) scores whole documents; this is the
-    finer observable — boilerplate headers, licence blocks, and
-    templated sentences inside otherwise-unique documents — that
-    drives span-cut thresholds and memorization studies.  Runs over
-    the family's augmented corpus (documents ∪ srcdup of every 7th
-    doc) so full-document duplicate spans provably exist; the
-    fixture's small vocabulary supplies natural partial overlaps.
-
-    The paper builds a suffix array; the order-free equivalent here:
-    a duplicated RUN of length m >= L covers exactly its m - L + 1
-    member L-gram positions, so the union of intervals
-    [i, i + L - 1] over duplicated positions i IS the duplicated
-    span mass.  The union is computed without interval grouping:
-    sorted by i, each kept position contributes
-    ``min(L, i - lag(i))`` new tokens (``L`` for the first) — a
-    single lag window, no islands pass.  Integer-exact end to end;
-    the only float is the final ratio (one division of exact BIGINTs
-    + round 6, deterministic on both engines).
-
-    Scale (100 TB): the gram pass is a map-side explode (corpus x
-    ~n_tokens rows, never collected); the duplicated-gram set is a
-    count aggregate on the 16-byte gram hash with MAP-SIDE PARTIALS
-    (the exchange carries one row per distinct gram per task, not
-    per occurrence), and the join-back is hash-equality on the same
-    key — auto-broadcast at fixture scale (AQE), a co-partitioned
-    shuffle join at web scale.  Hot boilerplate grams skew the count
-    aggregate's reduce side: partial aggregation already absorbs
-    per-task repeats, AQE skew-join handles the join-back, and a
-    HAVING count cap (duplicated is duplicated — the paper caps
-    occurrence counts too) bounds any single reducer.  The window is
-    doc-keyed (bounded per doc) and everything after is
-    lang-cardinality scalar algebra.  No UDFs, no driver collect."""
-    docs = _augmented_docs(spark, sf_dir)
-    toks = F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), " ")
-    base = docs.select("doc_id", "lang", toks.alias("toks"))
-    # one explode produces (position, gram-hash) pairs; the struct
-    # keeps i and h paired through the explode
-    grams = base.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.when(
-                F.size("toks") >= _SPAN_L,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - (_SPAN_L - 1)),
-                    lambda i: F.struct(
-                        i.alias("i"),
-                        F.md5(
-                            F.concat_ws(
-                                " ", F.slice("toks", i, _SPAN_L)
-                            ).cast("binary")
-                        ).alias("h"),
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<i:int,h:string>>"))
-        ).alias("ph"),
-    ).select("doc_id", "lang", F.col("ph.i").alias("i"), F.col("ph.h").alias("h"))
-    dup = (
-        grams.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter(F.col("occ") >= _SPAN_MIN_OCC)
-        .select("h")
-    )
-    kept = grams.join(dup, "h", "left_semi")
-    w = Window.partitionBy("doc_id").orderBy("i")
-    perdoc = (
-        kept.withColumn("pi", F.lag("i").over(w))
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum(
-                F.when(F.col("pi").isNull(), _SPAN_L).otherwise(
-                    F.least(F.lit(_SPAN_L), F.col("i") - F.col("pi"))
-                )
-            ).alias("dup_toks")
-        )
-    )
-    basea = base.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size("toks")).cast("long").alias("tokens_total"),
-    )
-    agg = perdoc.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_with_dup"),
-        F.sum("dup_toks").cast("long").alias("tokens_dup"),
-    )
-    return (
-        basea.join(agg, "lang", "left")
-        .select(
-            "lang",
-            "n_docs",
-            F.coalesce("docs_with_dup", F.lit(0))
-            .cast("long")
-            .alias("docs_with_dup"),
-            "tokens_total",
-            F.coalesce("tokens_dup", F.lit(0)).cast("long").alias("tokens_dup"),
-            F.round(
-                F.coalesce("tokens_dup", F.lit(0)).cast("double")
-                / F.col("tokens_total"),
-                6,
-            ).alias("dup_token_ratio"),
-        )
-        .orderBy("lang")
     )

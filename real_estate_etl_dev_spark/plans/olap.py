@@ -166,49 +166,3 @@ def revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").asc_nulls_first(),
         F.col("o_orderpriority").asc_nulls_first(),
     )
-
-
-# Catalog row RETIRED r14 (pre-agreed replacement plan, COVERAGE.md
-# "r14 arithmetic"): the seat went to `corpus_curation_funnel`.  The
-# operator itself stays — CUBE is grouping-sets' superset sugar and
-# the OLAP multi-grain family remains certified via
-# `revenue_grouping_sets` (same Expand+agg plan, arbitrary grains);
-# this function is still importable and covered by the same pytest
-# harness style as any non-catalog helper.  Last driver green: r10
-# (CORRECTNESS_r10, 24/24 rows hash-matched).  Former oracle:
-#   SELECT COALESCE(o_orderstatus,'ALL') status, COALESCE(o_orderpriority,'ALL')
-#   priority, GROUPING(...) grp_id, count(*), round(sum(decimal price),2)
-#   FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-def revenue_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE — all four grains of the (status, priority) pair (detail,
-    each one-dimension margin, grand total) in ONE pass, completing
-    the multi-grain family next to rollup (hierarchical prefixes) and
-    grouping sets (arbitrary grains).  ``grouping_id`` separates a
-    real NULL key from a margin row.
-
-    Scale: same single Expand + hash-agg plan as the other grains —
-    one fact scan expanded ×4 with map-side partials; the shuffle
-    carries per-grain group cardinalities (≤ 5·5 + 5 + 5 + 1 rows
-    here), never fact rows."""
-    orders = T(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.grouping_id().cast("long").alias("grp_id"),
-            F.count(F.lit(1)).alias("n_orders"),
-            # exact-decimal sum (house rule): a raw double sum's last
-            # digits depend on partial-agg order and can flip the 2-dp
-            # rounding across engines on the wide grand-total groups
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(20,8)")).cast("double"), 2
-            ).alias("revenue"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "grp_id",
-            "n_orders",
-            "revenue",
-        )
-        .orderBy("grp_id", "status", "priority")
-    )

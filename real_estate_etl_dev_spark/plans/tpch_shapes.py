@@ -597,63 +597,6 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Catalog row RETIRED r14 (pre-agreed replacement plan, COVERAGE.md
-# "r14 arithmetic"): the seat went to `dsir_importance_select`.  The
-# operator itself stays — the exact-decimal moment machinery (ship
-# Σx/Σy/Σxy/Σx², not rows) remains certified via
-# `price_qty_exact_corr`, which exercises the identical one-pass
-# map-side-combinable aggregate; the least-squares readout here is a
-# driver-free arithmetic epilogue over those moments.  Last driver
-# green: r10 (CORRECTNESS_r10, 5/5 rows hash-matched).  Former oracle:
-# the same four DECIMAL moments per priority in DuckDB with the
-# slope/intercept computed from their DOUBLE casts, rounded 6/4 dp.
-def price_trend_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group LEAST-SQUARES TREND (slope + intercept of price over
-    time) from exact decimal moments — the distributed form of SQL's
-    ``regr_slope``/``regr_intercept``, which this deliberately does
-    NOT use: the built-ins stream float accumulators whose last digits
-    depend on row order, while the four moments here (Σx, Σy, Σxy,
-    Σx²; x = integer days since epoch) are exact decimal sums, so the
-    fitted line is a pure function of the data on both engines.
-
-    Scale: same one-pass map-side-combinable agg as
-    price_qty_exact_corr — the regression over a 100 TB fact table is
-    ONE shuffle of 5 moment cells per group per task.  This is the
-    whole trick behind scalable analytics regressions: ship moments,
-    not rows."""
-    # widths chosen so every PRODUCT stays inside decimal-38 exactly on
-    # both engines (38,8 squares would force engine-specific scale
-    # truncation): days are 7-digit integers, prices 2-dp — x·y is
-    # (10,2)×(12,2) → (23,4), x² → (21,4), sums have 15 digits of
-    # headroom over a 100 TB row count.
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("decimal(10,2)")
-    y = F.col("o_totalprice").cast("decimal(12,2)")
-    m = (
-        T(spark, sf_dir, "orders")
-        .select("o_orderpriority", day.alias("x"), y.alias("y"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        )
-    )
-    n = F.col("n").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxy, sxx = F.col("sxy").cast("double"), F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    return m.select(
-        "o_orderpriority",
-        F.col("n").cast("long").alias("n_orders"),
-        F.round(slope, 6).alias("slope_per_day"),
-        F.round((sy - slope * sx) / n, 4).alias("intercept"),
-    ).orderBy("o_orderpriority")
-
-
 def _pagerank_oracle_sql(rounds: int = 3, damping: float = 0.85, topk: int = 30) -> str:
     """Unrolled PageRank rounds as chained CTEs (same exact-decimal
     chain as operators/graph.py:pagerank — see its docstring)."""

@@ -34,10 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimensions we always broadcast in joins (fits executor memory
-# at any SF — region/nation are bounded; others scale with SF).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 # fan_out's CALLER CONTRACT as optimized-plan node classes
 _FAN_OUT_SAFE = frozenset({"LogicalRelation", "LogicalRDD", "Project", "Filter"})
 

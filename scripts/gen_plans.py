@@ -269,8 +269,8 @@ SHOWCASE = [
     ),
     (
         "dedup_minhash_pairs_zipf",
-        "MinHash banding on the Zipfian corpus (built r10, registers "
-        "r12; unregistered — resolved from plans.llmdata): the SAME "
+        "MinHash banding on the Zipfian corpus (built r10, registered "
+        "r12): the SAME "
         "banded-bucket equality join as the certified dense twin, "
         "but long-tail shingles make band buckets sparse, so bucket "
         "mass concentrates on true duplicates; the recall gate's "
@@ -278,8 +278,8 @@ SHOWCASE = [
     ),
     (
         "dedup_semantic_kmeans",
-        "SemDeDup on data-derived clusters (built r11, registers "
-        "r12; unregistered — resolved from plans.llmdata): the "
+        "SemDeDup on data-derived clusters (built r11, registered "
+        "r12): the "
         "exact-decimal Lloyd loop unrolls into the plan — per round "
         "one broadcast join of k*dim centroid cells on pos plus two "
         "keyed exchanges, lineage truncated per round by "
@@ -312,19 +312,6 @@ SHOWCASE = [
         "— the corpus is never shuffled on the gram or bucket key.",
     ),
     (
-        "dataset_overlap_kmv",
-        "KMV dataset-overlap estimation (built r14, registers in an "
-        "r15+ replacement slot; unregistered — resolved from "
-        "plans.llmdata): each corpus slice reduces to its k smallest "
-        "distinct content hashes — map-side partial dedup, ONE "
-        "8-byte-key exchange (tau-cut ~1/tau at the 100 TB posture, "
-        "provably sketch-identical), TakeOrderedAndProject(k) — and "
-        "every union/intersection/Jaccard estimate is scalar algebra "
-        "over the checkpointed k-row sketches; the exact_* audit "
-        "columns are the one corpus-keyed distinct/join a production "
-        "overlap screen drops.",
-    ),
-    (
         "bpe_learn_merges",
         "BPE merge learning (built r11, registered r13): tokenizer "
         "TRAINING as an unrolled loop — per round one map-side "
@@ -335,20 +322,6 @@ SHOWCASE = [
         "1-row broadcast scalar-combine feeding a map-side replace "
         "pass; corpus state is localCheckpoint-pinned between rounds "
         "so round k+1 starts from materialized strings.",
-    ),
-    (
-        "dedup_substring_spans",
-        "Span-level exact substring duplication accounting (built r14, "
-        "registers in an r15+/r16 replacement slot; unregistered — "
-        "resolved from plans.llmdata): one positional L-gram explode "
-        "(Generate) feeds a gram-hash count aggregate with map-side "
-        "partials — the plan's only gram-keyed exchange carries one row "
-        "per distinct gram per task, never per occurrence — whose >=2 "
-        "survivors broadcast back into the occurrence stream as a "
-        "LeftSemi; the covered-token union is a single doc-keyed lag "
-        "window (no islands pass: each kept position adds min(L, gap) "
-        "tokens), and everything downstream is lang-cardinality algebra "
-        "on broadcast joins.",
     ),
 ]
 
@@ -388,13 +361,8 @@ def main() -> None:
         f"`{SF_DIR}`; AQE final plans may differ only in partition "
         "coalescing.\n",
     ]
-    from real_estate_etl_dev_spark.plans import llmdata
-
     for name, note in SHOWCASE:
-        # Built-but-unregistered flagships (COVERAGE.md round records)
-        # are showcased from the module before their catalog row lands.
-        fn = CATALOG[name].fn if name in CATALOG else getattr(llmdata, name)
-        df = fn(spark, SF_DIR)
+        df = CATALOG[name].fn(spark, SF_DIR)
         parts.append(f"## {name}\n\n{note}\n\n```\n{trimmed_plan(df)}\n```\n")
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(parts))

@@ -129,9 +129,6 @@ def main() -> None:
     bpe_learn_growth_probe(spark)
     curation_funnel_growth_probe(spark)
     dsir_growth_probe(spark)
-    kmv_overlap_growth_probe(spark)
-    streaming_funnel_growth_probe(spark)
-    substring_spans_growth_probe(spark)
 
 
 def merge_growth_probe(spark) -> None:
@@ -1206,263 +1203,6 @@ def dsir_growth_probe(spark) -> None:
         _check(got == want, "dsir top-k matches closed-form prediction",
                 k, got, want)
         print(f"| {n_raw:,} | {wall:.1f} | exact ({len(got)} rows) |", flush=True)
-
-
-def kmv_overlap_growth_probe(spark) -> None:
-    """Growth evidence for `dataset_overlap_kmv` (built r14,
-    registration deferred to an r15+ replacement slot): replicate the
-    documents corpus k× with per-replica-distinct texts and doc_id
-    offsets that are multiples of 6, so BOTH slice memberships
-    (id % 3, id % 2) are preserved per replica.  Every exact set then
-    tiles k-fold — distinct_a/b, their intersection and union all
-    scale exactly k× — so exact_jaccard is INVARIANT across sizes
-    (asserted), the three KMV estimates must track their exact audit
-    columns within the k=256 error budget at every size (asserted,
-    15% ≈ 2.4σ), and the tau-filter scale path must be SKETCH-
-    IDENTICAL to the unfiltered run when tau sits just above the
-    k-th minimum (asserted per size — the provable-losslessness
-    claim in operators/bloom.py:kmv_sketch).  The sketch stays k
-    rows while the corpus grows: at 16× the only corpus-sized work
-    is the map pass + the tau-cut distinct exchange, so wall should
-    grow sub-linearly in data; a bend flags a reduce-side
-    concentration the TakeOrdered pin missed."""
-    from real_estate_etl_dev_spark.operators.bloom import (
-        KMV_SPACE,
-        kmv_sketch,
-    )
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        _KMV_K,
-        dataset_overlap_kmv,
-    )
-    from real_estate_etl_dev_spark.sources.readers import load_table
-
-    print()
-    print(
-        "| docs | wall s | exact_a (est) | exact_J (est_J) "
-        "| tau survivors |"
-    )
-    print("|---|---|---|---|---|")
-    base_j = None
-    for k in (1, 4, 16):
-        docs = load_table(spark, SF_DIR, "documents")
-        reps = spark.range(k).select(F.col("id").alias("rep"))
-        tagged = docs.crossJoin(reps).select(
-            # 6,000,000 is a multiple of 2 and 3: slice membership is
-            # replica-invariant
-            (F.col("doc_id") + F.col("rep") * F.lit(6_000_000)).alias(
-                "doc_id"
-            ),
-            F.when(F.col("rep") == 0, F.col("text"))
-            .otherwise(F.concat(F.col("text"), F.lit(" rep"), F.col("rep")))
-            .alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        with scratch_dir(f"kmv_{k}x_") as tmp:
-            tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-            n = tagged.count()
-            t0 = time.perf_counter()
-            [row] = dataset_overlap_kmv(spark, tmp).collect()
-            wall = time.perf_counter() - t0
-            for side in ("a", "b", "union"):
-                est = row[f"est_distinct_{side}"]
-                exact = row[f"exact_distinct_{side}"]
-                _check(
-                    abs(est - exact) <= 0.15 * exact,
-                    "kmv estimate within 15% of exact",
-                    k, side, est, exact,
-                )
-            if k == 1:
-                base_j = row["exact_jaccard"]
-                base_exact = (
-                    row["exact_distinct_a"],
-                    row["exact_distinct_b"],
-                    row["exact_distinct_union"],
-                )
-            else:
-                _check(
-                    row["exact_jaccard"] == base_j,
-                    "exact jaccard replica-invariant", k,
-                    row["exact_jaccard"], base_j,
-                )
-                got_exact = (
-                    row["exact_distinct_a"],
-                    row["exact_distinct_b"],
-                    row["exact_distinct_union"],
-                )
-                _check(
-                    got_exact == tuple(v * k for v in base_exact),
-                    "exact sets tile k-fold", k, got_exact, base_exact,
-                )
-            # tau losslessness at this size: threshold just above the
-            # k-th minimum admits exactly the k-min set
-            a = load_table(spark, tmp, "documents").filter(
-                F.col("doc_id") % 3 != 0
-            )
-            full = [r["h"] for r in kmv_sketch(a, "text", _KMV_K).collect()]
-            tau = (max(full) * 1.001) / KMV_SPACE
-            cut = [
-                r["h"]
-                for r in kmv_sketch(a, "text", _KMV_K, tau=tau).collect()
-            ]
-            _check(cut == full, "tau-filtered sketch identical", k, tau)
-        print(
-            f"| {n:,} | {wall:.1f} | {row['exact_distinct_a']:,} "
-            f"({row['est_distinct_a']:,.1f}) | {row['exact_jaccard']:.4f} "
-            f"({row['est_jaccard']:.4f}) | tau={tau:.2e} |",
-            flush=True,
-        )
-
-
-def streaming_funnel_growth_probe(spark) -> None:
-    """Growth evidence for `streaming_curation_funnel` (built r14,
-    registration deferred to an r15+ replacement slot): the same
-    replica construction as curation_funnel_growth_probe — 41*7-
-    preserving id offsets + a per-replica token tag, so classes and
-    grams are replica-local and every per-lang funnel cell must tile
-    EXACTLY k-fold (asserted) — but run through the STREAM: a real
-    availableNow multi-micro-batch execution whose cross-batch dedup
-    state is the class sink.  Per-trigger work is batch-bounded (the
-    anti-join build side is the sink's (lang, fp) index), so wall
-    should grow ~linearly in corpus size at a fixed trigger slice; a
-    super-linear bend would flag per-batch work proportional to the
-    TOTAL corpus rather than to the batch."""
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        streaming_curation_funnel,
-    )
-    from real_estate_etl_dev_spark.sources.readers import load_table
-
-    print()
-    print("| base docs | wall s | sum(n_raw/n_quality/n_dedup/n_clean/tokens_clean) |")
-    print("|---|---|---|")
-    base = None
-    for k in (1, 4, 16):
-        docs = load_table(spark, SF_DIR, "documents")
-        reps = spark.range(k).select(F.col("id").alias("rep"))
-        tagged = docs.crossJoin(reps).select(
-            (F.col("doc_id") + F.col("rep") * F.lit(287 * 100_000)).alias(
-                "doc_id"
-            ),
-            F.regexp_replace(
-                "text",
-                "(^| )",
-                F.concat(F.lit("$1"), F.char(F.col("rep") + 97)),
-            ).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        with scratch_dir(f"sfunnel_{k}x_") as tmp:
-            tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-            n = tagged.count()
-            t0 = time.perf_counter()
-            rows = streaming_curation_funnel(spark, tmp).collect()
-            wall = time.perf_counter() - t0
-        cells = {
-            r["lang"]: (
-                r["n_raw"],
-                r["n_quality"],
-                r["n_dedup"],
-                r["n_clean"],
-                r["tokens_clean"],
-            )
-            for r in rows
-        }
-        if k == 1:
-            base = cells
-        else:
-            want = {
-                lg: tuple(v * k for v in cell) for lg, cell in base.items()
-            }
-            _check(cells == want, "streaming funnel cells tile exactly k-fold",
-                    k, cells, want)
-        tot = tuple(sum(c[i] for c in cells.values()) for i in range(5))
-        print(
-            f"| {n:,} | {wall:.1f} | {tot[0]:,}/{tot[1]:,}/{tot[2]:,}"
-            f"/{tot[3]:,}/{tot[4]:,} |",
-            flush=True,
-        )
-
-
-
-def substring_spans_growth_probe(spark) -> None:
-    """Growth evidence for `dedup_substring_spans` (built r14,
-    registration deferred to an r15+/r16 replacement slot): the same
-    replica construction as the funnel probes — 41*7-preserving id
-    offsets + a per-replica token tag, so every L-gram is
-    replica-LOCAL and each per-lang cell (n_docs, docs_with_dup,
-    tokens_total, tokens_dup — and the ratio, exactly, since
-    (k*a)/(k*b) is the same correctly-rounded double as a/b) must
-    tile EXACTLY k-fold (asserted).  A cross-replica gram collision,
-    a hash-bucket artifact, or an interval-union bug that depends on
-    absolute corpus size would all fail loudly.  Wall tracks the
-    gram-occurrence volume: the explode and the partial-agg exchange
-    are the only corpus-sized stages, so growth should be ~linear;
-    a super-linear bend would flag the dup-set join-back degrading
-    off its broadcast/partial-agg path."""
-    from real_estate_etl_dev_spark.plans.llmdata import dedup_substring_spans
-    from real_estate_etl_dev_spark.sources.readers import load_table
-
-    print()
-    print("| base docs | wall s | sum(docs_with_dup/tokens_total/tokens_dup) |")
-    print("|---|---|---|")
-    base = None
-    for k in (1, 4, 16):
-        docs = load_table(spark, SF_DIR, "documents")
-        reps = spark.range(k).select(F.col("id").alias("rep"))
-        tagged = docs.crossJoin(reps).select(
-            (F.col("doc_id") + F.col("rep") * F.lit(287 * 100_000)).alias(
-                "doc_id"
-            ),
-            F.regexp_replace(
-                "text",
-                "(^| )",
-                F.concat(F.lit("$1"), F.char(F.col("rep") + 97)),
-            ).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        with scratch_dir(f"spans_{k}x_") as tmp:
-            tagged.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-            n = tagged.count()
-            t0 = time.perf_counter()
-            rows = dedup_substring_spans(spark, tmp).collect()
-            wall = time.perf_counter() - t0
-        cells = {
-            r["lang"]: (
-                r["n_docs"],
-                r["docs_with_dup"],
-                r["tokens_total"],
-                r["tokens_dup"],
-                r["dup_token_ratio"],
-            )
-            for r in rows
-        }
-        if k == 1:
-            base = cells
-        else:
-            want = {
-                lg: tuple(v * k for v in cell[:4]) + (cell[4],)
-                for lg, cell in base.items()
-            }
-            _check(
-                cells == want,
-                "substring-span cells tile exactly k-fold",
-                k,
-                cells,
-                want,
-            )
-        tot = (
-            sum(c[1] for c in cells.values()),
-            sum(c[2] for c in cells.values()),
-            sum(c[3] for c in cells.values()),
-        )
-        print(
-            f"| {n:,} | {wall:.1f} | {tot[0]:,}/{tot[1]:,}/{tot[2]:,} |",
-            flush=True,
-        )
 
 
 if __name__ == "__main__":

@@ -764,41 +764,6 @@ def test_deletion_bucket_audit_fires_on_capped_drop(spark):
     assert (quiet.n_hot_buckets, quiet.rows_in_hot, quiet.pairs_skipped) == (0, 0, 0)
 
 
-def test_summarizer_centroids_match_explode_form(spark, sf_dir):
-    """The high-dim swap embedding_centroids promises must be REAL:
-    Summarizer.mean over the ml vector type and the certified
-    posexplode/exact-decimal-sum form agree elementwise to 1e-9
-    pre-rounding (r05 VERDICT item 4)."""
-    from pyspark.sql import functions as F
-
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        embedding_centroids_summarizer,
-    )
-    from real_estate_etl_dev_spark.sources.readers import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "label", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    exact = (
-        e.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(20,10)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-        .orderBy("label", "pos")
-        .collect()
-    )
-    summ = embedding_centroids_summarizer(spark, sf_dir).collect()
-    assert len(exact) == len(summ) > 0
-    worst = max(
-        abs(float(a.c) - float(b.c)) for a, b in zip(exact, summ)
-    )
-    assert worst <= 1e-9, worst
-
-
 def test_lloyd_kmeans_partitioning_invariance_and_shape(spark, sf_dir):
     """lloyd_kmeans is a pure function of the data: the same corpus at
     a different partitioning yields the SAME centroids and sizes (the

@@ -8,7 +8,9 @@ one helper.
 * blocking on a stream (``awaitTermination``) only in
   ``streaming.ingest.run_available_now``;
 * environment reads (``os.environ`` / ``os.getenv``) only in
-  ``session``.
+  ``session``;
+* every top-level definition in ``plans/`` is a registered ``@query``
+  or is used by the package.
 
 The scan reads attribute accesses in the AST, so docstrings and
 comments that name these calls don't count.
@@ -81,3 +83,47 @@ def test_env_reads_only_in_session():
         s.split(":")[0] for call in ("environ", "getenv") for s in sites.get(call, ())
     }
     assert files == {"session.py"}, files
+
+
+def _is_query(node: ast.AST) -> bool:
+    for dec in getattr(node, "decorator_list", ()):
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(target, ast.Name) and target.id == "query":
+            return True
+    return False
+
+
+def _top_level_names(node: ast.AST) -> list[str]:
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        return [t.id for t in node.targets if isinstance(t, ast.Name)]
+    if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        return [node.target.id]
+    return []
+
+
+def test_plan_definitions_are_queries_or_used():
+    """Every top-level function or assignment in ``plans/`` is a
+    registered ``@query`` or is read somewhere in the package, so no
+    unregistered plan (a staged or retired row) can sit there unused."""
+    loaded: set[str] = set()
+    for path in PKG.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                loaded.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                loaded.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                loaded.update(alias.name for alias in node.names)
+    orphans = []
+    for path in sorted((PKG / "plans").glob("*.py")):
+        for node in ast.parse(path.read_text(), filename=str(path)).body:
+            if _is_query(node):
+                continue
+            orphans += [
+                f"{path.name}:{name}" for name in _top_level_names(node)
+                if not (name.startswith("__") and name.endswith("__"))
+                and name not in loaded
+            ]
+    assert orphans == [], orphans

@@ -147,6 +147,7 @@ def test_no_python_udf_in_expression_tier(spark, sf_dir):
         "date_url_cases",
         "availability_text_cases",
         "geo_extraction_cases",
+        "number_parse_cases",
         "merge_scd1",
         "dq_identify_issues",
     ]:
@@ -938,70 +939,3 @@ def test_dsir_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoinExec" in plan
     assert "WindowGroupLimitExec" in plan, plan.classes
     assert all(k[0] != "b" for k in plan.hash_keys()), plan.hash_keys()
-
-
-def test_kmv_overlap_plan_shape(spark, sf_dir):
-    """Pre-registration plan pin for the r15-deferred
-    dataset_overlap_kmv (see the deferral note in plans/llmdata.py).
-    Two layers: (1) the SKETCH leg — the scale path — is map-side
-    partial dedup into ONE 8-byte-key exchange feeding
-    TakeOrderedAndProject(k), so the reduce side sees partitions x k
-    rows, never the corpus; (2) the assembled query stays JVM-side
-    with zero CartesianProduct — every sketch consumer reads the
-    checkpointed k-row frames (Scan ExistingRDD), the membership
-    probes are broadcast LEFT-SEMI joins, the 1-row scalar combines
-    ride BroadcastNestedLoopJoin (the `_id_offset` posture), and the
-    ONLY surviving corpus-keyed exchange is the exact-audit union
-    (the leg a production overlap screen drops)."""
-    from pyspark.sql import functions as F
-
-    from real_estate_etl_dev_spark.operators.bloom import kmv_sketch
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        _KMV_K,
-        dataset_overlap_kmv,
-    )
-    from real_estate_etl_dev_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 3 != 0
-    )
-    sk = Plan(kmv_sketch(docs, "text", _KMV_K))
-    assert "TakeOrderedAndProjectExec" in sk, sk.classes
-    assert sk.hash_keys() == [["h"]], sk.hash_keys()
-    # map-side partial dedup before the exchange: a function-less
-    # distinct plans as TWO HashAggregate(keys=[h]) nodes bracketing
-    # the exchange — the lower one dedupes per-partition pre-shuffle
-    agg_keys = [pv.key_names(a.groupingExpressions()) for a in sk.of("HashAggregateExec")]
-    assert agg_keys.count(["h"]) == 2, agg_keys
-
-    plan = Plan(dataset_overlap_kmv(spark, sf_dir))
-    assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
-    assert "CartesianProductExec" not in plan
-    assert "BroadcastHashJoinExec" in plan and "LeftSemi" in plan.join_types()
-    assert len(plan.hash_keys()) == 1, plan.hash_keys()
-
-
-def test_substring_spans_plan_shape(spark, sf_dir):
-    """Pre-registration plan pin for the r16-deferred
-    dedup_substring_spans (see the deferral note in plans/llmdata.py):
-    everything stays JVM-side (zero Python evaluation), zero
-    CartesianProduct (the only nested-loop is the 1-row `_id_offset`
-    broadcast combine), the duplicated-gram set is built by a hash
-    aggregate WITH map-side partials whose exchange is the plan's
-    ONLY gram-hash-keyed shuffle (the occurrence stream itself never
-    shuffles on h — the dup set broadcasts back as a LeftSemi), and
-    the interval-union runs as one doc-keyed lag window."""
-    from real_estate_etl_dev_spark.plans.llmdata import dedup_substring_spans
-
-    plan = Plan(dedup_substring_spans(spark, sf_dir))
-    assert plan.count("BatchEvalPythonExec", "ArrowEvalPythonExec") == 0
-    assert "CartesianProductExec" not in plan
-    assert "BroadcastHashJoinExec" in plan and "LeftSemi" in plan.join_types()
-    assert [k[0] for k in plan.hash_keys()].count("h") == 1, plan.hash_keys()
-    assert any(
-        e.mode().toString() == "Partial" and e.aggregateFunction().prettyName() == "count"
-        for a in plan.of("HashAggregateExec")
-        for e in pv.seq(a.aggregateExpressions())
-    )
-    assert "WindowExec" in plan
-    assert "lag(i#" in pv.explain_formatted(plan.df)

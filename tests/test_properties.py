@@ -527,3 +527,34 @@ def test_bpe_merge_chain_matches_reference(spark, text):
     ).collect()[0]
     assert row["rendered"] == "".join(f"_{t}_" for t in expect_toks)
     assert row["n"] == len(expect_toks)
+
+
+# Number-shaped text: digits, thousands/decimal marks and the letters,
+# spaces and currency words they sit between in listing text.
+number_texts = st.one_of(
+    st.none(),
+    st.text(alphabet="0123456789., abRp-/", max_size=16),
+    st.text(max_size=12),
+)
+
+
+def test_to_number_expr_matches_python_model(spark):
+    """For ANY text hypothesis builds, the JVM-side ``to_number_expr``
+    returns exactly what the plain-Python ``to_number_py`` returns.
+    The 1000 examples are drawn first and evaluated in one frame, so
+    the check costs one Spark job instead of one per example."""
+    from real_estate_etl_dev_spark.functions.udfs import to_number_expr, to_number_py
+
+    texts: list = []
+
+    @given(s=number_texts)
+    @settings(max_examples=1000, deadline=None, database=None)
+    def draw(s):
+        texts.append(s)
+
+    draw()
+    assert len(texts) >= 1000
+    df = spark.createDataFrame([(s,) for s in texts], "s string")
+    got = [r[0] for r in df.select(to_number_expr("s")).collect()]
+    bad = [(s, g, to_number_py(s)) for s, g in zip(texts, got) if g != to_number_py(s)]
+    assert bad == [], bad[:10]

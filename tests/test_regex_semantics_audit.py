@@ -58,24 +58,6 @@ WRAP_DOT_ALLOWED = {
     "bpe_learn_merges",
 }
 
-# Staged-but-unregistered oracle SQL builders (ADVICE r12 item 3): the
-# catalog scan above cannot see these until their @query lands, so a
-# regression introduced into a staged oracle pre-registration would
-# otherwise be invisible to the audit.  Explicit list — extend it when
-# a new candidate is staged, prune when one registers (the catalog
-# scan takes over).
-STAGED_ORACLE_BUILDERS = (
-    # r14 pruned _curation_funnel_oracle_sql / _dsir_oracle_sql /
-    # _BUCKET_AUDIT_ORACLE_R14 — all three registered (the catalog
-    # scans above cover them now).
-    "_kmv_overlap_oracle_sql",  # r15 replacement candidate (KMV overlap)
-    "_streaming_funnel_oracle_sql",  # r15 candidate (streaming funnel)
-    "_substring_spans_oracle_sql",  # r16 candidate (substring spans)
-)
-STAGED_BACKSLASH_S_ALLOWED: set[str] = set()
-STAGED_WRAP_DOT_ALLOWED: set[str] = set()
-
-
 def test_oracle_backslash_s_inventory():
     got = {
         name
@@ -101,39 +83,6 @@ def test_oracle_wrap_dot_inventory():
         "both engines (the bpe_learn_merges recipe), or allowlist with the "
         "input precondition."
     )
-
-
-def test_staged_oracle_inventory():
-    """ADVICE r12 item 3: the catalog scans are blind to oracle SQL
-    that is built but not yet registered (a staged candidate's @query
-    has not landed), so a regression introduced into a staged oracle
-    pre-registration would otherwise slip past the audit until its
-    registration round.  Scan the explicit staged list with the same
-    two construct checks; a missing name fails loudly so the list
-    cannot silently rot when a candidate is renamed or registered."""
-    from real_estate_etl_dev_spark.plans import llmdata as L
-
-    for name in STAGED_ORACLE_BUILDERS:
-        obj = getattr(L, name, None)
-        assert obj is not None, (
-            f"staged oracle {name} no longer exists in plans/llmdata.py — "
-            "if it registered, move its coverage to the catalog allowlists "
-            "and prune it here; if renamed, update STAGED_ORACLE_BUILDERS."
-        )
-        sql = obj() if callable(obj) else obj
-        assert isinstance(sql, str) and sql.strip(), name
-        if "\\s" in sql:
-            assert name in STAGED_BACKSLASH_S_ALLOWED, (
-                f"staged oracle {name} uses regex \\s — spell the class "
-                "out on BOTH engines, or allowlist with a justification."
-            )
-        if "(.)" in sql:
-            assert name in STAGED_WRAP_DOT_ALLOWED, (
-                f"staged oracle {name} uses the (.) wrap — pre-strip the "
-                "Java-'.'-skipped code points on both engines (the "
-                "bpe_learn_merges recipe), or allowlist with the input "
-                "precondition."
-            )
 
 
 def test_the_divergences_are_real():
