@@ -216,6 +216,10 @@ def main() -> None:
     # ml_region_prediction is warmed too: its ML-stage codegen JIT is a
     # one-time session cost (~4s) that would otherwise be charged to
     # the timed run; steady-state plan cost is ~2s (BENCHNOTES).
+    # A warm-up query whose build reads only schema-cached inputs (e.g.
+    # revenue_by_nation, after schema_inventory) stores its analyzed
+    # plan (plans.catalog.query), so its timed run reuses it and skips
+    # the Python build and the analysis; its jobs still all run.
     def _cpu_stat() -> tuple[int, int]:
         """(steal_jiffies, total_jiffies) from /proc/stat line 1;
         (0, 0) when unreadable so the stamp degrades, never crashes.

@@ -39,11 +39,17 @@ from pyspark.sql import DataFrame
 # can't inflate the timed run's number).
 SETUP_SECONDS: dict[str, float] = {}
 
+# setup_span blocks opened so far in this process: a catalog build that
+# opens one builds a fixture, so its plan is never memoized.
+SPANS_OPENED = 0
+
 
 @contextmanager
 def setup_span(name: str):
     """Time the enclosed fixture-construction block and record it
     under ``name``.  One span per query invocation."""
+    global SPANS_OPENED
+    SPANS_OPENED += 1
     t0 = time.perf_counter()
     try:
         yield

@@ -15,6 +15,10 @@ fixture adds only a scan+filter on each side.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -286,8 +290,17 @@ def merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The publish dir of the last streaming_merge_scd1 call (its result
-# frame reads from it lazily); the next call deletes it.
+# frame reads from it lazily); the next call, or interpreter exit,
+# deletes it.
 _stream_merge_out: str | None = None
+
+
+@atexit.register
+def _remove_stream_merge_out() -> None:
+    global _stream_merge_out
+    if _stream_merge_out is not None:
+        shutil.rmtree(_stream_merge_out, ignore_errors=True)
+        _stream_merge_out = None
 
 
 @query("streaming_merge_scd1", _merge_oracle_sql(), survey="§2.12,J9,R4,S14")
@@ -310,17 +323,13 @@ def streaming_merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``collect_local`` instead pushed ~14.5k rows through the driver and
     cost ~1 s per warm call on local[4] at scale 0.01.  Each call
     deletes the previous call's ``out_dir``, so the returned frame is
-    valid until the next call.  The drop files and checkpoint are
-    scratch."""
-    import shutil
-    import tempfile
-
+    valid until the next call; the last one is deleted at interpreter
+    exit.  The drop files and checkpoint are scratch."""
     from ..benchmeta import scratch_dir, setup_span
     from ..streaming.ingest import run_merge_sink, stream_source
 
     global _stream_merge_out
-    if _stream_merge_out is not None:
-        shutil.rmtree(_stream_merge_out, ignore_errors=True)
+    _remove_stream_merge_out()
     cur = current_fixture(spark, sf_dir)
     stg = staging_fixture(spark, sf_dir)
     out_dir = _stream_merge_out = tempfile.mkdtemp(prefix="stream_merge_out_")
@@ -372,7 +381,6 @@ def merge_bucketed_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds the output range Exchange every certified query pays — the
     no-Exchange invariant is asserted on the merge plan itself, where
     the scale claim lives."""
-    import shutil
     from urllib.parse import urlparse
 
     from ..operators.layout import bucketed_merge_ready, write_bucketed

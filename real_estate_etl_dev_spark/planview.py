@@ -9,7 +9,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-PHASES = {"logical": "logical", "optimized": "optimizedPlan", "executed": "executedPlan"}
+PHASES = {
+    "logical": "logical",
+    "analyzed": "analyzed",
+    "optimized": "optimizedPlan",
+    "executed": "executedPlan",
+}
 
 # physical exchange operators: a shuffle, a broadcast, or a reuse of one
 EXCHANGES = frozenset({"ShuffleExchangeExec", "BroadcastExchangeExec", "ReusedExchangeExec"})
@@ -57,6 +62,17 @@ def plan_nodes(df: DataFrame, phase: str = "executed") -> list:
 def node_classes(df: DataFrame, phase: str = "executed") -> list[str]:
     """:func:`plan_nodes` as class names, same order."""
     return [node_class(n) for n in plan_nodes(df, phase)]
+
+
+def file_roots(node) -> list[str] | None:
+    """Root paths (URI path part, e.g. ``/data/orders.parquet``) of a
+    logical ``LogicalRelation`` over files; ``None`` for any other node."""
+    if node_class(node) != "LogicalRelation":
+        return None
+    relation = node.relation()
+    if node_class(relation) != "HadoopFsRelation":
+        return None
+    return [p.toUri().getPath() for p in seq(relation.location().rootPaths())]
 
 
 def _file_scans(df: DataFrame) -> list:

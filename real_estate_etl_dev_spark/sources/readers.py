@@ -13,6 +13,8 @@ allowlist (scans, checkpoints, projections, filters).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +50,53 @@ _SCHEMA_CONFS = (
 # path -> (signature, footer-inferred schema); one entry per input path.
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
+# Open ``record_reads`` blocks, innermost last: each maps the absolute
+# path of every parquet input read in the block to its signature.
+_RECORDINGS: list[dict[str, tuple]] = []
+
+
+def input_signature(path: str) -> tuple | None:
+    """Stat signature of one local input path; ``None`` when ``os.stat``
+    cannot see it (not local, or gone).
+
+    A file is signed by ``(st_ino, st_size, st_mtime_ns)``.  A directory
+    is signed by its leaf files, each as ``(relative name, st_ino,
+    st_size, st_mtime_ns)``, sorted: rewriting a part file inside a kept
+    directory changes it, not only adding, removing or renaming one.
+    Rewrites that keep the inode and the size within one mtime tick of
+    the filesystem clock are not seen."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        leaves = []
+        for root, _dirs, files in os.walk(path, followlinks=True):
+            for name in files:
+                full = os.path.join(root, name)
+                f = os.stat(full)
+                rel = os.path.relpath(full, path)
+                leaves.append((rel, f.st_ino, f.st_size, f.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(leaves))
+
+
+@contextmanager
+def record_reads() -> Iterator[dict[str, tuple]]:
+    """Collect ``{absolute path: input_signature}`` of every parquet
+    input read through this module inside the block (the first
+    signature seen per path).  Blocks nest: a read is recorded in every
+    open one.  An input ``os.stat`` cannot see is not recorded.  Not
+    thread-safe: blocks open in two threads may record each other's
+    reads or miss their own, which only adds inputs to a prepared
+    plan's key or leaves the plan unstored."""
+    reads: dict[str, tuple] = {}
+    _RECORDINGS.append(reads)
+    try:
+        yield reads
+    finally:
+        _RECORDINGS.pop()
+
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the footer schema once
@@ -59,18 +108,17 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     (not local) reads uncached.  Only the schema is cached: every call
     builds a fresh relation (fresh attribute IDs, so self-joins
     resolve) and a fresh file listing."""
-    try:
-        st = os.stat(path)
-    except OSError:
+    sig = input_signature(path)
+    if sig is None:
         return spark.read.parquet(path)
-    sig = (st.st_ino, st.st_size, st.st_mtime_ns) + tuple(
-        spark.conf.get(k) for k in _SCHEMA_CONFS
-    )
+    for reads in _RECORDINGS:
+        reads.setdefault(os.path.abspath(path), sig)
+    key = (sig, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
     cached = _SCHEMAS.get(path)
-    if cached is not None and cached[0] == sig:
+    if cached is not None and cached[0] == key:
         return spark.read.schema(cached[1]).parquet(path)
     df = spark.read.parquet(path)
-    _SCHEMAS[path] = (sig, df.schema)
+    _SCHEMAS[path] = (key, df.schema)
     return df
 
 
@@ -99,14 +147,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the relation carries the identical ``ts`` type and the same
     ``withColumn`` branch runs on a hit as on a miss.
 
-    The schema cache is keyed by path and checked against the file's
-    ``(st_ino, st_size, st_mtime_ns)`` and the schema-affecting parquet
-    confs (``_SCHEMA_CONFS``); it relies on the input zone being a local
+    The schema cache is keyed by path and checked against the path's
+    ``input_signature`` and the schema-affecting parquet confs
+    (``_SCHEMA_CONFS``); it relies on the input zone being a local
     filesystem (TESTDATA.md).  Rewriting a single-file table in place,
-    or deleting and recreating a directory table, changes the stat
-    signature and re-infers on the next call.  Rewriting a part file
-    inside a directory table that is kept does NOT: a directory's
-    signature changes only when entries are added, removed or renamed.
+    rewriting a part file of a directory table, or deleting and
+    recreating the directory changes the signature and re-infers on the
+    next call.
+
+    The same signature keys the catalog's prepared plans
+    (``plans.catalog.query``): the path and signature of every table
+    loaded here inside a catalog build are recorded (``record_reads``),
+    and a later request reuses the build's analyzed plan, file listing
+    included, only while every recorded signature still matches.  Read
+    the inputs of a catalog query through this function, or the query
+    is never memoized.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")

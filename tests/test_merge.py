@@ -406,10 +406,11 @@ def test_pit_asof_formulation_matches_interval_join(spark):
     assert asof == {(s, n) for s, n in interval}
 
 
-def test_streaming_merge_keeps_one_output_dir(spark, sf_dir):
+def test_streaming_merge_keeps_one_output_dir(spark, sf_dir, tmp_path, monkeypatch):
     """Each streaming_merge_scd1 call deletes the previous call's
     publish dir, so N calls leave at most one; the last frame still
-    reads back the full merge."""
+    reads back the full merge.  The temp root is the test's own, so a
+    process running the query beside it cannot add dirs to the count."""
     import glob
     import tempfile
 
@@ -417,11 +418,29 @@ def test_streaming_merge_keeps_one_output_dir(spark, sf_dir):
 
     from tests.oracle_harness import compare
 
-    pattern = f"{tempfile.gettempdir()}/stream_merge_out_*"
-    before = set(glob.glob(pattern))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pattern = f"{tmp_path}/stream_merge_out_*"
     q = CATALOG["streaming_merge_scd1"]
     for _ in range(3):
         df = q.fn(spark, sf_dir)
-    assert len(set(glob.glob(pattern)) - before) <= 1
+    assert len(glob.glob(pattern)) <= 1
     problems = compare(spark, sf_dir, lambda s, d: df, q.oracle)
     assert not problems, "; ".join(problems)
+
+
+def test_streaming_merge_output_dir_removed_at_exit(tmp_path):
+    """The last call's publish dir does not outlive the interpreter."""
+    import os
+    import subprocess
+    import sys
+
+    out = tmp_path / "stream_merge_out_last"
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"")
+    code = (
+        "import real_estate_etl_dev_spark.plans.merging as m; "
+        f"m._stream_merge_out = {str(out)!r}"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True, timeout=120)
+    assert not out.exists()

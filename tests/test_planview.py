@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from real_estate_etl_dev_spark.planview import node_classes
+from real_estate_etl_dev_spark.planview import file_roots, node_classes, plan_nodes
 from real_estate_etl_dev_spark.sources.readers import fan_out, load_table
 
 
@@ -38,9 +38,28 @@ def test_walk_enters_adaptive_plan_and_query_stages(spark):
 def test_phases(spark):
     df = spark.range(10).filter(F.col("id") > 3).select("id")
     assert "Filter" in node_classes(df, "logical")
+    assert node_classes(df, "analyzed") == ["Project", "Filter", "Range"]
     assert node_classes(df, "optimized") == ["Filter", "Range"]
     with pytest.raises(ValueError, match="unknown plan phase"):
         node_classes(df, "physical")
+
+
+def test_analyzed_walk_enters_subqueries_and_reads_file_roots(spark, sf_dir):
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation")
+    df = orders.filter(
+        F.col("o_custkey") > nation.agg(F.max("n_nationkey")).scalar()
+    )
+    nodes = plan_nodes(df, "analyzed")
+    leaves = [n for n in nodes if n.children().isEmpty()]
+    # the Filter's subquery is walked before its child
+    assert [file_roots(n) for n in leaves] == [
+        [f"{sf_dir}/nation.parquet"],
+        [f"{sf_dir}/orders.parquet"],
+    ]
+    # not a file relation
+    assert file_roots(nodes[0]) is None
+    assert file_roots(plan_nodes(spark.range(3), "analyzed")[0]) is None
 
 
 def _spreads(df) -> bool:

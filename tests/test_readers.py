@@ -17,7 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from real_estate_etl_dev_spark.planview import scan_metadata
-from real_estate_etl_dev_spark.sources.readers import load_table
+from real_estate_etl_dev_spark.sources.readers import input_signature, load_table
 from tests.conftest import newest_job_id
 
 INSTANTS = [
@@ -152,6 +152,27 @@ def test_rewritten_table_is_reinferred(spark, tmp_path):
     assert _ts_strings(new) == [
         t.strftime("%Y-%m-%d %H:%M:%S.%f") for t in INSTANTS
     ]
+
+
+def test_part_file_rewritten_in_kept_directory_is_reinferred(spark, tmp_path):
+    """A directory table is signed by its leaf files: rewriting its one
+    part file in place, with the directory kept, changes the signature,
+    so the next load returns the new schema and the new rows."""
+    part_dir = tmp_path / "events.parquet"
+    _write_events(tmp_path / "src", pa.timestamp("us", tz="UTC"))
+    table = pq.read_table(str(tmp_path / "src" / "events.parquet"))
+    part_dir.mkdir()
+    pq.write_table(table, str(part_dir / "part-00000.parquet"))
+    sig = input_signature(str(part_dir))
+    old = load_table(spark, str(tmp_path), "events")
+    assert "extra" not in old.columns
+    pq.write_table(
+        table.append_column("extra", pa.array([7, 8, 9], type=pa.int32())),
+        str(part_dir / "part-00000.parquet"),
+    )
+    assert input_signature(str(part_dir)) != sig
+    new = load_table(spark, str(tmp_path), "events")
+    assert [r.extra for r in new.orderBy("event_id").collect()] == [7, 8, 9]
 
 
 def test_cached_loads_self_join(spark, sf_dir):
