@@ -279,7 +279,9 @@ def lease_years_cascade(c: Column | str, current_year: int) -> Column:
 def _find_bedrooms_in_description_py(text):
     """ref func.py:870-881: inside the first ``N …bedroom`` span, pick
     the number whose own ``N.*?bedroom`` span starts closest to the
-    word.  ('bedroom' gate is case-sensitive there; preserved.)"""
+    word.  ('bedroom' gate is case-sensitive there; preserved.  The
+    span is found case-insensitively, so the searches inside it are
+    too: a span like ``2 BEDROOM`` has no lower-case anchor.)"""
     if text is None or "bedroom" not in text:
         return None
     m = re.search(r"\b\d{1,2}.*?bedroom", text, re.IGNORECASE)
@@ -289,10 +291,10 @@ def _find_bedrooms_in_description_py(text):
     numbers = re.findall(r"\d{1,2}", seg)
     if not numbers:
         return None
-    anchor = re.search(r"bedroom", seg).start()
+    anchor = re.search(r"bedroom", seg, re.IGNORECASE).start()
     dists = []
     for n in numbers:
-        hit = re.search(f"({n}).*?bedroom", seg)
+        hit = re.search(f"({n}).*?bedroom", seg, re.IGNORECASE)
         dists.append(anchor - hit.start() if hit else float("inf"))
     return int(numbers[dists.index(min(dists))])
 

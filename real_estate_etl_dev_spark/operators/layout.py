@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..benchmeta import local_frame
+
 
 def write_bucketed(
     df: DataFrame,
@@ -308,7 +310,7 @@ def footer_stats(
                 out["col_max"].append(str(max(maxs)) if maxs else None)
             yield pd.DataFrame(out)
 
-    paths = spark.createDataFrame([(f,) for f in files], "file string")
+    paths = local_frame(spark, [(f,) for f in files], "file string")
     # one footer read is microseconds of work: let every core take a
     # slice instead of one task owning the whole listing
     n_slices = max(1, min(len(files), spark.sparkContext.defaultParallelism))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..benchmeta import local_frame
 from ..sources.readers import fan_out
 
 
@@ -122,7 +123,7 @@ def cosine_topk(
     )
     spark = corpus.sparkSession
     if len(q_pdf) == 0:
-        scored = spark.createDataFrame([], out_schema)
+        scored = local_frame(spark, [], out_schema)
     else:
         qids = q_pdf[id_col].to_numpy()
         qm = np.stack([np.asarray(v) for v in q_pdf[vec_col]])
@@ -230,7 +231,7 @@ def cosine_prefix_scores(
     q_pdf = _collect_query_batch(queries, id_col, vec_col, "cosine_prefix_scores")
     spark = corpus.sparkSession
     if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # ADVICE r14: a dim beyond the vector width would otherwise raise
     # KeyError(out[d]) deep inside the executor — and a too-SHORT max
     # dim would silently hand callers a prefix score as the "full"
@@ -450,8 +451,8 @@ def ivf_index(
     centers = [
         (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    centers_df = corpus.sparkSession.createDataFrame(
-        centers, "__cell int, __center array<double>"
+    centers_df = local_frame(
+        corpus.sparkSession, centers, "__cell int, __center array<double>"
     )
     return assigned, centers_df
 

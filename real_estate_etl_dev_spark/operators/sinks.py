@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..benchmeta import local_frame
+
 
 def append_parquet(
     df: DataFrame, path: str, partition_by: tuple[str, ...] = ()
@@ -87,7 +89,8 @@ def run_report(
     elapsed_time_seconds: float,
 ) -> DataFrame:
     """S17: the run-report row (ref models/report.py:7-17 shape)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 source,

@@ -162,8 +162,14 @@ def lease_bedroom_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F24/F29/C6: the lease-year mining family (four strategies + the
     coalesce cascade) and both bedroom extractors; year math pinned to
     current_year=2026 (ref func.py:396-447,499-624,760-764,870-881;
-    SURVEY §7.4 determinism note)."""
-    d = listing_fixture(spark, sf_dir)
+    SURVEY §7.4 determinism note).
+
+    The fixture is sorted BEFORE the pandas-UDF projection: the range
+    sort's sampling job then reads only the fixture, and the UDFs run
+    once, in the map stage after the exchange.  Projecting first would
+    make the sampling job evaluate all five UDFs over every row and
+    the map stage evaluate them again."""
+    d = listing_fixture(spark, sf_dir).orderBy("key")
     desc = F.col("description")
     return d.select(
         "key",
@@ -174,7 +180,7 @@ def lease_bedroom_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
         fx.lease_years_cascade(desc, CURRENT_YEAR).alias("cascade_ly"),
         fx.find_bedrooms(desc).alias("bedrooms"),
         fx.find_bedrooms_in_description_udf(desc).alias("bedrooms_near"),
-    ).orderBy("key")
+    )
 
 
 @query(

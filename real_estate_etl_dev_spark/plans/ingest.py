@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import functions as fx
+from ..benchmeta import local_frame
 from ..operators.projection import Field, project_fields, rename_and_derive
 from ..planview import partition_filter_columns
 from ..sources.readers import load_table
@@ -324,7 +325,8 @@ def layout_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         disjoint = all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:]))
         rows_range = spark.read.parquet(dst_r).count()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("compact", files_in, files_compact, rows_compact == n_rows, True),
             ("range_sort", files_in, len(rs_files), rows_range == n_rows, disjoint),

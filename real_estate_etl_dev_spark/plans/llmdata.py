@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..benchmeta import local_frame
 from ..operators.dedup import (
     combined_bucket_audit,
     connected_components,
@@ -3378,7 +3379,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dim")
         .agg(F.count(F.lit(1)).cast("long").alias("funnel_hits_at5"))
     )
-    dims_df = spark.createDataFrame([(d,) for d in dims], "dim long")
+    dims_df = local_frame(spark, [(d,) for d in dims], "dim long")
     guard = F.col("n_queries") > 0
     return (
         dims_df.join(direct, "dim", "left")
@@ -4472,7 +4473,7 @@ def bloom_filter_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     grid = F.broadcast(
-        spark.createDataFrame(list(_BLOOM_CONFIGS), "m long, k long")
+        local_frame(spark, _BLOOM_CONFIGS, "m long, k long")
     )
     tall = orders.select(
         F.col("o_orderkey").alias("key"),
@@ -4739,7 +4740,8 @@ def bloom_sizing_design(spark: SparkSession, sf_dir: str) -> DataFrame:
         m, k = bloom_sizing(n_design, p)
         predicted = round((1 - math.exp(-(k * n_design) / m)) ** k, 6)
         grid_rows.append((cfg, n_design, float(p), m, k, n_load, predicted))
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         grid_rows,
         "cfg string, n_design long, target_fp double, m long, k long,"
         " n_load long, predicted_fp double",

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..benchmeta import local_frame
 from ..operators.asof import asof_join, sessionize
 from .catalog import query, T
 
@@ -362,7 +363,7 @@ def price_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregation.  Never run an inequality join with two unbounded
     sides — bin to an equi-key first."""
     orders = T(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(_BANDS, "band string, lo long, hi long")
+    bands = local_frame(spark, _BANDS, "band string, lo long, hi long")
     p = F.col("o_totalprice")
     return (
         orders.join(

@@ -35,6 +35,25 @@ def node_class(node) -> str:
     return node.getClass().getSimpleName()
 
 
+def plan_root(df: DataFrame, phase: str = "executed"):
+    """The JVM root plan node of ``df`` at ``phase`` (a ``PHASES`` key)."""
+    if phase not in PHASES:
+        raise ValueError(f"unknown plan phase {phase!r}; expected one of {list(PHASES)}")
+    return getattr(df._jdf.queryExecution(), PHASES[phase])()
+
+
+def subplans(plan) -> list:
+    """``plan`` and the root of every subquery plan below it, at any
+    depth (``QueryPlan.subqueriesAll``), without walking the tree."""
+    return [plan, *seq(plan.subqueriesAll())]
+
+
+def leaves(plan) -> list:
+    """The childless nodes of ``plan``'s tree, subqueries not entered
+    (``TreeNode.collectLeaves``)."""
+    return seq(plan.collectLeaves())
+
+
 def plan_nodes(df: DataFrame, phase: str = "executed") -> list:
     """Pre-order JVM plan nodes of ``df`` at ``phase`` (a ``PHASES`` key).
 
@@ -42,9 +61,7 @@ def plan_nodes(df: DataFrame, phase: str = "executed") -> list:
     plan before the first action, final plan after),
     ``*QueryStageExec.plan()``, else ``innerChildren()`` (subqueries)
     then ``children()``, as ``explain`` prints them.  Nothing executes."""
-    if phase not in PHASES:
-        raise ValueError(f"unknown plan phase {phase!r}; expected one of {list(PHASES)}")
-    out, todo = [], [getattr(df._jdf.queryExecution(), PHASES[phase])()]
+    out, todo = [], [plan_root(df, phase)]
     while todo:
         node = todo.pop()
         out.append(node)

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_estate_etl_dev_spark import functions as fx
+from real_estate_etl_dev_spark.functions.udfs import _find_bedrooms_in_description_py
 
 YEAR = 2026
 
@@ -145,6 +146,14 @@ def test_bedrooms(spark):
         3,
         4,
         None,
+        None,
+    ]
+    # the first ``N …bedroom`` span is matched case-insensitively, so an
+    # upper-case span must not crash the searches inside it
+    text = "2 BEDROOM villa, 3 bedroom"
+    assert _find_bedrooms_in_description_py(text) == 2
+    assert run1(spark, fx.find_bedrooms_in_description_udf, [text, "2 BEDROOM"]) == [
+        2,
         None,
     ]
 

@@ -9,6 +9,8 @@ one helper.
   ``streaming.ingest.run_available_now``;
 * environment reads (``os.environ`` / ``os.getenv``) only in
   ``session``;
+* driver-local frames (``createDataFrame``) only in
+  ``benchmeta.collect_local`` and ``benchmeta.local_frame``;
 * every top-level definition in ``plans/`` is a registered ``@query``
   or is used by the package.
 
@@ -46,7 +48,8 @@ def _sites() -> dict[str, set[str]]:
                 on_conf = isinstance(node.value, ast.Attribute) and node.value.attr == "conf"
                 key = f"conf.{key}" if on_conf else None
             if key in ("queryExecution", "explainString", "conf.set",
-                       "conf.unset", "awaitTermination", "environ", "getenv"):
+                       "conf.unset", "awaitTermination", "environ", "getenv",
+                       "createDataFrame"):
                 where = self.stack[-1] if self.stack else "<module>"
                 sites.setdefault(key, set()).add(f"{self.rel}:{where}")
             self.generic_visit(node)
@@ -83,6 +86,14 @@ def test_env_reads_only_in_session():
         s.split(":")[0] for call in ("environ", "getenv") for s in sites.get(call, ())
     }
     assert files == {"session.py"}, files
+
+
+def test_local_frames_only_in_benchmeta():
+    """A ``createDataFrame`` of a Python list starts Python workers;
+    the two helpers build a ``LocalRelation`` without one."""
+    assert _sites().get("createDataFrame") == {
+        "benchmeta.py:collect_local", "benchmeta.py:local_frame"
+    }
 
 
 def _is_query(node: ast.AST) -> bool:

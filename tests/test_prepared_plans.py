@@ -161,6 +161,14 @@ INELIGIBLE = {
     "nondeterministic": lambda spark, sf: load_table(spark, sf, "orders").select(
         F.rand(1).alias("r")
     ),
+    # deterministic on the outer tree, nondeterministic in a subquery
+    "nondeterministic_subquery": lambda spark, sf: load_table(spark, sf, "region").filter(
+        F.col("r_regionkey")
+        <= load_table(spark, sf, "nation")
+        .filter(F.rand(1) < 0.5)
+        .select(F.max("n_regionkey"))
+        .scalar()
+    ),
     # a leaf that is neither a file relation nor a constant
     "rdd_leaf": lambda spark, sf: load_table(spark, sf, "region").localCheckpoint(
         eager=False
@@ -189,6 +197,26 @@ def test_input_read_around_readers_is_not_stored(spark, sf_dir, tmp_path):
     fn = catalog._memoized("prepared_unrecorded", build)
     _prime(fn, spark, sf_dir)
     assert not _stored("prepared_unrecorded", sf_dir)
+
+
+@pytest.mark.parametrize("around_readers", [False, True])
+def test_subquery_leaves_are_checked(spark, sf_dir, tmp_path, around_readers):
+    """A scalar subquery's leaves follow the same rule as the outer
+    plan's: read through ``sources.readers`` or the build is not stored."""
+    copy = tmp_path / "nation_copy.parquet"
+    shutil.copy(f"{sf_dir}/nation.parquet", copy)
+
+    def build(spark, sf):
+        nation = load_table(spark, sf, "nation")
+        if around_readers:
+            nation = spark.read.schema(nation.schema).parquet(str(copy))
+        top = nation.select(F.max("n_regionkey")).scalar()
+        return load_table(spark, sf, "region").filter(F.col("r_regionkey") <= top)
+
+    name = f"prepared_subquery_{around_readers}"
+    fn = catalog._memoized(name, build)
+    _prime(fn, spark, sf_dir)
+    assert _stored(name, sf_dir) is not around_readers
 
 
 @pytest.mark.parametrize(
