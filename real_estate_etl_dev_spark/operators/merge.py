@@ -26,8 +26,8 @@ Reference semantics (``/root/reference/models/listing.py:103-167``
     so a price of 0 never overwrites and a false flag never fills.
 
 The whole merge is ONE full-outer shuffle join on the key plus a
-projection — no per-row probes (the reference runs 1-3 queries per
-item).  At 100 TB both sides hash-partition on ``url``; AQE picks the
+stack of projections — no per-row probes (the reference runs 1-3
+queries per item).  At 100 TB both sides hash-partition on ``url``; AQE picks the
 join strategy and splits skew.  The change log is an in-row
 ``array<struct<field,old,new>>`` (reference ``get_changes``), so no
 second shuffle; ``explode`` it for a CDC stream.
@@ -37,10 +37,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rules import classify_tab
+from .rules import classify_tab_sql
 
 
 @dataclass(frozen=True)
@@ -76,22 +76,56 @@ MERGE_POLICIES: tuple[FieldPolicy, ...] = (
 MERGE_FIELDS = tuple(p.name for p in MERGE_POLICIES)
 
 
-def _truthy(c: Column, falsy: str) -> Column:
-    if falsy == "str":
-        return c.isNotNull() & (c != "")
-    if falsy == "num":
-        return c.isNotNull() & (c != 0)
-    if falsy == "bool":
-        return F.coalesce(c, F.lit(False))
-    return c.isNotNull()  # timestamps
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _change(name: str, old: Column, new: Column) -> Column:
-    return F.struct(
-        F.lit(name).alias("field"),
-        old.cast("string").alias("old"),
-        new.cast("string").alias("new"),
-    )
+def _v(tag: str, name: str) -> str:
+    """The kernel's private column ``__<tag>_<name>``, quoted."""
+    return _q(f"__{tag}_{name}")
+
+
+# Python truthiness per ``FieldPolicy.falsy`` class, over a SQL operand.
+_TRUTHY = {
+    "str": "({0} IS NOT NULL AND {0} != '')",
+    "num": "({0} IS NOT NULL AND {0} != 0)",
+    "bool": "coalesce({0}, false)",
+    "ts": "({0} IS NOT NULL)",
+}
+
+# The fields whose old value the availability branch rewrites before
+# their own rule reads it (see the module docstring).
+_STAGED_OLD = ("is_available", "sold_at")
+
+
+def _old(name: str) -> str:
+    """The old value ``name``'s rule compares against."""
+    return _v("old" if name in _STAGED_OLD else "c", name)
+
+
+def _rule(pol: FieldPolicy) -> tuple[str, str]:
+    """(changed, value) of one field's policy as SQL over the staged
+    columns, for a row that has both a current and a staging side."""
+    new, old, gc = _v("s", pol.name), _old(pol.name), _v("gc", pol.name)
+    generic_value = f"CASE WHEN {gc} THEN {new} ELSE {old} END"
+    if pol.kind == "availability":
+        # change logged + side effects, but the value keeps old
+        # unless staging says 'Available' (then generic rule).
+        return (
+            f"__avail OR (NOT __avail AND {gc})",
+            f"CASE WHEN __avail THEN {old} ELSE {generic_value} END",
+        )
+    if pol.kind == "price":
+        sentinel = f"{new} = -1"
+        return (
+            f"NOT ({sentinel}) AND {gc}",
+            f"CASE WHEN {sentinel} THEN {old} ELSE {generic_value} END",
+        )
+    if pol.kind == "overwrite_diff":
+        changed = f"NOT ({new} <=> {old})"
+        return changed, f"CASE WHEN {changed} THEN {new} ELSE {old} END"
+    return gc, generic_value
 
 
 def merge_listings(
@@ -116,6 +150,16 @@ def merge_listings(
     Output: key, the 19 reconciled fields, ``tab`` (re-classified when
     inserted or changed — ref property.py:104,123-125), ``is_new``,
     ``n_changes``, and ``changes: array<struct<field,old,new>>``.
+
+    The projection is a stack of SQL ``selectExpr`` stages, each naming
+    the subexpressions the next one shares, so a build makes a few
+    hundred py4j calls instead of one per Column operation.
+    ``n_changes`` sums the per-field change flags, and ``changes`` is
+    built from those flags only in the last stage, so a caller that
+    drops it never builds the change structs.  ``run_date`` enters as a
+    literal Column, never as SQL text.  Without ``staging_order_col``
+    the build calls no Column method: PySpark records the Python call
+    site of each one, a few py4j calls apiece.
     """
     if staging_order_col is not None:
         from pyspark.sql import Window
@@ -131,81 +175,83 @@ def merge_listings(
     # Plain equality (not <=>): the key is NOT NULL by contract
     # (models/listing.py:28 unique url), and null-safe equality would
     # defeat bucketed-layout exchange elimination (operators/layout.py).
-    joined = c.join(s, F.col(f"c.{key}") == F.col(f"s.{key}"), "full_outer")
+    joined = c.join(s, F.expr(f"`c`.{_q(key)} = `s`.{_q(key)}"), "full_outer")
 
-    ck = F.col(f"c.{key}")
-    sk = F.col(f"s.{key}")
-    is_new = ck.isNull()
-    has_staging = sk.isNotNull()
-    first_of_month = F.date_trunc("month", F.lit(run_date).cast("timestamp"))
+    # 1. The join's inputs under private names: a current table may
+    #    carry other columns, e.g. a previous merge's outputs.
+    old_tab = "`c`.`tab`" if "tab" in current.columns else "'DATA'"
+    inputs = [f"`c`.{_q(key)} AS __ck", f"`s`.{_q(key)} AS __sk", f"{old_tab} AS __c_tab"]
+    for side in "cs":
+        inputs += [f"`{side}`.{_q(f)} AS {_v(side, f)}" for f in MERGE_FIELDS]
+    df = joined.selectExpr(*inputs).withColumn("__run_date", F.lit(run_date))
 
-    def cur(name: str) -> Column:
-        return F.col(f"c.{name}")
-
-    def stg(name: str) -> Column:
-        return F.col(f"s.{name}")
-
-    # -- staged mutations the later fields observe (reference mutates
-    #    self in field order; old values are re-read per field) -------
-    avail_cond = has_staging & ~is_new & ~stg("availability").eqNullSafe("Available")
-    sold_at_mid = F.when(avail_cond, first_of_month).otherwise(cur("sold_at"))
-    is_avail_mid = F.when(avail_cond, F.lit(False)).otherwise(cur("is_available"))
-
-    merged: dict[str, Column] = {}
-    changes: list[Column] = []
-
-    for pol in MERGE_POLICIES:
-        new_v = stg(pol.name)
-        old_v = {
-            "sold_at": sold_at_mid,
-            "is_available": is_avail_mid,
-        }.get(pol.name, cur(pol.name))
-        # the generic fill-or-overwrite rule the other kinds fall back on
-        generic_changed = (_truthy(new_v, pol.falsy) & ~_truthy(old_v, pol.falsy)) | (
-            _truthy(new_v, pol.falsy) & _truthy(old_v, pol.falsy) & (new_v != old_v)
-        )
-        generic_value = F.when(generic_changed, new_v).otherwise(old_v)
-
-        if pol.kind == "availability":
-            # change logged + side effects, but the value keeps old
-            # unless staging says 'Available' (then generic rule).
-            changed = avail_cond | (~avail_cond & generic_changed)
-            value = F.when(avail_cond, old_v).otherwise(generic_value)
-        elif pol.kind == "price":
-            sentinel = new_v == -1
-            changed = ~sentinel & generic_changed
-            value = F.when(sentinel, old_v).otherwise(generic_value)
-        elif pol.kind == "overwrite_diff":
-            changed = ~new_v.eqNullSafe(old_v)
-            value = F.when(changed, new_v).otherwise(old_v)
-        else:  # generic
-            changed, value = generic_changed, generic_value
-
-        changed = has_staging & ~is_new & F.coalesce(changed, F.lit(False))
-        merged[pol.name] = (
-            F.when(is_new, new_v).when(~has_staging, cur(pol.name)).otherwise(value)
-        )
-        changes.append(F.when(changed, _change(pol.name, old_v, new_v)))
-
-    changes_arr = F.array_compact(F.array(*changes))
-    n_changes = F.size(changes_arr).cast("long")
-    any_change = n_changes > 0
-
-    tab_now = classify_tab(
-        merged["price"], merged["currency"], merged["property_type"]
+    # 2. Row kind, the availability branch's condition and its sold_at
+    #    stamp, the first of the run month.
+    df = df.selectExpr(
+        "*",
+        "date_trunc('month', CAST(__run_date AS TIMESTAMP)) AS __run_month",
+        "__ck IS NULL AS __is_new",
+        "__sk IS NOT NULL AS __has_stg",
+        "__sk IS NOT NULL AND __ck IS NOT NULL"
+        f" AND NOT ({_v('s', 'availability')} <=> 'Available') AS __avail",
     )
-    has_tab = "tab" in current.columns
-    old_tab = cur("tab") if has_tab else F.lit("DATA")
-    tab = F.when(is_new | any_change, tab_now).otherwise(old_tab)
-
-    out_key = F.coalesce(ck, sk).alias(key)
-    return joined.select(
-        out_key,
-        *[merged[name].alias(name) for name in MERGE_FIELDS],
-        tab.alias("tab"),
-        is_new.alias("is_new"),
-        n_changes.alias("n_changes"),
-        changes_arr.alias("changes"),
+    # 3. Staged mutations the later fields observe (the reference
+    #    mutates self in field order; old values are re-read per field).
+    df = df.selectExpr(
+        "*",
+        f"CASE WHEN __avail THEN __run_month ELSE {_v('c', 'sold_at')} END"
+        f" AS {_v('old', 'sold_at')}",
+        f"CASE WHEN __avail THEN false ELSE {_v('c', 'is_available')} END"
+        f" AS {_v('old', 'is_available')}",
+    )
+    # 4. Truthiness of each field's new and old value.
+    truthy = []
+    for pol in MERGE_POLICIES:
+        t = _TRUTHY[pol.falsy]
+        truthy += [
+            f"{t.format(_v('s', pol.name))} AS {_v('tn', pol.name)}",
+            f"{t.format(_old(pol.name))} AS {_v('to', pol.name)}",
+        ]
+    df = df.selectExpr("*", *truthy)
+    # 5. The generic fill-or-overwrite rule the other kinds fall back on.
+    generic = []
+    for n in MERGE_FIELDS:
+        tn, to = _v("tn", n), _v("to", n)
+        generic.append(
+            f"({tn} AND NOT {to}) OR ({tn} AND {to} AND {_v('s', n)} != {_old(n)})"
+            f" AS {_v('gc', n)}"
+        )
+    df = df.selectExpr("*", *generic)
+    # 6. Per field: the logged-change flag and the merged value.
+    flags_values = []
+    for pol in MERGE_POLICIES:
+        n = pol.name
+        changed, value = _rule(pol)
+        flags_values += [
+            f"__has_stg AND NOT __is_new AND coalesce({changed}, false) AS {_v('chg', n)}",
+            f"CASE WHEN __is_new THEN {_v('s', n)} WHEN NOT __has_stg THEN {_v('c', n)}"
+            f" ELSE {value} END AS {_q(n)}",
+        ]
+    df = df.selectExpr("*", *flags_values)
+    # 7. The change count.
+    df = df.selectExpr(
+        "*",
+        " + ".join(f"CAST({_v('chg', n)} AS BIGINT)" for n in MERGE_FIELDS) + " AS __n",
+    )
+    # 8. The output; ``changes`` is read only by callers that keep it.
+    changes = ", ".join(
+        f"CASE WHEN {_v('chg', n)} THEN named_struct('field', '{n}',"
+        f" 'old', CAST({_old(n)} AS STRING), 'new', CAST({_v('s', n)} AS STRING)) END"
+        for n in MERGE_FIELDS
+    )
+    tab_now = classify_tab_sql(*map(_q, ("price", "currency", "property_type")))
+    return df.selectExpr(
+        f"coalesce(__ck, __sk) AS {_q(key)}",
+        *map(_q, MERGE_FIELDS),
+        f"CASE WHEN __is_new OR __n > 0 THEN {tab_now} ELSE __c_tab END AS tab",
+        "__is_new AS is_new",
+        "__n AS n_changes",
+        f"array_compact(array({changes})) AS changes",
     )
 
 

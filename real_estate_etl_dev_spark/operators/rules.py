@@ -71,17 +71,21 @@ def _truthy_num(c: Column) -> Column:
     return c.isNotNull() & (c != 0)
 
 
-def classify_tab(
-    price: Column | str, currency: Column | str, property_type: Column | str
-) -> Column:
-    """R1: LUXURY / ALL LAND / DATA tab (ref models/listing.py:87-101)."""
-    p, cur, pt = _s(price), _s(currency), _s(property_type)
+def classify_tab_sql(price: str, currency: str, property_type: str) -> str:
+    """R1: LUXURY / ALL LAND / DATA tab (ref models/listing.py:87-101)
+    as SQL text over three SQL expressions, e.g. quoted column names."""
     return (
-        F.when(p.isNotNull() & (p >= LUXURY_IDR_THRESHOLD) & (cur == "IDR"), "LUXURY LISTINGS")
-        .when(p.isNotNull() & (p >= LUXURY_USD_THRESHOLD) & (cur == "USD"), "LUXURY LISTINGS")
-        .when(pt == "Land", "ALL LAND")
-        .otherwise("DATA")
+        f"CASE WHEN {price} IS NOT NULL AND {price} >= {LUXURY_IDR_THRESHOLD}"
+        f" AND {currency} = 'IDR' THEN 'LUXURY LISTINGS'"
+        f" WHEN {price} IS NOT NULL AND {price} >= {LUXURY_USD_THRESHOLD}"
+        f" AND {currency} = 'USD' THEN 'LUXURY LISTINGS'"
+        f" WHEN {property_type} = 'Land' THEN 'ALL LAND' ELSE 'DATA' END"
     )
+
+
+def classify_tab(price: str, currency: str, property_type: str) -> Column:
+    """:func:`classify_tab_sql` as a Column over three column names."""
+    return F.expr(classify_tab_sql(price, currency, property_type))
 
 
 def identify_issues(

@@ -6482,10 +6482,14 @@ def _bpe_learn_oracle_sql(rounds: int = _BPE_LEARN_ROUNDS) -> str:
     delimited corpus, count adjacent non-space pairs, take the
     (count DESC, a ASC, b ASC) argmax, apply its single-pass
     delimited replace.  Same engine-exact arithmetic as the Spark
-    plan — integer counts, ASCII-only tokens, deterministic ties."""
+    plan — integer counts, ASCII-only tokens, deterministic ties.
+
+    Every CTE is ``AS MATERIALIZED``: each round reads the previous
+    round's strings and its argmax several times, and DuckDB would
+    otherwise inline and recompute the whole chain at every reference."""
     parts = [
         r"""
-    WITH r0 AS (
+    WITH r0 AS MATERIALIZED (
       SELECT doc_id,
              regexp_replace(regexp_replace(lower(text),
                             '[_\n\r\x{0085}\x{2028}\x{2029}]', ' ', 'g'),
@@ -6496,10 +6500,10 @@ def _bpe_learn_oracle_sql(rounds: int = _BPE_LEARN_ROUNDS) -> str:
     for k in range(1, rounds + 1):
         parts.append(
             f"""
-    , tok{k} AS (
+    , tok{k} AS MATERIALIZED (
       SELECT regexp_extract_all(s, '_([^_]+)_', 1) AS t FROM r{k - 1}
     ),
-    best{k} AS (
+    best{k} AS MATERIALIZED (
       SELECT u.pr[1] AS a, u.pr[2] AS b, CAST(count(*) AS BIGINT) AS c
       FROM tok{k}, unnest(list_zip(t, t[2:])) AS u(pr)
       WHERE u.pr[2] IS NOT NULL AND u.pr[1] <> ' ' AND u.pr[2] <> ' '
@@ -6507,7 +6511,7 @@ def _bpe_learn_oracle_sql(rounds: int = _BPE_LEARN_ROUNDS) -> str:
       ORDER BY c DESC, a, b
       LIMIT 1
     ),
-    r{k} AS (
+    r{k} AS MATERIALIZED (
       SELECT doc_id,
              replace(s,
                      '_' || (SELECT a FROM best{k}) || '__' ||

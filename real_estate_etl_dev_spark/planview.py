@@ -81,6 +81,20 @@ def node_classes(df: DataFrame, phase: str = "executed") -> list[str]:
     return [node_class(n) for n in plan_nodes(df, phase)]
 
 
+def expression_classes(df: DataFrame, phase: str = "executed") -> list[str]:
+    """Class names of every expression node, at any depth, of the
+    :func:`plan_nodes` of ``df`` at ``phase``: node by node, each
+    expression tree in pre-order."""
+    out = []
+    for node in plan_nodes(df, phase):
+        todo = list(reversed(seq(node.expressions())))
+        while todo:
+            expr = todo.pop()
+            out.append(node_class(expr))
+            todo.extend(reversed(seq(expr.children())))
+    return out
+
+
 def file_roots(node) -> list[str] | None:
     """Root paths (URI path part, e.g. ``/data/orders.parquet``) of a
     logical ``LogicalRelation`` over files; ``None`` for any other node."""

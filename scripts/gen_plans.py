@@ -53,7 +53,9 @@ SHOWCASE = [
     (
         "merge_scd1",
         "The whole SCD-1 field policy is ONE full-outer SortMergeJoin on "
-        "url plus a projection — no per-key probes, no second pass.",
+        "url plus the stacked projections of the staged merge kernel "
+        "— no per-key probes, no second pass.  The query drops "
+        "the change log, so no change struct is built.",
     ),
     (
         "asof_error_click",
