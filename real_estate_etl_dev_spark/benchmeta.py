@@ -2,7 +2,7 @@
 queries.
 
 Some certified queries must BUILD their input on disk before the
-operator under test can run: the 13 streaming queries drop parquet
+operator under test can run: the 12 streaming queries drop parquet
 files + a fresh checkpoint dir per invocation (a real deployment's
 stream source already exists); six batch queries write a fixture
 layout first (the three snapshot version stores, the fragmented zone

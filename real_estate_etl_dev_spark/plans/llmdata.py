@@ -2165,7 +2165,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.dedup import dedup_exact_keep_first, flag_corpus_dups
     from ..sources.readers import load_table
-    from ..streaming.ingest import run_available_now, stream_source
+    from ..streaming.ingest import drop_files, run_available_now
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -2192,10 +2192,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.concat(F.col("lang"), F.lit("\n"), F.col("text")).alias("__k")
 
     with scratch_dir("stream_incdedup_") as workdir:
-        drop_dir = f"{workdir}/incoming"
         sink = f"{workdir}/accepted"
         with setup_span("streaming_incremental_dedup"):
-            incoming.repartition(4).write.parquet(drop_dir)
+            stream = drop_files(incoming, f"{workdir}/incoming")
             # seed the sink with an empty frame so every batch can read it
             incoming.limit(0).write.parquet(sink)
 
@@ -2216,9 +2215,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             survivors.write.mode("append").parquet(sink)
 
-        stream = stream_source(
-            spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
-        )
         run_available_now(
             stream.writeStream.foreachBatch(do_batch), f"{workdir}/checkpoint"
         )
@@ -2758,7 +2754,9 @@ def doc_lm_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a.id AS a, b.id AS b,
            round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
                  / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-    FROM toks a JOIN toks b ON a.id < b.id
+    FROM toks a JOIN toks b
+      ON a.id < b.id
+     AND 100 * least(len(a.s), len(b.s)) >= 97 * greatest(len(a.s), len(b.s))
     WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
           / len(list_distinct(list_concat(a.s, b.s))) >= 0.97
     ORDER BY a, b
@@ -2946,7 +2944,9 @@ _SALT_CTE = f"""
     SELECT a.id AS a, b.id AS b,
            round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
                  / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-    FROM toks a JOIN toks b ON a.id < b.id
+    FROM toks a JOIN toks b
+      ON a.id < b.id
+     AND 100 * least(len(a.s), len(b.s)) >= 97 * greatest(len(a.s), len(b.s))
     WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
           / len(list_distinct(list_concat(a.s, b.s))) >= 0.97
     ORDER BY a, b
@@ -5038,7 +5038,7 @@ def streaming_ann_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prunes the scan to matching cells, at the recall measured by
     ``embedding_ann_recall_cost``."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
-    from ..streaming.ingest import run_available_now, stream_source
+    from ..streaming.ingest import drop_files, publish_batches
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -5048,27 +5048,17 @@ def streaming_ann_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 5 == 0)
 
     with scratch_dir("stream_ann_") as workdir:
-        drop_dir = f"{workdir}/queries"
-        out_dir = f"{workdir}/topk"
         with setup_span("streaming_ann_enrichment"):
-            # 4 files at 2 files/trigger => multiple real micro-batches
-            queries.repartition(4).write.parquet(drop_dir)
-
-        stream = stream_source(
-            spark, drop_dir, queries.schema, fmt="parquet", maxFilesPerTrigger=2
+            stream = drop_files(queries, f"{workdir}/queries")
+        topk = publish_batches(
+            stream,
+            lambda batch_df: cosine_topk(corpus, batch_df, k=3),
+            f"{workdir}/topk",
+            f"{workdir}/checkpoint",
         )
-
-        def publish(batch_df: DataFrame, batch_id: int) -> None:
-            cosine_topk(corpus, batch_df, k=3).write.mode("overwrite").parquet(
-                f"{out_dir}/batch={batch_id}"
-            )
-
-        run_available_now(
-            stream.writeStream.foreachBatch(publish), f"{workdir}/checkpoint"
+        out = topk.select("query_id", "neighbor_id", "cos_sim", "rank").orderBy(
+            "query_id", "rank"
         )
-        out = spark.read.parquet(out_dir).select(
-            "query_id", "neighbor_id", "cos_sim", "rank"
-        ).orderBy("query_id", "rank")
         return collect_local(out)
 
 
@@ -5106,16 +5096,13 @@ def streaming_ann_enrichment_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     triggers pay only the probed cells' scan."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.similarity import ivf_index, ivf_search
-    from ..streaming.ingest import run_available_now, stream_source
+    from ..streaming.ingest import drop_files, publish_batches
 
     corpus, queries = _planted_embeddings(spark, sf_dir)
 
     with scratch_dir("stream_ann_ivf_") as workdir:
-        drop_dir = f"{workdir}/queries"
-        out_dir = f"{workdir}/topk"
         with setup_span("streaming_ann_enrichment_ivf"):
-            # 4 files at 2 files/trigger => multiple real micro-batches
-            queries.repartition(4).write.parquet(drop_dir)
+            stream = drop_files(queries, f"{workdir}/queries")
             # Index build is a SETUP cost by design — that is the point of
             # an IVF index.  localCheckpoint: one materialization, every
             # trigger reuses it (multi-consumer rule).
@@ -5128,22 +5115,15 @@ def streaming_ann_enrichment_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             # real scale where the assignment persists with the corpus.
             assigned = fan_out(assigned.localCheckpoint())
 
-        stream = stream_source(
-            spark, drop_dir, queries.schema, fmt="parquet", maxFilesPerTrigger=2
+        topk = publish_batches(
+            stream,
+            lambda batch_df: ivf_search(assigned, centers, batch_df, k=5, n_probe=2),
+            f"{workdir}/topk",
+            f"{workdir}/checkpoint",
         )
-
-        def publish(batch_df: DataFrame, batch_id: int) -> None:
-            ivf_search(assigned, centers, batch_df, k=5, n_probe=2).write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/batch={batch_id}")
-
-        run_available_now(
-            stream.writeStream.foreachBatch(publish), f"{workdir}/checkpoint"
+        return collect_local(
+            _rank1_gate(topk.select("query_id", "neighbor_id", "cos_sim", "rank"))
         )
-        topk = spark.read.parquet(out_dir).select(
-            "query_id", "neighbor_id", "cos_sim", "rank"
-        )
-        return collect_local(_rank1_gate(topk))
 
 
 # ---------------------------------------------------------------------------
@@ -5323,40 +5303,30 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     so arrival volume never grows anything but the batch itself."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..operators.bloom import bloom_bits, md5_key
-    from ..streaming.ingest import run_available_now, stream_source
+    from ..streaming.ingest import drop_files, publish_batches
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     seen = docs.select(md5_key("text").alias("key")).distinct()
 
     with scratch_dir("stream_bloom_") as workdir:
-        drop_dir = f"{workdir}/incoming"
-        out_dir = f"{workdir}/verdicts"
         with setup_span("streaming_bloom_dedup"):
             # build-once: pin filter AND seen keys before the stream
             bits = bloom_bits(
                 seen, "key", _BLOOM_DEDUP_M, _BLOOM_DEDUP_K
             ).localCheckpoint()
             seen = seen.localCheckpoint()
-            incoming = _bloom_incoming(docs)
-            # 4 files at 2/trigger => multiple real micro-batches
-            incoming.repartition(4).write.parquet(drop_dir)
+            stream = drop_files(_bloom_incoming(docs), f"{workdir}/incoming")
 
-        stream = stream_source(
-            spark, drop_dir, incoming.schema, fmt="parquet", maxFilesPerTrigger=2
-        )
-
-        def publish(batch_df: DataFrame, batch_id: int) -> None:
+        def gate(batch_df: DataFrame) -> DataFrame:
             inkeys = batch_df.select("doc_id", md5_key("text").alias("key"))
-            _bloom_gate(inkeys, bits, seen).write.mode("overwrite").parquet(
-                f"{out_dir}/batch={batch_id}"
-            )
+            return _bloom_gate(inkeys, bits, seen)
 
-        run_available_now(
-            stream.writeStream.foreachBatch(publish), f"{workdir}/checkpoint"
+        verdicts = publish_batches(
+            stream, gate, f"{workdir}/verdicts", f"{workdir}/checkpoint"
         )
-        out = spark.read.parquet(out_dir).select(
-            "doc_id", "bloom_positive", "is_dup", "kept"
-        ).orderBy("doc_id")
+        out = verdicts.select("doc_id", "bloom_positive", "is_dup", "kept").orderBy(
+            "doc_id"
+        )
         return collect_local(out)
 
 

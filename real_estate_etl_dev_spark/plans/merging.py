@@ -319,12 +319,15 @@ def streaming_merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     publication.
 
     The published merge output is read back LAZILY from ``out_dir``,
-    a temp dir that outlives the call: returning it through
-    ``collect_local`` instead pushed ~14.5k rows through the driver and
-    cost ~1 s per warm call on local[4] at scale 0.01.  Each call
-    deletes the previous call's ``out_dir``, so the returned frame is
-    valid until the next call; the last one is deleted at interpreter
-    exit.  The drop files and checkpoint are scratch."""
+    a temp dir that outlives the call.  Publishing into the scratch
+    dir and returning ``collect_local`` instead copies ~14.5k rows
+    through the driver JVM: on local[4] at scale 0.01 that form took
+    a median 2.43 s per warm call against 2.26 s for the lazy read
+    (8 alternated calls each in one process), and this query is the
+    nightly job's slowest step.  Each call deletes the previous call's
+    ``out_dir``, so the returned frame is valid until the next call;
+    the last one is deleted at interpreter exit.  The drop files and
+    checkpoint are scratch."""
     from ..benchmeta import scratch_dir, setup_span
     from ..streaming.ingest import run_merge_sink, stream_source
 

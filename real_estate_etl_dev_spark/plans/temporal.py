@@ -488,42 +488,22 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, not the stream history."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import (
-        memory_view,
-        run_available_now,
-        stream_source,
-        windowed_counts,
-    )
+    from ..streaming.ingest import drop_files, memory_sink, windowed_counts
 
     events = load_table(spark, sf_dir, "events").select("ts", "event_type")
 
-    with scratch_dir("stream_wc_") as workdir, memory_view(spark, "swc") as name:
+    with scratch_dir("stream_wc_") as workdir:
         with setup_span("streaming_windowed_counts"):
-            events.repartition(4).write.parquet(f"{workdir}/events")
-        stream = stream_source(
-            spark,
-            f"{workdir}/events",
-            events.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        )
+            stream = drop_files(events, f"{workdir}/events")
         counts = windowed_counts(stream, ts_col="ts", window="1 day", delay="2 hours")
-        run_available_now(
-            counts.writeStream.format("memory").queryName(name).outputMode("complete"),
-            f"{workdir}/checkpoint",
-            state_partitions=8,
-        )
-        out = (
-            spark.table(name)
-            .select(
+        with memory_sink(counts, f"{workdir}/checkpoint", "complete") as sink:
+            out = sink.select(
                 F.date_format("window_start", "yyyy-MM-dd").alias("window_day"),
                 "event_type",
                 F.col("n").cast("long").alias("n"),
-            )
-            .orderBy("window_day", "event_type")
-        )
-        # |windows| × |event_types| rows (150 at sf0.01)
-        return collect_local(out)
+            ).orderBy("window_day", "event_type")
+            # |windows| × |event_types| rows (150 at sf0.01)
+            return collect_local(out)
 
 
 @query(
@@ -566,7 +546,7 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus table instead."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import memory_view, run_available_now, stream_source
+    from ..streaming.ingest import drop_files, memory_sink
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
@@ -575,43 +555,30 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("event_id") % 3 == 0)
     )
 
-    with scratch_dir("stream_wmdedup_") as workdir, memory_view(spark, "swd") as name:
+    with scratch_dir("stream_wmdedup_") as workdir:
         with setup_span("streaming_watermark_dedup"):
-            incoming.repartition(4).write.parquet(f"{workdir}/incoming")
-        stream = stream_source(
-            spark,
-            f"{workdir}/incoming",
-            incoming.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        )
+            stream = drop_files(incoming, f"{workdir}/incoming")
         deduped = stream.withWatermark(
             "ts", "3650 days"
         ).dropDuplicatesWithinWatermark(["event_id"])
-        run_available_now(
-            deduped.writeStream.format("memory").queryName(name).outputMode("append"),
-            f"{workdir}/checkpoint",
-            state_partitions=8,
-        )
         totals = incoming.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n_in")
         )
-        kept = (
-            spark.table(name)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
-        )
-        out = (
-            totals.join(kept, "event_type", "left")
-            .select(
-                "event_type",
-                "n_in",
-                F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+        with memory_sink(deduped, f"{workdir}/checkpoint", "append") as sink:
+            kept = sink.groupBy("event_type").agg(
+                F.count(F.lit(1)).cast("long").alias("n_kept")
             )
-            .orderBy("event_type")
-        )
-        # |event_types| rows
-        return collect_local(out)
+            out = (
+                totals.join(kept, "event_type", "left")
+                .select(
+                    "event_type",
+                    "n_in",
+                    F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+                )
+                .orderBy("event_type")
+            )
+            # |event_types| rows
+            return collect_local(out)
 
 
 _QSTATUS_CASE_SQL = """
@@ -670,12 +637,7 @@ def streaming_queue_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded url space."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import (
-        memory_view,
-        queue_status_stream,
-        run_available_now,
-        stream_source,
-    )
+    from ..streaming.ingest import drop_files, memory_sink, queue_status_stream
 
     events = load_table(spark, sf_dir, "events")
     updates = events.select(
@@ -689,39 +651,25 @@ def streaming_queue_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE status WHEN 'Available' THEN 0 WHEN 'Error' THEN 1"
         " WHEN 'Delisted' THEN 2 ELSE 3 END"
     )
-    with scratch_dir("stream_qs_") as workdir, memory_view(spark, "sqs") as name:
+    with scratch_dir("stream_qs_") as workdir:
         with setup_span("streaming_queue_status"):
-            updates.repartition(4).write.parquet(f"{workdir}/updates")
-        stream = stream_source(
-            spark,
-            f"{workdir}/updates",
-            updates.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        )
-        run_available_now(
-            queue_status_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update"),
-            f"{workdir}/checkpoint",
-            state_partitions=8,
-        )
-        out = (
-            spark.table(name)
-            .select("url", rank.alias("r"), "n_events")
-            .groupBy("url")
-            .agg(
-                F.expr(
-                    "CASE max(r) WHEN 0 THEN 'Available' WHEN 1 THEN 'Error'"
-                    " WHEN 2 THEN 'Delisted' ELSE 'Sold' END"
-                ).alias("status"),
-                F.max("n_events").cast("long").alias("n_events"),
+            stream = drop_files(updates, f"{workdir}/updates")
+        states = queue_status_stream(stream)
+        with memory_sink(states, f"{workdir}/checkpoint", "update") as sink:
+            out = (
+                sink.select("url", rank.alias("r"), "n_events")
+                .groupBy("url")
+                .agg(
+                    F.expr(
+                        "CASE max(r) WHEN 0 THEN 'Available' WHEN 1 THEN 'Error'"
+                        " WHEN 2 THEN 'Delisted' ELSE 'Sold' END"
+                    ).alias("status"),
+                    F.max("n_events").cast("long").alias("n_events"),
+                )
+                .orderBy("url")
             )
-            .orderBy("url")
-        )
-        # |urls| rows (~150 keys in the fixture)
-        return collect_local(out)
+            # |urls| rows (~150 keys in the fixture)
+            return collect_local(out)
 
 
 @query(
@@ -776,39 +724,27 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per user."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import memory_view, run_available_now, stream_source
+    from ..streaming.ingest import drop_files, memory_sink
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    with scratch_dir("stream_sess_") as workdir, memory_view(spark, "ssw") as name:
+    with scratch_dir("stream_sess_") as workdir:
         with setup_span("streaming_session_windows"):
-            events.repartition(4).write.parquet(f"{workdir}/events")
-        stream = stream_source(
-            spark,
-            f"{workdir}/events",
-            events.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        )
+            stream = drop_files(events, f"{workdir}/events")
         sess = stream.groupBy(
             "user_id", F.session_window("ts", "4 hours").alias("w")
         ).agg(F.count(F.lit(1)).alias("n_events"))
-        run_available_now(
-            sess.writeStream.format("memory").queryName(name).outputMode("complete"),
-            f"{workdir}/checkpoint",
-            state_partitions=8,
-        )
-        out = (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_sessions"),
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.max("n_events").cast("long").alias("max_session_events"),
+        with memory_sink(sess, f"{workdir}/checkpoint", "complete") as sink:
+            out = (
+                sink.groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).alias("n_sessions"),
+                    F.sum("n_events").cast("long").alias("n_events"),
+                    F.max("n_events").cast("long").alias("max_session_events"),
+                )
+                .orderBy("user_id")
             )
-            .orderBy("user_id")
-        )
-        # |users| rows
-        return collect_local(out)
+            # |users| rows
+            return collect_local(out)
 
 
 @query(
@@ -843,7 +779,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-changing dim updates in production."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import memory_view, run_available_now, stream_source
+    from ..streaming.ingest import drop_files, memory_sink
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -853,16 +789,9 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "n_name")
     )
 
-    with scratch_dir("stream_enrich_") as workdir, memory_view(spark, "sse") as name:
+    with scratch_dir("stream_enrich_") as workdir:
         with setup_span("streaming_static_enrichment"):
-            events.repartition(4).write.parquet(f"{workdir}/events")
-        stream = stream_source(
-            spark,
-            f"{workdir}/events",
-            events.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        )
+            stream = drop_files(events, f"{workdir}/events")
         enriched = (
             stream.join(dim, stream.user_id == dim.c_custkey, "inner")
             .groupBy("n_name")
@@ -871,15 +800,9 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 2).alias("total_value"),
             )
         )
-        run_available_now(
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete"),
-            f"{workdir}/checkpoint",
-            state_partitions=8,
-        )
-        # |nations| rows
-        return collect_local(spark.table(name).orderBy("n_name"))
+        with memory_sink(enriched, f"{workdir}/checkpoint", "complete") as sink:
+            # |nations| rows
+            return collect_local(sink.orderBy("n_name"))
 
 
 # Count-min sketch geometry: depth 5 (five independent xxhash64
@@ -1024,7 +947,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned frame re-aggregates pairs per user."""
     from ..benchmeta import collect_local, scratch_dir, setup_span
     from ..sources.readers import load_table
-    from ..streaming.ingest import memory_view, run_available_now, stream_source
+    from ..streaming.ingest import drop_files, memory_sink
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
@@ -1040,24 +963,12 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("click_ts"),
     )
 
-    with scratch_dir("stream_ssj_") as workdir, memory_view(spark, "ssj") as name:
+    with scratch_dir("stream_ssj_") as workdir:
         with setup_span("streaming_stream_stream_join"):
-            errors.repartition(4).write.parquet(f"{workdir}/errors")
-            clicks.repartition(4).write.parquet(f"{workdir}/clicks")
-        se = stream_source(
-            spark,
-            f"{workdir}/errors",
-            errors.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        ).withWatermark("err_ts", "3650 days")
-        sc = stream_source(
-            spark,
-            f"{workdir}/clicks",
-            clicks.schema,
-            fmt="parquet",
-            maxFilesPerTrigger=2,
-        ).withWatermark("click_ts", "3650 days")
+            se = drop_files(errors, f"{workdir}/errors")
+            sc = drop_files(clicks, f"{workdir}/clicks")
+        se = se.withWatermark("err_ts", "3650 days")
+        sc = sc.withWatermark("click_ts", "3650 days")
         joined = se.join(
             sc,
             (F.col("err_user") == F.col("click_user"))
@@ -1065,22 +976,17 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("click_ts") <= F.col("err_ts")),
             "inner",
         )
-        run_available_now(
-            joined.writeStream.format("memory").queryName(name).outputMode("append"),
-            f"{workdir}/checkpoint",
-            state_partitions=8,
-        )
-        out = (
-            spark.table(name)
-            .groupBy(F.col("err_user").alias("err_user"))
-            .agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.countDistinct("err_id").alias("n_errors_with_click"),
+        with memory_sink(joined, f"{workdir}/checkpoint", "append") as sink:
+            out = (
+                sink.groupBy(F.col("err_user").alias("err_user"))
+                .agg(
+                    F.count(F.lit(1)).alias("n_pairs"),
+                    F.countDistinct("err_id").alias("n_errors_with_click"),
+                )
+                .orderBy("err_user")
             )
-            .orderBy("err_user")
-        )
-        # |users with an attributed error| rows
-        return collect_local(out)
+            # |users with an attributed error| rows
+            return collect_local(out)
 
 
 @query(

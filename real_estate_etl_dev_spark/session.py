@@ -36,9 +36,8 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
     partition coalescing, skew-join splitting), Arrow on (pandas-UDF
     tier), sane shuffle parallelism for local[N].
 
-    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_ADVISORY_MB`` must be
-    positive integers; anything else raises ``ValueError`` before a
-    session is built.
+    ``SPARK_GRAFT_CPUS`` must be a positive integer; anything else
+    raises ``ValueError`` before a session is built.
 
     ``spark.sql.codegen.cache.maxEntries`` is a static conf: it takes
     effect only when this call creates the SparkContext.  A session
@@ -47,7 +46,6 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
     ``--vanilla`` oracle sweep shows no result depends on it.
     """
     cpus = _positive_int_env("SPARK_GRAFT_CPUS", "32")
-    advisory_mb = _positive_int_env("SPARK_GRAFT_ADVISORY_MB", "16")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -62,17 +60,13 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
         # CPU-heavy small-byte stages that genuinely need a spread get
         # it explicitly via sources.readers.fan_out.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        # The advisory target is parameterised: default 16 MB locally —
-        # expression-heavy stages here (decimal folds, CDC explodes,
-        # string dedups) carry far more CPU per byte than production
-        # fact scans, so the byte target that balances task overhead
-        # against per-row work sits lower than the I/O-bound
-        # production setting (256m per guide §9, where network/disk
-        # amortisation dominates).  Override via SPARK_GRAFT_ADVISORY_MB.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            f"{advisory_mb}m",
-        )
+        # The advisory target is 16 MB: expression-heavy stages here
+        # (decimal folds, CDC explodes, string dedups) carry far more
+        # CPU per byte than production fact scans, so the byte target
+        # that balances task overhead against per-row work sits lower
+        # than the I/O-bound production setting (256m per guide §9,
+        # where network/disk amortisation dominates).
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.session.timeZone", "UTC")

@@ -2,7 +2,9 @@
 
 from .ingest import (
     dedup_urls,
-    memory_view,
+    drop_files,
+    memory_sink,
+    publish_batches,
     queue_status_stream,
     run_available_now,
     run_merge_sink,
@@ -12,7 +14,9 @@ from .ingest import (
 
 __all__ = [
     "dedup_urls",
-    "memory_view",
+    "drop_files",
+    "memory_sink",
+    "publish_batches",
     "queue_status_stream",
     "run_available_now",
     "run_merge_sink",

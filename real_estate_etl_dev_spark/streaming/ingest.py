@@ -18,7 +18,7 @@ engine — one code path for both modes.
 from __future__ import annotations
 
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 import pandas as pd
@@ -81,51 +81,91 @@ def windowed_counts(
     )
 
 
-def run_available_now(
-    writer: DataStreamWriter, checkpoint: str, state_partitions: int | None = None
-) -> StreamingQuery:
+def run_available_now(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
     """Run a shaped stream writer to completion: every file available at
     start, in as many micro-batches as ``maxFilesPerTrigger`` slices
-    them, then stop.  The caller shapes ``writer`` (a memory sink with
-    ``queryName``/``outputMode``, or ``foreachBatch(fn)``); this adds
-    the checkpoint and ``Trigger.AvailableNow``, blocks until the query
-    terminates and returns it (``recentProgress`` stays readable).  A
-    failing micro-batch re-raises here.
-
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` (via
-    :func:`conf_scope`, restored afterwards) for the whole run.  A
-    stateful operator's partition count is fixed in the checkpoint at
-    the first batch, and every state-store partition costs a commit
-    (and, for ``applyInPandasWithState``, a Python-worker round-trip)
-    PER MICRO-BATCH — at 32 local partitions that constant cost dwarfs
-    the fixtures' data.  The stateful certification streams key a few
-    hundred keys at most (windows × event types, urls, users), so 8
-    partitions cut that overhead 4× with no skew risk; a real
-    deployment sizes this to its key cardinality before the first
-    checkpoint write.  Stateless ``foreachBatch`` streams leave it
-    unset: pinning would also re-plan the batch shuffles inside their
-    micro-batches."""
+    them, then stop.  The caller shapes ``writer`` (here a memory sink,
+    or ``foreachBatch(fn)``); this adds the checkpoint and
+    ``Trigger.AvailableNow``, blocks until the query terminates and
+    returns it (``recentProgress`` stays readable).  A failing
+    micro-batch re-raises here."""
     writer = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
-    confs = {}
-    if state_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
-    # the writer exposes its session only as ``_spark``
-    with conf_scope(writer._spark, **confs):
-        query = writer.start()
-        query.awaitTermination()
+    query = writer.start()
+    query.awaitTermination()
     return query
 
 
+def drop_files(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` under ``path`` as 4 parquet files and return their
+    file stream at 2 files per trigger, so an availableNow run takes at
+    least two micro-batches and any state the stream keeps must carry
+    across them (a fixture dropped as one batch would certify a batch
+    query in disguise)."""
+    df.repartition(4).write.parquet(path)
+    return stream_source(
+        df.sparkSession, path, df.schema, fmt="parquet", maxFilesPerTrigger=2
+    )
+
+
+# State partitions of a memory-sink run.  A stateful operator's
+# partition count is fixed in the checkpoint at the first batch, and
+# every state-store partition costs a commit (and, for
+# ``applyInPandasWithState``, a Python-worker round trip) PER
+# MICRO-BATCH: at 32 local partitions that constant cost dwarfs the
+# fixtures' data.  The certification streams key a few hundred keys at
+# most (windows x event types, urls, users), so 8 partitions cut that
+# overhead 4x with no skew risk; a real deployment sizes this to its
+# key cardinality before the first checkpoint write.  foreachBatch runs
+# keep the session value: there a pin would also re-plan the batch
+# shuffles inside each micro-batch.
+_STATE_PARTITIONS = "8"
+
+
 @contextmanager
-def memory_view(spark: SparkSession, prefix: str) -> Iterator[str]:
-    """A unique memory-sink query name, whose temp view is dropped on
-    exit — also when the stream or its read-back raises — so repeated
-    invocations don't keep a driver-resident result copy per run."""
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+def memory_sink(
+    stream: DataFrame, checkpoint: str, output_mode: str
+) -> Iterator[DataFrame]:
+    """Run ``stream`` to completion into a uniquely named memory sink
+    and yield the sink's table.
+
+    ``spark.sql.shuffle.partitions`` is pinned to 8 (via
+    :func:`conf_scope`, restored afterwards, also when the run raises)
+    for the run only; the read-back plans under the session's own
+    value.  The sink's temp view is dropped on exit, also when the run
+    or the read-back raises, so repeated invocations keep no
+    driver-resident copy of a result.  Read the rows back (e.g.
+    ``collect_local``) inside the block."""
+    spark = stream.sparkSession
+    name = f"sink_{uuid.uuid4().hex[:8]}"
     try:
-        yield name
+        with conf_scope(spark, **{"spark.sql.shuffle.partitions": _STATE_PARTITIONS}):
+            writer = stream.writeStream.format("memory").queryName(name)
+            run_available_now(writer.outputMode(output_mode), checkpoint)
+        yield spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
+
+
+def publish_batches(
+    stream: DataFrame,
+    fn: Callable[[DataFrame], DataFrame],
+    out_dir: str,
+    checkpoint: str,
+) -> DataFrame:
+    """Run ``stream`` to completion, overwriting ``fn(batch_df)`` at
+    ``out_dir/batch=<id>`` for each micro-batch, and return the read of
+    all batches (with a ``batch`` partition column).
+
+    Overwrite per batch id is the idempotent publish for a
+    non-transactional sink: a retried batch REPLACES its own output
+    instead of appending a duplicate, as plain append under
+    ``foreachBatch`` would."""
+
+    def publish(batch_df: DataFrame, batch_id: int) -> None:
+        fn(batch_df).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+
+    run_available_now(stream.writeStream.foreachBatch(publish), checkpoint)
+    return stream.sparkSession.read.parquet(out_dir)
 
 
 def run_merge_sink(

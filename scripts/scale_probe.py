@@ -534,15 +534,26 @@ def streaming_state_probe(spark) -> None:
     progress — it should stay ~|one segment's keys| + the 2-day
     residue (~107k here) while TOTAL input grows 16× (state cap would
     read ~1.6M keys at k=16 if nothing expired)."""
-    import json
+    from pyspark.sql.streaming import StreamingQueryListener
 
     from real_estate_etl_dev_spark.sources.readers import load_table
-    from real_estate_etl_dev_spark.streaming.ingest import (
-        memory_view,
-        run_available_now,
-        stream_source,
-    )
+    from real_estate_etl_dev_spark.streaming.ingest import memory_sink, stream_source
 
+    progress = []
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(event.progress)
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
     base = load_table(spark, SF_DIR, "events").select(
         "event_id", "ts", "event_type"
     )
@@ -553,10 +564,7 @@ def streaming_state_probe(spark) -> None:
     )
     print("|---|---|---|---|---|---|")
     for k in (1, 4, 16):
-        with (
-            scratch_dir(f"stream_state_{k}_") as workdir,
-            memory_view(spark, "ssp") as name,
-        ):
+        with scratch_dir(f"stream_state_{k}_") as workdir:
             drop_dir = f"{workdir}/incoming"
             for seg in range(k):
                 segdf = base.select(
@@ -575,30 +583,20 @@ def streaming_state_probe(spark) -> None:
             deduped = stream.withWatermark(
                 "ts", "2 days"
             ).dropDuplicatesWithinWatermark(["event_id"])
+            bus.waitUntilEmpty()
+            progress.clear()
             t0 = time.perf_counter()
-            q = run_available_now(
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append"),
-                f"{workdir}/checkpoint",
-                state_partitions=8,
-            )
-            wall = time.perf_counter() - t0
-            progress = [
-                json.loads(p.json) if hasattr(p, "json") else p
-                for p in q.recentProgress
-            ]
-            state_rows = [
-                op["numRowsTotal"]
-                for p in progress
-                for op in p.get("stateOperators", [])
-            ]
-            n_out = spark.table(name).count()
+            with memory_sink(deduped, f"{workdir}/checkpoint", "append") as sink:
+                wall = time.perf_counter() - t0
+                n_out = sink.count()
+        bus.waitUntilEmpty()  # every progress event delivered
+        state_rows = [op.numRowsTotal for p in progress for op in p.stateOperators]
         print(
             f"| {k} | {n_in:,} | {n_out:,} | {len(progress)} "
             f"| {max(state_rows) if state_rows else 0:,} | {wall:.1f} |",
             flush=True,
         )
+    spark.streams.removeListener(listener)
 
 
 def zipf_corpus_at(spark, k: int):

@@ -3,6 +3,7 @@ search, multimodal plumbing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_estate_etl_dev_spark.operators.dedup import (
@@ -1768,3 +1769,28 @@ def test_bpe_learn_unicode_line_separators(spark, tmp_path):
     got = [tuple(r) for r in bpe_learn_merges(spark, fixture).collect()]
     want = [tuple(r) for r in bpe_learn_merges(spark, twin).collect()]
     assert got == want and got, (got, want)
+
+
+# The exact length filter in the JOIN of the two set-similarity
+# oracles: J(A, B) <= min(|A|, |B|) / max(|A|, |B|), so a pair with
+# 100 * min < 97 * max cannot reach Jaccard 0.97 and the filter drops
+# only pairs the WHERE rejects anyway.
+_SETSIM_LENGTH_FILTER = (
+    "\n     AND 100 * least(len(a.s), len(b.s)) >= 97 * greatest(len(a.s), len(b.s))"
+)
+
+
+@pytest.mark.parametrize("name", ["dedup_setsim_prefix", "dedup_setsim_hybrid"])
+def test_setsim_oracle_equals_quadratic_form(sf_dir, name):
+    """The registered oracle returns exactly the rows, in order, of its
+    quadratic all-pairs form (the reference: the same SQL without the
+    length filter)."""
+    from real_estate_etl_dev_spark.plans.catalog import CATALOG
+
+    from tests.oracle_harness import oracle_rows
+
+    sql = CATALOG[name].oracle
+    assert _SETSIM_LENGTH_FILTER in sql
+    quadratic = sql.replace(_SETSIM_LENGTH_FILTER, "")
+    got, want = oracle_rows(sf_dir, sql), oracle_rows(sf_dir, quadratic)
+    assert got == want and got[1], name

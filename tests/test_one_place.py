@@ -6,7 +6,11 @@ one helper.
 * session-conf overrides (``spark.conf.set`` / ``unset``) only in
   ``session.conf_scope``;
 * blocking on a stream (``awaitTermination``) only in
-  ``streaming.ingest.run_available_now``;
+  ``streaming.ingest.run_available_now``; opening one (``readStream``)
+  only in ``streaming/ingest.py``; naming a memory sink
+  (``queryName``) only in ``streaming.ingest.memory_sink``;
+* temp dirs (``mkdtemp``) only in ``benchmeta.scratch_dir`` and the
+  persistent publish dir of ``plans/merging.streaming_merge_scd1``;
 * environment reads (``os.environ`` / ``os.getenv``) only in
   ``session``;
 * driver-local frames (``createDataFrame``) only in
@@ -49,7 +53,7 @@ def _sites() -> dict[str, set[str]]:
                 key = f"conf.{key}" if on_conf else None
             if key in ("queryExecution", "explainString", "conf.set",
                        "conf.unset", "awaitTermination", "environ", "getenv",
-                       "createDataFrame"):
+                       "createDataFrame", "readStream", "queryName", "mkdtemp"):
                 where = self.stack[-1] if self.stack else "<module>"
                 sites.setdefault(key, set()).add(f"{self.rel}:{where}")
             self.generic_visit(node)
@@ -77,6 +81,20 @@ def test_conf_overrides_only_in_conf_scope():
 def test_stream_await_only_in_run_available_now():
     assert _sites().get("awaitTermination") == {
         "streaming/ingest.py:run_available_now"
+    }
+
+
+def test_stream_reads_only_in_streaming_ingest():
+    sites = _sites()
+    assert {s.split(":")[0] for s in sites.get("readStream", ())} == {
+        "streaming/ingest.py"
+    }, sites.get("readStream")
+    assert sites.get("queryName") == {"streaming/ingest.py:memory_sink"}
+
+
+def test_temp_dirs_only_in_scratch_dir():
+    assert _sites().get("mkdtemp") == {
+        "benchmeta.py:scratch_dir", "plans/merging.py:streaming_merge_scd1"
     }
 
 

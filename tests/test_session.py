@@ -54,7 +54,7 @@ def test_pagerank_restores_parallelism_first_when_unset(spark):
             spark.conf.set(_PF, before)
 
 
-@pytest.mark.parametrize("var", ["SPARK_GRAFT_ADVISORY_MB", "SPARK_GRAFT_CPUS"])
+@pytest.mark.parametrize("var", ["SPARK_GRAFT_CPUS"])
 @pytest.mark.parametrize("value", ["256m", "0"])
 def test_get_spark_rejects_bad_env_ints(monkeypatch, var, value):
     monkeypatch.setenv(var, value)

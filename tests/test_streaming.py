@@ -9,6 +9,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from real_estate_etl_dev_spark.session import conf_scope
 from real_estate_etl_dev_spark.streaming import ingest
 from real_estate_etl_dev_spark.streaming.ingest import (
     dedup_urls,
@@ -30,18 +31,6 @@ def write_batch(tmp_path, name, rows):
     return str(p)
 
 
-def run_available_now(stream, checkpoint):
-    """Memory-sink run through the engine's availableNow harness;
-    returns the sink's table name."""
-    q = ingest.run_available_now(
-        stream.writeStream.format("memory")
-        .queryName(f"t_{abs(hash(checkpoint)) % 10**8}")
-        .outputMode("append"),
-        checkpoint,
-    )
-    return q.name
-
-
 def test_ingest_dedup_availablenow(spark, tmp_path):
     path = write_batch(
         tmp_path,
@@ -53,8 +42,8 @@ def test_ingest_dedup_availablenow(spark, tmp_path):
         ],
     )
     stream = dedup_urls(stream_source(spark, path, SCHEMA))
-    name = run_available_now(stream, str(tmp_path / "cp1"))
-    got = spark.sql(f"SELECT url FROM {name}").collect()
+    with ingest.memory_sink(stream, str(tmp_path / "cp1"), "append") as sink:
+        got = sink.select("url").collect()
     assert sorted(r["url"] for r in got) == ["u1", "u2"]  # dup dropped
 
 
@@ -67,11 +56,8 @@ def test_windowed_counts(spark, tmp_path):
     path = write_batch(tmp_path, "b1.json", rows)
     src = stream_source(spark, path, SCHEMA).withColumn("event_type", F.lit("e"))
     agg = windowed_counts(src, ts_col="scraped_at", window="1 hour")
-    ingest.run_available_now(
-        agg.writeStream.format("memory").queryName("win_counts").outputMode("complete"),
-        str(tmp_path / "cp2"),
-    )
-    got = {str(r["window_start"]): r["n"] for r in spark.sql("SELECT * FROM win_counts").collect()}
+    with ingest.memory_sink(agg, str(tmp_path / "cp2"), "complete") as sink:
+        got = {str(r["window_start"]): r["n"] for r in sink.collect()}
     assert list(sorted(got.values())) == [1, 2]  # 2 in hour-0, 1 in hour-1
 
 
@@ -122,11 +108,8 @@ def test_queue_status_state(spark, tmp_path):
             f.write(json.dumps(r) + "\n")
     stream = spark.readStream.schema("url string, status string").json(str(path))
     out = queue_status_stream(stream)
-    ingest.run_available_now(
-        out.writeStream.format("memory").queryName("queue_state").outputMode("update"),
-        str(tmp_path / "cp4"),
-    )
-    got = {r["url"]: (r["status"], r["n_events"]) for r in spark.sql("SELECT * FROM queue_state").collect()}
+    with ingest.memory_sink(out, str(tmp_path / "cp4"), "update") as sink:
+        got = {r["url"]: (r["status"], r["n_events"]) for r in sink.collect()}
     assert got == {"u1": ("Error", 2), "u2": ("Sold", 2)}  # max-severity wins
 
 
@@ -313,19 +296,15 @@ def test_queue_status_state_survives_restart(spark, tmp_path):
     assert ("u2", "Delisted", 1) in got2
 
 
-def test_available_now_slices_micro_batches(spark, tmp_path):
-    """stream_source(maxFilesPerTrigger=2) over 4 files must run the
-    availableNow trigger as >=2 micro-batches — the property that makes
-    streaming_windowed_counts exercise cross-batch aggregation state
-    rather than a single batch in disguise."""
+def test_available_now_slices_micro_batches(spark, sf_dir, tmp_path):
+    """A ``drop_files`` stream must run the availableNow trigger as
+    >=2 micro-batches — the property that makes the streaming catalog
+    queries exercise cross-batch state rather than a single batch in
+    disguise."""
     from real_estate_etl_dev_spark.sources.readers import load_table
-    from real_estate_etl_dev_spark.streaming.ingest import stream_source
 
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "ts", "event_type"
-    )
-    drop_dir = str(tmp_path / "events")
-    events.repartition(4).write.parquet(drop_dir)
+    events = load_table(spark, sf_dir, "events").select("ts", "event_type")
+    stream = ingest.drop_files(events, str(tmp_path / "events"))
 
     batch_ids = []
 
@@ -333,17 +312,31 @@ def test_available_now_slices_micro_batches(spark, tmp_path):
         batch_ids.append(batch_id)
         df.count()
 
-    q = (
-        stream_source(
-            spark, drop_dir, events.schema, fmt="parquet", maxFilesPerTrigger=2
-        )
-        .writeStream.foreachBatch(record)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    ingest.run_available_now(
+        stream.writeStream.foreachBatch(record), str(tmp_path / "ckpt")
     )
-    q.awaitTermination()
     assert len(batch_ids) >= 2, batch_ids
+
+
+def test_publish_batches_overwrites_per_batch(spark, sf_dir, tmp_path):
+    """Every micro-batch lands under its own ``batch=<id>`` dir, and
+    the read-back is the union of all of them: a multi-batch drop of
+    ``event_id`` comes back complete and without duplicates."""
+    from real_estate_etl_dev_spark.sources.readers import load_table
+
+    ids = load_table(spark, sf_dir, "events").select("event_id")
+    out = ingest.publish_batches(
+        ingest.drop_files(ids, str(tmp_path / "in")),
+        lambda df: df.withColumn("twice", F.col("event_id") * 2),
+        str(tmp_path / "out"),
+        str(tmp_path / "cp"),
+    )
+    rows = out.collect()
+    assert len({r["batch"] for r in rows}) >= 2
+    assert sorted(r["event_id"] for r in rows) == sorted(
+        r["event_id"] for r in ids.collect()
+    )
+    assert all(r["twice"] == 2 * r["event_id"] for r in rows)
 
 
 def test_incremental_dedup_keeps_same_text_across_langs(spark):
@@ -383,57 +376,91 @@ def test_incremental_dedup_keeps_same_text_across_langs(spark):
     assert {r.doc_id for r in survivors.collect()} == {10, 11, 14}
 
 
-# --- shared harness: conf scope, availableNow runner, scratch dir ----------
+# --- shared harness: memory-sink run, scratch dir --------------------------
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 
 
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _run_conf(checkpoint, key):
+    """``key`` as the run recorded it in its first offset-log entry
+    (the session conf live when batch 0 was planned)."""
+    import os
+
+    with open(os.path.join(checkpoint, "offsets", "0")) as f:
+        return json.loads(f.read().splitlines()[1])["conf"][key]
+
+
+def test_memory_sink_pins_state_partitions(spark, tmp_path):
+    """A stateful memory-sink run keeps 8 state partitions whatever the
+    session's shuffle partitions, and leaves the session value and its
+    temp views as they were."""
+    import os
+
+    path = write_batch(tmp_path, "sp.json", [
+        {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
+        {"url": "u2", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
+    ])
+    views = _temp_views(spark)
+    cp = str(tmp_path / "cp_sp")
+    stream = dedup_urls(stream_source(spark, path, SCHEMA))
+    with conf_scope(spark, **{_SHUFFLE: "3"}):
+        with ingest.memory_sink(stream, cp, "append") as sink:
+            assert sink.count() == 2
+        assert spark.conf.get(_SHUFFLE) == "3"
+    assert _run_conf(cp, _SHUFFLE) == "8"
+    parts = [d for d in os.listdir(os.path.join(cp, "state", "0")) if d.isdigit()]
+    assert len(parts) == 8, parts
+    assert _temp_views(spark) == views
+
+
 def test_failing_batch_cleans_up_and_restores_conf(spark):
-    """A foreachBatch that raises inside run_available_now + scratch_dir:
-    the error propagates, the workdir is removed and the pinned state
-    partitions are restored."""
+    """A memory-sink run whose batch raises, inside scratch_dir: the
+    error propagates, the pin was live while the batch ran, and the
+    session value, the temp views and the workdir are all restored."""
     import os
 
     from real_estate_etl_dev_spark.benchmeta import scratch_dir
 
-    before = spark.conf.get(_SHUFFLE, None)
-    seen = {}
-
-    def boom(df, batch_id):
-        seen["parts"] = spark.conf.get(_SHUFFLE)
-        raise RuntimeError("boom in batch")
-
-    with pytest.raises(Exception, match="boom in batch"):
+    views = _temp_views(spark)
+    with conf_scope(spark, **{_SHUFFLE: "3"}), pytest.raises(
+        Exception, match="boom in batch"
+    ):
         with scratch_dir("test_harness_") as workdir:
             p = os.path.join(workdir, "in")
             os.mkdir(p)
             with open(os.path.join(p, "b.json"), "w") as f:
                 f.write(json.dumps({"url": "u1"}) + "\n")
-            stream = spark.readStream.schema("url string").json(p)
-            ingest.run_available_now(
-                stream.writeStream.foreachBatch(boom),
-                os.path.join(workdir, "cp"),
-                state_partitions=3,
+            stream = stream_source(spark, p, "url string").select(
+                F.when(F.col("url") == "u1", F.raise_error(F.lit("boom in batch")))
+                .otherwise(F.col("url"))
+                .alias("url")
             )
-    assert seen["parts"] == "3"  # the pin was live while the batch ran
+            cp = os.path.join(workdir, "cp")
+            try:
+                with ingest.memory_sink(stream, cp, "append"):
+                    pass
+            finally:
+                pinned = _run_conf(cp, _SHUFFLE)
+                restored = spark.conf.get(_SHUFFLE)
+    assert pinned == "8"  # the pin was live while the batch ran
+    assert restored == "3"
     assert not os.path.exists(workdir)
-    assert spark.conf.get(_SHUFFLE, None) == before
+    assert _temp_views(spark) == views
 
 
 def test_memory_view_dropped_when_read_back_raises(spark, tmp_path):
     path = write_batch(tmp_path, "mv.json", [
         {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
     ])
+    views = _temp_views(spark)
     with pytest.raises(RuntimeError):
-        with ingest.memory_view(spark, "tmv") as name:
-            ingest.run_available_now(
-                stream_source(spark, path, SCHEMA)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append"),
-                str(tmp_path / "cp_mv"),
-            )
-            assert spark.table(name).count() == 1
+        stream = stream_source(spark, path, SCHEMA)
+        with ingest.memory_sink(stream, str(tmp_path / "cp_mv"), "append") as sink:
+            assert sink.count() == 1
+            assert len(_temp_views(spark) - views) == 1  # the sink's view
             raise RuntimeError("read-back failed")
-    assert not spark.catalog.tableExists(name)
-
+    assert _temp_views(spark) == views
