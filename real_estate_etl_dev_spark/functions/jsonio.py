@@ -17,9 +17,11 @@ from .core import col_of, rex
 
 def parse_json(c: Column | str, schema) -> Column:
     """Tolerant JSON parse — NULL on malformed input, exactly the
-    reference's except-return-None (ref func.py:919-933) via
-    ``from_json``'s null-on-error semantics."""
-    return F.from_json(col_of(c), schema)
+    reference's except-return-None (ref func.py:919-933).
+    ``from_json`` alone turns a malformed string into a struct of
+    NULLs, so the parse is guarded by ``try_parse_json``."""
+    c = col_of(c)
+    return F.when(F.try_parse_json(c).isNotNull(), F.from_json(c, schema))
 
 
 def json_value(c: Column | str, path: str) -> Column:

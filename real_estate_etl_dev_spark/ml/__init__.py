@@ -2,14 +2,12 @@
 
 from .region import (
     build_region_pipeline,
-    evaluate_accuracy,
     predict_regions,
     train_region_model,
 )
 
 __all__ = [
     "build_region_pipeline",
-    "evaluate_accuracy",
     "predict_regions",
     "train_region_model",
 ]

@@ -80,15 +80,6 @@ def train_region_model(
     return model
 
 
-def evaluate_accuracy(model, df: DataFrame, label_col: str = "region") -> float:
-    """Accuracy on a labeled frame (ref ml_region_prediction.py:72-92
-    reports sklearn accuracy_score)."""
-    pred = model.transform(df)
-    hits = pred.filter(F.col("predicted_region") == F.col(label_col)).count()
-    total = pred.count()
-    return hits / total if total else 0.0
-
-
 def predict_regions(model, df: DataFrame, text_col: str = "location") -> DataFrame:
     """Batch inference: one distributed transform over rows with a
     location (ref filters location IS NOT NULL then predicts per row

@@ -1,5 +1,5 @@
 """Operator layer: merge engine, row rules, dedup tiers, similarity
-search, projection DSL, pagination, sinks, multimodal plumbing."""
+search, projection DSL, pagination, dead-letter sink, multimodal plumbing."""
 
 from .analytics import paginate_keyset, paginate_offset, top1_by_key
 from .dedup import (
@@ -15,7 +15,6 @@ from .dedup import (
     setsim_join_hybrid,
     setsim_join_prefix,
     shingles,
-    simhash64,
     simhash_frame,
 )
 from .layout import salted_count_sum, write_bucketed
@@ -31,7 +30,6 @@ from .projection import Field, project_fields, rename_and_derive, split_skip
 from .rules import (
     availability_consistency,
     backfill_sold_at,
-    classify_tab,
     define_land_zoning,
     export_projection,
     identify_issues,
@@ -49,14 +47,6 @@ from .similarity import (
     lsh_topk,
     rp_signature,
 )
-from .sinks import (
-    append_parquet,
-    dead_letter_frame,
-    observed,
-    overwrite_parquet,
-    run_report,
-    write_csv,
-    write_json,
-)
+from .sinks import dead_letter_frame
 
 __all__ = [name for name in dir() if not name.startswith("_")]

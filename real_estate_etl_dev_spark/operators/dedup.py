@@ -47,14 +47,22 @@ def dedup_exact_groups(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Duplicate classes: one row per content hash with >1 member —
-    (hash, n_dups, keeper=min id, dup_ids).  One shuffle on the hash."""
+    (h = md5 of the text, n_dups, keeper = min id, dup_ids = the sorted
+    ids joined with ','; DuckDB's ``string_agg(id, ',' ORDER BY id)``).
+    One shuffle on the hash."""
     return (
         docs.select(F.col(id_col), content_hash(text_col, bits128=True).alias("h"))
         .groupBy("h")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_dups"),
             F.min(id_col).alias("keeper"),
-            F.sort_array(F.collect_list(id_col)).alias("dup_ids"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(id_col)),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            ).alias("dup_ids"),
         )
         .filter(F.col("n_dups") > 1)
     )
@@ -223,22 +231,6 @@ def _bucket_audit(banded: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def minhash_bucket_audit(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 5,
-    shingle_n: int = 2,
-    seed: int = 42,
-    max_bucket: int = 500,
-) -> DataFrame:
-    """Audit of :func:`dedup_minhash_pairs`'s bucket cap — same
-    banding, same parameters, per-band skip mass (see
-    :func:`_bucket_audit`)."""
-    base = _shingled(docs, text_col, id_col, shingle_n)
-    return _bucket_audit(_minhash_banded(base, id_col, num_hashes, seed), max_bucket)
-
-
 def _simhash_banded(
     docs: DataFrame, text_col: str, id_col: str, n_bands: int
 ) -> DataFrame:
@@ -257,20 +249,6 @@ def _simhash_banded(
             )
         ).alias("bk"),
     ).select(id_col, F.col("bk.band_idx"), F.col("bk.band_val"))
-
-
-def simhash_bucket_audit(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Audit of :func:`dedup_simhash_pairs`'s bucket cap — same 4×16-bit
-    banding, per-band skip mass.  At the 1B-doc regime this is the
-    tool that makes the band-width warning in
-    :func:`dedup_simhash_pairs` measurable instead of rhetorical."""
-    return _bucket_audit(_simhash_banded(docs, text_col, id_col, n_bands), max_bucket)
 
 
 def fused_bucket_audit(parts: list) -> DataFrame:
@@ -505,47 +483,6 @@ def _bit_mask(i: int) -> int:
     return (1 << i) if i < 63 else -(1 << 63)
 
 
-def simhash64(text: Column | str, token_pattern: str = r"\s+") -> Column:
-    """64-bit SimHash: per token xxhash64, each bit votes ±1, sign of
-    the vote is the fingerprint bit.  Single pass, pure expressions;
-    the 64 bit-tests are unrolled in Python (shiftright needs a
-    literal shift) and the vote vector is let-bound so the fold
-    doesn't duplicate the aggregate tree 64×."""
-    from ..functions.core import let_
-
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.lower(c), token_pattern)
-
-    def token_votes(t: Column) -> Column:
-        h = F.xxhash64(t)
-        return F.array(
-            *[
-                F.when(h.bitwiseAND(F.lit(_bit_mask(i))) != 0, F.lit(1))
-                .otherwise(F.lit(-1))
-                .cast("long")
-                for i in range(64)
-            ]
-        )
-
-    bitvec = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(acc, token_votes(t), lambda a, b: a + b),
-    )
-
-    def fold(bv: Column) -> Column:
-        out = F.lit(0).cast("long")
-        for i in range(64):
-            out = out.bitwiseOR(
-                F.when(F.element_at(bv, i + 1) >= 0, F.lit(_bit_mask(i)))
-                .otherwise(F.lit(0))
-                .cast("long")
-            )
-        return out
-
-    return let_(bitvec, fold)
-
-
 def simhash_bands(sim: Column, n_bands: int = 4) -> list[Column]:
     """Split a 64-bit simhash into band keys for bucketed candidate
     generation (hamming-distance ≤ k pairs collide on ≥1 band w.h.p.)."""
@@ -560,10 +497,11 @@ def simhash_bands(sim: Column, n_bands: int = 4) -> list[Column]:
 def simhash_frame(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, simhash64) for a corpus via explode + 64 codegen'd sum
-    aggregates — same math as :func:`simhash64`, but the hot loop runs
-    in whole-stage codegen instead of interpreted higher-order
-    functions (~10× on wide corpora); one shuffle on the id."""
+    """(id, sim): the 64-bit SimHash of each doc — per token xxhash64,
+    each bit votes ±1, the sign of the vote is the fingerprint bit.
+    Explode + 64 codegen'd sum aggregates, so the hot loop runs in
+    whole-stage codegen instead of interpreted higher-order functions
+    (~10× on wide corpora); one shuffle on the id."""
     ex = docs.select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("__tok"),
@@ -617,7 +555,7 @@ def dedup_simhash_pairs(
     occupancy back to ~0.25 at 1B docs, at the cost of requiring a
     32-bit exact prefix match, i.e. recall only for hamming distance
     concentrated in the other half); or move to a 128-bit fingerprint
-    (two simhash64 passes over disjoint token hash seeds) to keep 4
+    (two 64-bit simhash passes over disjoint token hash seeds) to keep 4
     bands at 32 bits each; or raise ``max_bucket`` with budgeted
     Σ bucket² monitoring.  When buckets ARE skipped, log the dropped
     mass — a silent cap reads as full recall when it isn't."""

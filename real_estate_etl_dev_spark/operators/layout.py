@@ -10,7 +10,9 @@ The reference leans on Postgres B-tree indexes
   runs with NO exchange of the big side.  At 100 TB this converts the
   nightly merge from a 2-sided shuffle into a map-side zip.
 * **partitioning** — append-only staging partitions on the batch date
-  (scraped_at month), so merge reads prune to one partition.
+  (scraped_at month), so merge reads prune to one partition; the
+  catalog's ``partition_pruned_scan`` writes ``partitionBy`` inline and
+  certifies the pruned scan.
 * **salting** — a hot key (one source producing 50% of rows, a
   near-empty-description duplicate class) makes one reducer the
   straggler.  ``salted_agg`` splits hot groups across N sub-keys with
@@ -23,8 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..benchmeta import local_frame
 
 
 def write_bucketed(
@@ -81,25 +81,6 @@ def salted_count_sum(
         F.sum("__n").cast("long").alias("n"),
         F.sum("__s").alias("total"),
     )
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | tuple[str, ...] = ("event_date",),
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Persist hive-partitioned by the given columns — the other half
-    of the layout story next to :func:`write_bucketed`: bucketing
-    co-locates JOIN keys, date/source partitioning prunes SCANS.  A
-    time-filtered query over a date-partitioned 100 TB table reads
-    only the matching directories (PartitionFilters in the scan node),
-    which is the difference between touching a day and touching a
-    decade.  Keep partition cardinality bounded (date, source — never
-    a high-cardinality id: millions of tiny directories kill the
-    driver's file index)."""
-    df.write.format(fmt).mode(mode).partitionBy(*partition_cols).save(path)
 
 
 def write_range_sorted(
@@ -184,34 +165,6 @@ def morton_code(x, y, bits: int = 16):
     return _spread_bits(cx).bitwiseOR(F.shiftleft(_spread_bits(cy), 1))
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: str,
-    y: str,
-    bits: int = 16,
-    n_files: int = 8,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Z-order layout: range-sort the files on the Morton key of
-    (x, y).  Same single range exchange as ``write_range_sorted``; the
-    written files carry disjoint Morton ranges AND, because the curve
-    preserves 2-D locality, usefully tight min/max on BOTH raw columns
-    — so a predicate on either (or a box on both) skips files the 1-D
-    sort layout cannot.  The Morton helper column is dropped before
-    write; readers see the original schema."""
-    (
-        df.withColumn("__z", morton_code(x, y, bits))
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.format(fmt)
-        .mode(mode)
-        .save(path)
-    )
-
-
 def compact_files(
     spark: SparkSession,
     src_path: str,
@@ -247,116 +200,6 @@ def compact_files(
     df = spark.read.parquet(src_path)
     df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
     return len(glob.glob(os.path.join(dst_path, "part-*.parquet")))
-
-
-def _open_footer(uri: str):
-    """Resolve ``uri`` and return ``(local_path, FileMetaData)`` for its
-    parquet footer.  inputFiles() yields scheme-prefixed URIs (file:,
-    hdfs:, s3a:, ...) — dispatch through pyarrow's FileSystem so the
-    audit works on any store, not just local paths.  Scheme-less
-    strings (relative paths) make ``from_uri`` raise ``pa.ArrowInvalid``
-    — that class lives in pyarrow.lib, re-exported at the top level;
-    ``pyarrow.fs`` has no ``.lib``, so naming it there would
-    AttributeError and mask the real failure (r05 ADVICE).  The footer
-    is parsed eagerly at ParquetFile construction, so the handle is
-    closed before returning."""
-    import pyarrow as pa
-    import pyarrow.fs as pafs
-    import pyarrow.parquet as pq
-
-    try:
-        fs, fpath = pafs.FileSystem.from_uri(uri)
-        with fs.open_input_file(fpath) as fh:
-            return fpath, pq.ParquetFile(fh).metadata
-    except (pa.ArrowInvalid, ValueError):
-        fpath = uri.removeprefix("file:")
-        return fpath, pq.ParquetFile(fpath).metadata
-
-
-def footer_stats(
-    spark: SparkSession, path: str, column: str
-) -> DataFrame:
-    """Distributed parquet-footer statistics — the 100k-file form of
-    the layout audit (the driver-side pyarrow loop in
-    plans/ingest.py:layout_maintenance_audit is fixture-scoped by
-    assertion; THIS is the variant its docstring promises).
-
-    Fans the file list out as a DataFrame and opens each footer
-    executor-side (``pyarrow.parquet.ParquetFile(...).metadata`` via
-    ``mapInPandas`` — pure metadata reads, no row data moves), yielding
-    one row per file: (file, n_rows, col_min, col_max).  Driver cost is
-    O(result rows); a zone's audit is then one sort + lag-window pass
-    (see ``ranges_disjoint``).  Min/max are emitted as strings so one
-    schema serves any orderable column type; compare after casting."""
-    import pandas as pd
-
-    files = spark.read.parquet(path).inputFiles()
-
-    def read_footers(batches):
-        for pdf in batches:
-            out = {"file": [], "n_rows": [], "col_min": [], "col_max": []}
-            for uri in pdf["file"]:
-                fpath, meta = _open_footer(uri)
-                idx = meta.schema.names.index(column)
-                mins, maxs = [], []
-                for rg in range(meta.num_row_groups):
-                    st = meta.row_group(rg).column(idx).statistics
-                    if st is not None and st.has_min_max:
-                        mins.append(st.min)
-                        maxs.append(st.max)
-                out["file"].append(fpath.rsplit("/", 1)[-1])
-                out["n_rows"].append(meta.num_rows)
-                out["col_min"].append(str(min(mins)) if mins else None)
-                out["col_max"].append(str(max(maxs)) if maxs else None)
-            yield pd.DataFrame(out)
-
-    paths = local_frame(spark, [(f,) for f in files], "file string")
-    # one footer read is microseconds of work: let every core take a
-    # slice instead of one task owning the whole listing
-    n_slices = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    return paths.repartition(n_slices).mapInPandas(
-        read_footers,
-        schema="file string, n_rows long, col_min string, col_max string",
-    )
-
-
-def ranges_disjoint(stats: DataFrame, cast_to: str = "string") -> DataFrame:
-    """Pairwise-disjointness verdict over ``footer_stats`` output: sort
-    files by min and flag any file whose min does not exceed the
-    previous file's max.  One tiny shuffle over |files| rows; the
-    verdict aggregate is a single row.
-
-    ``cast_to`` MUST name the sort column's comparable type ("bigint",
-    "double", "timestamp", ...) — footer_stats emits min/max as
-    strings for schema genericity, and comparing numerics
-    lexicographically would both miss real overlaps ('5' > '25') and
-    invent false ones ('10' < '2').  The default "string" is only
-    correct for keys whose lexical and natural orders agree (e.g.
-    zero-padded ids).
-
-    Files with NO column statistics cannot be placed — they are
-    COUNTED (``n_missing_stats``) and force ``all_disjoint`` false:
-    an unverifiable file must never certify a zone."""
-    from pyspark.sql import Window
-
-    lo = F.col("col_min").cast(cast_to)
-    hi = F.col("col_max").cast(cast_to)
-    w = Window.orderBy(lo, "file")
-    flagged = stats.select(
-        "file",
-        (F.col("col_min").isNull() | F.col("col_max").isNull()).alias("no_stats"),
-        (
-            F.lag(hi).over(w).isNotNull() & (lo <= F.lag(hi).over(w))
-        ).alias("overlaps_prev"),
-    )
-    return flagged.agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum(F.col("no_stats").cast("long")).cast("long").alias("n_missing_stats"),
-        (
-            ~F.max(F.coalesce("overlaps_prev", F.lit(False)))
-            & (F.sum(F.col("no_stats").cast("long")) == 0)
-        ).alias("all_disjoint"),
-    )
 
 
 def salted_join(

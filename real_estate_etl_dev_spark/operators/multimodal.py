@@ -14,11 +14,13 @@ as flat typed columns so downstream filters stay JVM-side.
 from __future__ import annotations
 
 from collections.abc import Iterator
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 try:  # pragma: no cover - vendored-API availability guard
     import sys
@@ -44,18 +46,6 @@ def attach_binary(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def decode_image(payload: Column) -> Column:  # pragma: no cover - stub
-    """REAL image decode requires an image library not present in this
-    container.  Deliberately unimplemented — see
-    :func:`fake_feature_extractor` for the tested plumbing path.
-    Availability re-checked each round (last: r11 — ``import PIL``
-    still fails)."""
-    raise NotImplementedError(
-        "image decode needs Pillow/libvips (not installed here); "
-        "wire the decoder into fake_feature_extractor's mapInPandas kernel"
-    )
-
-
 FAKE_FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, first_byte long, last_byte long, n_tokens long"
 )
@@ -73,6 +63,8 @@ def fake_feature_extractor(
     embed when the libs exist."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             payloads = pdf[payload_col]
             yield pd.DataFrame(
@@ -106,7 +98,7 @@ def frame_sample_schedule(
     timestamp is idx·10^6 div fps_milli milliseconds.
 
     The DECODE of a scheduled frame is the stubbed kernel
-    (:func:`decode_image` / :func:`fake_feature_extractor` plumbing);
+    (:func:`fake_feature_extractor` plumbing);
     the schedule itself is what the planner ships to the decode tier,
     and at 100 TB it is pure map-side column math — no shuffle, no
     Python."""

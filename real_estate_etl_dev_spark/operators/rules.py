@@ -83,11 +83,6 @@ def classify_tab_sql(price: str, currency: str, property_type: str) -> str:
     )
 
 
-def classify_tab(price: str, currency: str, property_type: str) -> Column:
-    """:func:`classify_tab_sql` as a Column over three column names."""
-    return F.expr(classify_tab_sql(price, currency, property_type))
-
-
 def identify_issues(
     bedrooms: Column | str,
     price: Column | str,

@@ -19,8 +19,8 @@ one committed snapshot:
 * **Scale**: the manifest lists data files explicitly, so reads skip
   the eventually-consistent LIST operation entirely; per-file row
   counts ride along for free.  At 100 TB a version's file list pairs
-  with the layout tier's ``footer_stats`` min/max audit for
-  file-level pruning, and production systems amortize storage by
+  with per-file footer min/max stats (the check
+  ``layout_maintenance_audit`` runs) for file-level pruning, and production systems amortize storage by
   manifesting per-version DELTAS + periodic compaction
   (Iceberg/Delta's design) — the commit protocol certified here is
   the same.
@@ -89,15 +89,6 @@ def publish_version(df: DataFrame, table_dir: str, version: int) -> dict:
         fh.write(str(version))
     os.rename(latest_tmp, os.path.join(table_dir, "_latest"))
     return manifest
-
-
-def list_versions(table_dir: str) -> list[int]:
-    """Committed versions (manifest present), ascending."""
-    out = []
-    for f in os.listdir(table_dir):
-        if f.startswith("_manifest_v") and f.endswith(".json"):
-            out.append(int(f[len("_manifest_v"):-len(".json")]))
-    return sorted(out)
 
 
 def read_snapshot(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import benchmeta
-from ..operators.analytics import order_bounded
+from ..operators.analytics import order_bounded, paginate_offset
 from ..planview import file_roots, leaves, node_class, plan_root, subplans
 from ..sources.readers import input_signature, load_table, record_reads
 
@@ -553,19 +553,17 @@ def doc_embedding_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orders_page3_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/O5: ORDER BY ... OFFSET/LIMIT pagination (reference
-    queue_routes.py:28-37, page size 50). Offset expressed as a
-    row_number filter.
+    queue_routes.py:28-37, page size 50): page 3 of
+    ``operators/analytics.py:paginate_offset``, the row_number filter
+    ``rn`` 101..150.
 
     Scale note: a global row_number is a single-partition sort — fine for
     a serve-path page; for deep pagination at 100 TB use keyset
-    pagination (WHERE sort_key < last_seen) instead; documented here and
-    implemented in operators/analytics.py:paginate_keyset."""
-    w = Window.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+    pagination (WHERE sort_key < last_seen) instead, as
+    ``operators/analytics.py:paginate_keyset`` does."""
+    orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     return (
-        T(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter((F.col("rn") >= 101) & (F.col("rn") <= 150))
+        paginate_offset(orders, "o_totalprice", "o_orderkey", page=3)
         .select("rn", "o_orderkey", F.round("o_totalprice", 2).alias("total_price"))
         .orderBy("rn")
     )

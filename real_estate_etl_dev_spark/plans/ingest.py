@@ -257,14 +257,11 @@ def layout_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Footer inspection runs driver-side over the ≤36-file test fixture
     (bounded by the assertion below) — the audit tool's natural home
-    for a fixture.  The DISTRIBUTED variant for a real 100k-file zone
-    is IMPLEMENTED at ``operators/layout.py:footer_stats`` +
-    ``ranges_disjoint``: the file list fans out as a DataFrame,
-    ``mapInPandas`` opens each footer executor-side (pure metadata
-    reads — no row data moves), and disjointness is one sort-by-min +
-    lag-window pass; driver cost is O(result rows), not O(files).
-    ``tests/test_layout_ivf.py`` pins it byte-identical to this
-    driver-side loop on the same zone."""
+    for a fixture.  A real 100k-file zone would fan the file list out
+    as a DataFrame and open each footer executor-side (pure metadata
+    reads), then check disjointness in one sort-by-min + lag-window
+    pass; no catalog query needs that form, so the library does not
+    carry it."""
     import glob as _glob
 
     import pyarrow.parquet as _pq
@@ -308,7 +305,7 @@ def layout_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_range_sorted(orders, dst_r, ["o_totalprice"], n_files=4)
         rs_files = _glob.glob(f"{dst_r}/part-*.parquet")
         # Driver-side footer loop is fixture-scoped BY CONSTRUCTION — keep
-        # it that way (the distributed variant is in the docstring).
+        # it that way (the 100k-file form is sketched in the docstring).
         assert len(rs_files) <= _AUDIT_FRAGMENTS + 4, (
             f"footer audit is driver-side and bounded; got {len(rs_files)} files"
         )
@@ -376,11 +373,11 @@ _Z_STEPS_SQL = "\n".join(
 )
 def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ORDER layout key certified cross-engine: the Morton interleave
-    of (o_custkey, days-since-1992) — the derived key
-    ``operators/layout.py:write_zordered`` range-sorts files on so a
-    2-D box predicate (customer range × date range) skips files on
-    BOTH columns at once, where the existing range-sorted layout
-    clusters only its leading column.  The query buckets the curve
+    of (o_custkey, days-since-1992) — the derived key a Z-ordered
+    layout range-sorts files on (``write_range_sorted`` over a
+    ``morton_code`` column) so a 2-D box predicate (customer range ×
+    date range) skips files on BOTH columns at once, where the
+    existing range-sorted layout clusters only its leading column.  The query buckets the curve
     (z >> 16) and certifies per-bucket count + exact min/max Morton
     codes; the DuckDB oracle recomputes the full five-step shift-or-
     mask spread bit for bit, so any deviation in the interleave math
@@ -390,9 +387,10 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no UDF, no shuffle beyond the audit's own
     bounded (≤256-bucket) aggregate; at write time the layout costs
     the same single range exchange as ``write_range_sorted``.
-    ``tests/test_layout_ivf.py`` proves the locality claim: a 2-D box
-    query touches strictly fewer files on the Z-ordered layout than on
-    the 1-D sort of the same data."""
+    ``tests/test_layout_ivf.py`` proves the locality claim: a band on
+    the trailing dimension touches at most half the files on the
+    Z-ordered layout that it touches on the 1-D sort of the same
+    data."""
     from ..operators.layout import morton_code
 
     orders = load_table(spark, sf_dir, "orders")

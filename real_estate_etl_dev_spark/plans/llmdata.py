@@ -17,6 +17,7 @@ from ..benchmeta import local_frame
 from ..operators.dedup import (
     combined_bucket_audit,
     connected_components,
+    dedup_exact_groups,
     dedup_exact_keep_first,
     dedup_minhash_pairs,
     dedup_simhash_pairs,
@@ -95,24 +96,7 @@ def dedup_exact_groups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one shuffle on md5(text); duplicate classes land on one reducer;
     pair growth is linear, unlike r01's (n_chars, lang) bucket key).
     """
-    corpus = _augmented_docs(spark, sf_dir)
-    return (
-        corpus.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
-        .groupBy("h")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dups"),
-            F.min("doc_id").alias("keeper"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            ).alias("dup_ids"),
-        )
-        .filter(F.col("n_dups") > 1)
-        .orderBy("h")
-    )
+    return dedup_exact_groups(_augmented_docs(spark, sf_dir)).orderBy("h")
 
 
 @query(

@@ -237,9 +237,8 @@ def dead_letter_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def run_report_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S17/A9: per-source run-report rows (scraped/error counts —
-    ref models/report.py:13-17, pipelines/property.py:70-87).  The
-    observe()-based zero-pass variant is exercised in
-    tests/test_sinks_ml.py."""
+    ref models/report.py:13-17, pipelines/property.py:70-87), one
+    grouped aggregate over the events."""
     ev = load_table(spark, sf_dir, "events")
     report = ev.groupBy(
         F.concat(F.lit("src"), (F.col("user_id") % 5).cast("string")).alias("source")

@@ -1,14 +1,11 @@
-"""Source layer: parquet/CSV/JSON readers and scan-stage operators."""
+"""Source layer: the parquet table reader and scan-stage operators."""
 
-from .readers import TABLES, load_table, read_csv_source, read_json_source, register_views
+from .readers import TABLES, load_table
 from .scans import fetch_details, html_in_json, incremental_seed, page_fanout
 
 __all__ = [
     "TABLES",
     "load_table",
-    "read_csv_source",
-    "read_json_source",
-    "register_views",
     "fetch_details",
     "html_in_json",
     "incremental_seed",

@@ -242,27 +242,3 @@ def fan_out(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register every table as a temp view for spark.sql paths."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
-
-
-def read_json_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S11: JSON file source (reference ml_region_prediction.py:20,50)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_csv_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S12: CSV source with header (reference ml_region_prediction.py:46)."""
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)

@@ -22,11 +22,13 @@ engine-relevant semantics are the DATAFLOW shapes, which live here:
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 try:  # pragma: no cover
     import sys
@@ -69,6 +71,8 @@ FETCH_SCHEMA = "url string, status long, body string"
 def fake_fetcher(pdf_urls: pd.Series) -> pd.DataFrame:
     """Deterministic stand-in for the HTTP kernel: every URL "returns"
     a synthetic HTML page derived from its tail digits."""
+    import pandas as pd
+
     keys = pdf_urls.str.extract(r"(\d+)$")[0].fillna("0")
     return pd.DataFrame(
         {

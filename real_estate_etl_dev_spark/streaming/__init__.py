@@ -1,7 +1,6 @@
 """Structured Streaming variants of the ingest + merge path."""
 
 from .ingest import (
-    dedup_urls,
     drop_files,
     memory_sink,
     publish_batches,
@@ -13,7 +12,6 @@ from .ingest import (
 )
 
 __all__ = [
-    "dedup_urls",
     "drop_files",
     "memory_sink",
     "publish_batches",

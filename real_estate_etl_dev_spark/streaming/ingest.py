@@ -5,7 +5,7 @@ stamped ``scraped_at = first_month()``, reid/spiders/base.py:10); the
 streaming-shaped semantics it carries map onto Structured Streaming:
 
 * micro-batch ingestion  → file source + ``Trigger.AvailableNow``
-* in-run URL dedup       → ``withWatermark`` + ``dropDuplicates``
+* in-run dedup           → ``withWatermark`` + ``dropDuplicatesWithinWatermark``
 * monthly/tumbling aggs  → ``window()`` group with watermark
 * upsert current-state   → ``foreachBatch`` into the merge engine
 * queue status machine   → ``applyInPandasWithState`` keyed by url
@@ -20,8 +20,7 @@ from __future__ import annotations
 import uuid
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +28,9 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import conf_scope
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 try:  # pragma: no cover
     import sys
@@ -51,13 +53,6 @@ def stream_source(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load(path)
-
-
-def dedup_urls(stream: DataFrame, ts_col: str = "scraped_at", delay: str = "1 hour") -> DataFrame:
-    """Stream dedup on url with a watermark bounding state
-    (reference: visited_urls set + unique url index,
-    models/listing.py:28,56)."""
-    return stream.withWatermark(ts_col, delay).dropDuplicates(["url", ts_col])
 
 
 def windowed_counts(
@@ -213,6 +208,8 @@ def _queue_status_fn(
     known statuses, an unknown status ranks 0 and can therefore never
     strictly exceed the running status (the only case the old loop
     accepted), and the update stays strictly-greater-only."""
+    import pandas as pd
+
     if state.exists:
         status, n = state.get
     else:
@@ -238,73 +235,3 @@ def queue_status_stream(updates: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
-    right_prefix: str = "r_",
-) -> DataFrame:
-    """Stream-stream interval join: each left event pairs with right
-    events of the same key from the preceding ``lookback`` window —
-    the streaming analog of :func:`operators.asof.asof_join` (all
-    candidates within the interval rather than only the nearest;
-    nearest needs a post-agg ``max_by``).
-
-    Both sides carry watermarks, so the join state store evicts rows
-    older than ``watermark + lookback`` — bounded state, the thing a
-    100 TB/day stream lives or dies by."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    renamed = [F.col(c).alias(f"{right_prefix}{c}") for c in rw.columns]
-    rw = rw.select(*renamed)
-    rk, rt = f"{right_prefix}{key}", f"{right_prefix}{right_ts}"
-    cond = (
-        (F.col(key) == F.col(rk))
-        & (F.col(rt) <= F.col(left_ts))
-        & (F.col(rt) >= F.col(left_ts) - F.expr(f"INTERVAL {lookback}"))
-    )
-    return lw.join(rw, cond, "leftOuter").drop(rk)
-
-
-def session_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    delay: str = "1 hour",
-) -> DataFrame:
-    """Event-time session windows (dynamic-gap analog of
-    :func:`operators.asof.sessionize`): Spark merges windows whose
-    events are within ``gap``, and the watermark finalizes + evicts a
-    session once event time passes its close — per-key bounded state."""
-    return (
-        events.withWatermark(ts_col, delay)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(key),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def dedup_urls_within_watermark(
-    stream: DataFrame, ts_col: str = "scraped_at", delay: str = "1 hour"
-) -> DataFrame:
-    """In-run URL dedup, drift-tolerant: unlike
-    :func:`dedup_urls` (exact (url, ts) keys), this drops ANY
-    re-observation of a url whose first sighting is within the
-    watermark window — the semantics the reference's in-memory
-    ``visited_urls`` set actually has (a re-crawled page gets a new
-    timestamp but is still the same item).  State per url is evicted
-    once the watermark passes first-seen + delay, so memory is
-    bounded by the crawl window, not the crawl history."""
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(["url"])

@@ -53,6 +53,19 @@ def test_price_extraction(spark):
     pm = run1(spark, fx.check_per_meter, texts)
     for i, t in enumerate(texts):
         assert (usd[i], idr[i], cur[i], rep[i], pm[i]) == PRICE_CASES[t], t
+    # F23: the (lower-cased) text lands in the idr slot when it names
+    # IDR, else in the usd slot when it names USD
+    assert [
+        tuple(r)
+        for r in run1(spark, fx.grab_price, ["IDR 2,500,000,000", "USD 250,000",
+                                             "Price on request", "IDR 1 / USD 2"])
+    ] == [("idr 2,500,000,000", None), (None, "usd 250,000"), (None, None),
+          ("idr 1 / usd 2", None)]
+    # F31: the first currency token as written; the text when none
+    assert run1(spark, fx.extract_currency, ["Price: IDR 2.5 M", "Rp 500 juta",
+                                             "usd 975.000", "Price on request"]) == [
+        "IDR", "Rp", "usd", "Price on request"
+    ]
 
 
 def test_fix_price(spark):
@@ -84,6 +97,8 @@ def test_sizes(spark):
     # are-multiplier, and "12,5" parses as 125 there.
     assert run1(spark, fx.landsize_extractor, DESCS) == [5, None, None, 125, None, None]
     assert run1(spark, fx.buildsize_extractor, DESCS) == [None, None, None, 300, None, None]
+    # F25 cari_luas_tanah: the raw number token after a land-size label
+    assert run1(spark, fx.cari_luas_tanah, DESCS) == ["5", "450", None, "12,5", None, "200"]
     assert run1(spark, fx.are_to_sqm, ["5 are", "2.5 are", "12,5 are", "450 sqm"]) == [
         500,
         250,
@@ -295,6 +310,14 @@ def test_urls(spark):
 
 def test_textops(spark):
     assert run1(spark, fx.remove_whitespace, ["  a   b\n c "]) == ["a b c"]
+    assert run1(spark, fx.dot_to_comma, ["1.250.000", "no dots"]) == ["1,250,000", "no dots"]
+    assert run1(
+        spark, fx.remove_show_more_less, ["Nice villa Show More", "Show LessDone", "plain"]
+    ) == ["Nice villa ", "Done", "plain"]
+    # F11: text before the first / after the last separator, the whole
+    # text when there is none
+    assert run1(spark, lambda c: fx.get_first(c, "/"), ["a/b/c", "abc"]) == ["a", "abc"]
+    assert run1(spark, lambda c: fx.get_last(c, "/"), ["a/b/c", "abc"]) == ["c", "abc"]
     assert run1(spark, fx.grab_first, ["3/4", "2-3", "1+2", "5 or 6", "7"]) == [
         "3",
         "2",
@@ -344,8 +367,18 @@ def test_combinators(spark):
     assert [
         r[0] for r in df.select(fx.take_first("a", "b", "c").alias("o")).collect()
     ] == ["fallback", "first"]
+    typed = spark.createDataFrame(
+        [(None, 5, 7), (None, None, 7), (None, None, None)], "a long, b long, c long"
+    )
+    assert [
+        r[0] for r in typed.select(fx.take_first_typed("a", "b", "c")).collect()
+    ] == [5, 7, None]
     chain = fx.map_compose(fx.remove_whitespace, lambda c: F.upper(c))
     assert run1(spark, chain, ["  a  b "]) == ["A B"]
+    # C2 over an array: the chain per element, NULLs dropped
+    arr = spark.createDataFrame([(["  a  b ", None, " c"],)], "v array<string>")
+    per_value = fx.map_compose_array(fx.remove_whitespace, F.upper)
+    assert arr.select(per_value("v")).collect()[0][0] == ["A B", "C"]
     assert run1(spark, lambda c: fx.split_on(c, "-", 0), ["a - b-c"]) == ["a"]
     df2 = spark.createDataFrame([(["  x ", "y", " z  "],)], "v array<string>")
     assert df2.select(fx.take_nth("v", 1).alias("o")).collect()[0][0] == "y"
@@ -369,3 +402,20 @@ def test_json_geo(spark):
     assert run1(spark, fx.extract_longitude, [script]) == [115.1385]
     assert run1(spark, lambda c: fx.finder(c, r"ID-(\d+)", 1, "long"), ["ID-42"]) == [42]
     assert run1(spark, fx.after_colon, ["Bedrooms: 3"]) == ["3"]
+    # F32: one path probe, and a tolerant parse that is NULL (not a
+    # struct of NULLs) on malformed input
+    assert run1(
+        spark, lambda c: fx.json_value(c, "$.a.b"), ['{"a": {"b": 3}}', '{"a": 1}', "{bad"]
+    ) == ["3", None, None]
+    assert [
+        r if r is None else tuple(r)
+        for r in run1(spark, lambda c: fx.parse_json(c, "n int, s string"),
+                      ['{"n": 2, "s": "x"}', "{bad"])
+    ] == [(2, "x"), None]
+    # F36: the cpage query parameter, and an upper-case listing code
+    assert run1(
+        spark, fx.find_page_number, ["https://x.com/list?cpage=3&q=1", "https://x.com/list"]
+    ) == [3, None]
+    assert run1(
+        spark, fx.find_code, ["Villa code UBD-123 for sale", "Ref: LV_88", "ab-12"]
+    ) == ["UBD-123", "LV_88", None]

@@ -1,5 +1,5 @@
-"""Tests for the physical-layout operators (bucketing, salting) and
-the IVF ANN tier."""
+"""Tests for the physical-layout operators (bucketing, salting, range
+and Z-order sorts, compaction) and the IVF ANN tier."""
 
 from __future__ import annotations
 
@@ -78,7 +78,10 @@ def test_ivf_topk_partial_probe_keeps_near_identical(spark):
 
 
 def test_partitioned_write_prunes_scan(spark, tmp_path):
-    from real_estate_etl_dev_spark.operators.layout import write_partitioned
+    """A hive-partitioned write (inline ``partitionBy``, as
+    ``partition_pruned_scan`` writes it) prunes partition directories,
+    and ``partition_filter_columns`` — the probe that query gates on —
+    names exactly the partition column."""
     from real_estate_etl_dev_spark.sources.readers import load_table
 
     events = load_table(spark, "/root/testdata/sf0.001", "events").withColumn(
@@ -86,12 +89,12 @@ def test_partitioned_write_prunes_scan(spark, tmp_path):
     )
     n_days = events.select("event_date").distinct().count()
     path = str(tmp_path / "ev_part")
-    write_partitioned(events, path, ("event_date",))
+    events.write.partitionBy("event_date").parquet(path)
 
     one_day = events.selectExpr("min(event_date) AS d").collect()[0]["d"]
     rd = spark.read.parquet(path).filter(F.col("event_date") == F.lit(one_day))
     # the date predicate prunes partition DIRECTORIES, not rows:
-    assert "event_date" in partition_filter_columns(rd)
+    assert partition_filter_columns(rd) == {"event_date"}
     expected = events.filter(F.col("event_date") == F.lit(one_day)).count()
     assert rd.count() == expected and n_days > 1
 
@@ -153,96 +156,6 @@ def test_compact_files_reduces_file_count(spark, sf_dir, tmp_path):
     assert spark.read.parquet(dst).count() == orders.count()
 
 
-def test_footer_stats_distributed_matches_driver_loop(spark, tmp_path):
-    """The distributed footer audit (mapInPandas over the file list)
-    must report exactly what the driver-side pyarrow loop sees on a
-    range-sorted zone, and the lag-window disjointness verdict must
-    hold there and fail on an overlapping (unsorted) zone."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from real_estate_etl_dev_spark.operators.layout import (
-        footer_stats,
-        ranges_disjoint,
-        write_range_sorted,
-    )
-
-    df = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-    )
-    sorted_zone = str(tmp_path / "sorted")
-    write_range_sorted(df, sorted_zone, ["k"], n_files=4)
-
-    stats = footer_stats(spark, sorted_zone, "k").toPandas()
-    want = {}
-    for f in (tmp_path / "sorted").glob("part-*.parquet"):
-        meta = pq.ParquetFile(str(f)).metadata
-        idx = meta.schema.names.index("k")
-        mins = [meta.row_group(r).column(idx).statistics.min
-                for r in range(meta.num_row_groups)]
-        maxs = [meta.row_group(r).column(idx).statistics.max
-                for r in range(meta.num_row_groups)]
-        want[f.name] = (meta.num_rows, str(min(mins)), str(max(maxs)))
-    got = {r.file: (r.n_rows, r.col_min, r.col_max) for r in stats.itertuples()}
-    assert got == want and len(got) == 4
-
-    # NUMERIC zone: the typed cast must see the disjoint ranges a
-    # lexical compare would scramble ('10' < '2')
-    v_num = ranges_disjoint(
-        footer_stats(spark, sorted_zone, "k"), cast_to="bigint"
-    ).collect()[0]
-    assert v_num.n_files == 4 and v_num.all_disjoint
-    assert v_num.n_missing_stats == 0
-
-    # string zone whose lexical order agrees with the natural order
-    padded = df.select(F.lpad(F.col("k").cast("string"), 8, "0").alias("k"))
-    pad_zone = str(tmp_path / "padded")
-    write_range_sorted(padded, pad_zone, ["k"], n_files=4)
-    v = ranges_disjoint(footer_stats(spark, pad_zone, "k")).collect()[0]
-    assert v.n_files == 4 and v.all_disjoint
-
-    # overlapping zone must FAIL the verdict
-    messy = str(tmp_path / "messy")
-    df.select(F.lpad((F.col("k") % 13).cast("string"), 8, "0").alias("k")) \
-        .repartition(4).write.parquet(messy)
-    m = ranges_disjoint(footer_stats(spark, messy, "k")).collect()[0]
-    assert m.n_files == 4 and not m.all_disjoint
-
-    # a numeric zone that truly overlaps must fail UNDER THE CAST too
-    messy_num = str(tmp_path / "messy_num")
-    df.select((F.col("k") % 13).alias("k")).repartition(4).write.parquet(messy_num)
-    mn = ranges_disjoint(
-        footer_stats(spark, messy_num, "k"), cast_to="bigint"
-    ).collect()[0]
-    assert mn.n_files == 4 and not mn.all_disjoint
-
-
-def test_open_footer_fallback_real_exception_class(tmp_path, monkeypatch):
-    """r05 ADVICE (medium): the footer-read fallback used to name
-    ``pafs.lib.ArrowInvalid`` — an attribute that does not exist — so
-    any URI `FileSystem.from_uri` rejects raised AttributeError instead
-    of taking the documented local-path fallback.  Pin both arms:
-    a scheme-prefixed URI goes through the FileSystem arm, and a
-    scheme-less relative path (which from_uri rejects with
-    pa.ArrowInvalid) must land in the fallback, not explode."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from real_estate_etl_dev_spark.operators.layout import _open_footer
-
-    f = tmp_path / "one.parquet"
-    pq.write_table(pa.table({"k": [1, 2, 3]}), str(f))
-
-    # URI arm
-    p1, meta1 = _open_footer(f.as_uri())
-    assert meta1.num_rows == 3 and p1.endswith("one.parquet")
-
-    # fallback arm: relative, scheme-less — from_uri raises ArrowInvalid
-    monkeypatch.chdir(tmp_path)
-    p2, meta2 = _open_footer("one.parquet")
-    assert meta2.num_rows == 3 and p2 == "one.parquet"
-
-
 def test_morton_code_matches_python_reference(spark):
     """Pin the five-step shift-or-mask interleave against a bit-by-bit
     Python reference over edge values (0, maxima, asymmetric pairs)."""
@@ -272,15 +185,16 @@ def test_morton_code_matches_python_reference(spark):
 
 
 def test_zorder_layout_touches_fewer_files_on_trailing_dim(spark, tmp_path):
-    """The locality claim behind write_zordered: on a 256x256 grid cut
-    into 16 files, a band predicate on the TRAILING sort dimension (y)
-    hits every file of the 1-D (x,y)-sorted layout but only the Morton
-    tiles that intersect the band on the Z-ordered one."""
+    """The locality claim behind the Morton key ``zorder_bucket_stats``
+    certifies: on a 256x256 grid cut into 16 files, a band predicate on
+    the TRAILING sort dimension (y) hits every file of the 1-D
+    (x,y)-sorted layout but only the Morton tiles that intersect the
+    band on the layout range-sorted on ``morton_code(x, y)``."""
     from pyspark.sql import functions as F
 
     from real_estate_etl_dev_spark.operators.layout import (
+        morton_code,
         write_range_sorted,
-        write_zordered,
     )
 
     df = spark.range(65536).select(
@@ -291,7 +205,8 @@ def test_zorder_layout_touches_fewer_files_on_trailing_dim(spark, tmp_path):
     lin = str(tmp_path / "linear")
     zo = str(tmp_path / "zorder")
     write_range_sorted(df, lin, ["x", "y"], n_files=16)
-    write_zordered(df, zo, "x", "y", bits=8, n_files=16)
+    zordered = df.withColumn("z", morton_code("x", "y", bits=8))
+    write_range_sorted(zordered, zo, ["z"], n_files=16)
 
     band = F.col("y").between(100, 115)
 

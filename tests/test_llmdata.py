@@ -12,7 +12,7 @@ from real_estate_etl_dev_spark.operators.dedup import (
     dedup_minhash_pairs,
     dedup_simhash_pairs,
     ngram_jaccard,
-    simhash64,
+    simhash_frame,
 )
 from real_estate_etl_dev_spark.operators.multimodal import (
     attach_binary,
@@ -53,7 +53,7 @@ def test_minhash_pairs(spark):
 
 def test_simhash(spark):
     d = docs_df(spark)
-    sims = {r["doc_id"]: r["s"] for r in d.select("doc_id", simhash64("text").alias("s")).collect()}
+    sims = {r["doc_id"]: r["sim"] for r in simhash_frame(d).collect()}
     assert sims[1] == sims[2]  # identical text → identical fingerprint
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
@@ -435,17 +435,16 @@ def test_dedup_pair_growth_is_linear_across_sf(spark):
 def test_bucket_audit_flags_hot_bucket(spark):
     """A bucket over max_bucket must surface in the audit with the
     exact B·(B−1)/2 dropped-pair mass; a cap-free corpus audits 0."""
-    from real_estate_etl_dev_spark.operators.dedup import (
-        minhash_bucket_audit,
-        simhash_bucket_audit,
-    )
+    from real_estate_etl_dev_spark.operators.dedup import combined_bucket_audit
 
     # 10 identical docs → every band has one 10-member bucket
     hot = spark.createDataFrame(
         [(i, "same text every time") for i in range(10)],
         "doc_id long, text string",
     )
-    audit = minhash_bucket_audit(hot, num_hashes=3, max_bucket=4).collect()
+    audit = combined_bucket_audit(
+        hot, num_hashes=3, minhash_max_bucket=4
+    ).filter(F.col("algo") == "minhash").collect()
     assert len(audit) == 3
     for r in audit:
         assert r["rows_banded"] == 10
@@ -454,18 +453,20 @@ def test_bucket_audit_flags_hot_bucket(spark):
         assert r["pairs_skipped"] == 45  # 10·9/2
 
     cold = docs_df(spark)
-    for r in simhash_bucket_audit(cold, max_bucket=200).collect():
+    for r in combined_bucket_audit(cold).collect():
         assert r["n_skipped_buckets"] == 0 and r["pairs_skipped"] == 0
 
 
 def test_combined_bucket_audit_matches_per_algo_and_fuses_shuffle(spark):
-    """The fused audit must emit exactly the per-algo audits' rows
-    (algo-tagged) while paying ONE wide occupancy exchange for both
-    bandings instead of one each."""
+    """The two-part fused audit must emit exactly the rows of two
+    one-part audits, one per banding, while paying ONE wide occupancy
+    exchange for both bandings instead of one each."""
     from real_estate_etl_dev_spark.operators.dedup import (
+        _minhash_banded,
+        _shingled,
+        _simhash_banded,
         combined_bucket_audit,
-        minhash_bucket_audit,
-        simhash_bucket_audit,
+        fused_bucket_audit,
     )
 
     docs = spark.createDataFrame(
@@ -477,18 +478,15 @@ def test_combined_bucket_audit_matches_per_algo_and_fuses_shuffle(spark):
         docs, num_hashes=3, shingle_n=2, minhash_max_bucket=4,
         n_bands=4, simhash_max_bucket=4,
     )
-    expect = {
-        ("minhash", r["band_idx"]): r
-        for r in minhash_bucket_audit(
-            docs, num_hashes=3, shingle_n=2, max_bucket=4
-        ).collect()
-    }
-    expect.update(
-        {
-            ("simhash", r["band_idx"]): r
-            for r in simhash_bucket_audit(docs, max_bucket=4).collect()
-        }
+    mh = fused_bucket_audit([(
+        "minhash",
+        _minhash_banded(_shingled(docs, "text", "doc_id", 2), "doc_id", 3, 42),
+        4,
+    )])
+    sh = fused_bucket_audit(
+        [("simhash", _simhash_banded(docs, "text", "doc_id", 4), 4)]
     )
+    expect = {(r["algo"], r["band_idx"]): r for r in mh.collect() + sh.collect()}
     rows = fused.collect()
     assert len(rows) == 7  # 3 minhash + 4 simhash bands
     for r in rows:
@@ -501,18 +499,7 @@ def test_combined_bucket_audit_matches_per_algo_and_fuses_shuffle(spark):
     # algo, union after) must pay strictly more hash exchanges than
     # the fused shape (union before the occupancy agg) under the same
     # plan walk.
-    import pyspark.sql.functions as F
-
-    unfused = (
-        minhash_bucket_audit(docs, num_hashes=3, shingle_n=2, max_bucket=4)
-        .select(F.lit("minhash").alias("algo"), "*")
-        .unionByName(
-            simhash_bucket_audit(docs, max_bucket=4).select(
-                F.lit("simhash").alias("algo"), "*"
-            )
-        )
-        .orderBy("algo", "band_idx")
-    )
+    unfused = mh.unionByName(sh).orderBy("algo", "band_idx")
 
     # the walk reads the CURRENT adaptive plan (final once executed),
     # so executed/unexecuted frames compare fairly

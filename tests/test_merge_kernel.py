@@ -179,8 +179,11 @@ def test_one_build_makes_few_py4j_round_trips(spark, monkeypatch):
     builder = threading.get_ident()
 
     def counting(self, *args, **kwargs):
-        # only the build's own calls: a stream or listener that an
-        # earlier test left running calls py4j from its own thread
+        # only the build's own calls: py4j's FinalizerWorker thread
+        # sends a memory-delete ("m", "d") for each Java reference
+        # Python has collected, and in a full run the gc.collect()
+        # above queues ~2,000 of them from earlier tests; no earlier
+        # test leaves a stream or a listener running
         if threading.get_ident() == builder:
             calls.append(1)
         return send(self, *args, **kwargs)

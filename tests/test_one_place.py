@@ -16,7 +16,10 @@ one helper.
 * driver-local frames (``createDataFrame``) only in
   ``benchmeta.collect_local`` and ``benchmeta.local_frame``;
 * every top-level definition in ``plans/`` is a registered ``@query``
-  or is used by the package.
+  or is used by the package;
+* every top-level function of the operator library (``operators/``,
+  ``streaming/``, ``sources/``, ``ml/``) is used by the package, by
+  ``scripts/`` or by ``bench.py``.
 
 The scan reads attribute accesses in the AST, so docstrings and
 comments that name these calls don't count.
@@ -26,8 +29,11 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import subprocess
+import sys
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "real_estate_etl_dev_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "real_estate_etl_dev_spark"
 
 
 def _sites() -> dict[str, set[str]]:
@@ -132,19 +138,29 @@ def _top_level_names(node: ast.AST) -> list[str]:
     return []
 
 
-def test_plan_definitions_are_queries_or_used():
-    """Every top-level function or assignment in ``plans/`` is a
-    registered ``@query`` or is read somewhere in the package, so no
-    unregistered plan (a staged or retired row) can sit there unused."""
+def _loaded(paths, count_reexports: bool = True) -> set[str]:
+    """Every name the files in ``paths`` read: loaded names, attribute
+    names and names imported by ``from ... import``.  With
+    ``count_reexports`` false, the imports of ``__init__.py`` files
+    (the package re-exports) are not counted."""
     loaded: set[str] = set()
-    for path in PKG.rglob("*.py"):
+    for path in paths:
+        reexports = path.name == "__init__.py" and not count_reexports
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 loaded.add(node.id)
             elif isinstance(node, ast.Attribute):
                 loaded.add(node.attr)
-            elif isinstance(node, ast.ImportFrom):
+            elif isinstance(node, ast.ImportFrom) and not reexports:
                 loaded.update(alias.name for alias in node.names)
+    return loaded
+
+
+def test_plan_definitions_are_queries_or_used():
+    """Every top-level function or assignment in ``plans/`` is a
+    registered ``@query`` or is read somewhere in the package, so no
+    unregistered plan (a staged or retired row) can sit there unused."""
+    loaded = _loaded(PKG.rglob("*.py"))
     orphans = []
     for path in sorted((PKG / "plans").glob("*.py")):
         for node in ast.parse(path.read_text(), filename=str(path)).body:
@@ -156,3 +172,37 @@ def test_plan_definitions_are_queries_or_used():
                 and name not in loaded
             ]
     assert orphans == [], orphans
+
+
+def test_library_functions_are_used():
+    """Every top-level function of the operator library is called from
+    the package, from ``scripts/`` or from ``bench.py``, so each
+    operator has the one path a catalog query (or a probe script) runs,
+    and none is kept for its tests alone.  A re-export in a package
+    ``__init__`` is not a use.  ``functions/`` mirrors the reference's
+    scalar library row for row, and ``planview`` is how tests read
+    plans, so neither is scanned."""
+    roots = [*PKG.rglob("*.py"), *(ROOT / "scripts").glob("*.py"), ROOT / "bench.py"]
+    loaded = _loaded(roots, count_reexports=False)
+    orphans = [
+        f"{path.relative_to(PKG).as_posix()}:{node.name}"
+        for sub in ("operators", "streaming", "sources", "ml")
+        for path in sorted((PKG / sub).glob("*.py"))
+        for node in ast.parse(path.read_text(), filename=str(path)).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name not in loaded
+    ]
+    assert orphans == [], orphans
+
+
+def test_engine_import_does_not_load_pandas():
+    """Importing the driver entry point (the whole catalog) leaves
+    pandas unloaded: the pandas UDFs and ``mapInPandas`` kernels import
+    it when they are first built or run."""
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, __spark_entry__; print('pandas' in sys.modules)"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip() == "False"

@@ -5,11 +5,18 @@ import pytest
 
 from real_estate_etl_dev_spark.plans.catalog import CATALOG
 from real_estate_etl_dev_spark.session import conf_scope
+from real_estate_etl_dev_spark.sources.readers import TABLES, load_table
 
 from .conftest import BOUNDED_SORT_PANELS
 from .oracle_harness import compare, oracle_rows, ordered_rows
 
 ORACLE_QUERIES = [(n, q) for n, q in sorted(CATALOG.items()) if q.oracle]
+
+
+def register_views(spark, sf_dir):
+    """Register every table as a temp view for ``spark.sql``."""
+    for name in TABLES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 @pytest.mark.parametrize("name,q", ORACLE_QUERIES, ids=[n for n, _ in ORACLE_QUERIES])
@@ -57,8 +64,6 @@ def test_contract_shape():
 def test_sql_api_over_registered_views(spark, sf_dir):
     """The engine is also consumable as plain Spark SQL: register the
     table views and run the oracle dialect's query shapes directly."""
-    from real_estate_etl_dev_spark.sources.readers import register_views
-
     register_views(spark, sf_dir)
     sql_rows = spark.sql(
         """

@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from real_estate_etl_dev_spark.operators.merge import merge_listings
-from real_estate_etl_dev_spark.operators.rules import classify_tab, identify_issues
+from real_estate_etl_dev_spark.operators.rules import classify_tab_sql, identify_issues
 
 from tests.test_merge import BASE, RUN_DATE, SCHEMA, row
 
@@ -36,7 +36,7 @@ def test_classify_tab_is_total(spark, price, currency, ptype):
         [(price, currency, ptype)], "price long, currency string, property_type string"
     )
     got = df.select(
-        classify_tab("price", "currency", "property_type").alias("tab")
+        F.expr(classify_tab_sql("price", "currency", "property_type")).alias("tab")
     ).collect()[0][0]
     assert got in ("LUXURY LISTINGS", "ALL LAND", "DATA")
     if ptype == "Land" and got != "LUXURY LISTINGS":

@@ -1,6 +1,6 @@
-"""Structured Streaming tests (SURVEY §2.12): availableNow ingest,
-stream dedup, windowed counts, foreachBatch merge, stateful queue
-status."""
+"""Structured Streaming tests (SURVEY §2.12): the certification
+harness (drop, memory sink, publish), windowed counts, foreachBatch
+merge, stateful queue status."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from real_estate_etl_dev_spark.session import conf_scope
 from real_estate_etl_dev_spark.streaming import ingest
 from real_estate_etl_dev_spark.streaming.ingest import (
-    dedup_urls,
     queue_status_stream,
     run_merge_sink,
     stream_source,
@@ -29,22 +28,6 @@ def write_batch(tmp_path, name, rows):
         for r in rows:
             f.write(json.dumps(r) + "\n")
     return str(p)
-
-
-def test_ingest_dedup_availablenow(spark, tmp_path):
-    path = write_batch(
-        tmp_path,
-        "b1.json",
-        [
-            {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "Available"},
-            {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "Available"},
-            {"url": "u2", "scraped_at": "2026-01-01T01:00:00Z", "price": 2, "availability": "Sold"},
-        ],
-    )
-    stream = dedup_urls(stream_source(spark, path, SCHEMA))
-    with ingest.memory_sink(stream, str(tmp_path / "cp1"), "append") as sink:
-        got = sink.select("url").collect()
-    assert sorted(r["url"] for r in got) == ["u1", "u2"]  # dup dropped
 
 
 def test_windowed_counts(spark, tmp_path):
@@ -113,103 +96,19 @@ def test_queue_status_state(spark, tmp_path):
     assert got == {"u1": ("Error", 2), "u2": ("Sold", 2)}  # max-severity wins
 
 
-# --- round-2 depth: stream-stream join, session windows, late data ---------
-
-EV_SCHEMA = "user_id long, ts timestamp, event_id long"
-
-
-def _write_events(tmp_path, sub, name, rows):
-    p = tmp_path / sub
-    p.mkdir(exist_ok=True)
-    with open(p / name, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    return str(p)
+# --- restarts from a checkpoint: late data, stateful status ----------------
 
 
 def _run_once(stream, checkpoint, sink, mode="append"):
     # foreachBatch sink: the memory sink cannot recover stateful
-    # queries (joins, session windows) from a checkpoint.
+    # queries (windowed aggregates, applyInPandasWithState) from a
+    # checkpoint.
     ingest.run_available_now(
         stream.writeStream.foreachBatch(
             lambda df, _bid: sink.extend(df.collect())
         ).outputMode(mode),
         checkpoint,
     )
-
-
-def test_interval_join_match_then_outer(spark, tmp_path):
-    from real_estate_etl_dev_spark.streaming.ingest import interval_join
-
-    lpath = _write_events(
-        tmp_path, "err", "b1.json",
-        [
-            {"user_id": 1, "ts": "2026-01-01T01:00:00Z", "event_id": 10},
-            {"user_id": 1, "ts": "2026-01-01T03:00:00Z", "event_id": 11},
-        ],
-    )
-    rpath = _write_events(
-        tmp_path, "clk", "b1.json",
-        [{"user_id": 1, "ts": "2026-01-01T00:30:00Z", "event_id": 20}],
-    )
-    def run_once(sink):
-        left = stream_source(spark, lpath, EV_SCHEMA)
-        right = stream_source(spark, rpath, EV_SCHEMA)
-        joined = interval_join(left, right, lookback="1 hour", watermark="2 hours")
-        _run_once(joined, str(tmp_path / "cp_ij"), sink)
-
-    rows1 = []
-    run_once(rows1)
-    got1 = {r["event_id"]: r["r_event_id"] for r in rows1}
-    # inner match emits immediately: error@01:00 paired with click@00:30
-    assert got1.get(10) == 20
-
-    # Push the watermark past 03:00 on BOTH streams — the global
-    # watermark is min(left, right), so a quiet side holds it back.
-    # Run 2 advances it AFTER its data batch; run 3's batch then
-    # evicts + emits the unmatched left row.
-    for run_i, hour in ((2, "09"), (3, "10")):
-        for sub in ("err", "clk"):
-            _write_events(tmp_path, sub, f"b{run_i}.json",
-                          [{"user_id": 2, "ts": f"2026-01-01T{hour}:00:00Z",
-                            "event_id": run_i * 100}])
-    rows2 = []
-    run_once(rows2)
-    rows3 = []
-    run_once(rows3)
-    got23 = {r["event_id"]: r["r_event_id"] for r in rows2 + rows3}
-    assert 11 in got23 and got23[11] is None  # left-outer null after watermark
-
-
-def test_session_window_counts(spark, tmp_path):
-    from real_estate_etl_dev_spark.streaming.ingest import session_counts
-
-    path = _write_events(
-        tmp_path, "sess", "b1.json",
-        [
-            {"user_id": 1, "ts": "2026-01-01T00:00:00Z", "event_id": 1},
-            {"user_id": 1, "ts": "2026-01-01T00:10:00Z", "event_id": 2},  # same session
-            {"user_id": 1, "ts": "2026-01-01T02:00:00Z", "event_id": 3},  # new session
-        ],
-    )
-    def make():
-        return session_counts(
-            stream_source(spark, path, EV_SCHEMA), gap="30 minutes", delay="1 hour"
-        )
-
-    cp = str(tmp_path / "cp_sw")
-    rows = []
-    _run_once(make(), cp, rows)
-    # watermark after run1 = 02:00 - 1h = 01:00 > first session close
-    # (00:40); the finalized session emits on the next trigger.
-    _write_events(tmp_path, "sess", "b2.json",
-                  [{"user_id": 9, "ts": "2026-01-01T06:00:00Z", "event_id": 99}])
-    _run_once(make(), cp, rows)
-    sess1 = [r for r in rows if r["user_id"] == 1]
-    assert len(sess1) >= 1
-    first = min(sess1, key=lambda r: r["session_start"])
-    assert first["n_events"] == 2  # 00:00 and 00:10 merged, 02:00 excluded
-    assert str(first["session_end"]).endswith("00:40:00")  # last event + gap
 
 
 def test_windowed_counts_drops_late_data(spark, tmp_path):
@@ -234,25 +133,6 @@ def test_windowed_counts_drops_late_data(spark, tmp_path):
     _run_once(make(), cp, rows_out)
     hour0 = [r["n"] for r in rows_out if "00:00:00" in str(r["window_start"])]
     assert hour0 == [1]  # on-time row counted once, late arrival dropped
-
-
-def test_dedup_within_watermark_drops_drifted_ts(spark, tmp_path):
-    from real_estate_etl_dev_spark.streaming.ingest import (
-        dedup_urls_within_watermark,
-    )
-
-    # same url re-observed with a DIFFERENT timestamp → still a dup
-    path = write_batch(tmp_path, "wd1.json", [
-        {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
-        {"url": "u1", "scraped_at": "2026-01-01T00:05:00Z", "price": 1, "availability": "x"},
-        {"url": "u2", "scraped_at": "2026-01-01T00:10:00Z", "price": 2, "availability": "x"},
-    ])
-    out = dedup_urls_within_watermark(stream_source(spark, path, SCHEMA))
-    rows = []
-    _run_once(out, str(tmp_path / "cp_wd"), rows)
-    assert sorted(r["url"] for r in rows) == ["u1", "u2"]  # drifted-ts dup dropped
-    # exact-key dedup would have kept both u1 rows — this is the
-    # distinction from dedup_urls
 
 
 def test_queue_status_state_survives_restart(spark, tmp_path):
@@ -395,21 +275,25 @@ def _run_conf(checkpoint, key):
 
 
 def test_memory_sink_pins_state_partitions(spark, tmp_path):
-    """A stateful memory-sink run keeps 8 state partitions whatever the
-    session's shuffle partitions, and leaves the session value and its
-    temp views as they were."""
+    """A stateful memory-sink run (a watermarked stream dedup) drops the
+    duplicate row, keeps 8 state partitions whatever the session's
+    shuffle partitions, and leaves the session value and its temp views
+    as they were."""
     import os
 
     path = write_batch(tmp_path, "sp.json", [
+        {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
         {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
         {"url": "u2", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "x"},
     ])
     views = _temp_views(spark)
     cp = str(tmp_path / "cp_sp")
-    stream = dedup_urls(stream_source(spark, path, SCHEMA))
+    stream = stream_source(spark, path, SCHEMA).withWatermark(
+        "scraped_at", "1 hour"
+    ).dropDuplicates(["url", "scraped_at"])
     with conf_scope(spark, **{_SHUFFLE: "3"}):
         with ingest.memory_sink(stream, cp, "append") as sink:
-            assert sink.count() == 2
+            assert sorted(r["url"] for r in sink.collect()) == ["u1", "u2"]
         assert spark.conf.get(_SHUFFLE) == "3"
     assert _run_conf(cp, _SHUFFLE) == "8"
     parts = [d for d in os.listdir(os.path.join(cp, "state", "0")) if d.isdigit()]
