@@ -30,8 +30,6 @@ scale path.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 

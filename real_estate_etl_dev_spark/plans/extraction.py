@@ -465,9 +465,8 @@ def misc_extraction_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r02 item 4) — icon-map parsing, description assembly,
     join/split/take/max combinators, /are price recalc, the per-site
     customs micro-parsers, epoch-millis export math, and the
-    html→text UDF (html2text absent in this container, so the golden
-    targets the documented deterministic fallback in
-    functions/udfs.py).
+    html→text UDF (the golden targets its one deterministic regex
+    rule in functions/udfs.py, not the reference's html2text).
 
     Scale: scan → project → sort; the single pandas_udf column is
     Arrow-batched (ref reid/func.py:215-221,347-351,803-825,729-733,
