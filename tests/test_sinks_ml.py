@@ -1,5 +1,5 @@
-"""Tests for the dead-letter sink (S16) and the ML pipeline with its
-model artifact round trip (§2.11, S19)."""
+"""Tests for partitioned appends (S13), the dead-letter sink (S16) and
+the ML pipeline with its model artifact round trip (§2.11, S19)."""
 
 from __future__ import annotations
 
@@ -7,6 +7,22 @@ from pyspark.sql import functions as F
 
 from real_estate_etl_dev_spark.ml.region import predict_regions, train_region_model
 from real_estate_etl_dev_spark.operators.sinks import dead_letter_frame
+from real_estate_etl_dev_spark.planview import partition_filter_columns
+
+
+def test_partitioned_append_prunes(spark, tmp_path):
+    """Two hive-partitioned appends into one directory: the read-back
+    holds both, and a predicate on the partition column prunes
+    directories (PartitionFilters), not rows."""
+    path = str(tmp_path / "p.parquet")
+    d = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "b")], "id long, grp string"
+    )
+    for _ in range(2):
+        d.write.partitionBy("grp").mode("append").parquet(path)
+    scanned = spark.read.parquet(path).filter(F.col("grp") == "b")
+    assert scanned.count() == 4
+    assert partition_filter_columns(scanned) == {"grp"}
 
 
 def test_dead_letter_dedup(spark):

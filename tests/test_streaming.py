@@ -30,6 +30,26 @@ def write_batch(tmp_path, name, rows):
     return str(p)
 
 
+def test_ingest_dedup_availablenow(spark, tmp_path):
+    """An availableNow run of a watermarked (url, ts) dedup into the
+    memory sink drops the exact duplicate and keeps distinct urls."""
+    path = write_batch(
+        tmp_path,
+        "b1.json",
+        [
+            {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "Available"},
+            {"url": "u1", "scraped_at": "2026-01-01T00:00:00Z", "price": 1, "availability": "Available"},
+            {"url": "u2", "scraped_at": "2026-01-01T01:00:00Z", "price": 2, "availability": "Sold"},
+        ],
+    )
+    stream = stream_source(spark, path, SCHEMA).withWatermark(
+        "scraped_at", "1 hour"
+    ).dropDuplicates(["url", "scraped_at"])
+    with ingest.memory_sink(stream, str(tmp_path / "cp1"), "append") as sink:
+        got = sorted(r["url"] for r in sink.collect())
+    assert got == ["u1", "u2"]  # dup dropped
+
+
 def test_windowed_counts(spark, tmp_path):
     rows = [
         {"url": "a", "scraped_at": "2026-01-01T00:10:00Z", "price": 1, "availability": "x"},
